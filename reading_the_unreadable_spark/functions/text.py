@@ -1,9 +1,9 @@
-"""OCR post-correction text functions — one spec, two implementations.
+"""OCR post-correction text functions (pandas/``str``).
 
-Each function exists as a pandas/str implementation (used by the oracle)
-and a Spark ``Column`` implementation (native ``regexp_replace`` chains —
-JVM-side, whole-stage-codegen'd; no Python in the hot path).  The chains
-are applied in a fixed documented order so both sides are byte-identical.
+These are the one implementation of the article stage's text rules:
+the oracle (:mod:`..oracle`) and the production fold
+(:mod:`..operators.articles`, run inside the layout merge UDF) both call
+them, so the two sides cannot drift apart.
 
 Behavioral contract (reimplemented from scratch, semantics per the
 reference's normalizer ``function_modules/analysis_functions.py:147-194``
@@ -17,17 +17,18 @@ normalize_text, in order:
   4. remaining line breaks to space:  "\\n" → " "
   5. restore paragraph breaks:        marker → "\\n\\n"
   6. collapse runs of spaces:         " {2,}" → " "
-  7. trim
+  7. trim (Python ``str.strip()``: every Unicode whitespace, NBSP too)
 
 is_title(s): s == upper(s) AND ≥5 chars in [A-Z] AND ≥2 vowels among them.
 
 strip_fences (tables): drop leading/trailing backtick runs, then remove
 the FIRST occurrence of "tsv" (first-occurrence-only semantics).
+
+The module also holds the Unicode normalization helpers (NFC, invisible
+characters) and the segment knitter.
 """
 
 from __future__ import annotations
-
-import re
 
 import pandas as pd
 from pyspark.sql import Column
@@ -38,7 +39,7 @@ PARA_MARKER = "\x00"
 LIGATURES = [("ﬃ", "ffi"), ("ﬄ", "ffl"), ("ﬁ", "fi"), ("ﬂ", "fl"), ("ﬀ", "ff"), ("ſ", "s")]
 
 
-# ---------------------------------------------------------------- pandas side
+# ------------------------------------------------------ article text rules
 def normalize_text_pd(s: pd.Series) -> pd.Series:
     out = s.fillna("")
     for lig, rep in LIGATURES:
@@ -60,54 +61,6 @@ def is_title_pd(s: pd.Series) -> pd.Series:
 def strip_fences_pd(s: pd.Series) -> pd.Series:
     out = s.fillna("").str.strip("`")
     return out.str.replace("tsv", "", n=1, regex=False).str.strip()
-
-
-# ----------------------------------------------------------------- Spark side
-# Java regex \s is ASCII-only; Python str.strip() strips every Unicode
-# whitespace (NBSP U+00A0 is common in OCR output).  This class is the
-# union of Java \s and Python str.isspace() so the Spark chain and the
-# pandas oracle agree byte-for-byte on Unicode-padded text.
-UNICODE_WS = (
-    "[\\s\\u001C-\\u001F\\u0085\\u00A0\\u1680\\u2000-\\u200A"
-    "\\u2028\\u2029\\u202F\\u205F\\u3000]"
-)
-
-
-def strip_ws_col(c: Column) -> Column:
-    """Python ``str.strip()`` semantics (all Unicode whitespace — Spark's
-    ``trim`` only strips 0x20, Java ``\\s`` only ASCII)."""
-    return F.regexp_replace(c, f"^{UNICODE_WS}+|{UNICODE_WS}+$", "")
-
-
-def normalize_text_col(c: Column) -> Column:
-    out = F.coalesce(c, F.lit(""))
-    for lig, rep in LIGATURES:
-        out = F.regexp_replace(out, lig, rep)
-    out = F.regexp_replace(out, "-\n", "")
-    out = F.regexp_replace(out, "\n{2,}", PARA_MARKER)
-    out = F.regexp_replace(out, "\n", " ")
-    out = F.regexp_replace(out, PARA_MARKER, "\n\n")
-    out = F.regexp_replace(out, " {2,}", " ")
-    return strip_ws_col(out)
-
-
-def is_title_col(c: Column) -> Column:
-    letters = F.regexp_replace(c, "[^A-Z]", "")
-    vowels = F.regexp_replace(letters, "[^AEIOU]", "")
-    return (c == F.upper(c)) & (F.length(letters) >= 5) & (F.length(vowels) >= 2)
-
-
-def strip_fences_col(c: Column) -> Column:
-    out = F.regexp_replace(F.coalesce(c, F.lit("")), "^`+|`+$", "")
-    # first-occurrence-only removal of "tsv": keep everything before the
-    # first match (substring_index) + everything after it.
-    has = F.instr(out, "tsv") > 0
-    before = F.substring_index(out, "tsv", 1)
-    out = F.when(
-        has,
-        F.concat(before, F.substring(out, F.length(before) + F.lit(4), F.length(out))),
-    ).otherwise(out)
-    return strip_ws_col(out)
 
 
 # ------------------------------------------------- Unicode normalization

@@ -1,9 +1,15 @@
 """Stage 3 — OCR post-correction, paragraph split, title merge, article /
-span-sequence construction.  100% native expressions + window functions
-(zero Python): the reference implements this stage as pandas loops +
-ProcessPool batches (``function_modules/analysis_functions.py:229-476``);
-here it is regexp chains, ``posexplode``, and gaps-and-islands windows
-over the same single doc_id partitioning the layout stage produced.
+span-sequence construction.
+
+The reference implements this stage as pandas loops + ProcessPool
+batches (``function_modules/analysis_functions.py:229-476``).  Here T1–T5
+(post-correct, paragraph split, title reclass, title merge, final order)
+are vectorized pandas over one doc-complete Arrow batch
+(:func:`_post_correct_pd` + :func:`spans_frame_pd`), run inside the
+layout stage's box-merge UDF, so the text crosses the Arrow boundary
+once.  :func:`..oracle.text_stage` is their spec.  Re-nesting and
+article grouping (:func:`nest_spans`, :func:`build_articles`) are native
+aggregations over the flat spans.
 """
 
 from __future__ import annotations
@@ -12,17 +18,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    is_title_col,
-    is_title_pd,
-    normalize_text_pd,
-    strip_fences_pd,
-    strip_ws_col,
-)
+from ..functions.text import is_title_pd, normalize_text_pd, strip_fences_pd
 
 
 def _post_correct_pd(kind: pd.Series, text: pd.Series) -> pd.Series:
-    """Vectorized per-kind OCR post-correction over one Arrow batch."""
+    """T1: fence-strip tables, normalize everything else (figures pass
+    through untouched — their text is empty); vectorized over one Arrow
+    batch."""
     out = text.copy()
     is_table = kind == "table"
     is_norm = ~is_table & (kind != "figure")
@@ -33,123 +35,16 @@ def _post_correct_pd(kind: pd.Series, text: pd.Series) -> pd.Series:
     return out
 
 
-def post_correct(ordered: DataFrame) -> DataFrame:
-    """T1: fence-strip tables, normalize everything else (figures pass
-    through untouched — their text is empty).
-
-    One vectorized Arrow ``pandas_udf`` (north-rule normalizer shape)
-    instead of a native 12-step regexp_replace chain: measured ~2× faster
-    per pass, and — decisive at scale — a PythonUDF is extracted into a
-    single ArrowEvalPython node, whereas a native expression alias gets
-    INLINED by CollapseProject into every downstream consumer
-    (split/explode/title checks), re-running the whole regex chain 3–5×.
-    The native chain (functions/text.py) remains the unit-parity spec.
-
-    The production plan (:func:`..layout.layout` with
-    ``post_correct=True``) folds the same ``_post_correct_pd`` into the
-    box-merge UDF's existing pandas pass, so the text crosses the Arrow
-    boundary once, not twice; this standalone operator serves frames
-    that didn't come through the merge."""
-    corrected = F.pandas_udf(_post_correct_pd, "string")
-    return ordered.withColumn("text", corrected(F.col("kind"), F.col("text")))
-
-
-def split_paragraphs(df: DataFrame) -> DataFrame:
-    """T2 + T3: paragraph split for text/title spans (posexplode gives
-    sub_order directly), ALL-CAPS title reclassification."""
-    splittable = F.col("kind").isin("text", "title")
-    df = df.withColumn(
-        "_parts",
-        F.when(splittable, F.split(F.col("text"), "\n\n")).otherwise(
-            F.array(F.col("text"))
-        ),
-    )
-    df = df.select("*", F.posexplode("_parts").alias("sub_order", "_part")).drop(
-        "_parts", "text"
-    )
-    df = df.withColumn(
-        "text", F.when(splittable, strip_ws_col(F.col("_part"))).otherwise(F.col("_part"))
-    ).drop("_part")
-    df = df.filter(~splittable | (F.length("text") > 0))
-    return df.withColumn(
-        "kind",
-        F.when((F.col("kind") == "text") & is_title_col(F.col("text")), "title").otherwise(
-            F.col("kind")
-        ),
-    )
-
-
-def merge_adjacent_titles(df: DataFrame) -> DataFrame:
-    """T4: runs of consecutive title rows collapse to one newline-joined
-    row (gaps-and-islands: lag → run id → windowed collect).
-
-    (A title-only groupBy + join-back would avoid the second full sort,
-    but any self-referencing shape recomputes the whole upstream — plans
-    containing Python stages never canonicalize equal, so ReuseExchange
-    cannot dedup them.  Windows are single-pass; the production plan
-    avoids this operator's sorts entirely via the fused article stage in
-    the layout merge UDF — see plans/pipeline.py.)"""
-    w = Window.partitionBy("doc_id").orderBy("reading_order", "sub_order")
-    df = df.withColumn(
-        "_new_run",
-        F.when(
-            F.lag("kind").over(w).isNull() | (F.col("kind") != F.lag("kind").over(w)), 1
-        ).otherwise(0),
-    ).withColumn(
-        "_run",
-        F.sum("_new_run").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    w_run = Window.partitionBy("doc_id", "_run").orderBy("reading_order", "sub_order")
-    w_run_all = w_run.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    df = (
-        df.withColumn(
-            "_joined", F.array_join(F.collect_list("text").over(w_run_all), "\n")
-        )
-        .withColumn("_rn", F.row_number().over(w_run))
-        .withColumn(
-            "text",
-            F.when(F.col("kind") == "title", F.col("_joined")).otherwise(F.col("text")),
-        )
-        .filter((F.col("kind") != "title") | (F.col("_rn") == 1))
-        .drop("_new_run", "_run", "_joined", "_rn")
-    )
-    return df
-
-
-def finalize_spans(df: DataFrame) -> DataFrame:
-    """T5: final 1-based span order per document."""
-    w = Window.partitionBy("doc_id").orderBy("reading_order", "sub_order")
-    return df.withColumn("order", F.row_number().over(w)).select(
-        "doc_id", "kind", "text", "media_ref", "order"
-    )
-
-
-def extract_spans(ordered: DataFrame, already_corrected: bool = False) -> DataFrame:
-    """ordered boxes → flat extracted spans (the equality-check grain).
-
-    ``already_corrected``: the production plan folds T1 into the layout
-    merge UDF (text crosses Arrow once); pass True to skip the
-    standalone post_correct pass."""
-    df = ordered if already_corrected else post_correct(ordered)
-    df = split_paragraphs(df)
-    df = merge_adjacent_titles(df)
-    return finalize_spans(df)
-
-
-# ------------------------------------------------------- fused pandas stage
 def spans_frame_pd(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized pandas implementation of split_paragraphs →
-    merge_adjacent_titles → finalize_spans over ONE batch of merged,
-    post-corrected, reading_order-sorted boxes (doc-complete).
+    """T2–T5 (paragraph split, title reclass, title merge, final 1-based
+    order) over ONE batch of merged, post-corrected, reading_order-sorted
+    boxes (doc-complete).
 
-    Semantics are pinned to the declarative operators above
-    (tests/test_e2e_extraction.py asserts byte equality of both paths);
-    the production plan uses this inside the layout merge UDF so the
-    article stage costs zero extra JVM sorts, explodes, or Arrow trips —
-    the north rule's 'article segmentation as vectorized pandas/Arrow
-    UDFs' shape."""
+    Semantics are pinned to :func:`..oracle.text_stage`
+    (tests/test_e2e_extraction.py asserts per-document span-sequence
+    equality); the production plan runs this inside the layout merge UDF
+    so the article stage costs zero extra JVM sorts, explodes, or Arrow
+    trips."""
     import numpy as np
 
     df = pdf[["doc_id", "kind", "text", "media_ref", "reading_order"]].reset_index(

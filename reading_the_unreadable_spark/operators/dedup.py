@@ -1031,20 +1031,6 @@ def dup_clusters(
     )
 
 
-def near_dedup(
-    documents: DataFrame, pairs: DataFrame, max_rounds: int = 30
-) -> DataFrame:
-    """Documents surviving cluster-canonical near-dedup: every
-    transitive duplicate cluster keeps exactly its minimum doc_id.
-    An anti-join of the corpus against the non-canonical member list —
-    the member list is bounded by the pair graph, so the corpus-side
-    cost is one hash join on doc_id."""
-    losers = connected_components(pairs, max_rounds=max_rounds).filter(
-        F.col("doc_id") != F.col("cluster_id")
-    )
-    return documents.join(losers.select("doc_id"), "doc_id", "left_anti")
-
-
 def _small_universe(
     toks: DataFrame, token_col: str = "token", cap: int = 61
 ) -> list[str] | None:

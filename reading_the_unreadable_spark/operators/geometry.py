@@ -9,8 +9,8 @@ deployment these columns would arrive from the upstream layout model
 
 Two shapes:
 
-- :func:`docs_to_boxes` — full rows (text + media_ref through Arrow);
-  kept for consumers that want a self-contained boxes frame.
+- :func:`docs_to_boxes` — full rows (text + media_ref through Arrow),
+  for consumers that want a self-contained boxes frame.
 - :func:`docs_to_geo_boxes` + :func:`docs_payload` — the production
   split: the Arrow stage sees ONLY (doc_id, offset, kind) and emits
   ~100-byte geometry rows, while text/media travel as a native per-doc
@@ -41,50 +41,11 @@ GEO_BOX_SCHEMA = (
 )
 
 
-def _attach(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # column accumulators across ALL docs in a batch: one DataFrame build
-    # per Arrow batch, not per doc (the per-doc constructor cost dominated)
-    for pdf in batches:
-        doc_ids: list[str] = []
-        offsets: list[int] = []
-        kinds: list[str] = []
-        texts: list[str] = []
-        medias: list[str | None] = []
-        geo_cols: dict[str, list[np.ndarray]] = {
-            c: [] for c in ("x1", "y1", "x2", "y2", "confidence")
-        }
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            geo = page_arrays(doc_id)
-            span_offsets = np.fromiter(
-                (s["offset"] for s in spans), dtype=np.int32, count=len(spans)
-            )
-            idx = np.searchsorted(geo["offset"], span_offsets)
-            doc_ids.extend([doc_id] * len(spans))
-            offsets.extend(span_offsets.tolist())
-            kinds.extend(s["kind"] for s in spans)
-            texts.extend(s["text"] if s["text"] is not None else "" for s in spans)
-            medias.extend(s["media_ref"] for s in spans)
-            for c in geo_cols:
-                geo_cols[c].append(geo[c][idx])
-        if doc_ids:
-            out = {
-                "doc_id": doc_ids,
-                "offset": np.array(offsets, dtype=np.int32),
-                "kind": kinds,
-                "text": texts,
-                "media_ref": medias,
-            }
-            for c, chunks in geo_cols.items():
-                out[c] = np.concatenate(chunks)
-            yield pd.DataFrame(out)
-
-
-def docs_to_boxes(docs: DataFrame) -> DataFrame:
-    """docs(doc_id, spans) → one row per span with bbox geometry."""
-    return docs.mapInPandas(_attach, schema=BOX_SCHEMA)
-
-
 def _attach_geo(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Explode each batch's docs to one row per span and look up its
+    geometry (:data:`GEO_BOX_SCHEMA`).  Column accumulators run across
+    ALL docs in a batch: one DataFrame build per Arrow batch, not per doc
+    (the per-doc constructor cost dominated)."""
     for pdf in batches:
         doc_ids: list[str] = []
         offsets: list[np.ndarray] = []
@@ -112,6 +73,23 @@ def _attach_geo(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for c, chunks in geo_cols.items():
                 out[c] = np.concatenate(chunks)
             yield pd.DataFrame(out)
+
+
+def _attach_boxes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """:func:`_attach_geo` plus each span's text and media_ref
+    (:data:`BOX_SCHEMA`); rows come out in span order per doc."""
+    for pdf in batches:
+        for out in _attach_geo([pdf]):
+            spans = [s for doc_spans in pdf["spans"] for s in doc_spans]
+            out.insert(3, "text", [s["text"] if s["text"] is not None else "" for s in spans])
+            out.insert(4, "media_ref", [s["media_ref"] for s in spans])
+            yield out
+
+
+def docs_to_boxes(docs: DataFrame) -> DataFrame:
+    """docs(doc_id, spans) → one row per span with bbox geometry, text
+    and media_ref."""
+    return docs.mapInPandas(_attach_boxes, schema=BOX_SCHEMA)
 
 
 def docs_to_geo_boxes(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -151,35 +129,4 @@ def docs_payload(docs: DataFrame) -> DataFrame:
                 ),
             )
         ).alias("_payload"),
-    )
-
-
-def derive_box_geometry(
-    boxes: DataFrame, strict_parity: bool = False
-) -> DataFrame:
-    """P4: the derived geometry columns the reference's ``basic_box_data``
-    adds before any layout math (``bbox_functions.py:663-668``):
-    width, height, ratio, center_x, center_y.
-
-    ``strict_parity=False`` (default) computes the TRUE centers
-    ((x1+x2)/2, (y1+y2)/2).  ``strict_parity=True`` replicates the
-    reference's formula BUG byte-for-byte — ``center_x = width + x1``
-    and ``center_y = height + y1``, i.e. the BOTTOM-RIGHT corner
-    (``bbox_functions.py:667-668``) — for consumers ingesting real
-    reference bbox parquet who need ordering decisions (reading-order
-    sorts on center_y, ``bbox_functions.py:387-389``) to match the
-    reference exactly even where box heights vary."""
-    w = F.col("x2") - F.col("x1")
-    h = F.col("y2") - F.col("y1")
-    if strict_parity:
-        cx, cy = w + F.col("x1"), h + F.col("y1")  # sic: equals (x2, y2)
-    else:
-        cx = (F.col("x1") + F.col("x2")) / F.lit(2.0)
-        cy = (F.col("y1") + F.col("y2")) / F.lit(2.0)
-    return (
-        boxes.withColumn("width", w)
-        .withColumn("height", h)
-        .withColumn("ratio", h / w)
-        .withColumn("center_x", cx)
-        .withColumn("center_y", cy)
     )

@@ -250,34 +250,6 @@ def phash64(arr: np.ndarray) -> int:
     return int(bits @ (np.uint64(1) << np.arange(64, dtype=np.uint64)))
 
 
-def image_phash(
-    media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """(id, payload binary) → (id, phash bigint, decode_err): the DCT
-    sibling of :func:`image_dhash`, same one-pass mapInPandas shape and
-    quarantine contract; pairs via the same band join on the hash."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, errs = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(int(i))
-                try:
-                    h = phash64(decode_image(bytes(payload)))
-                    hashes.append(h - (1 << 64) if h >= (1 << 63) else h)
-                    errs.append(None)
-                except (ValueError, NotImplementedError) as e:
-                    hashes.append(None)
-                    errs.append(f"{type(e).__name__}: {e}"[:200])
-            yield pd.DataFrame(
-                {"id": ids,
-                 "phash": pd.Series(hashes, dtype="Int64"),
-                 "decode_err": errs}
-            )
-
-    return media.mapInPandas(fn, schema="id long, phash long, decode_err string")
-
-
 def image_ahash(
     media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .articles import _post_correct_pd, spans_frame_pd
+
 MERGE_WIDTH_MULTIPLIER = 1.5
 ABANDON_TOP_FRACTION = 0.1
 MIN_OVERLAP_FRACTION = 0.1
@@ -368,8 +370,6 @@ def _merge_frame(pdf: pd.DataFrame, post_correct: bool = False) -> pd.DataFrame:
         # T1 folded into the merge's pandas pass: the text is already in
         # Python here, so normalizing now saves a second full Arrow
         # round-trip of every byte of text through ArrowEvalPython.
-        from .articles import _post_correct_pd
-
         out["text"] = _post_correct_pd(out["kind"], out["text"])
     return out
 
@@ -395,22 +395,6 @@ def _doc_complete_stream(batches, frame_fn):
         buf = pdf.iloc[first_of_last:].reset_index(drop=True)
     if buf is not None and len(buf):
         yield frame_fn(buf)
-
-
-def _merge_stream(batches, post_correct: bool = False):
-    yield from _doc_complete_stream(
-        batches, lambda pdf: _merge_frame(pdf, post_correct)
-    )
-
-
-def _merge_extract_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-    from .articles import spans_frame_pd
-
-    return spans_frame_pd(_merge_frame(pdf, post_correct=True))
-
-
-def _merge_extract_stream(batches):
-    yield from _doc_complete_stream(batches, _merge_extract_frame)
 
 
 def vertical_overlap_pct(y1a, y2a, y1b, y2b):
@@ -484,22 +468,6 @@ def merge_overlapping_boxes(
         "y2",
         ((F.col("x1") + F.col("x2")) / 2).alias("center_x"),
         ((F.col("y1") + F.col("y2")) / 2).alias("center_y"),
-    )
-
-
-def apply_predictions(ordered: DataFrame, preds: DataFrame) -> DataFrame:
-    """J6 — join classifier predictions on the box id and conditionally
-    overwrite ``kind`` (reference behavior:
-    ``classification_data_and_analysis.py:497-499`` merges model
-    predictions back onto boxes by bbox_uid).  Left join: boxes without a
-    prediction keep their original class."""
-    p = preds.select(
-        "doc_id", "box_page_id", F.col("predicted_kind").alias("_pred_kind")
-    )
-    return (
-        ordered.join(p, ["doc_id", "box_page_id"], "left")
-        .withColumn("kind", F.coalesce("_pred_kind", "kind"))
-        .drop("_pred_kind")
     )
 
 
@@ -668,10 +636,10 @@ def layout(
     ``result_section.py:89-92``).  Gap boxes carry empty text, so
     extracted SPANS are identical either way (T2 drops empty parts),
     only box geometry consumers differ."""
-    import functools
-
     merged = _sorted_frame(boxes, num_partitions, payload, fill_columns).mapInPandas(
-        functools.partial(_merge_stream, post_correct=post_correct),
+        lambda batches: _doc_complete_stream(
+            batches, lambda pdf: _merge_frame(pdf, post_correct)
+        ),
         schema=ORDERED_BOX_SCHEMA,
     )
     return merged.withColumn(
@@ -694,10 +662,12 @@ def layout_extract_spans(
     """Fused production plan: the SAME sorted stream the box merge uses,
     with merge → OCR post-correct → paragraph split → title reclass/merge
     → final ordering all inside ONE per-doc vectorized pandas pass
-    (articles.spans_frame_pd).  Versus the declarative chain this saves
-    two full-frame text sorts, an explode, and a second Arrow round-trip
-    — and its semantics are pinned byte-equal to the declarative
-    operators by tests/test_e2e_extraction.py."""
+    (:func:`..articles.spans_frame_pd`), so the article stage adds no JVM
+    sort, explode or second Arrow round-trip.  Its span sequences are
+    pinned to :func:`..oracle.extract` by tests/test_e2e_extraction.py."""
     return _sorted_frame(boxes, num_partitions, payload, fill_columns).mapInPandas(
-        _merge_extract_stream, schema=SPAN_SCHEMA
+        lambda batches: _doc_complete_stream(
+            batches, lambda pdf: spans_frame_pd(_merge_frame(pdf, post_correct=True))
+        ),
+        schema=SPAN_SCHEMA,
     )

@@ -13,7 +13,8 @@ stable under re-runs and independent of file layout.  A job:
    overwrite, so outputs stay exactly-once per bucket);
 4. appends one lineage row per completed bucket to the checkpoint table:
    (stage, bucket, doc_count, span_count, wall_ms, docs_per_sec, job_id,
-   ts).
+   ts) — also for a bucket whose docs produced no output (counts 0), so
+   it is never retried forever.
 
 ``max_buckets`` caps how many buckets a run processes — the fault-
 injection hook the kill/resume test uses.
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.articles import nest_spans
+from ..sources.snapshots import _exists, _fs_path, _list_names
 from .pipeline import extract
 
 CHECKPOINT_SCHEMA = (
@@ -42,18 +44,6 @@ def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def _hadoop_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check on the SAME filesystem Spark reads/writes — a
-    driver-local ``Path.exists()`` is wrong on any cluster whose
-    default FS is not the driver's disk (it would report a real HDFS
-    table as absent, and compaction would then replace the table with
-    an empty frame)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
 def read_checkpoints(
     spark: SparkSession, ckpt_path: str, dedup: bool = True
 ) -> DataFrame:
@@ -62,7 +52,7 @@ def read_checkpoints(
     lineage row for the same bucket (append-mode parquet cannot express
     MERGE INTO — on Iceberg this is a MERGE) collapse to one row, so
     resume logic and metric sums stay exactly-once per bucket."""
-    if _hadoop_exists(spark, ckpt_path):
+    if _exists(spark, ckpt_path):
         df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt_path)
     else:
         df = spark.createDataFrame([], CHECKPOINT_SCHEMA)
@@ -72,21 +62,6 @@ def read_checkpoints(
         F.desc("ts"), F.desc("job_id")
     )
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
-def _list_part_files(spark: SparkSession, path: str) -> list:
-    """Parquet part files under ``path`` via the Hadoop FS API (same
-    write/cleanup-filesystem discipline as the snapshot layer)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    return [
-        st.getPath()
-        for st in fs.listStatus(p)
-        if st.getPath().getName().startswith("part-")
-    ]
 
 
 def compact_checkpoints(
@@ -106,15 +81,15 @@ def compact_checkpoints(
     at least one complete copy of every surviving row.
 
     Returns the number of files removed (0 = under threshold)."""
-    old_files = _list_part_files(spark, ckpt_path)
+    old_files = _list_names(spark, ckpt_path, "part-")
     if len(old_files) <= max_files:
         return 0
     compacted = read_checkpoints(spark, ckpt_path, dedup=True)
     # tiny metadata table (≤ stages × n_buckets rows): one file
     compacted.coalesce(1).write.mode("append").parquet(ckpt_path)
-    fs = old_files[0].getFileSystem(spark._jsc.hadoopConfiguration())
-    for f in old_files:
-        fs.delete(f, False)
+    for name in old_files:
+        fs, p, _ = _fs_path(spark, f"{ckpt_path}/{name}")
+        fs.delete(p, False)
     return len(old_files)
 
 
@@ -127,7 +102,9 @@ def run_extract_with_checkpoints(
     max_buckets: int | None = None,
     stage: str = "extract",
 ) -> dict:
-    """One resumable job invocation.  Returns a summary dict."""
+    """One resumable job invocation.  Returns a summary dict;
+    ``buckets_remaining`` counts the buckets still to do after this run
+    (non-zero only when ``max_buckets`` cut it short)."""
     ckpt_path = f"{out_dir}/checkpoints"
     out_path = f"{out_dir}/extracted_nested"
     job_id = uuid.uuid4().hex[:12]
@@ -144,10 +121,21 @@ def run_extract_with_checkpoints(
     todo_buckets = sorted(
         r["bucket"] for r in todo_docs.select("bucket").distinct().collect()
     )
+    n_todo = len(todo_buckets)
     if max_buckets is not None:
         # fault-injection hook: pretend the job dies after N buckets
         todo_buckets = todo_buckets[:max_buckets]
         todo_docs = todo_docs.filter(F.col("bucket").isin(todo_buckets))
+    summary = {
+        "job_id": job_id,
+        "buckets_processed": len(todo_buckets),
+        "buckets_remaining": n_todo - len(todo_buckets),
+        "wall_ms": 0,
+        "output": out_path,
+        "checkpoints": ckpt_path,
+    }
+    if not todo_buckets:
+        return summary
 
     t0 = time.monotonic()
     flat = extract(todo_docs.drop("bucket"), num_partitions=num_partitions)
@@ -158,41 +146,36 @@ def run_extract_with_checkpoints(
     nested.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    written = spark.read.parquet(out_path).filter(
-        F.col("bucket").isin(todo_buckets) if todo_buckets else F.lit(False)
-    )
-    metrics = (
-        written.groupBy("bucket")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum(F.size("spans")).alias("span_count"),
-        )
-        .withColumn("stage", F.lit(stage))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn(
-            "docs_per_sec",
-            F.round(F.col("doc_count") / F.lit(max(wall_ms, 1) / 1000.0), 3),
-        )
-        .withColumn("job_id", F.lit(job_id))
-        .withColumn("ts", F.lit(time.strftime("%Y-%m-%dT%H:%M:%S")))
-        .select(
-            "stage",
-            "bucket",
-            "doc_count",
-            "span_count",
-            "wall_ms",
-            "docs_per_sec",
-            "job_id",
-            "ts",
-        )
-    )
-    n_new = metrics.count()
-    metrics.write.mode("append").parquet(ckpt_path)
+    # per-bucket counts of what this run wrote (driver-side, ≤ n_buckets
+    # rows).  A bucket whose docs all produced no spans has no output
+    # rows, and a run whose docs all did wrote no files at all — so the
+    # read is skipped when no bucket directory exists (there is no
+    # schema to infer), and missing buckets count 0 below.
+    counts = {}
+    if _list_names(spark, out_path, "bucket="):
+        counts = {
+            r["bucket"]: (r["doc_count"], r["span_count"])
+            for r in spark.read.parquet(out_path)
+            .filter(F.col("bucket").isin(todo_buckets))
+            .groupBy("bucket")
+            .agg(
+                F.count("*").alias("doc_count"),
+                F.sum(F.size("spans")).alias("span_count"),
+            )
+            .collect()
+        }
+    # one lineage row per processed bucket, empty ones included: a
+    # bucket without a row would stay "todo" forever
+    ts = time.strftime("%Y-%m-%dT%H:%M:%S")
+    secs = max(wall_ms, 1) / 1000.0
+    rows = []
+    for b in todo_buckets:
+        doc_count, span_count = counts.get(b, (0, 0))
+        rows.append((stage, b, doc_count, span_count, wall_ms,
+                     round(doc_count / secs, 3), job_id, ts))
+    spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(ckpt_path)
     compact_checkpoints(spark, ckpt_path)
-    return {
-        "job_id": job_id,
-        "buckets_processed": n_new,
-        "wall_ms": wall_ms,
-        "output": out_path,
-        "checkpoints": ckpt_path,
-    }
+    summary["wall_ms"] = wall_ms
+    return summary

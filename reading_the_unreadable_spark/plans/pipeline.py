@@ -9,7 +9,7 @@ final re-nest groupBy — everything in between reuses partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..operators.articles import build_articles, nest_spans
 from ..operators.geometry import docs_payload, docs_to_geo_boxes
@@ -32,8 +32,8 @@ def extract(
     and are never sorted by the window chain.  The article stage (OCR
     post-correct, paragraph split, title merge, final ordering) runs
     fused inside the box-merge UDF's per-doc pandas pass
-    (:func:`..operators.layout.layout_extract_spans`), byte-equal to the
-    declarative operators in :mod:`..operators.articles`.
+    (:func:`..operators.layout.layout_extract_spans`); its spec is
+    :func:`..oracle.extract`.
 
     ``fill_columns`` defaults to True — the REFERENCE pipeline default
     (``function_modules/pipeline.py:92``).  Span output is identical
@@ -79,6 +79,3 @@ def extract_nested(
 def extract_articles(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
     return build_articles(extract(docs, num_partitions=num_partitions))
 
-
-def default_parallelism(spark: SparkSession) -> int:
-    return spark.sparkContext.defaultParallelism

@@ -36,7 +36,9 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.snapshots import (
+    _exists,
     _fs_path,
+    _list_names,
     _read_file,
     _write_file,
     current_snapshot_id,
@@ -45,21 +47,8 @@ from ..sources.snapshots import (
 from .checkpoint import run_extract_with_checkpoints
 
 
-def _list_state(spark: SparkSession, state_dir: str, prefix: str) -> list[str]:
-    fs, p, _ = _fs_path(spark, state_dir)
-    if not fs.exists(p):
-        return []
-    return [
-        st.getPath().getName()
-        for st in fs.listStatus(p)
-        if st.getPath().getName().startswith(prefix)
-    ]
-
-
 def _hwm(spark: SparkSession, state_dir: str) -> int | None:
-    marks = [
-        int(n[4:-5]) for n in _list_state(spark, state_dir, "hwm-")
-    ]
+    marks = [int(n[4:-5]) for n in _list_names(spark, state_dir, "hwm-")]
     return max(marks) if marks else None
 
 
@@ -71,7 +60,7 @@ def _pending_intent(
     none is pending); with several left by repeated kills, the oldest
     incomplete window governs — windows are disjoint and sequential."""
     pend = []
-    for name in _list_state(spark, state_dir, "intent-"):
+    for name in _list_names(spark, state_dir, "intent-"):
         body = json.loads(_read_file(spark, f"{state_dir}/{name}").decode())
         pend.append((body["after"], body["until"], name))
     if not pend:
@@ -123,30 +112,16 @@ def tail_once(
         num_partitions=num_partitions,
         max_buckets=max_buckets,
     )
-    # advance only when the window is fully checkpointed: zero todo
-    # buckets on a fresh resume pass means complete
-    from .checkpoint import read_checkpoints, with_bucket
-    from pyspark.sql import functions as F
-
-    done = read_checkpoints(
-        spark, f"{_diff_dir(work_dir, after, until)}/checkpoints"
-    ).filter(F.col("stage") == "extract")
-    remaining = (
-        with_bucket(diff, n_buckets)
-        .select("bucket")
-        .distinct()
-        .join(done.select("bucket"), "bucket", "left_anti")
-        .count()
-    )
-    advanced = remaining == 0
+    # advance only when the window is fully checkpointed: every bucket
+    # of the diff has a lineage row once the run leaves none to do
+    advanced = res["buckets_remaining"] == 0
     if advanced:
         # idempotent advance: a crash between the hwm write and the
         # intent delete leaves the hwm file behind — _write_file demands
         # a fresh path (rename-onto-existing fails on HDFS), so skip the
         # rewrite and just finish the cleanup
         hwm_path = f"{state_dir}/hwm-{until}.json"
-        fs, p, _ = _fs_path(spark, hwm_path)
-        if not fs.exists(p):
+        if not _exists(spark, hwm_path):
             _write_file(spark, hwm_path, json.dumps({"until": until}).encode())
         fs, p, _ = _fs_path(spark, f"{state_dir}/intent-{after}-{until}.json")
         if fs.exists(p):
@@ -164,14 +139,13 @@ def read_tail_output(spark: SparkSession, work_dir: str) -> DataFrame:
     """Union of every diff window's committed output — the consumer
     view of the tailed table.  Exactly-once per document: windows are
     disjoint snapshot ranges and buckets commit atomically, so a
-    pending window contributes only its completed buckets."""
-    fs, p, _ = _fs_path(spark, work_dir)
-    dirs = []
-    if fs.exists(p):
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("diff_"):
-                dirs.append(f"{work_dir}/{name}/extracted_nested")
+    pending window contributes only its completed buckets.  A window
+    whose docs all produced no spans wrote no files and is skipped."""
+    dirs = [
+        f"{work_dir}/{name}/extracted_nested"
+        for name in _list_names(spark, work_dir, "diff_")
+    ]
+    dirs = [d for d in dirs if _list_names(spark, d, "bucket=")]
     if not dirs:
         raise ValueError(f"no tail output under {work_dir}")
     # one scan per window root: the outputs are bucket-partitioned, and

@@ -58,24 +58,6 @@ def docs_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
     return spark.createDataFrame(rows, schema=DOCS_SCHEMA)
 
 
-def write_bucketed(
-    df: DataFrame, table_name: str, key: str = "doc_id", n_buckets: int = 16
-) -> None:
-    """Bucketed + sorted managed table: co-locates and pre-sorts rows by
-    ``key`` at WRITE time, so every downstream join/groupBy between
-    tables bucketed the same way runs with ZERO exchange and zero sort —
-    the storage-level answer to repeated doc_id joins (Iceberg
-    equivalent: ``PARTITIONED BY (bucket(N, doc_id))`` + sorted files;
-    asserted by tests/test_plan_quality.py::test_bucketed_join_no_exchange)."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
 def docs_from_documents_table(documents: DataFrame) -> DataFrame:
     """Derive a docs-shaped table from the harness ``documents`` parquet
     (doc_id, text, …): each document becomes one page whose text is split

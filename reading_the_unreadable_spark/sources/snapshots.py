@@ -116,10 +116,30 @@ def _norm_uri(path: str) -> str:
 
 
 # ------------------------------------------------------- Hadoop FS helpers
+# Every state/metadata probe goes through the Hadoop FS API — the SAME
+# filesystem Spark reads and writes.  A driver-local ``Path.exists()``
+# is wrong on any cluster whose default FS is not the driver's disk.
 def _fs_path(spark: SparkSession, path: str):
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, p, _ = _fs_path(spark, path)
+    return bool(fs.exists(p))
+
+
+def _list_names(
+    spark: SparkSession, path: str, prefix: str = "", suffix: str = ""
+) -> list[str]:
+    """Names of the entries directly under ``path`` that start with
+    ``prefix`` and end with ``suffix``; [] when ``path`` is absent."""
+    fs, p, _ = _fs_path(spark, path)
+    if not fs.exists(p):
+        return []
+    names = (st.getPath().getName() for st in fs.listStatus(p))
+    return [n for n in names if n.startswith(prefix) and n.endswith(suffix)]
 
 
 def _read_file(spark: SparkSession, path: str) -> bytes:
@@ -150,15 +170,7 @@ def _write_file(spark: SparkSession, path: str, data: bytes) -> None:
 
 def _manifest_names(spark: SparkSession, root: str) -> list[str]:
     """All manifest file names, including race losers not yet cleaned."""
-    fs, p, _ = _fs_path(spark, f"{root}/manifests")
-    if not fs.exists(p):
-        return []
-    names = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith("snap-") and name.endswith(".json"):
-            names.append(name)
-    return names
+    return _list_names(spark, f"{root}/manifests", "snap-", ".json")
 
 
 def _split_name(name: str) -> tuple[int, str]:
@@ -1158,17 +1170,10 @@ def delete_tag(spark: SparkSession, root: str, name: str) -> None:
 
 def list_tags(spark: SparkSession, root: str) -> dict[str, int]:
     """{tag name: snapshot id} for every tag under ``root/refs``."""
-    fs, p, _ = _fs_path(spark, f"{root}/refs")
-    if not fs.exists(p):
-        return {}
     out: dict[str, int] = {}
-    for st in fs.listStatus(p):
-        fname = st.getPath().getName()
-        if fname.startswith("tag-") and fname.endswith(".json"):
-            ref = json.loads(
-                _read_file(spark, f"{root}/refs/{fname}").decode()
-            )
-            out[ref["name"]] = int(ref["snapshot_id"])
+    for fname in _list_names(spark, f"{root}/refs", "tag-", ".json"):
+        ref = json.loads(_read_file(spark, f"{root}/refs/{fname}").decode())
+        out[ref["name"]] = int(ref["snapshot_id"])
     return out
 
 

@@ -71,10 +71,6 @@ class Box:
     columns: list = field(default_factory=list, repr=False)
 
 
-def _sentence(rng: np.random.Generator, n: int) -> str:
-    return " ".join(rng.choice(WORDS, size=n))
-
-
 def _paragraph(rng: np.random.Generator) -> str:
     """One paragraph of OCR-ish text with deterministic noise."""
     n_words = int(rng.integers(15, 45))

@@ -185,8 +185,8 @@ Reproduce: `python scripts/scaling_bench.py --docs {args.docs} \
   contention, not the engine.
 - Correctness of the measured pipeline is enforced separately by exact
   span-sequence equality vs the pandas oracle
-  (tests/test_e2e_extraction.py), including the fused-vs-declarative
-  article-stage parity test.
+  (tests/test_e2e_extraction.py), including the article stage's
+  edge-frame tests.
 """
     )
     print(json.dumps(payload))

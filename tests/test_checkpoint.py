@@ -275,3 +275,57 @@ def test_snapshot_tail_exactly_once(spark, tmp_path):
     got = read_tail_output(spark, work)
     assert got.count() == 40
     assert got.select("doc_id").distinct().count() == 40
+
+
+def test_snapshot_tail_empty_spans_docs_do_not_stall(spark, tmp_path):
+    """A doc with empty ``spans`` yields no output row.  Its bucket must
+    still get a lineage row (doc_count 0), so the window completes and
+    the high-water mark advances; a window in which EVERY doc has empty
+    spans must complete too, without reading an output dir that has no
+    files.  Later snapshots' docs then reach the output exactly once."""
+    from reading_the_unreadable_spark import synth
+    from reading_the_unreadable_spark.plans.checkpoint import with_bucket
+    from reading_the_unreadable_spark.plans.snapshot_tail import (
+        _diff_dir,
+        read_tail_output,
+        tail_once,
+    )
+    from reading_the_unreadable_spark.sources.docs import docs_from_rows
+    from reading_the_unreadable_spark.sources.snapshots import append_snapshot
+
+    root = str(tmp_path / "tbl")
+    work = str(tmp_path / "tail")
+    n_buckets = 64
+    corpus = synth.make_corpus(12, seed_tag="tail-empty")
+    empty = [{"doc_id": f"EMPTY-{i}", "spans": []} for i in range(3)]
+
+    # window 1: 3 docs + 1 empty doc, the empty one alone in its bucket
+    first = docs_from_rows(spark, corpus[:3] + empty[:1])
+    buckets = dict(with_bucket(first, n_buckets).select("doc_id", "bucket").collect())
+    assert buckets["EMPTY-0"] not in {buckets[d["doc_id"]] for d in corpus[:3]}
+    append_snapshot(first, root)
+    r1 = tail_once(spark, root, work, n_buckets=n_buckets, num_partitions=4)
+    assert r1["advanced"] and (r1["after"], r1["until"]) == (0, 1)
+    assert r1["buckets_processed"] == 4
+    ck = read_checkpoints(spark, f"{_diff_dir(work, 0, 1)}/checkpoints")
+    counts = dict(ck.select("bucket", "doc_count").collect())
+    assert counts[buckets["EMPTY-0"]] == 0 and sum(counts.values()) == 3
+
+    # window 2: the next snapshot's 6 docs
+    append_snapshot(docs_from_rows(spark, corpus[3:9]), root)
+    r2 = tail_once(spark, root, work, n_buckets=n_buckets, num_partitions=4)
+    assert r2["advanced"] and (r2["after"], r2["until"]) == (1, 2)
+
+    # window 3: every doc has empty spans
+    append_snapshot(docs_from_rows(spark, empty[1:]), root)
+    r3 = tail_once(spark, root, work, n_buckets=n_buckets, num_partitions=4)
+    assert r3["advanced"] and (r3["after"], r3["until"]) == (2, 3)
+
+    # window 4: docs after the all-empty window
+    append_snapshot(docs_from_rows(spark, corpus[9:]), root)
+    r4 = tail_once(spark, root, work, n_buckets=n_buckets, num_partitions=4)
+    assert r4["advanced"] and (r4["after"], r4["until"]) == (3, 4)
+
+    got = read_tail_output(spark, work)
+    per_doc = dict(got.groupBy("doc_id").count().collect())
+    assert per_doc == {d["doc_id"]: 1 for d in corpus}

@@ -9,13 +9,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
-
-from reading_the_unreadable_spark.operators.dedup import (
-    connected_components,
-    dup_clusters,
-    near_dedup,
-)
+from reading_the_unreadable_spark.operators.dedup import connected_components, dup_clusters
 
 
 def _uf_labels(n_nodes, edges):
@@ -92,17 +86,6 @@ def test_dup_clusters_covers_singletons(spark):
             and r["cluster_size"] == 1
             and r["is_canonical"]
         )
-
-
-def test_near_dedup_keeps_exactly_cluster_minima(spark):
-    docs = spark.createDataFrame(
-        [(i, f"t{i}") for i in range(8)], "doc_id long, text string"
-    )
-    pairs = _pairs_df(spark, [(0, 3), (3, 6), (1, 2)])
-    kept = sorted(
-        r["doc_id"] for r in near_dedup(docs, pairs).collect()
-    )
-    assert kept == [0, 1, 4, 5, 7]
 
 
 def test_cc_nonconvergence_raises(spark):

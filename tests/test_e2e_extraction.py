@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 
 from reading_the_unreadable_spark import oracle, synth
+from reading_the_unreadable_spark.operators.articles import _post_correct_pd, spans_frame_pd
 from reading_the_unreadable_spark.plans.pipeline import extract, extract_articles
 from reading_the_unreadable_spark.sources.docs import docs_from_rows
 
@@ -33,36 +34,6 @@ def spark_spans(spark, corpus):
         .toPandas()
         .sort_values(["doc_id", "order"])
         .reset_index(drop=True)
-    )
-
-
-def test_fused_equals_declarative_operator_chain(spark, corpus, spark_spans):
-    """The fused per-doc pandas article stage (production plan) must be
-    byte-equal to the declarative operator chain (post_correct →
-    split_paragraphs → merge_adjacent_titles → finalize_spans)."""
-    from reading_the_unreadable_spark.operators.articles import extract_spans
-    from reading_the_unreadable_spark.operators.geometry import (
-        docs_payload,
-        docs_to_geo_boxes,
-    )
-    from reading_the_unreadable_spark.operators.layout import layout
-
-    docs = docs_from_rows(spark, corpus)
-    ordered = layout(
-        docs_to_geo_boxes(docs, num_partitions=8),
-        num_partitions=8,
-        payload=docs_payload(docs),
-    )
-    declarative = (
-        extract_spans(ordered)
-        .toPandas()
-        .sort_values(["doc_id", "order"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        spark_spans[["doc_id", "kind", "text", "media_ref", "order"]],
-        declarative[["doc_id", "kind", "text", "media_ref", "order"]],
-        check_dtype=False,
     )
 
 
@@ -213,3 +184,109 @@ def test_documents_table_docs_adapter(spark):
     rows = per_doc.collect()
     assert len(rows) == 50
     assert all(r["n"] >= 1 and r["mn"] == 1 for r in rows)
+
+
+# Hand-built ordered-box frames (doc_id, kind, text, media_ref,
+# reading_order) for the article stage's edge shapes.  Each must give the
+# same spans through the production fold (post-correct + spans_frame_pd)
+# as through the oracle's text stage.
+FOLD_EDGE_FRAMES = {
+    "unicode_ws_padding": [
+        ("d1", "text", "\u00a0 nbsp padded \u00a0\n\n\u2009thin\u3000", None, 1),
+        ("d1", "title", "\u00a0LONDON NEWS\u202f", None, 2),
+        ("d1", "text", "para\u00a0\n\n\u00a0\u2009\n\nlast\u00a0", None, 3),
+    ],
+    "empty_paragraphs": [
+        ("d1", "text", "", None, 1),
+        ("d1", "title", "", None, 2),
+        ("d1", "text", "first\n\n\n\n\n\nsecond\n\n", None, 3),
+        ("d1", "text", "\n\n  \n\n", None, 4),
+        ("d1", "text", "kept", None, 5),
+    ],
+    "title_run_split_by_figure": [
+        ("d1", "title", "LONDON NEWS", None, 1),
+        ("d1", "text", "THE GREAT EXHIBITION", None, 2),
+        ("d1", "figure", "", "fig-1.png", 3),
+        ("d1", "title", "LATE TELEGRAMS", None, 4),
+        ("d1", "text", "CORN MARKET\n\nprices held firm", None, 5),
+    ],
+    "title_runs_across_doc_boundary": [
+        ("d1", "text", "body text", None, 1),
+        ("d1", "title", "ENDING ONE", None, 2),
+        ("d1", "text", "SHIPPING INTELLIGENCE", None, 3),
+        ("d2", "title", "OPENING TWO", None, 1),
+        ("d2", "title", "DOMESTIC AFFAIRS", None, 2),
+        ("d2", "text", "then prose", None, 3),
+    ],
+    "fenced_tsv_tables": [
+        ("d1", "table", "```tsv\na\tb\n1\t2\n```", None, 1),
+        ("d1", "table", "```tsv\nhas tsv inside\n```", None, 2),
+        ("d1", "table", "```\nx\ty\n```", None, 3),
+        ("d1", "table", "no fences\n\nat all", None, 4),
+    ],
+}
+
+
+def _fold(case: str) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """(ordered boxes, the production fold's spans) for one edge frame."""
+    ordered = pd.DataFrame(
+        FOLD_EDGE_FRAMES[case],
+        columns=["doc_id", "kind", "text", "media_ref", "reading_order"],
+    )
+    text = _post_correct_pd(ordered["kind"], ordered["text"])
+    return ordered, spans_frame_pd(ordered.assign(text=text))
+
+
+def _span_seq(df: pd.DataFrame) -> list[tuple]:
+    return [
+        (d, k, t, m if pd.notna(m) else None, int(o))
+        for d, k, t, m, o in zip(
+            df["doc_id"], df["kind"], df["text"], df["media_ref"], df["order"]
+        )
+    ]
+
+
+@pytest.mark.parametrize("case", sorted(FOLD_EDGE_FRAMES))
+def test_fold_matches_oracle_text_stage_on_edge_frames(case):
+    ordered, fold = _fold(case)
+    assert _span_seq(fold) == _span_seq(oracle.text_stage(ordered))
+
+
+def test_fold_edge_frames_expected_spans():
+    """Literal expectations for the edge frames, so the comparison above
+    cannot pass with both sides wrong the same way."""
+
+    def spans(case):
+        out = _fold(case)[1]
+        return list(zip(out["doc_id"], out["kind"], out["text"]))
+
+    assert spans("unicode_ws_padding") == [
+        ("d1", "text", "nbsp padded"),
+        ("d1", "text", "thin"),
+        ("d1", "title", "LONDON NEWS"),
+        ("d1", "text", "para"),
+        ("d1", "text", "last"),
+    ]
+    assert spans("empty_paragraphs") == [
+        ("d1", "text", "first"),
+        ("d1", "text", "second"),
+        ("d1", "text", "kept"),
+    ]
+    assert spans("title_run_split_by_figure") == [
+        ("d1", "title", "LONDON NEWS\nTHE GREAT EXHIBITION"),
+        ("d1", "figure", ""),
+        ("d1", "title", "LATE TELEGRAMS\nCORN MARKET"),
+        ("d1", "text", "prices held firm"),
+    ]
+    assert spans("title_runs_across_doc_boundary") == [
+        ("d1", "text", "body text"),
+        ("d1", "title", "ENDING ONE\nSHIPPING INTELLIGENCE"),
+        ("d2", "title", "OPENING TWO\nDOMESTIC AFFAIRS"),
+        ("d2", "text", "then prose"),
+    ]
+    assert spans("fenced_tsv_tables") == [
+        ("d1", "table", "a\tb\n1\t2"),
+        ("d1", "table", "has tsv inside"),
+        ("d1", "table", "x\ty"),
+        ("d1", "table", "no fences\n\nat all"),
+    ]

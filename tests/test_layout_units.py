@@ -232,40 +232,24 @@ def test_merge_overlapping_boxes_pairs_islands(spark):
     assert out[("A", 1, 3)]["y1"] == 9.0
 
 
-def test_derive_box_geometry_strict_parity(spark):
-    """strict_parity=True must replicate the reference's center formula
-    bug (center = width+x1 / height+y1 = bottom-right corner,
-    bbox_functions.py:667-668); default computes true centers."""
+def test_docs_to_boxes_matches_oracle(spark):
+    """The self-contained boxes frame: one row per span with its text,
+    media_ref and geometry, as the oracle explodes docs."""
     import pandas as pd
 
-    from reading_the_unreadable_spark.operators.geometry import (
-        derive_box_geometry,
-    )
+    from reading_the_unreadable_spark import oracle, synth
+    from reading_the_unreadable_spark.operators.geometry import docs_to_boxes
+    from reading_the_unreadable_spark.sources.docs import docs_from_rows
 
-    rows = [("d", 10.0, 20.0, 50.0, 100.0), ("d", 0.0, 0.0, 8.0, 2.0)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, x1 double, y1 double, x2 double, y2 double"
-    )
-    # the reference formula, straight from bbox_functions.py:663-668
-    ref = pd.DataFrame(rows, columns=["doc_id", "x1", "y1", "x2", "y2"])
-    ref["width"] = ref["x2"] - ref["x1"]
-    ref["height"] = ref["y2"] - ref["y1"]
-    ref["center_x"] = ref["width"] + ref["x1"]
-    ref["center_y"] = ref["height"] + ref["y1"]
-
+    corpus = synth.make_corpus(8, seed_tag="boxes")
+    cols = ["doc_id", "offset", "kind", "text", "media_ref",
+            "x1", "y1", "x2", "y2", "confidence"]
     got = (
-        derive_box_geometry(df, strict_parity=True)
-        .orderBy("x1")
-        .toPandas()
-        .sort_values("x1")
-        .reset_index(drop=True)
+        docs_to_boxes(docs_from_rows(spark, corpus)).toPandas()[cols]
+        .sort_values(["doc_id", "offset"]).reset_index(drop=True)
     )
-    want = ref.sort_values("x1").reset_index(drop=True)
-    for col in ("width", "height", "center_x", "center_y"):
-        assert (got[col] == want[col]).all(), col
-    # sanity: the "center" bug means center == bottom-right corner
-    assert (got["center_x"] == got["x2"]).all()
-    assert (got["center_y"] == got["y2"]).all()
-
-    true_c = derive_box_geometry(df).orderBy("x1").collect()
-    assert true_c[0]["center_x"] == 4.0 and true_c[0]["center_y"] == 1.0
+    want = (
+        oracle.docs_to_boxes(pd.DataFrame(corpus))[cols]
+        .sort_values(["doc_id", "offset"]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)

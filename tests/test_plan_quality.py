@@ -28,6 +28,11 @@ def test_extract_shuffle_count(spark):
     n_exchanges = len(re.findall(r"Exchange (hash|round)", plan))
     # 1 input rebalance + 1 doc_id hash for windows + 1 post-UDF re-hash
     assert n_exchanges <= 3, f"extract plan has {n_exchanges} exchanges:\n{plan[:2000]}"
+    # one article path: exactly the geometry attach and the fused fold
+    # cross into Python, and no row-at-a-time or Arrow-eval UDF stage
+    n_maps = len(re.findall(r"\bMapInPandas\b", plan))
+    assert n_maps == 2, f"extract plan has {n_maps} MapInPandas:\n{plan[:2000]}"
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan[:2000]
 
 
 def test_parquet_filter_pushdown(spark):
@@ -225,37 +230,6 @@ def test_unpartitioned_windows_only_post_limit(spark):
             assert (
                 "GlobalLimit" in plan or "TakeOrderedAndProject" in plan
             ), f"{name}: unpartitioned window without a limit: {bad[0]}"
-
-
-def test_bucketed_join_no_exchange(spark):
-    """Two tables bucketed+sorted on doc_id must join with zero Exchange
-    and zero Sort — the co-located-join storage contract."""
-    import shutil
-
-    from reading_the_unreadable_spark.sources.docs import docs_from_rows, write_bucketed
-
-    for t in ("bkt_left", "bkt_right"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"/tmp/rtu_spark_warehouse/{t}", ignore_errors=True)
-    docs = docs_from_rows(spark, synth.make_corpus(40, seed_tag="bkt"))
-    left = docs.select("doc_id", F.size("spans").alias("n_spans"))
-    right = docs.select("doc_id", F.lit(1).alias("flag"))
-    write_bucketed(left, "bkt_left", n_buckets=8)
-    write_bucketed(right, "bkt_right", n_buckets=8)
-    # hint("merge"): at this toy size the planner would broadcast (and
-    # rightly skip bucketing); at scale the join IS sort-merge, which is
-    # the case the bucketing contract covers
-    joined = spark.table("bkt_left").hint("merge").join(
-        spark.table("bkt_right"), "doc_id"
-    )
-    plan = _plan(joined)
-    assert "Exchange" not in plan, plan[:1500]
-    assert "SortMergeJoin" in plan
-    assert "Bucketed: true" in plan
-    # (a within-partition Sort remains: Spark only trusts sortBy files
-    # when each bucket is a single file — the shuffle elimination is the
-    # contract that matters at scale)
-    assert joined.count() == 40
 
 
 def test_extract_sorts_never_touch_text(spark):

@@ -12,8 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from reading_the_unreadable_spark import synth
-from reading_the_unreadable_spark.operators.geometry import docs_to_boxes
-from reading_the_unreadable_spark.operators.layout import apply_predictions, layout
 from reading_the_unreadable_spark.operators.metrics import cer
 from reading_the_unreadable_spark.sources.annotations import read_annotations_ndjson
 from reading_the_unreadable_spark.sources.docs import docs_from_rows
@@ -153,27 +151,6 @@ def test_lm_responses_jsonl_permissive(spark):
     assert ok["doc-1_page_1_B1C2R2"]["completion_tokens"] == 30
     corrupt = [r for r in rows if r["is_corrupt"]]
     assert len(corrupt) == 1 and corrupt[0]["content"] is None
-
-
-def test_apply_predictions_overwrites_kind(spark):
-    docs = docs_from_rows(spark, synth.make_corpus(6, seed_tag="pred"))
-    ordered = layout(docs_to_boxes(docs), num_partitions=4)
-    one_box = ordered.select("doc_id", "box_page_id", "kind").first()
-    preds = spark.createDataFrame(
-        [(one_box["doc_id"], one_box["box_page_id"], "reclassified")],
-        "doc_id string, box_page_id string, predicted_kind string",
-    )
-    out = apply_predictions(ordered, preds)
-    assert out.count() == ordered.count()
-    hit = out.filter(
-        (F.col("doc_id") == one_box["doc_id"])
-        & (F.col("box_page_id") == one_box["box_page_id"])
-    ).collect()
-    assert len(hit) == 1 and hit[0]["kind"] == "reclassified"
-    # everything else untouched
-    assert (
-        out.filter(F.col("kind") == "reclassified").count() == 1
-    )
 
 
 def test_snapshot_append_timetravel_incremental(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Unit tests: the OCR post-correction functions, pandas vs Spark parity,
-and literal expected strings (FIXTURES.md §3 case families)."""
+"""Unit tests: the OCR post-correction functions against literal expected
+strings (FIXTURES.md §3 case families)."""
 
 from __future__ import annotations
 
@@ -8,13 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from reading_the_unreadable_spark.functions.text import (
-    is_title_col,
     is_title_pd,
     knit_string_list,
     knit_strings,
-    normalize_text_col,
     normalize_text_pd,
-    strip_fences_col,
     strip_fences_pd,
 )
 
@@ -29,8 +26,8 @@ NORMALIZE_CASES = [
     ("mix-\nup\n\nnext\nline", "mixup\n\nnext line"),
     ("", ""),
     ("tail-\n", "tail"),
-    # Unicode whitespace (NBSP / thin space — common OCR artifacts): the
-    # Spark chain must strip them exactly like the oracle's str.strip()
+    # Unicode whitespace (NBSP / thin space — common OCR artifacts) is
+    # stripped like str.strip()
     ("\u00a0 nbsp padded \u00a0", "nbsp padded"),
     ("\u2009thin\u3000", "thin"),
 ]
@@ -67,27 +64,6 @@ def test_is_title_pd(raw, expected):
 @pytest.mark.parametrize("raw,expected", FENCE_CASES)
 def test_strip_fences_pd(raw, expected):
     assert strip_fences_pd(pd.Series([raw])).iloc[0] == expected
-
-
-def test_spark_matches_pandas(spark):
-    rows = (
-        [(r,) for r, _ in NORMALIZE_CASES]
-        + [(r,) for r, _ in TITLE_CASES]
-        + [(r,) for r, _ in FENCE_CASES]
-    )
-    df = spark.createDataFrame(rows, "raw string")
-    got = df.select(
-        "raw",
-        normalize_text_col(F.col("raw")).alias("norm"),
-        is_title_col(F.col("raw")).alias("title"),
-        strip_fences_col(F.col("raw")).alias("fence"),
-    ).toPandas()
-    pd_norm = normalize_text_pd(got["raw"])
-    pd_title = is_title_pd(got["raw"])
-    pd_fence = strip_fences_pd(got["raw"])
-    assert list(got["norm"]) == list(pd_norm)
-    assert list(got["title"]) == list(pd_title)
-    assert list(got["fence"]) == list(pd_fence)
 
 
 def test_knit():
