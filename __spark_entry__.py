@@ -21,6 +21,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from reading_the_unreadable_spark.execution import bind_once, fs_path, spread
 from reading_the_unreadable_spark.operators import dedup as D
 from reading_the_unreadable_spark.operators import metrics as M
 from reading_the_unreadable_spark.operators import similarity as S
@@ -2073,9 +2074,7 @@ def q_exif_extract(spark, sf):
                 {"doc_id": pdf["doc_id"], "payload": payloads}
             )
 
-    from reading_the_unreadable_spark.operators.dedup import _spread
-
-    files = _spread(
+    files = spread(
         _t(spark, sf, "documents").select("doc_id")
     ).mapInPandas(build, "doc_id long, payload binary")
     out = EX.exif_features(files)
@@ -2113,11 +2112,7 @@ def _word_chunks(n_words: int, decorate=None):
             ),
         )
 
-    # wrap the split in a single-element array transform: the lambda
-    # variable IS the materialized words array, evaluated once per row
-    return F.element_at(
-        F.transform(F.array(F.split(F.col("text"), " ")), chunks_of), 1
-    )
+    return bind_once(F.split(F.col("text"), " "), chunks_of)
 
 
 def q_c4_filters(spark, sf):
@@ -2201,9 +2196,7 @@ def q_gopher_filter(spark, sf):
         ).otherwise(F.array().cast("array<string>"))
         return F.array_join(F.concat(ch, extra), "\n")
 
-    text = F.element_at(
-        F.transform(F.array(_word_chunks(5)), _build), 1
-    )
+    text = bind_once(_word_chunks(5), _build)
     lined = d.select(
         F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("doc_id"),
         text.alias("text"),
@@ -2770,10 +2763,8 @@ def q_pdf_extract(spark, sf):
                 )
             yield pd_local.DataFrame(out)
 
-    from reading_the_unreadable_spark.operators.dedup import _spread
-
     # PDF build+crypt is the whole per-row cost: rebalance under-split scans
-    payloads = _spread(d).mapInPandas(enc, "doc_id string, payload binary")
+    payloads = spread(d).mapInPandas(enc, "doc_id string, payload binary")
     return parse_pdf_spans(payloads)
 
 
@@ -3252,7 +3243,6 @@ def q_snapshot_incremental(spark, sf):
     from pyspark.sql import functions as FF
 
     from reading_the_unreadable_spark.sources.snapshots import (
-        _fs_path,
         append_snapshot,
         delete_where,
         incremental_read,
@@ -3363,7 +3353,7 @@ def q_snapshot_incremental(spark, sf):
         # cleanup on the SAME filesystem the snapshot layer wrote to —
         # a driver-local shutil.rmtree would no-op against HDFS/S3 and
         # leak the scratch table (the write/cleanup-split rule)
-        fs, p, _ = _fs_path(spark, root)
+        fs, p, _ = fs_path(spark, root)
         if fs.exists(p):
             fs.delete(p, True)
     return spark.createDataFrame(
@@ -3411,9 +3401,7 @@ def q_scan_preprocess(spark, sf):
                 rows["payload"].append(encode_tiff(page, compression="g4"))
             yield pd_local.DataFrame(rows)
 
-    from reading_the_unreadable_spark.operators.dedup import _spread
-
-    media = _spread(d).mapInPandas(
+    media = spread(d).mapInPandas(
         gen, "media_ref string, kind string, payload binary"
     )
     return (
@@ -3459,9 +3447,7 @@ def q_page_blocks_pixels(spark, sf):
                 rows["payload"].append(encode_tiff(page, compression="g4"))
             yield pd_local.DataFrame(rows)
 
-    from reading_the_unreadable_spark.operators.dedup import _spread
-
-    media = _spread(d).mapInPandas(
+    media = spread(d).mapInPandas(
         gen, "media_ref string, kind string, payload binary"
     )
     blocks = detect_page_blocks(media, gap_x=8, gap_y=4)
@@ -3511,9 +3497,7 @@ def q_xy_cut_pixels(spark, sf):
                 rows["payload"].append(encode_tiff(page, compression="g4"))
             yield pd_local.DataFrame(rows)
 
-    from reading_the_unreadable_spark.operators.dedup import _spread
-
-    media = _spread(d).mapInPandas(
+    media = spread(d).mapInPandas(
         gen, "media_ref string, kind string, payload binary"
     )
     ordered = add_xy_cut_order(detect_page_blocks(media, gap_x=8, gap_y=4))
@@ -3638,9 +3622,7 @@ def q_media_pipeline(spark, sf):
                 rows["payload"].append(synth_avi_bytes(f"{ref}.avi", n_frames=4))
             yield pd_local.DataFrame(rows)
 
-    from reading_the_unreadable_spark.operators.dedup import _spread
-
-    media = _spread(d).mapInPandas(
+    media = spread(d).mapInPandas(
         gen, "media_ref string, kind string, payload binary"
     )
     img = extract_media_features(media.filter(F.col("kind") == "image")).select(

@@ -1,0 +1,182 @@
+"""Execution policy shared by every operator: where a repartition's width
+is set, where a plan is cut into stages, how a higher-order function
+binds an expression once, and the Hadoop-FS primitives that state and
+scratch files go through.
+
+This module imports nothing from the package, so any module can import
+it at top level.
+"""
+
+from __future__ import annotations
+
+import atexit
+import tempfile
+import uuid
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+# ------------------------------------------------------------ partitioning
+def spread(documents: DataFrame) -> DataFrame:
+    """Round-robin rebalance of the input — ONLY when the scan is
+    under-split.
+
+    Compute-heavy per-row work (md5 folds, shingling, set intersections)
+    runs inside the scan tasks, and a small single-file table would put
+    everything in one task.  A well-split production table already has
+    ≥ cores splits, and round-robin shuffling the full text corpus it
+    doesn't need is exactly the 100 TB anti-pattern — so this is a no-op
+    unless the scan has fewer partitions than the target parallelism."""
+    n = documents.sparkSession.sparkContext.defaultParallelism
+    # file-count heuristic, NOT ``.rdd.getNumPartitions()``: touching
+    # ``.rdd`` forces an RDD conversion of the logical plan at
+    # plan-build time.  ``inputFiles()`` is metadata-only; a scan with
+    # ≥ n files yields ≥ n splits under the DEFAULT file-source packing
+    # (openCostInBytes padding sizes bins to bytesPerCore — measured:
+    # 32 tiny files at defaultParallelism 8 plan exactly 8 scan
+    # partitions; big files split further, never coarser).  Deployments
+    # that zero out spark.sql.files.openCostInBytes void the heuristic:
+    # a scan of many tiny files may then plan fewer than n splits and is
+    # still left as it is.  Non-file plans (in-memory test frames)
+    # report zero files and get balanced.
+    if len(documents.inputFiles()) >= n:
+        return documents
+    return documents.repartition(n)
+
+
+def pin_fanout(df: DataFrame, *cols) -> DataFrame:
+    """Hash-repartition ``df`` on ``cols`` to a FIXED width of twice the
+    cluster's parallelism (at least 8).
+
+    For exchanges that are byte-small but feed CPU-huge work (pair
+    joins, n-gram expansion): the column-only form is AQE-coalescible
+    (REPARTITION_BY_COL), and AQE's byte heuristic collapses such an
+    exchange to a handful of tasks.  REPARTITION_BY_NUM pins the
+    fan-out, and the width follows the cluster, so the fix scales."""
+    n = max(df.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    return df.repartition(n, *cols)
+
+
+# ---------------------------------------------------------- HOF lambdas
+def bind_once(expr: Column, fn) -> Column:
+    """``fn(expr)``, with ``expr`` evaluated once per row.
+
+    Spark does not share a subexpression across a higher-order
+    function's lambda boundary, so an ``expr`` used inside the lambdas
+    ``fn`` builds would be re-evaluated on every call.  Wrapping it in a
+    one-element array transform makes the lambda variable the
+    materialised value."""
+    return F.element_at(F.transform(F.array(expr), fn), 1)
+
+
+# ------------------------------------------------------- Hadoop FS helpers
+# Every state/metadata probe goes through the Hadoop FS API — the SAME
+# filesystem Spark reads and writes.  A driver-local ``Path.exists()``
+# is wrong on any cluster whose default FS is not the driver's disk.
+def fs_path(spark: SparkSession, path: str):
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+
+
+def exists(spark: SparkSession, path: str) -> bool:
+    fs, p, _ = fs_path(spark, path)
+    return bool(fs.exists(p))
+
+
+def list_names(
+    spark: SparkSession, path: str, prefix: str = "", suffix: str = ""
+) -> list[str]:
+    """Names of the entries directly under ``path`` that start with
+    ``prefix`` and end with ``suffix``; [] when ``path`` is absent."""
+    fs, p, _ = fs_path(spark, path)
+    if not fs.exists(p):
+        return []
+    names = (st.getPath().getName() for st in fs.listStatus(p))
+    return [n for n in names if n.startswith(prefix) and n.endswith(suffix)]
+
+
+def read_file(spark: SparkSession, path: str) -> bytes:
+    fs, p, jvm = fs_path(spark, path)
+    stream = fs.open(p)
+    try:
+        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+
+
+def write_file(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write ``path`` create-then-rename so readers never observe a
+    partial file.  ``path`` must be attempt-unique (never pre-existing):
+    the commit protocol's uniqueness rule is what makes this safe on
+    filesystems whose rename silently overwrites (POSIX ``file://``)."""
+    fs, p, jvm = fs_path(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp-{uuid.uuid4().hex}")
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+    if not fs.rename(tmp, p):
+        fs.delete(tmp, False)
+        raise RuntimeError(f"rename to {path} failed")
+
+
+# --------------------------------------------------------- stage boundary
+def scratch_root(spark: SparkSession) -> str:
+    """Scratch root ON THE SPARK DEFAULT FILESYSTEM.  A driver-local
+    ``tempfile.gettempdir()`` path is only correct when the default FS
+    is ``file:`` (local mode): on a cluster whose default FS is HDFS/S3
+    a schemeless write resolves against THAT FS while driver-local
+    cleanup would target a different disk — write and rmtree must agree.
+    Deployments whose default-FS ``/tmp`` is absent or unwritable (e.g.
+    prefix-scoped object-store permissions) point scratch elsewhere via
+    ``spark.rtu.scratchDir``."""
+    configured = spark.conf.get("spark.rtu.scratchDir", None)
+    if configured:
+        return configured.rstrip("/")
+    fs_default = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    if fs_default.startswith("file:"):
+        return tempfile.gettempdir()
+    return "/tmp"  # a path on the shared default FS
+
+
+def stage_boundary(df: DataFrame, tag: str) -> DataFrame:
+    """Materialize ``df`` to scratch parquet and read it back — a stage
+    boundary for plans that consume an expensive intermediate more than
+    once.  The upstream jobs run at plan-build time: for the callers the
+    boundary IS the point.
+
+    Versus ``.cache()`` (what an earlier revision used): a corpus-scale
+    cached intermediate pins executor storage memory and thrashes at
+    100 TB, while a parquet boundary is bounded by scratch disk, is
+    readable with column pruning by each consumer, and survives executor
+    loss.
+
+    Scratch placement/cleanup: paths live under an application-scoped
+    directory on the SPARK DEFAULT FILESYSTEM (see :func:`scratch_root`)
+    and are deleted through the Hadoop FS API at interpreter exit.  Each
+    invocation gets a UNIQUE path — a deterministic per-tag path with
+    overwrite (an earlier revision) silently corrupts the frame a
+    PREVIOUS invocation of the same operator returned, and races
+    concurrent driver threads."""
+    spark = df.sparkSession
+    app_dir = f"{scratch_root(spark)}/rtu_stage/{spark.sparkContext.applicationId}"
+    if app_dir not in _STAGE_DIRS:
+        _STAGE_DIRS.add(app_dir)
+        atexit.register(_delete_tree, spark, app_dir)
+    path = f"{app_dir}/{tag}_{uuid.uuid4().hex[:8]}"
+    df.write.mode("errorifexists").parquet(path)
+    return spark.read.parquet(path)
+
+
+_STAGE_DIRS: set[str] = set()
+
+
+def _delete_tree(spark: SparkSession, path: str) -> None:
+    try:
+        fs, p, _ = fs_path(spark, path)
+        fs.delete(p, True)
+    except Exception:
+        pass  # the JVM may already be down at interpreter exit

@@ -22,129 +22,14 @@ results bit-for-bit.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..execution import pin_fanout, spread, stage_boundary
 from .textstats import tokens_col
 
 N_HASHES = 8
 BAND_ROWS = 2
-
-
-def _spread(documents: DataFrame, n_tasks: int | None = None) -> DataFrame:
-    """Round-robin rebalance of the input — ONLY when the scan is
-    under-split.
-
-    Compute-heavy per-row work (md5 folds, shingling, set intersections)
-    runs inside the scan tasks, and a small single-file table would put
-    everything in one task.  A well-split production table already has
-    ≥ cores splits, and round-robin shuffling the full text corpus it
-    doesn't need is exactly the 100 TB anti-pattern — so this is a no-op
-    unless the scan has fewer partitions than the target parallelism."""
-    n = n_tasks or documents.sparkSession.sparkContext.defaultParallelism
-    # file-count heuristic, NOT ``.rdd.getNumPartitions()``: touching
-    # ``.rdd`` forces an RDD conversion of the logical plan at
-    # plan-build time.  ``inputFiles()`` is metadata-only; a scan with
-    # ≥ n files yields ≥ n splits under the DEFAULT file-source packing
-    # (openCostInBytes padding sizes bins to bytesPerCore — measured:
-    # 32 tiny files at defaultParallelism 8 plan exactly 8 scan
-    # partitions; big files split further, never coarser).  Deployments
-    # that zero out spark.sql.files.openCostInBytes void this and
-    # should pass n_tasks explicitly.  Non-file plans (in-memory test
-    # frames) report zero files and get balanced.
-    if len(documents.inputFiles()) >= n:
-        return documents
-    return documents.repartition(n)
-
-
-def _scratch_root(spark) -> str:
-    """Scratch root ON THE SPARK DEFAULT FILESYSTEM.  A driver-local
-    ``tempfile.gettempdir()`` path is only correct when the default FS
-    is ``file:`` (local mode): on a cluster whose default FS is HDFS/S3
-    a schemeless write resolves against THAT FS while driver-local
-    cleanup would target a different disk — write and rmtree must agree.
-    Deployments whose default-FS ``/tmp`` is absent or unwritable (e.g.
-    prefix-scoped object-store permissions) point scratch elsewhere via
-    ``spark.rtu.scratchDir``."""
-    configured = spark.conf.get("spark.rtu.scratchDir", None)
-    if configured:
-        return configured.rstrip("/")
-    fs_default = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-    if fs_default.startswith("file:"):
-        return tempfile.gettempdir()
-    return "/tmp"  # a path on the shared default FS
-
-
-def _rm_on_default_fs(spark, path: str) -> None:
-    """Recursive delete via the Hadoop FileSystem API — targets the same
-    filesystem the parquet write used (shutil.rmtree would not)."""
-    try:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(hconf).delete(p, True)
-    except Exception:
-        pass  # JVM may already be down at interpreter exit
-
-
-def _stage_boundary(df: DataFrame, tag: str, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` to scratch parquet and read it back — a stage
-    boundary for plans that consume an expensive intermediate more than
-    once.
-
-    Versus ``.cache()`` (what an earlier revision used): a corpus-scale
-    cached intermediate pins executor storage memory and thrashes at
-    100 TB, while a parquet boundary is bounded by scratch disk, is
-    readable with column pruning by each consumer, and survives executor
-    loss.
-
-    Scratch placement/cleanup: paths live under an application-scoped
-    directory on the SPARK DEFAULT FILESYSTEM (see :func:`_scratch_root`)
-    and are deleted through the Hadoop FS API at interpreter exit.  Each
-    invocation gets a UNIQUE path — a deterministic per-tag path with
-    overwrite (an earlier revision) silently corrupts the frame a
-    PREVIOUS invocation of the same operator returned, and races
-    concurrent driver threads.  Long-lived sessions invoking dedup
-    operators many times can reclaim scratch between batches with
-    :func:`clear_stage_scratch` (after consuming all returned frames).
-
-    ``eager=True`` (default) runs the upstream jobs at plan-build time —
-    for the dedup operators the boundary IS the point.  ``eager=False``
-    keeps the API lazy for composing callers where the reuse may never
-    materialize: it returns ``localCheckpoint(eager=False)``, which cuts
-    lineage into executor-local block storage only when the first
-    consuming action runs (no scratch parquet, no plan-build-time job)."""
-    import atexit
-    import uuid
-
-    if not eager:
-        return df.localCheckpoint(eager=False)
-    spark = df.sparkSession
-    app_dir = (
-        f"{_scratch_root(spark)}/rtu_stage/{spark.sparkContext.applicationId}"
-    )
-    if app_dir not in _STAGE_DIRS:
-        _STAGE_DIRS.add(app_dir)
-        atexit.register(_rm_on_default_fs, spark, app_dir)
-    path = f"{app_dir}/{tag}_{uuid.uuid4().hex[:8]}"
-    df.write.mode("errorifexists").parquet(path)
-    return spark.read.parquet(path)
-
-
-_STAGE_DIRS: set[str] = set()
-
-
-def clear_stage_scratch(spark) -> None:
-    """Reclaim this application's stage-boundary scratch NOW instead of
-    at interpreter exit.  Only safe once every DataFrame returned by a
-    dedup operator in this session has been fully consumed — their plans
-    read the scratch paths."""
-    app_dir = (
-        f"{_scratch_root(spark)}/rtu_stage/{spark.sparkContext.applicationId}"
-    )
-    _rm_on_default_fs(spark, app_dir)
 
 
 def exact_duplicates(documents: DataFrame) -> DataFrame:
@@ -281,10 +166,10 @@ def minhash_lsh_pairs(
     # shingles feed four consumers (signatures, per-doc counts, and both
     # sides of the verify join): one scratch-parquet boundary instead of
     # four full recomputes — and instead of a corpus-scale .cache()
-    sh = _stage_boundary(shingles(_spread(documents), n), "minhash_shingles")
+    sh = stage_boundary(shingles(spread(documents), n), "minhash_shingles")
     sigs = band_signatures(sh, n_hashes, band_rows)
     a, b = sigs.alias("a"), sigs.alias("b")
-    cand = _stage_boundary(
+    cand = stage_boundary(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -398,7 +283,7 @@ def ngram_jaccard_pairs(
     # probe side spread across tasks: the pair evaluation happens in the
     # probe task of the join, so probe parallelism IS the operator's
     # parallelism.
-    a = _spread(toks).alias("a")
+    a = spread(toks).alias("a")
     b = toks.withColumn(
         "band",
         F.explode(F.array(F.col("band") - 1, F.col("band"), F.col("band") + 1)),
@@ -508,7 +393,7 @@ def simhash(documents: DataFrame, bits: int = 32) -> DataFrame:
     earlier revision folded once per bit — 32 O(tokens) passes; this is
     one.  At production scale swap the md5 nibble trick for ``xxhash64``
     + bit ops (same plan shape, cheaper)."""
-    documents = _spread(documents)
+    documents = spread(documents)
     w = tokens_col(F.col("text"))
     nibble_idx = F.sequence(F.lit(1), F.lit(bits))  # 1-based hex positions
 
@@ -565,7 +450,7 @@ def simhash_pairs(documents: DataFrame, bits: int = 32, bands: int = 4) -> DataF
     ``hamming <= t`` filter now PUSHES INTO the hash-pair join — the
     composed near-dup pipeline (near_dup_verified) prunes candidates
     before expansion instead of after the full pair shuffle."""
-    sh = _stage_boundary(simhash(documents, bits), "simhash_vals")
+    sh = stage_boundary(simhash(documents, bits), "simhash_vals")
     slice_bits = bits // bands
     mask = (1 << slice_bits) - 1
 
@@ -591,8 +476,7 @@ def simhash_pairs(documents: DataFrame, bits: int = 32, bands: int = 4) -> DataF
     # (it streams the whole expanded pair set): AQE's byte heuristic
     # would coalesce the exchange to a handful of tasks — pin the
     # fan-out on both sides (same lesson as allpairs_from_tokens)
-    n_pin = max(documents.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    sliced = sliced.repartition(n_pin, "band", "sig")
+    sliced = pin_fanout(sliced, "band", "sig")
     a, b = sliced.alias("a"), sliced.alias("b")
     # first-shared-band owner: keep the pair only in the band where all
     # EARLIER slices differ — exactly-once without a dedup shuffle
@@ -697,12 +581,12 @@ def winnow_fingerprints(
     Pure JVM higher-order functions (``sequence`` + ``transform`` +
     ``slice`` + ``array_min``), zero shuffle on a well-split table,
     streams over 100 TB.  The md5-per-gram fold is compute-heavy, so
-    an under-split scan is rebalanced first (``_spread`` — measured:
+    an under-split scan is rebalanced first (``spread`` — measured:
     the sf0.1 single-file table ran the whole map on ONE task, 559 s;
     spread across the cores it is seconds).  Docs shorter than ``k``
     words yield an empty set; docs with fewer than ``w`` grams yield
     their single minimum."""
-    documents = _spread(documents)
+    documents = spread(documents)
     # the words array is materialized as a column BEFORE the gram
     # transform: codegen cannot CSE across HOF lambda boundaries, so an
     # inline `split` reference re-ran the split for every gram slice
@@ -803,7 +687,7 @@ def dedup_substrings(
     explode_outer (the InferFiltersFromGenerate lesson, SURVEY §30).
 
     Output: doc_id, the deduped text, n_tokens / n_removed."""
-    documents = _spread(documents)
+    documents = spread(documents)
     # words materialized as a column first — an inline split reference
     # inside the gram lambda re-ran the split per gram (no CSE across
     # HOF lambda boundaries; the _shingle_fps lesson)
@@ -1148,8 +1032,7 @@ def _bitset_doc_pairs(
     )
     # byte-small / CPU-huge candidate join: pin the fan-out so AQE's
     # byte-based coalescing cannot serialize the pair evaluation
-    n_pin = max(toks.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    sigs = sigs.repartition(n_pin, *bucket_cols, "seg", "sig")
+    sigs = pin_fanout(sigs, *bucket_cols, "seg", "sig")
     a, b = sigs.alias("a"), sigs.alias("b")
     cond = (
         (F.col("a.seg") == F.col("b.seg"))
@@ -1314,7 +1197,7 @@ def allpairs_from_tokens(
     # three consumers (prefix explode + both verify sides) with three
     # different required partitionings — boundary the sorted-set frame
     # so the tokenize/df-join/fold chain runs once, not three times
-    sets = _stage_boundary(
+    sets = stage_boundary(
         toks.join(dfreq, "token")
         .groupBy("doc_id")
         .agg(
@@ -1357,11 +1240,8 @@ def allpairs_from_tokens(
     # AQE's byte heuristic the join stage coalesces to a handful of
     # tasks (measured: 5.1 s vs 2.9 s with coalescing off at
     # local[32]); REPARTITION_BY_NUM pins the fan-out on both sides
-    n_pin = max(
-        toks.sparkSession.sparkContext.defaultParallelism * 2, 8
-    )
-    pa = pa.repartition(n_pin, "token")
-    pb = pb.repartition(n_pin, "token")
+    pa = pin_fanout(pa, "token")
+    pb = pin_fanout(pb, "token")
     cands = (
         pa.join(pb, "token")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -1429,7 +1309,7 @@ def build_minhash_index(
     each incoming batch never touches history text again.  Pure
     per-doc function (md5 minhashes, sorted band fold) — identical
     whether built over the whole corpus or per partition/batch."""
-    return band_signatures(shingles(_spread(documents), n), n_hashes, band_rows)
+    return band_signatures(shingles(spread(documents), n), n_hashes, band_rows)
 
 
 def incremental_minhash_gate(
@@ -1499,7 +1379,7 @@ def lsh_recall(
     recall, candidate_precision) — recall is the fraction of true
     pairs the bands caught; candidate_precision the fraction of
     candidates that verify (1 − wasted verification work)."""
-    sh = _stage_boundary(shingles(_spread(documents), n), "lshrec_sh")
+    sh = stage_boundary(shingles(spread(documents), n), "lshrec_sh")
     truth = allpairs_from_tokens(
         sh.select("doc_id", F.col("shingle").alias("token")), threshold
     ).select("doc_a", "doc_b")

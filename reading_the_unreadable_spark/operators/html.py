@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import spread
+
 # removal patterns applied in order, each RE2-compatible (no backrefs)
 REMOVAL_PATTERNS = (
     r"(?is)<!--.*?-->",
@@ -76,9 +78,7 @@ def visible_text(c: Column) -> Column:
 
 def strip_html(df: DataFrame, html_col: str = "html") -> DataFrame:
     """(doc_id, html) → (doc_id, text): the visible-text projection."""
-    from .dedup import _spread
-
-    df = _spread(df)  # regex-heavy map stage: rebalance under-split scans
+    df = spread(df)  # regex-heavy map stage: rebalance under-split scans
 
     return df.select("doc_id", visible_text(F.col(html_col)).alias("text"))
 
@@ -96,9 +96,7 @@ def html_blocks(
     / total visible chars of the block; a block is content iff it is
     long enough AND link-sparse — the boilerpipe/jusText decision rule.
     Pure map-side work: one posexplode, zero shuffles."""
-    from .dedup import _spread
-
-    df = _spread(df)  # regex-heavy map stage: rebalance under-split scans
+    df = spread(df)  # regex-heavy map stage: rebalance under-split scans
 
     cleaned = _remove_machinery(F.col(html_col))
     blocks = F.split(cleaned, BLOCK_SPLIT_PATTERN)
@@ -203,9 +201,7 @@ def page_metadata(df: DataFrame, html_col: str = "html") -> DataFrame:
     over the first ``application/ld+json`` script block.  Zero UDFs,
     zero shuffles: at corpus scale this runs inside the scan stage,
     and missing tags surface as NULLs, never errors."""
-    from .dedup import _spread
-
-    df = _spread(df)  # regex-heavy map stage: rebalance under-split scans
+    df = spread(df)  # regex-heavy map stage: rebalance under-split scans
 
     html = F.col(html_col)
     title = F.regexp_extract(html, "(?s)<title>(.*?)</title>", 1)

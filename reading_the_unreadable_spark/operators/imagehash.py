@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..execution import spread
 from .multimodal import decode_image, resize_nearest
 
 DHASH_SCHEMA = "id long, dhash long, decode_err string"
@@ -204,11 +205,9 @@ def synth_dhash_images(documents: DataFrame) -> DataFrame:
                  "payload": pd.Series(payloads, dtype=object)}
             )
 
-    from .dedup import _spread
-
     # image synthesis + codec encode is compute-heavy map work:
     # rebalance under-split scans
-    return _spread(documents.select("doc_id")).mapInPandas(
+    return spread(documents.select("doc_id")).mapInPandas(
         fn, schema="doc_id long, payload binary"
     )
 
@@ -315,10 +314,8 @@ def synth_ahash_images(documents: DataFrame) -> DataFrame:
                  "payload": pd.Series(payloads, dtype=object)}
             )
 
-    from .dedup import _spread
-
     # image synthesis + codec encode is compute-heavy map work:
     # rebalance under-split scans
-    return _spread(documents.select("doc_id")).mapInPandas(
+    return spread(documents.select("doc_id")).mapInPandas(
         fn, schema="doc_id long, payload binary"
     )

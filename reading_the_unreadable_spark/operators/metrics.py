@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import pin_fanout, spread
+
 COVERAGE_SCHEMA = (
     "doc_id string, print_area double, covered_frac double, "
     "overlap_frac double, n_boxes int"
@@ -214,17 +216,12 @@ def _union_gram_stats(
     g = ground_truth.select(
         "doc_id", F.col(text_col).alias("_t"), F.lit(0).alias("_s")
     )
-    # EXPLICIT partition count, not repartition("doc_id"): the column
-    # form is AQE-coalescible (REPARTITION_BY_COL), and this shuffle
-    # is byte-SMALL but downstream-CPU-HUGE — AQE's byte heuristic
-    # collapsed it to ONE partition and serialized every gram through
-    # a single task (measured: chrF wall 23 s flat from local[2] to
-    # local[32]).  REPARTITION_BY_NUM pins the fan-out; the count
-    # follows the cluster (defaultParallelism), so the fix scales.
-    sc = predictions.sparkSession.sparkContext
-    both = p.unionByName(g).repartition(
-        max(sc.defaultParallelism * 2, 8), "doc_id"
-    )
+    # pinned fan-out, not repartition("doc_id"): this shuffle is
+    # byte-SMALL but downstream-CPU-HUGE, and AQE's byte heuristic
+    # collapsed the column-only form to ONE partition, serializing
+    # every gram through a single task (measured: chrF wall 23 s flat
+    # from local[2] to local[32])
+    both = pin_fanout(p.unionByName(g), "doc_id")
     ns = F.array(*[F.lit(i) for i in range(1, max_n + 1)])
     if char_level:
         # whitespace-stripped chars (chrF's convention); the class is
@@ -467,8 +464,6 @@ def wer(
     vocabulary floor rises from ~55k to ~1.1M distinct words.
     Normalization and word-splitting stay JVM-side (exact parity with
     the previous encode).  Measured at sf1.0: 119 s → ~5 s."""
-    from .dedup import _spread
-
     norm = lambda c: F.lower(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
     joined = predictions.alias("p").join(ground_truth.alias("g"), key, "inner")
     j = joined.select(
@@ -478,7 +473,7 @@ def wer(
     )
     # the encode+levenshtein is the whole cost and runs where the rows
     # sit: rebalance only when the upstream scan is under-split
-    j = _spread(j)
+    j = spread(j)
 
     @F.pandas_udf("struct<g:string,p:string>")
     def _encode_pair(gw: pd.Series, pw: pd.Series) -> pd.DataFrame:

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..execution import spread, stage_boundary
+
 # markers from the C4 blocklist family (lowercase substring match)
 C4_BOILERPLATE_MARKERS = ("javascript", "cookie", "lorem ipsum", "privacy policy")
 C4_TERMINAL_PUNCT = (".", "!", "?", '"')
@@ -64,9 +66,7 @@ def c4_line_filters(
     survive.  Higher-order array functions only — no explode; the only
     possible exchange is the conditional round-robin rebalance of an
     under-split scan (a no-op on well-split production tables)."""
-    from .dedup import _spread
-
-    documents = _spread(documents)
+    documents = spread(documents)
     lines = F.split(F.col(text_col), "\n")
     kept_lines = F.filter(lines, _line_ok)
     return documents.select(
@@ -93,9 +93,7 @@ def gopher_repetition_signals(
 
     All native expressions; ratios 6dp-rounded for cross-engine hashes.
     Under-split scans are rebalanced (no-op on well-split tables)."""
-    from .dedup import _spread
-
-    documents = _spread(documents)
+    documents = spread(documents)
     text = F.col(text_col)
     lines = F.split(text, "\n")
     paras = F.split(text, "\n\n")
@@ -148,9 +146,7 @@ def unigram_logprob(documents: DataFrame, text_col: str = "text") -> DataFrame:
     value; 4dp rounding absorbs float summation-order and libm-ulp
     differences across engines).  The corpus-total denominator is a
     1-row broadcast."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
+    documents = spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
 
     words = documents.select(
         "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("word")
@@ -185,9 +181,7 @@ def bigram_logprob(documents: DataFrame, text_col: str = "text") -> DataFrame:
     and n-weighted-averaged per doc; the vocabulary size is a 1-row
     broadcast.  Docs with fewer than two tokens have no bigrams and no
     output row (contract: score what can be scored)."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # bigram explode: rebalance scans
+    documents = spread(documents)  # bigram explode: rebalance scans
     words = F.split(F.col(text_col), " ")
     n = F.size(words)
     pairs = F.arrays_zip(
@@ -253,9 +247,7 @@ def kneser_ney_logprob(
     integer; the probability is one fused expression, so 4 dp rounding
     makes the score engine-exact.  Docs with fewer than two tokens
     have no bigrams and no output row."""
-    from .dedup import _spread, _stage_boundary
-
-    documents = _spread(documents)  # bigram explode: rebalance scans
+    documents = spread(documents)  # bigram explode: rebalance scans
     words = F.split(F.col(text_col), " ")
     n = F.size(words)
     pairs = F.arrays_zip(
@@ -265,11 +257,11 @@ def kneser_ney_logprob(
     flat = documents.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", F.col("p.prev").alias("prev"), F.col("p.cur").alias("cur")
     )
-    doc_big = _stage_boundary(
+    doc_big = stage_boundary(
         flat.groupBy("doc_id", "prev", "cur").agg(F.count("*").alias("n")),
         "kn_doc_bigrams",
     )
-    big = _stage_boundary(
+    big = stage_boundary(
         doc_big.groupBy("prev", "cur").agg(F.sum("n").alias("c_ab")),
         "kn_bigram_types",
     )
@@ -507,9 +499,7 @@ def redact_pii(
     count as an email.  The pattern set is the usual first-line scrub, not an NER
     system — names/addresses need a model pass (the mapInPandas slot in
     :mod:`multimodal` is the shape for that)."""
-    from .dedup import _spread
-
-    documents = _spread(documents)
+    documents = spread(documents)
     out = F.col(text_col)
     counts = {}
     for name, pat, token in PII_PATTERNS:
@@ -751,9 +741,7 @@ def contamination_flags(
 
     Output: the input columns plus ``n_overlaps`` (distinct shared
     n-grams) and boolean ``contaminated``."""
-    from .dedup import _spread
-
-    scan = _spread(documents)  # gram build is compute-heavy map work
+    scan = spread(documents)  # gram build is compute-heavy map work
 
     # the words array is materialized as a column before the transform:
     # codegen does not CSE inside HOF lambdas, so an inline `words`
@@ -1147,13 +1135,11 @@ def source_overlap(
 
     Output: (source_a, source_b, n_shared_shingles), a < b; source
     pairs with zero overlap emit no row."""
-    from .dedup import _spread
-
     # materialized token array + md5 inside the transform + per-doc
     # array_distinct (see _shingle_fps: lambda CSE / shuffle-input
     # rationale); the cross-DOC distinct shuffle below still runs, on
     # the per-doc-deduped fingerprints
-    documents = _spread(documents)
+    documents = spread(documents)
     w = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     docs = documents.withColumn("__so_w", w)
     k = F.size("__so_w") - F.lit(shingle_len - 1)
@@ -1192,9 +1178,7 @@ def _shingle_fps(
     ``shingle_len``-token shingles — map-side explode + md5; the
     per-doc array_distinct makes this exactly the distinct (doc, fp)
     set with zero shuffle."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # shingle+md5 build is map-heavy
+    documents = spread(documents)  # shingle+md5 build is map-heavy
     w = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     # materialize the token array as a column FIRST: codegen does not
     # common-subexpression-eliminate inside higher-order-function
@@ -1345,9 +1329,7 @@ def curriculum_rank(
     # job and the rank job re-executing the range exchange
     # independently could see different samplings/AQE coalescing and
     # disagree on partition membership — the boundary pins _pid
-    from .dedup import _stage_boundary
-
-    ranged = _stage_boundary(
+    ranged = stage_boundary(
         documents.repartitionByRange(n_parts, *key).withColumn(
             "_pid", F.spark_partition_id()
         ),
@@ -1431,9 +1413,7 @@ def dedup_lines(
     Output: doc_id, rebuilt ``text``, n_lines_total, n_dropped_within
     (within-doc repeats), n_dropped_boiler (corpus-frequent lines).
     """
-    from .dedup import _spread
-
-    documents = _spread(documents)  # line fold is compute-heavy map work
+    documents = spread(documents)  # line fold is compute-heavy map work
 
     scope = [scope_col] if scope_col else []
     lines = documents.select(

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..execution import pin_fanout
+
 
 def asof_join(
     left: DataFrame,
@@ -577,16 +579,15 @@ def range_interval_join(
     # left to AQE's byte heuristic they coalesce to a handful of tasks
     # (the Generate/coalesce trap, SURVEY §10) — pin the fan-out on both
     # sides of each join; the joins reuse the pinned hash distribution
-    n_pin = max(left.sparkSession.sparkContext.defaultParallelism * 2, 8)
-    dpairs = dpairs.repartition(n_pin, "__rng_ls", "__rng_le")
-    lkeyed = left.repartition(n_pin, left_start, left_end)
+    dpairs = pin_fanout(dpairs, "__rng_ls", "__rng_le")
+    lkeyed = pin_fanout(left, left_start, left_end)
     step1 = dpairs.join(
         lkeyed,
         (F.col(left_start) == F.col("__rng_ls"))
         & (F.col(left_end) == F.col("__rng_le")),
     )
-    step1 = step1.repartition(n_pin, "__rng_rs", "__rng_re")
-    rkeyed = right.repartition(n_pin, right_start, right_end)
+    step1 = pin_fanout(step1, "__rng_rs", "__rng_re")
+    rkeyed = pin_fanout(right, right_start, right_end)
     out = step1.join(
         rkeyed,
         (F.col(right_start) == F.col("__rng_rs"))

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import spread, stage_boundary
+
 # deterministic marker-word lists shared with the DuckDB oracle SQL
 LANG_MARKERS = {
     "en": ("the", "of", "and", "to", "in"),
@@ -153,9 +155,7 @@ def readability(documents: DataFrame) -> DataFrame:
     """Per-doc Flesch reading ease via a SCALAR Arrow ``pandas_udf`` —
     the sanctioned slow path: Arrow batch transfer, vectorized pandas
     inside, never row-at-a-time ``udf()``."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
+    documents = spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
 
     flesch_udf = F.pandas_udf(_flesch_series, "double")
     return documents.select(
@@ -312,9 +312,7 @@ def bpe_encode(
 
     Output: (doc_id, n_words, n_bpe_tokens, bpe_text) with tokens
     space-joined and words separated by the ``</w>`` markers."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
+    documents = spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
 
     words = documents.select(
         "doc_id",
@@ -471,9 +469,7 @@ def tokenizer_stats(
 
     Output: (source, n_docs, n_chars, n_ws_tokens, n_bpe_tokens,
     fertility, chars_per_token)."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
+    documents = spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
 
     lower = F.lower(F.col(text_col))
     toks = F.regexp_extract_all(lower, F.lit(BPE_PATTERN), 0)
@@ -636,9 +632,7 @@ def split_sentences(documents: DataFrame, text_col: str = "text") -> DataFrame:
     construction, and sentence-level quality filters all want.  Pure map
     stage — regexp protect/split + posexplode, zero shuffle, streams
     over 100 TB."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
+    documents = spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
 
     sents = sentences_col(F.col(text_col))
     return (
@@ -686,8 +680,6 @@ def corpus_drift(
     sits behind a stage boundary — the measured boundary-vs-recompute
     rule (SURVEY §10.m): without one the physical plan re-scans the
     corpus four times."""
-    from reading_the_unreadable_spark.operators.dedup import _stage_boundary
-
     counts = (
         documents.select(
             F.col(sid_col).cast("long").alias("sid"),
@@ -697,7 +689,7 @@ def corpus_drift(
         .groupBy("sid", "token")
         .agg(F.count("*").alias("cnt"))
     )
-    counts = _stage_boundary(counts, "drift_counts")
+    counts = stage_boundary(counts, "drift_counts")
     totals = counts.groupBy("sid").agg(F.sum("cnt").alias("total"))
     a, b = totals.alias("a"), totals.alias("b")
     pair_dim = (
@@ -863,9 +855,7 @@ def _text_tiling_arrow(
     exact Python-int arithmetic and the ppb value performs the same
     single long→double→divide→floor IEEE-754 chain as the JVM/DuckDB
     expression, so no float divergence is possible."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # per-doc numpy tiling: rebalance under-split scans
+    documents = spread(documents)  # per-doc numpy tiling: rebalance under-split scans
 
     import math
     from collections import Counter
@@ -941,9 +931,7 @@ def charclass_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     and control chars) is the remainder, so the five counts always sum
     to n_chars.  Fractions 6-dp rounded; ``suspicious`` flags
     digit_frac > 0.3 or other_frac > 0.1."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # char-class regex scans: rebalance
+    documents = spread(documents)  # char-class regex scans: rebalance
 
     t = F.coalesce(F.col(text_col), F.lit(""))
     n = F.length(t)

@@ -40,6 +40,16 @@ FRAME_FEATURE_SCHEMA = (
 
 
 # ----------------------------------------------------------------- codec
+def _chunk(cid: bytes, data: bytes) -> bytes:
+    pad = b"\x00" if len(data) % 2 else b""
+    return cid + struct.pack("<I", len(data)) + data + pad
+
+
+def _lst(kind: bytes, data: bytes) -> bytes:
+    body = kind + data
+    return b"LIST" + struct.pack("<I", len(body)) + body
+
+
 def encode_avi_mjpeg(frames: list[np.ndarray], fps: float = 10.0) -> bytes:
     """List of HxWx3 uint8 RGB frames → minimal RIFF-AVI with one MJPG
     ``00dc`` chunk per frame (the classic camera/scanner layout)."""
@@ -47,14 +57,6 @@ def encode_avi_mjpeg(frames: list[np.ndarray], fps: float = 10.0) -> bytes:
         raise ValueError("no frames")
     h, w = frames[0].shape[:2]
     payloads = [encode_jpeg(f, quality=90, subsample=True) for f in frames]
-
-    def chunk(cid: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return cid + struct.pack("<I", len(data)) + data + pad
-
-    def lst(kind: bytes, data: bytes) -> bytes:
-        body = kind + data
-        return b"LIST" + struct.pack("<I", len(body)) + body
 
     usec_per_frame = int(round(1_000_000 / fps))
     avih = struct.pack(
@@ -69,9 +71,9 @@ def encode_avi_mjpeg(frames: list[np.ndarray], fps: float = 10.0) -> bytes:
     strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, w * h * 3, 0, 0, 0, 0)
     # fourcc for BI_JPEG-style MJPG lives in biCompression (offset 16)
     strf = strf[:16] + b"MJPG" + strf[20:]
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", p) for p in payloads))
+    hdrl = _lst(b"hdrl", _chunk(b"avih", avih)
+                + _lst(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)))
+    movi = _lst(b"movi", b"".join(_chunk(b"00dc", p) for p in payloads))
     body = b"AVI " + hdrl + movi
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
@@ -90,14 +92,6 @@ def encode_avi_dib(frames: list[np.ndarray], fps: float = 10.0) -> bytes:
         bgr = f[::-1, :, ::-1]  # bottom-up, BGR
         payloads.append(b"".join(bgr[y].tobytes() + pad for y in range(h)))
 
-    def chunk(cid: bytes, data: bytes) -> bytes:
-        p = b"\x00" if len(data) % 2 else b""
-        return cid + struct.pack("<I", len(data)) + data + p
-
-    def lst(kind: bytes, data: bytes) -> bytes:
-        body = kind + data
-        return b"LIST" + struct.pack("<I", len(body)) + body
-
     usec_per_frame = int(round(1_000_000 / fps))
     avih = struct.pack(
         "<IIIIIIIIIIIIII",
@@ -111,9 +105,9 @@ def encode_avi_dib(frames: list[np.ndarray], fps: float = 10.0) -> bytes:
     strf = struct.pack(
         "<IiiHHIIiiII", 40, w, h, 1, 24, 0, row_size * h, 0, 0, 0, 0
     )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00db", p) for p in payloads))
+    hdrl = _lst(b"hdrl", _chunk(b"avih", avih)
+                + _lst(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)))
+    movi = _lst(b"movi", b"".join(_chunk(b"00db", p) for p in payloads))
     body = b"AVI " + hdrl + movi
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
@@ -291,14 +285,6 @@ def encode_avi_with_audio(
         pcm = pcm[:, None]
     ch = pcm.shape[1]
 
-    def chunk(cid: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return cid + struct.pack("<I", len(data)) + data + pad
-
-    def lst(kind: bytes, data: bytes) -> bytes:
-        body = kind + data
-        return b"LIST" + struct.pack("<I", len(body)) + body
-
     usec = int(round(1_000_000 / fps))
     avih = struct.pack("<IIIIIIIIIIIIII",
                        usec, 0, 0, 0x10, len(frames), 0, 2, 0, w, h, 0, 0, 0, 0)
@@ -315,11 +301,11 @@ def encode_avi_with_audio(
               + struct.pack("<hhhh", 0, 0, 0, 0))
     # strf for audio IS a WAVEFORMATEX: tag 1 = integer PCM, 16-bit
     strf_a = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
-    hdrl = lst(
+    hdrl = _lst(
         b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh_v) + chunk(b"strf", strf_v))
-        + lst(b"strl", chunk(b"strh", strh_a) + chunk(b"strf", strf_a)),
+        _chunk(b"avih", avih)
+        + _lst(b"strl", _chunk(b"strh", strh_v) + _chunk(b"strf", strf_v))
+        + _lst(b"strl", _chunk(b"strh", strh_a) + _chunk(b"strf", strf_a)),
     )
     # interleave: one video frame then one audio slice per period
     audio_bytes = pcm.tobytes()
@@ -328,12 +314,12 @@ def encode_avi_with_audio(
     movi_parts = []
     a = 0
     for i, v in enumerate(vids):
-        movi_parts.append(chunk(b"00dc", v))
+        movi_parts.append(_chunk(b"00dc", v))
         end = len(audio_bytes) if i == len(vids) - 1 else min(a + per, len(audio_bytes))
         if a < end:
-            movi_parts.append(chunk(b"01wb", audio_bytes[a:end]))
+            movi_parts.append(_chunk(b"01wb", audio_bytes[a:end]))
             a = end
-    movi = lst(b"movi", b"".join(movi_parts))
+    movi = _lst(b"movi", b"".join(movi_parts))
     body = b"AVI " + hdrl + movi
     return b"RIFF" + struct.pack("<I", len(body)) + body
 

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..execution import spread
+
 DISCARD_ELEMENTS = "math|gallery|nowiki|code|pre|syntaxhighlight"
 
 
@@ -105,9 +107,7 @@ def wiki_extract(documents: DataFrame, text_col: str = "wikitext") -> DataFrame:
     reduction): the Wikipedia cleaning projection plus the
     size-reduction diagnostic curation dashboards track — the same
     contract shape as :func:`operators.latex.latex_strip`."""
-    from .dedup import _spread
-
-    documents = _spread(documents)  # regex-chain map stage: rebalance
+    documents = spread(documents)  # regex-chain map stage: rebalance
     src = F.coalesce(F.col(text_col), F.lit(""))
     txt = wikitext_to_text(F.col(text_col))
     return documents.select(

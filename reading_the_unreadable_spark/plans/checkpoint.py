@@ -28,8 +28,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..execution import exists, fs_path, list_names
 from ..operators.articles import nest_spans
-from ..sources.snapshots import _exists, _fs_path, _list_names
 from .pipeline import extract
 
 CHECKPOINT_SCHEMA = (
@@ -52,7 +52,7 @@ def read_checkpoints(
     lineage row for the same bucket (append-mode parquet cannot express
     MERGE INTO — on Iceberg this is a MERGE) collapse to one row, so
     resume logic and metric sums stay exactly-once per bucket."""
-    if _exists(spark, ckpt_path):
+    if exists(spark, ckpt_path):
         df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt_path)
     else:
         df = spark.createDataFrame([], CHECKPOINT_SCHEMA)
@@ -81,14 +81,14 @@ def compact_checkpoints(
     at least one complete copy of every surviving row.
 
     Returns the number of files removed (0 = under threshold)."""
-    old_files = _list_names(spark, ckpt_path, "part-")
+    old_files = list_names(spark, ckpt_path, "part-")
     if len(old_files) <= max_files:
         return 0
     compacted = read_checkpoints(spark, ckpt_path, dedup=True)
     # tiny metadata table (≤ stages × n_buckets rows): one file
     compacted.coalesce(1).write.mode("append").parquet(ckpt_path)
     for name in old_files:
-        fs, p, _ = _fs_path(spark, f"{ckpt_path}/{name}")
+        fs, p, _ = fs_path(spark, f"{ckpt_path}/{name}")
         fs.delete(p, False)
     return len(old_files)
 
@@ -141,9 +141,11 @@ def run_extract_with_checkpoints(
     flat = extract(todo_docs.drop("bucket"), num_partitions=num_partitions)
     nested = with_bucket(nest_spans(flat), n_buckets)
     # dynamic partition overwrite: retried buckets replace any partial
-    # output from a killed attempt instead of duplicating it
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    nested.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
+    # output from a killed attempt instead of duplicating it.  Set per
+    # write, not on the session conf, which every later write would see.
+    nested.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(out_path)
     wall_ms = int((time.monotonic() - t0) * 1000)
 
     # per-bucket counts of what this run wrote (driver-side, ≤ n_buckets
@@ -152,7 +154,7 @@ def run_extract_with_checkpoints(
     # read is skipped when no bucket directory exists (there is no
     # schema to infer), and missing buckets count 0 below.
     counts = {}
-    if _list_names(spark, out_path, "bucket="):
+    if list_names(spark, out_path, "bucket="):
         counts = {
             r["bucket"]: (r["doc_count"], r["span_count"])
             for r in spark.read.parquet(out_path)

@@ -35,20 +35,13 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.snapshots import (
-    _exists,
-    _fs_path,
-    _list_names,
-    _read_file,
-    _write_file,
-    current_snapshot_id,
-    incremental_read,
-)
+from ..execution import exists, fs_path, list_names, read_file, write_file
+from ..sources.snapshots import current_snapshot_id, incremental_read
 from .checkpoint import run_extract_with_checkpoints
 
 
 def _hwm(spark: SparkSession, state_dir: str) -> int | None:
-    marks = [int(n[4:-5]) for n in _list_names(spark, state_dir, "hwm-")]
+    marks = [int(n[4:-5]) for n in list_names(spark, state_dir, "hwm-")]
     return max(marks) if marks else None
 
 
@@ -60,8 +53,8 @@ def _pending_intent(
     none is pending); with several left by repeated kills, the oldest
     incomplete window governs — windows are disjoint and sequential."""
     pend = []
-    for name in _list_names(spark, state_dir, "intent-"):
-        body = json.loads(_read_file(spark, f"{state_dir}/{name}").decode())
+    for name in list_names(spark, state_dir, "intent-"):
+        body = json.loads(read_file(spark, f"{state_dir}/{name}").decode())
         pend.append((body["after"], body["until"], name))
     if not pend:
         return None
@@ -96,7 +89,7 @@ def tail_once(
         if until is None or until <= after:
             return {"after": after, "until": after, "buckets_processed": 0,
                     "advanced": False}
-        _write_file(
+        write_file(
             spark,
             f"{state_dir}/intent-{after}-{until}.json",
             json.dumps({"after": after, "until": until}).encode(),
@@ -117,13 +110,13 @@ def tail_once(
     advanced = res["buckets_remaining"] == 0
     if advanced:
         # idempotent advance: a crash between the hwm write and the
-        # intent delete leaves the hwm file behind — _write_file demands
+        # intent delete leaves the hwm file behind — write_file demands
         # a fresh path (rename-onto-existing fails on HDFS), so skip the
         # rewrite and just finish the cleanup
         hwm_path = f"{state_dir}/hwm-{until}.json"
-        if not _exists(spark, hwm_path):
-            _write_file(spark, hwm_path, json.dumps({"until": until}).encode())
-        fs, p, _ = _fs_path(spark, f"{state_dir}/intent-{after}-{until}.json")
+        if not exists(spark, hwm_path):
+            write_file(spark, hwm_path, json.dumps({"until": until}).encode())
+        fs, p, _ = fs_path(spark, f"{state_dir}/intent-{after}-{until}.json")
         if fs.exists(p):
             fs.delete(p, False)
     return {
@@ -143,9 +136,9 @@ def read_tail_output(spark: SparkSession, work_dir: str) -> DataFrame:
     whose docs all produced no spans wrote no files and is skipped."""
     dirs = [
         f"{work_dir}/{name}/extracted_nested"
-        for name in _list_names(spark, work_dir, "diff_")
+        for name in list_names(spark, work_dir, "diff_")
     ]
-    dirs = [d for d in dirs if _list_names(spark, d, "bucket=")]
+    dirs = [d for d in dirs if list_names(spark, d, "bucket=")]
     if not dirs:
         raise ValueError(f"no tail output under {work_dir}")
     # one scan per window root: the outputs are bucket-partitioned, and

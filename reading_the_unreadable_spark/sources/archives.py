@@ -41,6 +41,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..execution import spread
+
 ARCHIVE_MEMBER_SCHEMA = (
     "source_file string, container string, member_name string, "
     "method string, member_bytes long, crc_ok boolean, payload binary, "
@@ -266,8 +268,9 @@ def parse_tar(data: bytes) -> list[dict]:
 
 
 def _gunzip_members(data: bytes) -> bytes:
-    """Concatenated gzip members (shared convention with the WARC
-    source — stdlib gzip.decompress stops after one member)."""
+    """Decompress concatenated gzip members (the .tar.gz and .warc.gz
+    layouts) — stdlib ``gzip.decompress`` stops after one member; the
+    zlib loop walks ``unused_data`` through all of them."""
     out, rest = [], data
     while rest:
         d = zlib.decompressobj(31)
@@ -404,8 +407,6 @@ def archives_from_documents(documents: DataFrame) -> DataFrame:
                 }
             )
 
-    from ..operators.dedup import _spread
-
-    return _spread(documents.select("doc_id", "text")).mapInPandas(
+    return spread(documents.select("doc_id", "text")).mapInPandas(
         fn, schema="source string, content binary"
     )

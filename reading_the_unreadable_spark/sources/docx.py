@@ -47,6 +47,7 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame
 
+from ..execution import spread
 from .archives import build_zip, parse_zip
 
 _W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
@@ -356,8 +357,6 @@ def docx_from_documents(documents: DataFrame) -> DataFrame:
                 }
             )
 
-    from ..operators.dedup import _spread
-
-    return _spread(documents.select("doc_id", "text")).mapInPandas(
+    return spread(documents.select("doc_id", "text")).mapInPandas(
         fn, schema="source string, content binary"
     )

@@ -36,6 +36,7 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame
 
+from ..execution import spread
 from .archives import build_zip, parse_zip
 
 _CNT = "{urn:oasis:names:tc:opendocument:xmlns:container}"
@@ -218,8 +219,6 @@ def epub_from_documents(documents: DataFrame) -> DataFrame:
                 }
             )
 
-    from ..operators.dedup import _spread
-
-    return _spread(documents.select("doc_id", "text")).mapInPandas(
+    return spread(documents.select("doc_id", "text")).mapInPandas(
         fn, schema="source string, content binary"
     )

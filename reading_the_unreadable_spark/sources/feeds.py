@@ -33,13 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _unescape(c: Column) -> Column:
-    c = F.replace(c, F.lit("&lt;"), F.lit("<"))
-    c = F.replace(c, F.lit("&gt;"), F.lit(">"))
-    c = F.replace(c, F.lit("&quot;"), F.lit('"'))
-    c = F.replace(c, F.lit("&apos;"), F.lit("'"))
-    return F.replace(c, F.lit("&amp;"), F.lit("&"))  # ampersand LAST
+from .sitemaps import _xml_unescape
 
 
 def _opt_ts(s: Column, fmt: str) -> Column:
@@ -53,7 +47,7 @@ def _text_field(e: Column, tag: str) -> Column:
     """``<tag>…</tag>`` content with optional CDATA unwrap; '' → NULL."""
     raw = F.regexp_extract(e, f"(?s)<{tag}[^>]*>(.*?)</{tag}>", 1)
     cdata = F.regexp_extract(raw, r"(?s)^\s*<!\[CDATA\[(.*?)\]\]>\s*$", 1)
-    val = F.when(cdata != "", cdata).otherwise(_unescape(raw))
+    val = F.when(cdata != "", cdata).otherwise(_xml_unescape(raw))
     return F.when(val == "", F.lit(None).cast("string")).otherwise(val)
 
 
@@ -98,7 +92,7 @@ def parse_feeds(feeds: DataFrame) -> DataFrame:
             F.regexp_extract_all(
                 e, F.lit("<category>([^<]*)</category>"), F.lit(1)
             ),
-            _unescape,
+            _xml_unescape,
         ).alias("categories"),
     )
 
@@ -112,7 +106,7 @@ def parse_feeds(feeds: DataFrame) -> DataFrame:
             F.lit(None).cast("string"),
         )
         .otherwise(
-            _unescape(F.regexp_extract(e, "<link[^>]*href=\"([^\"]*)\"", 1))
+            _xml_unescape(F.regexp_extract(e, "<link[^>]*href=\"([^\"]*)\"", 1))
         )
         .alias("link"),
         _text_field(e, "id").alias("item_id"),
@@ -124,7 +118,7 @@ def parse_feeds(feeds: DataFrame) -> DataFrame:
             F.regexp_extract_all(
                 e, F.lit("<category[^>]*term=\"([^\"]*)\""), F.lit(1)
             ),
-            _unescape,
+            _xml_unescape,
         ).alias("categories"),
     )
     return rss.unionByName(atom).drop("idx")

@@ -74,8 +74,9 @@ the rewritten files, never a table copy.
 ALL filesystem access — data AND manifests — goes through the Hadoop
 FileSystem API resolved from the path, so on a cluster whose default FS
 is HDFS/S3 the metadata lands next to the data, never on one driver
-machine's local disk (the write/cleanup-filesystem split rule; see also
-``dedup._scratch_root``).
+machine's local disk (the write/cleanup-filesystem split rule; the
+primitives are ``execution.fs_path`` and its siblings, and stage scratch
+follows the same rule, see ``execution.scratch_root``).
 
 Commit protocol (Iceberg's, minus the catalog CAS a single writer does
 not need): data files are written under an ATTEMPT-UNIQUE directory
@@ -103,6 +104,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType, StructType
 
+from ..execution import fs_path, list_names, read_file, write_file
 from .docs import DOCS_SCHEMA
 
 
@@ -115,62 +117,9 @@ def _norm_uri(path: str) -> str:
     return f"{u.netloc}{u.path}"
 
 
-# ------------------------------------------------------- Hadoop FS helpers
-# Every state/metadata probe goes through the Hadoop FS API — the SAME
-# filesystem Spark reads and writes.  A driver-local ``Path.exists()``
-# is wrong on any cluster whose default FS is not the driver's disk.
-def _fs_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    fs, p, _ = _fs_path(spark, path)
-    return bool(fs.exists(p))
-
-
-def _list_names(
-    spark: SparkSession, path: str, prefix: str = "", suffix: str = ""
-) -> list[str]:
-    """Names of the entries directly under ``path`` that start with
-    ``prefix`` and end with ``suffix``; [] when ``path`` is absent."""
-    fs, p, _ = _fs_path(spark, path)
-    if not fs.exists(p):
-        return []
-    names = (st.getPath().getName() for st in fs.listStatus(p))
-    return [n for n in names if n.startswith(prefix) and n.endswith(suffix)]
-
-
-def _read_file(spark: SparkSession, path: str) -> bytes:
-    fs, p, jvm = _fs_path(spark, path)
-    stream = fs.open(p)
-    try:
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-
-
-def _write_file(spark: SparkSession, path: str, data: bytes) -> None:
-    """Write ``path`` create-then-rename so readers never observe a
-    partial file.  ``path`` must be attempt-unique (never pre-existing):
-    the commit protocol's uniqueness rule is what makes this safe on
-    filesystems whose rename silently overwrites (POSIX ``file://``)."""
-    fs, p, jvm = _fs_path(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp-{uuid.uuid4().hex}")
-    out = fs.create(tmp, False)
-    try:
-        out.write(bytearray(data))
-    finally:
-        out.close()
-    if not fs.rename(tmp, p):
-        fs.delete(tmp, False)
-        raise RuntimeError(f"rename to {path} failed")
-
-
 def _manifest_names(spark: SparkSession, root: str) -> list[str]:
     """All manifest file names, including race losers not yet cleaned."""
-    return _list_names(spark, f"{root}/manifests", "snap-", ".json")
+    return list_names(spark, f"{root}/manifests", "snap-", ".json")
 
 
 def _split_name(name: str) -> tuple[int, str]:
@@ -198,7 +147,7 @@ def _winning_manifests(spark: SparkSession, root: str) -> list[tuple[int, str]]:
 # --------------------------------------------------------------- manifests
 def _snapshots(spark: SparkSession, root: str) -> list[dict]:
     return [
-        json.loads(_read_file(spark, f"{root}/manifests/{name}").decode())
+        json.loads(read_file(spark, f"{root}/manifests/{name}").decode())
         for _, name in _winning_manifests(spark, root)
     ]
 
@@ -214,7 +163,7 @@ def _write_data_dir(df: DataFrame, root: str, sid: int, attempt: str) -> list[st
     data_dir = f"{root}/data/snap-{sid}-{attempt}"
     df.write.mode("errorifexists").parquet(data_dir)
     spark = df.sparkSession
-    fs, p, _ = _fs_path(spark, data_dir)
+    fs, p, _ = fs_path(spark, data_dir)
     files = []
     for st in sorted(fs.listStatus(p), key=lambda s: s.getPath().getName()):
         name = st.getPath().getName()
@@ -229,10 +178,10 @@ def _commit(spark: SparkSession, root: str, sid: int, attempt: str, manifest: di
     attempt, we lost — withdraw our manifest (the data dir becomes an
     expire-reclaimable orphan) and surface the conflict."""
     name = f"snap-{sid}-{attempt}.json"
-    _write_file(spark, f"{root}/manifests/{name}", json.dumps(manifest).encode())
+    write_file(spark, f"{root}/manifests/{name}", json.dumps(manifest).encode())
     winner = dict(_winning_manifests(spark, root)).get(sid)
     if winner != name:
-        fs, p, _ = _fs_path(spark, f"{root}/manifests/{name}")
+        fs, p, _ = fs_path(spark, f"{root}/manifests/{name}")
         fs.delete(p, False)
         raise RuntimeError(
             f"snapshot {sid} was committed concurrently; retry the operation"
@@ -426,7 +375,7 @@ def _write_data_dir_partitioned(
     data_dir = f"{root}/data/snap-{sid}-{attempt}"
     out.write.mode("errorifexists").partitionBy(*pcols).parquet(data_dir)
     spark = df.sparkSession
-    fs, p, _ = _fs_path(spark, data_dir)
+    fs, p, _ = fs_path(spark, data_dir)
     files: list[str] = []
     partitions: dict = {}
 
@@ -534,7 +483,7 @@ def _files_of(spark: SparkSession, snap: dict) -> list[str]:
         return list(snap["files"])
     files: list[str] = []
     for d in snap.get("paths", []):
-        fs, p, _ = _fs_path(spark, d)
+        fs, p, _ = fs_path(spark, d)
         for st in sorted(fs.listStatus(p), key=lambda s: s.getPath().getName()):
             name = st.getPath().getName()
             if name.endswith(".parquet") and not name.startswith(("_", ".")):
@@ -943,7 +892,7 @@ def rewrite_data_files(
     entries = _state_files(spark, snaps)
     sized: list[tuple[str, str, int]] = []
     for f, key in entries:
-        fs, p, _ = _fs_path(spark, f)
+        fs, p, _ = fs_path(spark, f)
         sized.append((f, key, int(fs.getFileStatus(p).getLen())))
     if zorder_by:
         candidates = sized
@@ -1068,7 +1017,7 @@ def stage_append(
     if stat_cols:
         manifest["stats"] = _collect_stats(spark, files, df.schema, stat_cols)
     name = f"staged-{attempt}.json"
-    _write_file(spark, f"{root}/staged/{name}", json.dumps(manifest).encode())
+    write_file(spark, f"{root}/staged/{name}", json.dumps(manifest).encode())
     return name
 
 
@@ -1076,10 +1025,10 @@ def read_staged(spark: SparkSession, root: str, name: str) -> DataFrame:
     """The AUDIT step: read exactly the staged rows (and nothing
     else) so validation queries can gate the publish."""
     path = f"{root}/staged/{name}"
-    fs, p, _ = _fs_path(spark, path)
+    fs, p, _ = fs_path(spark, path)
     if not fs.exists(p):
         raise ValueError(f"unknown staging {name!r}")
-    snap = json.loads(_read_file(spark, path).decode())
+    snap = json.loads(read_file(spark, path).decode())
     return _read_entries(spark, _added_entries(spark, snap))
 
 
@@ -1090,10 +1039,10 @@ def publish_staged(spark: SparkSession, root: str, name: str) -> int:
     between commit and staging-file cleanup: if the staged files are
     already live, the leftover staging manifest is just removed."""
     path = f"{root}/staged/{name}"
-    fs, p, _ = _fs_path(spark, path)
+    fs, p, _ = fs_path(spark, path)
     if not fs.exists(p):
         raise ValueError(f"unknown staging {name!r}")
-    snap = json.loads(_read_file(spark, path).decode())
+    snap = json.loads(read_file(spark, path).decode())
     live = {
         _norm_uri(f) for f, _k in _state_files(spark, _snapshots(spark, root))
     }
@@ -1119,7 +1068,7 @@ def publish_staged(spark: SparkSession, root: str, name: str) -> int:
 def abort_staged(spark: SparkSession, root: str, name: str) -> None:
     """Drop a staging manifest (audit failed); its data dir becomes an
     orphan that ``expire_snapshots`` reclaims past the grace age."""
-    fs, p, _ = _fs_path(spark, f"{root}/staged/{name}")
+    fs, p, _ = fs_path(spark, f"{root}/staged/{name}")
     if not fs.exists(p):
         raise ValueError(f"unknown staging {name!r}")
     fs.delete(p, False)
@@ -1152,7 +1101,7 @@ def create_tag(
             f"tag {name!r} already points at {existing[name]} "
             f"(tags are immutable; delete_tag first)"
         )
-    _write_file(
+    write_file(
         spark,
         f"{root}/refs/tag-{name}.json",
         json.dumps({"name": name, "snapshot_id": snapshot_id}).encode(),
@@ -1162,7 +1111,7 @@ def create_tag(
 
 def delete_tag(spark: SparkSession, root: str, name: str) -> None:
     """Drop a tag (its snapshot becomes expirable again)."""
-    fs, p, _ = _fs_path(spark, f"{root}/refs/tag-{name}.json")
+    fs, p, _ = fs_path(spark, f"{root}/refs/tag-{name}.json")
     if not fs.exists(p):
         raise ValueError(f"unknown tag {name!r}")
     fs.delete(p, False)
@@ -1171,8 +1120,8 @@ def delete_tag(spark: SparkSession, root: str, name: str) -> None:
 def list_tags(spark: SparkSession, root: str) -> dict[str, int]:
     """{tag name: snapshot id} for every tag under ``root/refs``."""
     out: dict[str, int] = {}
-    for fname in _list_names(spark, f"{root}/refs", "tag-", ".json"):
-        ref = json.loads(_read_file(spark, f"{root}/refs/{fname}").decode())
+    for fname in list_names(spark, f"{root}/refs", "tag-", ".json"):
+        ref = json.loads(read_file(spark, f"{root}/refs/{fname}").decode())
         out[ref["name"]] = int(ref["snapshot_id"])
     return out
 
@@ -1285,11 +1234,11 @@ def expire_snapshots(
         # schema-evolution window
         base_sid, base_name = survivors[0]
         folded = [
-            json.loads(_read_file(spark, f"{root}/manifests/{name}").decode())
+            json.loads(read_file(spark, f"{root}/manifests/{name}").decode())
             for _sid, name in expired
         ]
         base = json.loads(
-            _read_file(spark, f"{root}/manifests/{base_name}").decode()
+            read_file(spark, f"{root}/manifests/{base_name}").decode()
         )
         fold_entries = _state_files(spark, folded + [base])
         fold_norm = {_norm_uri(f) for f, _key in fold_entries}
@@ -1318,7 +1267,7 @@ def expire_snapshots(
         # so the folded manifest deterministically wins its sid; among
         # repeated folds the smallest wins and stale ones get deleted
         new_name = f"snap-{base_sid}-0-{uuid.uuid4().hex[:8]}.json"
-        _write_file(
+        write_file(
             spark, f"{root}/manifests/{new_name}", json.dumps(base).encode()
         )
         # delete expired + superseded manifests (every manifest for an
@@ -1329,7 +1278,7 @@ def expire_snapshots(
         }
         for name in _manifest_names(spark, root):
             if name not in keep_names:
-                fs, p, _ = _fs_path(spark, f"{root}/manifests/{name}")
+                fs, p, _ = fs_path(spark, f"{root}/manifests/{name}")
                 fs.delete(p, False)
     else:
         expired_ids = []
@@ -1351,13 +1300,13 @@ def expire_snapshots(
     # ...and so does every file referenced by a write-audit-publish
     # STAGING manifest: staged-but-unpublished data is pending, not
     # orphaned (abort_staged removes the manifest, THEN it's an orphan)
-    sfs, sp, _ = _fs_path(spark, f"{root}/staged")
+    sfs, sp, _ = fs_path(spark, f"{root}/staged")
     if sfs.exists(sp):
         for st in sfs.listStatus(sp):
             sname = st.getPath().getName()
             if sname.endswith(".json"):
                 snap = json.loads(
-                    _read_file(spark, f"{root}/staged/{sname}").decode()
+                    read_file(spark, f"{root}/staged/{sname}").decode()
                 )
                 referenced |= {
                     f.rstrip("/").rsplit("/", 2)[-2]
@@ -1365,7 +1314,7 @@ def expire_snapshots(
                 }
     cutoff_ms = (_time.time() - orphan_grace_s) * 1000.0
     removed = []
-    fs, data_p, jvm = _fs_path(spark, f"{root}/data")
+    fs, data_p, jvm = fs_path(spark, f"{root}/data")
     if fs.exists(data_p):
         for st in fs.listStatus(data_p):
             name = st.getPath().getName()

@@ -46,6 +46,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from ..execution import spread
+
 SUBTITLE_SCHEMA = (
     "source_file string, fmt string, cue_index int, start_ms long, "
     "end_ms long, text string, parse_err string"
@@ -277,8 +279,6 @@ def subtitles_from_documents(documents: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["source", "content"])
 
-    from ..operators.dedup import _spread
-
-    return _spread(documents.select("doc_id", "text")).mapInPandas(
+    return spread(documents.select("doc_id", "text")).mapInPandas(
         fn, schema="source string, content binary"
     )

@@ -32,6 +32,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..execution import spread
+from .archives import _gunzip_members
+
 CRLF = b"\r\n"
 
 WARC_RECORD_SCHEMA = (
@@ -98,23 +101,6 @@ def build_warc(records: list[bytes], gzip_members: bool = False) -> bytes:
 
 
 # ------------------------------------------------------------------ parser
-def _gunzip_members(data: bytes) -> bytes:
-    """Decompress concatenated gzip members (the .warc.gz layout) —
-    stdlib ``gzip.decompress`` stops after one member; the zlib loop
-    walks ``unused_data`` through all of them."""
-    out, rest = [], data
-    while rest:
-        d = zlib.decompressobj(31)
-        try:
-            out.append(d.decompress(rest))
-        except zlib.error as e:
-            raise ValueError(f"corrupt gzip member in WARC: {e}") from e
-        if not d.eof:
-            raise ValueError("truncated gzip member in WARC")
-        rest = d.unused_data
-    return b"".join(out)
-
-
 def _parse_header_block(block: bytes) -> dict[str, str]:
     """CRLF-separated ``Name: value`` fields; names case-folded (the spec
     says field names are case-insensitive)."""
@@ -339,9 +325,7 @@ def warc_from_documents(documents: DataFrame) -> DataFrame:
                  "content": [bytearray(blob)]}
             )
 
-    from ..operators.dedup import _spread
-
     # payload packing is compute-heavy map work: rebalance under-split scans
-    return _spread(documents.select("doc_id", "text")).mapInPandas(
+    return spread(documents.select("doc_id", "text")).mapInPandas(
         fn, schema="source string, content binary"
     )

@@ -102,6 +102,30 @@ def test_orphan_committed_bucket_not_checkpointed(spark, docs):
     assert out.groupBy("doc_id").count().filter("count > 1").count() == 0
 
 
+def test_run_leaves_session_overwrite_mode_alone(spark, docs, tmp_path):
+    """The bucket write's dynamic partition overwrite is set on that
+    write only: after a run the session conf still reads static, and a
+    later unrelated partitioned overwrite replaces the whole directory."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        run_extract_with_checkpoints(
+            spark, docs, OUT, n_buckets=N_BUCKETS, num_partitions=8
+        )
+        assert spark.conf.get(key) == "STATIC"
+        other = str(tmp_path / "other")
+        spark.range(2).select("id", (F.col("id") + 1).alias("k")).write.mode(
+            "overwrite"
+        ).partitionBy("k").parquet(other)
+        spark.range(1).select("id", F.lit(1).alias("k")).write.mode(
+            "overwrite"
+        ).partitionBy("k").parquet(other)
+        assert [r["k"] for r in spark.read.parquet(other).collect()] == [1]
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_duplicate_lineage_appends_deduped(spark, docs):
     """Two racing retries appending lineage rows for the same bucket must
     collapse to one row on read (latest-wins), keeping resume skips and

@@ -312,30 +312,6 @@ def test_fill_chain_adds_no_exchange(spark):
     assert n_ex[True] == n_ex[False], n_ex
 
 
-def test_stage_boundary_lazy_mode(spark):
-    """eager=False keeps the API lazy: no scratch parquet is written at
-    plan-build time (no job runs), and the frame still evaluates
-    correctly via localCheckpoint at first action."""
-    from pathlib import Path
-
-    from reading_the_unreadable_spark.operators.dedup import (
-        _scratch_root,
-        _stage_boundary,
-    )
-
-    df = spark.range(100).withColumnRenamed("id", "v")
-    before = set(Path(_scratch_root(spark), "rtu_stage").rglob("lazy_tag*")) if Path(
-        _scratch_root(spark), "rtu_stage"
-    ).exists() else set()
-    lazy = _stage_boundary(df, "lazy_tag", eager=False)
-    after = set(Path(_scratch_root(spark), "rtu_stage").rglob("lazy_tag*")) if Path(
-        _scratch_root(spark), "rtu_stage"
-    ).exists() else set()
-    assert before == after  # nothing written at plan-build time
-    assert lazy.count() == 100
-    assert lazy.agg(F.sum("v")).first()[0] == 4950
-
-
 def test_snapshot_read_pushdown_and_union_shape(spark, tmp_path):
     """Snapshot reads stay ordinary parquet scans: filters and column
     pruning reach the scan through the manifest indirection, a
@@ -778,3 +754,54 @@ def test_url_canonical_zero_shuffle(spark):
     assert len(re.findall(r"Exchange (hash|round|range)", plan)) == 0, plan[:2000]
     for marker in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert marker not in plan, (marker, plan[:2000])
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The argument text of every ``lambdafunction(`` call in ``plan``,
+    found by matching its parentheses."""
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        bodies.append(plan[m.end() : i - 1])
+    return bodies
+
+
+def test_hof_lambdas_do_not_reevaluate_split(spark):
+    """Spark does not reuse a subexpression across a higher-order
+    function's lambda boundary, so a ``split(text)`` written inside a
+    lambda re-runs once per array element.  The operators that build
+    n-grams or line/word arrays bind the split outside every lambda;
+    their optimized plans must keep it there."""
+    from reading_the_unreadable_spark.operators.dedup import (
+        dedup_substrings,
+        minhash_signatures,
+        shingles,
+        winnow_fingerprints,
+    )
+    from reading_the_unreadable_spark.operators.quality import (
+        contamination_flags,
+        gopher_repetition_signals,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(1, text), (2, text + " today"), (3, "a b c\nd e f\n\nd e f")],
+        "doc_id long, text string",
+    )
+    frames = {
+        "shingles": shingles(docs, 3),
+        "minhash": minhash_signatures(shingles(docs, 3)),
+        "winnow": winnow_fingerprints(docs, k=3, w=2),
+        "dedup_substrings": dedup_substrings(docs, k=4),
+        "decontaminate": contamination_flags(docs, docs.limit(1), n=3),
+        "gopher_signals": gopher_repetition_signals(docs),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bodies = _lambda_bodies(plan)
+        assert bodies, f"{name}: no lambda in plan\n{plan[:2000]}"
+        bad = [b for b in bodies if "split(" in b]
+        assert not bad, f"{name}: split inside a lambda: {bad[0][:500]}"

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from reading_the_unreadable_spark import synth
+from reading_the_unreadable_spark.execution import read_file, write_file
 from reading_the_unreadable_spark.operators.metrics import cer
 from reading_the_unreadable_spark.sources.annotations import read_annotations_ndjson
 from reading_the_unreadable_spark.sources.docs import docs_from_rows
@@ -329,7 +330,7 @@ def test_snapshot_concurrent_commit_single_winner(spark, tmp_path):
     df_a = docs_from_rows(spark, synth.make_corpus(3, seed_tag="A"))
     data_a = f"{root}/data/snap-2-0-fixedaa"
     df_a.write.parquet(data_a)
-    S._write_file(
+    write_file(
         spark,
         f"{root}/manifests/snap-2-0-fixedaa.json",
         __import__("json").dumps(
@@ -347,7 +348,7 @@ def test_snapshot_concurrent_commit_single_winner(spark, tmp_path):
     df_b = docs_from_rows(spark, synth.make_corpus(2, seed_tag="B"))
     data_b = f"{root}/data/snap-2-ffffffff"
     df_b.write.parquet(data_b)
-    S._write_file(
+    write_file(
         spark,
         f"{root}/manifests/snap-2-ffffffff.json",
         __import__("json").dumps(
@@ -935,9 +936,9 @@ def test_snapshot_write_audit_publish(spark, tmp_path):
     name2 = S.stage_append(mk(200, 220), root)
     import json as _json
 
-    raw = S._read_file(spark, f"{root}/staged/{name2}")
+    raw = read_file(spark, f"{root}/staged/{name2}")
     S.publish_staged(spark, root, name2)
-    S._write_file(spark, f"{root}/staged/{name2}", raw)  # simulate crash
+    write_file(spark, f"{root}/staged/{name2}", raw)  # simulate crash
     before = S.read_snapshot(spark, root).count()
     assert S.publish_staged(spark, root, name2) == S.current_snapshot_id(spark, root)
     assert S.read_snapshot(spark, root).count() == before  # no double add
