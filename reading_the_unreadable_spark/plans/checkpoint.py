@@ -36,6 +36,8 @@ CHECKPOINT_SCHEMA = (
     "stage string, bucket int, doc_count long, span_count long, "
     "wall_ms long, docs_per_sec double, job_id string, ts string"
 )
+# the stage every lineage row records; existing checkpoint tables hold it
+STAGE = "extract"
 
 
 def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
@@ -44,20 +46,16 @@ def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def read_checkpoints(
-    spark: SparkSession, ckpt_path: str, dedup: bool = True
-) -> DataFrame:
-    """Checkpoint table reader.  ``dedup=True`` (default) applies
-    latest-wins per (stage, bucket): two racing retries that both append a
-    lineage row for the same bucket (append-mode parquet cannot express
-    MERGE INTO — on Iceberg this is a MERGE) collapse to one row, so
-    resume logic and metric sums stay exactly-once per bucket."""
+def read_checkpoints(spark: SparkSession, ckpt_path: str) -> DataFrame:
+    """Checkpoint table reader, latest-wins per (stage, bucket): two
+    racing retries that both append a lineage row for the same bucket
+    (append-mode parquet cannot express MERGE INTO — on Iceberg this is
+    a MERGE) collapse to one row, so resume logic and metric sums stay
+    exactly-once per bucket."""
     if exists(spark, ckpt_path):
         df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt_path)
     else:
         df = spark.createDataFrame([], CHECKPOINT_SCHEMA)
-    if not dedup:
-        return df
     w = Window.partitionBy("stage", "bucket").orderBy(
         F.desc("ts"), F.desc("job_id")
     )
@@ -84,7 +82,7 @@ def compact_checkpoints(
     old_files = list_names(spark, ckpt_path, "part-")
     if len(old_files) <= max_files:
         return 0
-    compacted = read_checkpoints(spark, ckpt_path, dedup=True)
+    compacted = read_checkpoints(spark, ckpt_path)
     # tiny metadata table (≤ stages × n_buckets rows): one file
     compacted.coalesce(1).write.mode("append").parquet(ckpt_path)
     for name in old_files:
@@ -100,7 +98,6 @@ def run_extract_with_checkpoints(
     n_buckets: int = 32,
     num_partitions: int | None = None,
     max_buckets: int | None = None,
-    stage: str = "extract",
 ) -> dict:
     """One resumable job invocation.  Returns a summary dict;
     ``buckets_remaining`` counts the buckets still to do after this run
@@ -110,7 +107,7 @@ def run_extract_with_checkpoints(
     job_id = uuid.uuid4().hex[:12]
 
     bucketed = with_bucket(docs, n_buckets)
-    done = read_checkpoints(spark, ckpt_path).filter(F.col("stage") == stage)
+    done = read_checkpoints(spark, ckpt_path).filter(F.col("stage") == STAGE)
     todo_docs = bucketed.join(done.select("bucket"), "bucket", "left_anti")
 
     # the bucket set THIS run processes — lineage rows are derived from it
@@ -173,7 +170,7 @@ def run_extract_with_checkpoints(
     rows = []
     for b in todo_buckets:
         doc_count, span_count = counts.get(b, (0, 0))
-        rows.append((stage, b, doc_count, span_count, wall_ms,
+        rows.append((STAGE, b, doc_count, span_count, wall_ms,
                      round(doc_count / secs, 3), job_id, ts))
     spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
         "append"

@@ -1,5 +1,4 @@
-"""The end-to-end web-curation chain as a reusable plan, plus its
-Structured-Streaming form.
+"""The end-to-end web-curation chain as a reusable plan.
 
 ``curate`` is the batch chain the driver row ``curation_pipeline``
 runs: URL gate → HTML main-content extraction → PII scrub → Gopher
@@ -10,33 +9,16 @@ gopher_filter are projections of the survivor frame threaded through
 ``passthrough`` columns (the 3-frame join shape sorted the per-doc
 text three times and measured ~0.70-0.75 two-level scaling at 640k
 docs; this shape measured 0.848 — BENCH/BASELINE.md).
-
-``incremental_curation`` runs the identical chain per micro-batch over
-a file-source stream of raw pages — the idiomatic shape for curating a
-crawl as it lands: new page files are discovered incrementally, each
-batch is curated with the SAME plan, kept documents append to the
-output table, and the streaming checkpoint gives exactly-once file
-processing across restarts (same contract as
-:func:`streaming.incremental.incremental_extract`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.html import main_text
 from ..operators.quality import gopher_filter, redact_pii
 from ..operators.urls import url_filter
-
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("url", T.StringType()),
-        T.StructField("html", T.StringType()),
-    ]
-)
 
 
 def curate(
@@ -70,37 +52,3 @@ def curate(
         F.when(final, F.col("text")).otherwise(F.lit("")).alias("text"),
         F.when(final, F.col("n_email")).otherwise(F.lit(0)).alias("n_email"),
     )
-
-
-def incremental_curation(
-    spark: SparkSession,
-    pages_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    blocked_domains: tuple[str, ...] = (),
-    available_now: bool = True,
-):
-    """Curate a landing crawl incrementally: drain new page files, run
-    :func:`curate` per micro-batch, append only the KEPT documents.
-    Returns the StreamingQuery; caller awaits/stops it."""
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(pages_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        kept = curate(batch_df, blocked_domains=blocked_domains).filter(
-            F.col("final_kept") == 1
-        )
-        kept.write.mode("append").parquet(out_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

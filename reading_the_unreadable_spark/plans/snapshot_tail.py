@@ -1,11 +1,10 @@
 """Snapshot-tail processing: consume an Iceberg-style snapshot table
 incrementally, exactly-once, resumable at every step.
 
-This is the batch/cron half of the incremental story (the streaming
-half is ``streaming/incremental.py``'s file-source stream): each
-``tail_once`` call processes the snapshots appended since the last
-completed call — the Iceberg pattern of driving a job off
-``start-snapshot-id`` = the stored high-water mark.
+This is the project's one incremental path: each ``tail_once`` call
+processes the snapshots appended since the last completed call — the
+Iceberg pattern of driving a job off ``start-snapshot-id`` = the stored
+high-water mark.
 
 Exactly-once across kills is a two-phase protocol over tiny state
 files (same Hadoop-FS, write-once, attempt-safe discipline as the

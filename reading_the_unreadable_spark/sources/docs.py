@@ -39,13 +39,13 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def write_docs(df: DataFrame, path_or_table: str, mode: str = "overwrite") -> None:
+def write_docs(df: DataFrame, path_or_table: str) -> None:
     """Write the docs table (Iceberg when available, else parquet path)."""
     spark = df.sparkSession
     if "/" not in path_or_table and iceberg_available(spark):
         df.writeTo(path_or_table).createOrReplace()
     else:
-        df.write.mode(mode).parquet(path_or_table)
+        df.write.mode("overwrite").parquet(path_or_table)
 
 
 def read_docs(spark: SparkSession, path_or_table: str) -> DataFrame:
@@ -157,9 +157,9 @@ def boxes_from_documents_table(documents: DataFrame) -> DataFrame:
 
 
 def validate_table(df: DataFrame, rules: list[dict]) -> DataFrame:
-    """Declarative data-quality gate — the write-audit check a
-    publish step runs before :mod:`snapshots` commits a snapshot (the
-    WAP audit surface): every rule reduces to a conditional count, so
+    """Declarative data-quality gate — an audit check to run on a frame
+    before :mod:`snapshots` commits it: every rule reduces to a
+    conditional count, so
     the WHOLE rule list evaluates in ONE aggregation pass over the
     table (map-side partials; no per-rule scans).  ``unique`` is the
     one exception in spirit — it still folds into the same pass as

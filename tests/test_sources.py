@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from reading_the_unreadable_spark import synth
-from reading_the_unreadable_spark.execution import read_file, write_file
+from reading_the_unreadable_spark.execution import write_file
 from reading_the_unreadable_spark.operators.metrics import cer
 from reading_the_unreadable_spark.sources.annotations import read_annotations_ndjson
 from reading_the_unreadable_spark.sources.docs import docs_from_rows
@@ -266,154 +266,55 @@ def test_snapshot_schema_evolution(spark, tmp_path):
     assert old.count() == 4
 
 
-def test_snapshot_expire_keeps_data_drops_travel(spark, tmp_path):
-    """expire_snapshots(keep_n): latest read byte-identical before and
-    after, expired ids stop being time-travel targets, and only
-    UNREFERENCED data dirs (orphan attempts) are deleted."""
-    import os
-
-    import pytest as _pytest
-
-    from reading_the_unreadable_spark import synth
-    from reading_the_unreadable_spark.sources.docs import docs_from_rows
-    from reading_the_unreadable_spark.sources.snapshots import (
-        append_snapshot,
-        expire_snapshots,
-        read_snapshot,
-    )
-
-    root = str(tmp_path / "tbl")
-    corpus = synth.make_corpus(24)
-    for lo, hi in [(0, 8), (8, 14), (14, 24)]:
-        append_snapshot(docs_from_rows(spark, corpus[lo:hi]), root)
-    # orphan attempt dir (killed append / race loser): must be reclaimed
-    docs_from_rows(spark, synth.make_corpus(5)).write.parquet(
-        f"{root}/data/snap-9-orphan99"
-    )
-    before = {r["doc_id"] for r in read_snapshot(spark, root).collect()}
-
-    res = expire_snapshots(spark, root, keep_n=2, orphan_grace_s=0)
-    assert res["expired"] == [1]
-    assert "snap-9-orphan99" in res["removed_dirs"]
-    # snapshot 1's data dir was folded forward, NOT deleted
-    assert not any(d.startswith("snap-1-") for d in res["removed_dirs"])
-
-    after = {r["doc_id"] for r in read_snapshot(spark, root).collect()}
-    assert after == before
-    with _pytest.raises(ValueError, match="unknown snapshot id"):
-        read_snapshot(spark, root, snapshot_id=1)
-    # surviving time travel unchanged: snapshot 2 = first two batches
-    assert read_snapshot(spark, root, snapshot_id=2).count() == 14
-    # idempotent re-run removes nothing further
-    res2 = expire_snapshots(spark, root, keep_n=2, orphan_grace_s=0)
-    assert res2["expired"] == [] and res2["removed_dirs"] == []
-    # data dirs on disk == referenced dirs exactly
-    assert len(os.listdir(f"{root}/data")) == 3
-
-
 def test_snapshot_concurrent_commit_single_winner(spark, tmp_path):
     """The commit race guard must hold on file:// where POSIX rename
     silently overwrites: two manifests published for the same sid →
-    exactly one wins (deterministically), the loser detects the loss,
-    withdraws, and raises."""
+    exactly one wins (deterministically, the smallest attempt), and
+    readers never see the loser's rows."""
     from reading_the_unreadable_spark import synth
     from reading_the_unreadable_spark.sources.docs import docs_from_rows
     from reading_the_unreadable_spark.sources import snapshots as S
 
     root = str(tmp_path / "tbl")
-    append_snapshot = S.append_snapshot
-    append_snapshot(docs_from_rows(spark, synth.make_corpus(4)), root)
+    S.append_snapshot(docs_from_rows(spark, synth.make_corpus(4)), root)
 
-    # simulate committer A landing sid 2 between B's plan and publish:
-    # pre-publish a winning manifest (attempt "00000000" < any uuid4 with
-    # probability ~1; use "0-fixed" which sorts before all plain hex)
+    def publish(df, attempt):
+        # what append_snapshot writes for sid 2, with a chosen attempt:
+        # committers A and B both planned on parent 1 and both publish
+        data_dir = f"{root}/data/snap-2-{attempt}"
+        df.write.parquet(data_dir)
+        files = sorted(
+            str(f) for f in Path(data_dir).glob("*.parquet")
+        )
+        write_file(
+            spark,
+            f"{root}/manifests/snap-2-{attempt}.json",
+            json.dumps(
+                {
+                    "snapshot_id": 2,
+                    "parent_id": 1,
+                    "files": files,
+                    "operation": "append",
+                    "schema": df.schema.jsonValue(),
+                }
+            ).encode(),
+        )
+
     df_a = docs_from_rows(spark, synth.make_corpus(3, seed_tag="A"))
-    data_a = f"{root}/data/snap-2-0-fixedaa"
-    df_a.write.parquet(data_a)
-    write_file(
-        spark,
-        f"{root}/manifests/snap-2-0-fixedaa.json",
-        __import__("json").dumps(
-            {
-                "snapshot_id": 2,
-                "parent_id": 1,
-                "paths": [data_a],
-                "schema": df_a.schema.jsonValue(),
-            }
-        ).encode(),
-    )
-    # B now appends: computes sid 3 (A's manifest is visible) — so to
-    # force the RACE we call the internals the way append would with a
-    # stale parent: B publishes its own sid-2 manifest and must lose
     df_b = docs_from_rows(spark, synth.make_corpus(2, seed_tag="B"))
-    data_b = f"{root}/data/snap-2-ffffffff"
-    df_b.write.parquet(data_b)
-    write_file(
-        spark,
-        f"{root}/manifests/snap-2-ffffffff.json",
-        __import__("json").dumps(
-            {
-                "snapshot_id": 2,
-                "parent_id": 1,
-                "paths": [data_b],
-                "schema": df_b.schema.jsonValue(),
-            }
-        ).encode(),
-    )
+    publish(df_b, "ffffffff")  # B lands first, A's attempt sorts first
+    publish(df_a, "00000000")
     wins = dict(S._winning_manifests(spark, root))
-    assert wins[2] == "snap-2-0-fixedaa.json"  # deterministic winner
+    assert wins[2] == "snap-2-00000000.json"  # deterministic winner
     # readers see the winner's rows only
     read_rows = {r["doc_id"] for r in S.read_snapshot(spark, root).collect()}
     assert read_rows
     a_ids = {r["doc_id"] for r in df_a.select("doc_id").collect()}
     b_ids = {r["doc_id"] for r in df_b.select("doc_id").collect()}
     assert a_ids <= read_rows and not (b_ids & read_rows)
-    # loser's data dir is reclaimed by expire as an orphan
-    res = S.expire_snapshots(spark, root, keep_n=10, orphan_grace_s=0)
-    assert "snap-2-ffffffff" in res["removed_dirs"]
-    assert not any(d.startswith("snap-2-0-fixedaa") for d in res["removed_dirs"])
-
-
-def test_snapshot_expire_across_schema_evolution(spark, tmp_path):
-    """Folding expired snapshots forward must preserve the evolved
-    read: pre-evolution files folded into a post-evolution manifest are
-    read with the newer schema (missing column → NULL, Iceberg's
-    read-with-current-schema), so the latest view is unchanged."""
-    from reading_the_unreadable_spark import synth
-    from reading_the_unreadable_spark.sources.docs import docs_from_rows
-    from reading_the_unreadable_spark.sources.snapshots import (
-        append_snapshot,
-        expire_snapshots,
-        read_snapshot,
-    )
-
-    root = str(tmp_path / "tbl")
-    append_snapshot(docs_from_rows(spark, synth.make_corpus(6)), root)  # old schema
-    evolved = docs_from_rows(spark, synth.make_corpus(4, seed_tag="v2")).withColumn(
-        "source_rank", F.lit(3)
-    )
-    append_snapshot(evolved, root)
-    append_snapshot(
-        docs_from_rows(spark, synth.make_corpus(2, seed_tag="v3")).withColumn(
-            "source_rank", F.lit(9)
-        ),
-        root,
-    )
-    before = {
-        (r["doc_id"], r["source_rank"])
-        for r in read_snapshot(spark, root).select("doc_id", "source_rank").collect()
-    }
-    # expire snapshot 1 (old schema) — its paths fold into snapshot 2's
-    # manifest (new schema)
-    res = expire_snapshots(spark, root, keep_n=2, orphan_grace_s=0)
-    assert res["expired"] == [1]
-    after = {
-        (r["doc_id"], r["source_rank"])
-        for r in read_snapshot(spark, root).select("doc_id", "source_rank").collect()
-    }
-    assert after == before
-    assert sum(1 for _, rank in after if rank is None) == 6  # old rows NULL
-
+    assert {
+        r["doc_id"] for r in S.incremental_read(spark, root, after=1).collect()
+    } == a_ids
 
 def test_snapshot_merge_into_copy_on_write(spark, tmp_path):
     """merge_into = Iceberg MERGE INTO … UPDATE SET * / INSERT * under
@@ -471,22 +372,9 @@ def test_snapshot_merge_into_copy_on_write(spark, tmp_path):
         assert pre[d["doc_id"]] != ["MERGED"] * len(d["spans"])
 
     # an append-only incremental scan cannot represent the merge's row
-    # changes: default mode refuses, like Iceberg's incremental scan
+    # changes: it refuses, like Iceberg's incremental scan
     with pytest.raises(ValueError, match="merge"):
         S.incremental_read(spark, root, after=2).collect()
-
-    # opt-in redelivery: every updated + inserted doc, plus survivors
-    # ONLY from the part files that were rewritten (file-granular COW —
-    # unaffected part files of batch 2 are carried forward, not
-    # re-emitted); at-least-once, caller dedups
-    inc = {
-        r["doc_id"]
-        for r in S.incremental_read(
-            spark, root, after=2, on_row_changes="include"
-        ).collect()
-    }
-    assert inc >= {d["doc_id"] for d in upd + ins}
-    assert inc <= {d["doc_id"] for d in corpus[6:] + ins}
 
 
 def test_snapshot_delete_where(spark, tmp_path):
@@ -518,11 +406,9 @@ def test_snapshot_delete_where(spark, tmp_path):
     # no-match → no new snapshot (Iceberg skips empty commits)
     assert S.delete_where(spark, root, "doc_id = 'nope'") is None
     assert S.current_snapshot_id(spark, root) == 3
-    # expire everything but the latest: the post-delete view survives
-    S.expire_snapshots(spark, root, keep_n=1, orphan_grace_s=0)
-    assert {
-        r["doc_id"] for r in S.read_snapshot(spark, root).collect()
-    } == {d["doc_id"] for d in corpus} - victims
+    # an append-only incremental scan cannot represent the delete
+    with pytest.raises(ValueError, match="delete"):
+        S.incremental_read(spark, root, after=2)
 
 
 def test_snapshot_stats_pruning(spark, tmp_path):
@@ -554,12 +440,6 @@ def test_snapshot_stats_pruning(spark, tmp_path):
     # nothing overlaps → zero files planned, empty result, schema kept
     none = S.read_snapshot(spark, root, prune={"doc_id": (1000, 2000)})
     assert none.count() == 0 and none.columns == ["doc_id", "v"]
-
-    # pruning survives expire's fold (stats carried with the entries)
-    S.expire_snapshots(spark, root, keep_n=1, orphan_grace_s=0)
-    pruned2 = S.read_snapshot(spark, root, prune={"doc_id": (120, 180)})
-    assert 0 < len(pruned2.inputFiles()) <= 3
-    assert sorted(r["doc_id"] for r in pruned2.collect()) == list(range(120, 181))
 
 
 def test_snapshot_rewrite_data_files(spark, tmp_path):
@@ -626,117 +506,67 @@ def test_incremental_read_skips_compaction(spark, tmp_path):
     ) == list(range(120, 150))
 
 
-def test_snapshot_hidden_partitioning(spark, tmp_path):
-    """Iceberg hidden partitioning: the table declares transforms
-    (bucket/identity/truncate), writers route rows into transform
-    directories, the manifest records each file's partition tuple, and
-    read_snapshot(prune=...) skips whole partitions from the predicate
-    alone — the query never mentions the bucket."""
-    import hashlib
-
+def test_incremental_read_reads_only_window_manifests(spark, tmp_path, monkeypatch):
+    """A tail cycle's driver cost follows its window, not the table's
+    age: incremental_read picks the manifests in (after, until] by the
+    snapshot id in their file names and reads only those."""
     from reading_the_unreadable_spark.sources import snapshots as S
 
     root = str(tmp_path / "tbl")
-    df = spark.range(0, 300).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("src"), (F.col("id") % 3).cast("string")).alias("src"),
-        (F.col("id") * 2).alias("v"),
-    )
-    spec = [("doc_id", "bucket", 8), ("src", "identity")]
-    S.append_snapshot(df, root, partition_by=spec)
-    S.append_snapshot(
-        spark.range(300, 600).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("src"), (F.col("id") % 3).cast("string")).alias("src"),
-            (F.col("id") * 2).alias("v"),
-        ),
-        root,
-        partition_by=spec,
-    )
+    for i in range(6):
+        S.append_snapshot(spark.range(i * 10, (i + 1) * 10).toDF("doc_id"), root)
+    reads = []
+    real = S.read_file
 
-    # full read: user schema only (no _pt columns), all rows
-    full = S.read_snapshot(spark, root)
-    assert full.columns == ["doc_id", "src", "v"]
-    assert full.count() == 600
-    n_all = len(full.inputFiles())
-    assert n_all >= 16  # 8 buckets x >=2 src values, x2 snapshots
+    def counting(spark_, path):
+        reads.append(path)
+        return real(spark_, path)
 
-    # point lookup on doc_id prunes to the one bucket per snapshot
-    point = S.read_snapshot(spark, root, prune={"doc_id": (42, 42)})
-    bucket42 = int(hashlib.md5(b"42").hexdigest()[:8], 16) % 8
-    assert [r["doc_id"] for r in point.collect()] == [42]
-    assert 0 < len(point.inputFiles()) <= n_all // 8 + 2
-    # every planned file sits in bucket42's directory
-    assert all(f"_pt0={bucket42}/" in f for f in point.inputFiles())
+    monkeypatch.setattr(S, "read_file", counting)
+    got = sorted(r["doc_id"] for r in S.incremental_read(spark, root, after=5).collect())
+    assert got == list(range(50, 60))
+    assert len(reads) == 1 and "/manifests/snap-6-" in reads[0]
 
-    # identity prune on src: only that value's directories are planned
-    srcq = S.read_snapshot(spark, root, prune={"src": ("src1", "src1")})
-    assert srcq.count() == 200
-    assert all("_pt1=src1" in f for f in srcq.inputFiles())
-
-    # a RANGE on the bucketed column cannot bucket-prune (conservative:
-    # all files), but rows are still filtered correctly
-    rng = S.read_snapshot(spark, root, prune={"doc_id": (10, 20)})
-    assert sorted(r["doc_id"] for r in rng.collect()) == list(range(10, 21))
-
-    # compaction preserves partition pruning: files are bin-packed
-    # WITHIN a partition and the replace manifest re-records tuples
-    res = S.rewrite_data_files(spark, root)
-    assert res is not None
-    point2 = S.read_snapshot(spark, root, prune={"doc_id": (42, 42)})
-    assert [r["doc_id"] for r in point2.collect()] == [42]
-    assert len(point2.inputFiles()) < len(
-        S.read_snapshot(spark, root).inputFiles()
-    )
-
-    # ...and survives the expire fold
-    S.expire_snapshots(spark, root, keep_n=1, orphan_grace_s=0)
-    point3 = S.read_snapshot(spark, root, prune={"doc_id": (42, 42)})
-    assert [r["doc_id"] for r in point3.collect()] == [42]
-    assert len(point3.inputFiles()) < len(
-        S.read_snapshot(spark, root).inputFiles()
-    )
+    reads.clear()
+    got = S.incremental_read(spark, root, after=2, until=4)
+    assert sorted(r["doc_id"] for r in got.collect()) == list(range(20, 40))
+    assert len(reads) == 2
 
 
-def test_snapshot_truncate_transform(spark, tmp_path):
-    """truncate(W) partitioning: integer sources floor to W-multiples,
-    string sources cut to W-char prefixes; range prunes plan only the
-    overlapping truncation cells."""
-    from reading_the_unreadable_spark.sources import snapshots as S
+def test_snapshot_public_functions_have_callers():
+    """Every public top-level function of sources/snapshots.py is used
+    by code outside tests/: the package (the module itself included,
+    its own def excluded), scripts/, perfbench/ or __spark_entry__.py.
+    A reference is a name, attribute, imported name or string constant
+    in code — docstrings and comments do not count."""
+    import ast
 
-    root = str(tmp_path / "tbl")
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("issue-"), F.lpad(F.col("id").cast("string"), 4, "0")).alias(
-            "name"
-        ),
-    )
-    S.append_snapshot(
-        df, root, partition_by=[("doc_id", "truncate", 100)]
-    )
-    rng = S.read_snapshot(spark, root, prune={"doc_id": (250, 349)})
-    assert sorted(r["doc_id"] for r in rng.collect()) == list(range(250, 350))
-    # only cells 200 and 300 overlap [250, 349]
-    cells = {f.split("_pt0=")[1].split("/")[0] for f in rng.inputFiles()}
-    assert cells == {"200", "300"}
-
-    # string truncate
-    root2 = str(tmp_path / "tbl2")
-    S.append_snapshot(df, root2, partition_by=[("name", "truncate", 7)])
-    one = S.read_snapshot(
-        spark, root2, prune={"name": ("issue-0500", "issue-0999")}
-    )
-    assert one.count() == 500
-    cells2 = {f.split("_pt0=")[1].split("/")[0] for f in one.inputFiles()}
-    assert cells2 == {"issue-0"}
-
-    # bad specs raise loudly
-    with pytest.raises(ValueError, match="transform"):
-        S.append_snapshot(df, root2, partition_by=[("name", "hash", 4)])
-    with pytest.raises(ValueError, match="integer or string"):
-        S.append_snapshot(
-            df.withColumn("f", F.lit(1.5)), root2, partition_by=[("f", "identity")]
-        )
+    repo = Path(__file__).resolve().parents[1]
+    pkg = repo / "reading_the_unreadable_spark"
+    module = ast.parse((pkg / "sources" / "snapshots.py").read_text())
+    public = {
+        n.name
+        for n in module.body
+        if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
+    }
+    sources = [
+        *pkg.rglob("*.py"),
+        *(repo / "scripts").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+        repo / "__spark_entry__.py",
+    ]
+    used: set[str] = set()
+    for path in sources:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.asname or node.name)
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                used.add(node.value)
+    assert public and sorted(public - used) == []
 
 
 def test_snapshot_zorder_rewrite(spark, tmp_path):
@@ -803,8 +633,7 @@ def test_snapshot_rollback(spark, tmp_path):
     """rollback_to_snapshot restores an earlier state metadata-only:
     reads equal the target snapshot byte-for-byte, intermediate
     snapshots stay time-travelable, carried-forward bounds keep
-    pruning, the incremental feed refuses to cross a rollback, and
-    expire after rollback keeps the re-added files alive."""
+    pruning, and the incremental feed refuses to cross a rollback."""
     from reading_the_unreadable_spark.sources import snapshots as S
 
     root = str(tmp_path / "tbl")
@@ -844,16 +673,13 @@ def test_snapshot_rollback(spark, tmp_path):
     assert sorted(
         r["doc_id"] for r in S.incremental_read(spark, root, after=5).collect()
     ) == list(range(300, 320))
-    # expire down to the last 2 snapshots: the re-added files survive
-    S.expire_snapshots(spark, root, keep_n=2, orphan_grace_s=0)
     got2 = {r["doc_id"] for r in S.read_snapshot(spark, root).collect()}
     assert got2 == want | set(range(300, 320))
 
 
 def test_snapshot_tags(spark, tmp_path):
-    """Iceberg refs: tags pin snapshots by name, read back as VERSION
-    AS OF, survive expire_snapshots regardless of keep_n, and become
-    expirable again once deleted; tags are immutable per name."""
+    """Iceberg refs: tags pin snapshots by name and read back as
+    VERSION AS OF; tags are immutable per name."""
     from reading_the_unreadable_spark.sources import snapshots as S
 
     root = str(tmp_path / "tbl")
@@ -878,79 +704,11 @@ def test_snapshot_tags(spark, tmp_path):
     with pytest.raises(ValueError, match="not both"):
         S.read_snapshot(spark, root, snapshot_id=2, tag="latest")
 
-    # expire keeps the tagged snapshot alive: keep_n=1 would normally
-    # fold snaps 1-4, but the tag at 2 pins the fold point before it
-    res = S.expire_snapshots(spark, root, keep_n=1, orphan_grace_s=0)
-    assert res["expired"] == [1]
+    # later appends do not move a tag
+    S.append_snapshot(mk(250, 300), root)  # snap 6
     assert S.read_snapshot(spark, root, tag="audit-q1").count() == 100
-    assert S.read_snapshot(spark, root, snapshot_id=3).count() == 150
-    # drop the tag: the pinned range becomes expirable again
-    S.delete_tag(spark, root, "audit-q1")
-    res2 = S.expire_snapshots(spark, root, keep_n=1, orphan_grace_s=0)
-    assert res2["expired"] == [2, 3, 4]
-    with pytest.raises(ValueError, match="unknown snapshot id"):
-        S.read_snapshot(spark, root, snapshot_id=3).count()
-    assert S.read_snapshot(spark, root).count() == 250
-
-
-def test_snapshot_write_audit_publish(spark, tmp_path):
-    """Iceberg WAP: staged rows are written for real but invisible to
-    every read (latest, time travel, incremental) until published;
-    the audit reads exactly the staged rows; publish is metadata-only
-    and idempotent across a crash between commit and cleanup; aborted
-    stages become orphans that expire reclaims — while PENDING stages
-    survive orphan reclamation."""
-    from reading_the_unreadable_spark.sources import snapshots as S
-
-    root = str(tmp_path / "tbl")
-    mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
-        "id as doc_id", "id % 7 as v"
-    ).repartition(2)
-    S.append_snapshot(mk(0, 100), root, stat_cols=["doc_id"])  # snap 1
-    name = S.stage_append(mk(100, 160), root, stat_cols=["doc_id"])
-
-    # invisible everywhere until published
-    assert S.read_snapshot(spark, root).count() == 100
-    assert S.incremental_read(spark, root, after=None).count() == 100
-    # ...but the audit sees exactly the staged rows
-    audited = S.read_staged(spark, root, name)
-    assert sorted(r["doc_id"] for r in audited.collect()) == list(range(100, 160))
-    # pending staged data survives orphan reclamation
-    S.expire_snapshots(spark, root, keep_n=1, orphan_grace_s=0)
-    assert S.read_staged(spark, root, name).count() == 60
-
-    sid = S.publish_staged(spark, root, name)
-    assert sid == 2
-    assert S.read_snapshot(spark, root).count() == 160
-    # stats traveled through staging: a miss range plans zero files
-    assert (
-        len(S.read_snapshot(spark, root, prune={"doc_id": (900, 999)}).inputFiles())
-        == 0
-    )
-    # idempotent: the staging file is gone, a re-publish errors loudly
-    with pytest.raises(ValueError, match="unknown staging"):
-        S.publish_staged(spark, root, name)
-
-    # crash-shaped idempotence: a leftover staging manifest whose files
-    # are already live is cleaned up without double-adding
-    name2 = S.stage_append(mk(200, 220), root)
-    import json as _json
-
-    raw = read_file(spark, f"{root}/staged/{name2}")
-    S.publish_staged(spark, root, name2)
-    write_file(spark, f"{root}/staged/{name2}", raw)  # simulate crash
-    before = S.read_snapshot(spark, root).count()
-    assert S.publish_staged(spark, root, name2) == S.current_snapshot_id(spark, root)
-    assert S.read_snapshot(spark, root).count() == before  # no double add
-
-    # abort: rows never appear, and the data dir is reclaimed
-    name3 = S.stage_append(mk(300, 330), root)
-    S.abort_staged(spark, root, name3)
-    with pytest.raises(ValueError, match="unknown staging"):
-        S.read_staged(spark, root, name3) and None
-    res = S.expire_snapshots(spark, root, keep_n=10, orphan_grace_s=0)
-    assert any("staged" in d for d in res["removed_dirs"])
-    assert S.read_snapshot(spark, root).count() == before
+    assert S.read_snapshot(spark, root, tag="latest").count() == 250
+    assert S.read_snapshot(spark, root).count() == 300
 
 
 def test_orc_pushdown_and_partition_pruning(spark, tmp_path):
