@@ -2897,12 +2897,10 @@ def q_page_coverage(spark, sf):
 
 
 def q_cer_eval(spark, sf):
-    """S9/F15: span-grain CER of a deterministically corrupted rendition
-    vs the original — the metric half of the folder-of-txt ground-truth
-    path (sources/ground_truth.py feeds the same operators from .txt
-    files).  Texts are chunked into 20-word spans first (the reference
-    computes CER per cropped box, result_section.py:240-242) so the
-    quadratic edit-distance DP runs on short strings."""
+    """F15: span-grain CER of a deterministically corrupted rendition
+    vs the original.  Texts are chunked into 20-word spans first (the
+    reference computes CER per cropped box, result_section.py:240-242)
+    so the quadratic edit-distance DP runs on short strings."""
     d = _t(spark, sf, "documents")
     gt = M.chunk_spans(d.select("doc_id", "text"), words_per_span=20)
     pred = gt.select(
@@ -3846,15 +3844,14 @@ def q_asof_join(spark, sf):
 
 
 def q_range_join(spark, sf):
-    """Interval × point range join with NO equi-key
-    (operators/temporal.py range_point_join): events falling inside
-    30-day windows opened by every 10th order, aggregated per window.
-    Naive Spark plans `ON ts >= start AND ts < end` as a broadcast
-    nested loop; the operator instead buckets both sides to the window
-    width so the candidate set is a bounded bucket equi-join (each
-    window overlaps ≤2 buckets, each point exactly 1 — every
-    qualifying pair produced exactly once, no dedup).  The oracle is
-    DuckDB's native IEJoin over the same predicate.  The value sum is
+    """Interval × point range aggregate with NO equi-key
+    (operators/temporal.py range_point_prefix_agg): events falling
+    inside 30-day windows opened by every 10th order, counted and
+    summed per window.  Naive Spark plans `ON ts >= start AND ts < end`
+    as a broadcast nested loop; the operator instead takes each
+    window's count/sum as a difference of two day-grain prefix sums, so
+    no (window, event) pair row is ever built.  The oracle is DuckDB's
+    native IEJoin over the same predicate.  The value sum is
     carried as integer milli-units so the aggregate is
     order-independent and engine-exact."""
     from reading_the_unreadable_spark.operators.temporal import (

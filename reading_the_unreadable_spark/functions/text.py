@@ -84,10 +84,6 @@ def strip_invisible_col(c: Column) -> Column:
     )
 
 
-def strip_invisible_pd(s: pd.Series) -> pd.Series:
-    return s.fillna("").str.replace(f"[{INVISIBLES}]", "", regex=True)
-
-
 def nfc_pd(s: pd.Series) -> pd.Series:
     """Unicode NFC (canonical composition), vectorized over a pandas
     Series — the oracle-side twin of :func:`nfc_col`."""

@@ -679,38 +679,6 @@ def _f80_to_float(b: bytes) -> float:
     return val
 
 
-def _float_to_f80(x: float) -> bytes:
-    import math
-
-    if x == 0:
-        return b"\x00" * 10
-    sign = 0x8000 if x < 0 else 0
-    m, e = math.frexp(abs(x))  # x = m * 2^e, m in [0.5, 1)
-    mant = int(m * (1 << 64))
-    return (sign | (e - 1 + 16383)).to_bytes(2, "big") + mant.to_bytes(8, "big")
-
-
-def encode_aiff(samples: np.ndarray, rate: int = 16000) -> bytes:
-    """int16 samples (n,) or (n, ch) → big-endian AIFF (COMM + SSND)."""
-    if samples.dtype != np.int16:
-        raise ValueError("encode_aiff expects int16 samples")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    comm = (
-        struct.pack(">hLh", ch, n, 16) + _float_to_f80(float(rate))
-    )
-    data = samples.astype(">i2").tobytes()
-    ssnd = struct.pack(">LL", 0, 0) + data
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return cid + struct.pack(">I", len(body)) + body + pad
-
-    body = b"AIFF" + chunk(b"COMM", comm) + chunk(b"SSND", ssnd)
-    return b"FORM" + struct.pack(">I", len(body)) + body
-
-
 def decode_aiff(payload: bytes) -> tuple[int, np.ndarray]:
     """FORM/AIFF bytes → (sample_rate, float64 samples in [-1, 1],
     shape (n, ch)).  Big-endian signed PCM at 8/16/24/32 bits (AIFF's

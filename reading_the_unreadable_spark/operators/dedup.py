@@ -69,34 +69,6 @@ def shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(sh: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, seed, minhash): min over shingles of md5(seed|shingle)."""
-    return (
-        sh.select(
-            "doc_id",
-            "shingle",
-            F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("seed"),
-        )
-        .groupBy("doc_id", "seed")
-        .agg(
-            F.min(
-                F.md5(F.concat(F.col("seed").cast("string"), F.lit("|"), F.col("shingle")))
-            ).alias("mh")
-        )
-    )
-
-
-def lsh_band_signatures(sig: DataFrame, band_rows: int = BAND_ROWS) -> DataFrame:
-    """Fold minhash rows into per-band signatures (doc_id, band, band_sig)."""
-    banded = sig.withColumn("band", F.expr(f"seed div {band_rows}"))
-    ordered = F.transform(
-        F.sort_array(F.collect_list(F.struct("seed", "mh"))), lambda s: s["mh"]
-    )
-    return banded.groupBy("doc_id", "band").agg(
-        F.md5(F.array_join(ordered, ",")).alias("band_sig")
-    )
-
-
 def band_signatures(
     sh: DataFrame, n_hashes: int = N_HASHES, band_rows: int = BAND_ROWS
 ) -> DataFrame:
@@ -110,7 +82,8 @@ def band_signatures(
     computes them with map-side partial aggregation — one shuffle of
     one row per doc — and the band fold becomes a constant-width md5
     over adjacent min columns (equal to the composed fold because
-    seeds within a band are distinct and sorted).  Equivalence is
+    seeds within a band are distinct and sorted).  The composed form
+    is kept as the spec in tests/operator_specs.py; equivalence is
     pinned in tests/test_dup_clusters.py."""
     mins = sh.groupBy("doc_id").agg(
         *[

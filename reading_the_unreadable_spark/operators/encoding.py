@@ -28,24 +28,14 @@ JVM path — Spark's charset whitelist has no cp1252 — and passes
 through unchanged; the ``was_mojibake`` flag lets callers quarantine
 what the gate skipped.
 
-``fix_mojibake_cp1252`` closes that dialect with an Arrow-vectorized
-pandas UDF (Python has the cp1252 codec the JVM whitelist lacks): a
-string is repaired iff every character maps back into cp1252 AND the
-recovered bytes are STRICTLY valid UTF-8 containing a multi-byte
-sequence — so clean text, and mojibake whose recovered bytes aren't
-really UTF-8, pass through untouched.  This is the slow path by
-design: run the JVM ``fix_mojibake`` first and point the UDF only at
-rows it flagged 0 (the ``only_where`` arg does exactly that).
-
-Zero shuffles on either path, idempotent (repaired text contains real
-non-ASCII letters neither gate matches... unless the original text was
-itself doubly-double-encoded, in which case each application peels one
+Zero shuffles, idempotent (repaired text contains real non-ASCII
+letters the gate does not match... unless the original text was itself
+doubly-double-encoded, in which case each application peels one
 layer).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -71,54 +61,4 @@ def fix_mojibake(df: DataFrame, col: str = "text") -> DataFrame:
             F.col("was_mojibake") == 1,
             F.decode(F.encode(c, "ISO-8859-1"), "UTF-8"),
         ).otherwise(c),
-    )
-
-
-def _repair_cp1252(s):
-    """One string: undo UTF-8-read-as-cp1252, or return None if the
-    string is not provably that dialect.  Strictness is the correctness
-    argument: encode must succeed (every char round-trips into cp1252)
-    and the recovered bytes must decode as strict UTF-8 with at least
-    one non-ASCII (multi-byte) character — plain ASCII and genuine
-    UTF-8-only text both fail one of the two conditions."""
-    try:
-        raw = s.encode("cp1252")
-    except UnicodeEncodeError:
-        return None
-    if raw.isascii():
-        return None
-    try:
-        return raw.decode("utf-8")
-    except UnicodeDecodeError:
-        return None
-
-
-def fix_mojibake_cp1252(
-    df: DataFrame, col: str = "text", only_where=None
-) -> DataFrame:
-    """Repair Windows-1252 mojibake ("â€”" -> "—") in ``col`` in place
-    and add an int ``was_mojibake_cp1252`` flag.  Arrow-vectorized
-    pandas UDF (the JVM charset whitelist has no cp1252); pass
-    ``only_where`` (a Column predicate, e.g. ``F.col('was_mojibake') ==
-    0``) to skip rows the cheap JVM path already handled."""
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.StringType())
-    def _fix(s: pd.Series) -> pd.Series:
-        # vectorized over the Arrow batch; non-candidates map to None
-        return s.map(lambda v: _repair_cp1252(v) if isinstance(v, str) else None)
-
-    c = F.col(col)
-    gate = c.isNotNull()
-    if only_where is not None:
-        gate = gate & only_where
-    repaired = F.when(gate, _fix(c)).otherwise(F.lit(None))
-    return df.withColumn("__cp1252_fix", repaired).select(
-        *[
-            F.coalesce(F.col("__cp1252_fix"), c).alias(col)
-            if f.name == col
-            else F.col(f.name)
-            for f in df.schema.fields
-        ],
-        F.col("__cp1252_fix").isNotNull().cast("int").alias("was_mojibake_cp1252"),
     )

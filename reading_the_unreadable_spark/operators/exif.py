@@ -143,18 +143,9 @@ def build_exif(fields: dict, byte_order: str = "II") -> bytes:
 
 def wrap_jpeg(app1_payload: bytes) -> bytes:
     """Minimal JPEG container carrying only metadata (SOI + APP1 + EOI)
-    — sufficient for any EXIF reader; ``inject_exif`` adds the same
-    segment to a full image stream."""
+    — sufficient for any EXIF reader."""
     seg = b"\xff\xe1" + struct.pack(">H", len(app1_payload) + 2) + app1_payload
     return b"\xff\xd8" + seg + b"\xff\xd9"
-
-
-def inject_exif(jpeg: bytes, app1_payload: bytes) -> bytes:
-    """Insert the APP1 segment directly after SOI of a real JPEG."""
-    if jpeg[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    seg = b"\xff\xe1" + struct.pack(">H", len(app1_payload) + 2) + app1_payload
-    return jpeg[:2] + seg + jpeg[2:]
 
 
 def _read_exif_ifd(tiff: bytes, off: int, bo: str) -> dict[int, object]:

@@ -224,31 +224,6 @@ def ahash64(arr: np.ndarray) -> int:
     return int(bits @ (np.uint64(1) << np.arange(64, dtype=np.uint64)))
 
 
-def _dct_matrix(n: int) -> np.ndarray:
-    k = np.arange(n)[:, None]
-    i = np.arange(n)[None, :]
-    c = np.cos((2 * i + 1) * k * np.pi / (2 * n))
-    c[0] *= 1.0 / np.sqrt(2)
-    return c * np.sqrt(2.0 / n)
-
-
-def phash64(arr: np.ndarray) -> int:
-    """64-bit perceptual hash (DCT): grayscale, nearest resize to
-    32x32, orthonormal 2-D DCT-II, top-left 8x8 coefficient block,
-    bit set where the coefficient exceeds the block's median — the
-    ImageHash-library convention.  Median-threshold makes the hash
-    invariant to global brightness shifts (only the DC coefficient
-    moves) and positive contrast scaling (all coefficients scale
-    together)."""
-    gray = arr.astype(np.float64).mean(axis=2)
-    g = resize_nearest(gray[:, :, None], 32, 32)[:, :, 0]
-    c = _dct_matrix(32)
-    block = (c @ g @ c.T)[:8, :8]
-    med = np.median(block)
-    bits = (block > med).astype(np.uint64).ravel()
-    return int(bits @ (np.uint64(1) << np.arange(64, dtype=np.uint64)))
-
-
 def image_ahash(
     media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:

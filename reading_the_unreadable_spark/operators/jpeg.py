@@ -1410,56 +1410,3 @@ def encode_jpeg_progressive(
         out += bw.buf
     out += b"\xff\xd9"
     return bytes(out)
-
-
-def encode_jpeg_12(arr12: np.ndarray, quality: int = 75) -> bytes:
-    """HxW uint16 grayscale (12-bit range, 0..4095) → extended-
-    sequential (SOF1) JFIF bytes with 12-bit sample precision — the
-    archival-master / medical-scan profile.
-
-    Same DCT path as the 8-bit encoder with the level shift at 2048;
-    the quantization table is floored at 32 so every coefficient
-    category stays within the standard 8-bit Huffman tables (T.81
-    lets 12-bit streams need categories up to 15; flooring q keeps
-    |DC diff| ≤ 1024 → category ≤ 11, the std table's last row —
-    documented trade: archival 12-bit masters use strong quantization
-    anyway)."""
-    if arr12.ndim != 2:
-        raise ValueError("12-bit JPEG encode is grayscale only")
-    if int(arr12.max(initial=0)) > 4095:
-        raise ValueError("12-bit samples exceed 4095")
-    h, w = arr12.shape
-    ql = np.maximum(_scale_q(Q_LUMA, quality), 32)
-    ql_z = ql[ZIGZAG]
-
-    out = bytearray(b"\xff\xd8")
-    out += (
-        b"\xff\xe0" + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    )
-    # Pq=1 16-bit DQT (B.2.4.1): 12-bit streams conventionally carry it
-    out += b"\xff\xdb" + struct.pack(">H", 131) + b"\x10"
-    out += np.asarray(ql_z, dtype=">u2").tobytes()
-    sof = struct.pack(">BHHB", 12, h, w, 1) + bytes([1, 0x11, 0])
-    out += b"\xff\xc1" + struct.pack(">H", len(sof) + 2) + sof
-    for tclass, tid, (bits, values) in ((0, 0, DC_LUMA), (1, 0, AC_LUMA)):
-        seg = bytes([(tclass << 4) | tid]) + bytes(bits) + bytes(values)
-        out += b"\xff\xc4" + struct.pack(">H", len(seg) + 2) + seg
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
-    out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-
-    dc_codes = _huff_codes(*DC_LUMA)
-    ac_codes = _huff_codes(*AC_LUMA)
-    bw = _BitWriter()
-    grid = _block_grid(arr12.astype(np.float64))
-    by, bx = grid.shape[:2]
-    pred = 0
-    for yy in range(by):
-        for xx in range(bx):
-            pred = _encode_plane_block(
-                grid[yy, xx], ql, pred, dc_codes, ac_codes, bw, shift=2048.0
-            )
-    bw.flush()
-    out += bw.buf
-    out += b"\xff\xd9"
-    return bytes(out)

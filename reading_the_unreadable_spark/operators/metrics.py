@@ -158,7 +158,7 @@ def cer_spans(
     )
     # A doc present ONLY in predictions (pure hallucination) has
     # sum(_len)=0; x/0 would yield NULL and the doc would silently
-    # vanish from cer_summary's percentiles — the very case the full
+    # vanish from any percentile over the cer column — the very case the full
     # outer join exists to penalize.  Emit the inserted-char count as
     # the (finite, hashable) penalty instead.
     return per_span.groupBy("doc_id").agg(
@@ -329,14 +329,6 @@ def bleu(
         *[F.col(f"total_{n}") for n in ns],
         F.round(bp, 4).alias("brevity_penalty"),
         score.alias("bleu"),
-    )
-
-
-def cer_summary(cer_df: DataFrame) -> DataFrame:
-    return cer_df.agg(
-        F.round(F.expr("percentile(cer, 0.5)"), 6).alias("median_cer"),
-        F.round(F.avg("cer"), 6).alias("mean_cer"),
-        F.count("*").alias("n_docs"),
     )
 
 

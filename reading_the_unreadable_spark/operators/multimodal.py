@@ -29,20 +29,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-    ]
-)
+from pyspark.sql import DataFrame
 
 N_HIST_BINS = 16
 FEATURE_SCHEMA = (
@@ -544,65 +531,6 @@ def _decode_gif_impl(payload: bytes) -> np.ndarray:
     raise ValueError("GIF contains no image data")
 
 
-def encode_gif(arr: np.ndarray, interlace: bool = False) -> bytes:
-    """Minimal GIF89a writer for round-trip tests: palette from the
-    image's unique colors (≤256), fixed-width LZW codes with periodic
-    CLEARs (the classic no-compression layout — spec-valid, decoder
-    dictionary growth never outruns the code width)."""
-    h, w, _ = arr.shape
-    flat = arr.reshape(-1, 3)
-    pal, idx = np.unique(flat, axis=0, return_inverse=True)
-    if len(pal) > 256:
-        raise ValueError(f"encode_gif needs ≤256 colors, got {len(pal)}")
-    bits = max(2, int(len(pal) - 1).bit_length())
-    pal_n = 1 << bits
-    palette = np.zeros((pal_n, 3), np.uint8)
-    palette[: len(pal)] = pal
-    grid = idx.reshape(h, w)
-    if interlace:
-        order = []
-        for start, step in _GIF_INTERLACE:
-            order.extend(range(start, h, step))
-        grid = grid[order]
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    out += palette.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40 if interlace else 0)
-    min_code = bits
-    clear, end = 1 << bits, (1 << bits) + 1
-    code_size = bits + 1
-    # CLEAR cadence: dict size resets to clear+2; one entry per emitted
-    # symbol; stay strictly below 1<<code_size so the width never grows
-    burst = (1 << code_size) - (clear + 2) - 1
-    acc = 0
-    nbits = 0
-    stream = bytearray()
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            stream.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    for i, v in enumerate(grid.flatten()):
-        if i and i % burst == 0:
-            emit(clear)
-        emit(int(v))
-    emit(end)
-    if nbits:
-        stream.append(acc & 0xFF)
-    out += bytes([min_code])
-    for i in range(0, len(stream), 255):
-        chunk = stream[i : i + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
 def decode_image(payload: bytes) -> np.ndarray:
     """binary → HxWx3 uint8 RGB.  BMP/PGM/PPM/PNG/GIF/TIFF (incl.
     CCITT Group 4) decode for real (pure numpy + stdlib zlib); baseline
@@ -646,26 +574,6 @@ def image_features(arr: np.ndarray) -> np.ndarray:
         dtype=np.float32,
     )
     return np.concatenate([head, hist])
-
-
-def synth_image_bytes(ref: str, w: int = 48, h: int = 32) -> bytes:
-    """Deterministic REAL BMP for a media_ref (gradient + ref-seeded
-    noise) — the decode path exercises an actual codec round-trip."""
-    seed = int.from_bytes(hashlib.md5(ref.encode()).digest()[:4], "big")
-    rng = np.random.Generator(np.random.PCG64(seed))
-    grad = np.linspace(0, 255, w, dtype=np.float32)[None, :, None]
-    noise = rng.integers(0, 64, size=(h, w, 3)).astype(np.float32)
-    img = np.clip(grad + noise, 0, 255).astype(np.uint8)
-    return encode_bmp(img)
-
-
-def synth_media_table(spark: SparkSession, refs: list[str]) -> DataFrame:
-    """Deterministic media rows: real BMP payloads for the given refs."""
-    rows = []
-    for r in refs:
-        payload = synth_image_bytes(r)
-        rows.append((r, "image", bytearray(payload), 48, 32, None))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def extract_media_features(
@@ -725,59 +633,3 @@ def extract_media_features(
             )
 
     return media.mapInPandas(fn, schema=FEATURE_SCHEMA)
-
-
-MEDIA_EXTENSIONS = {
-    "bmp": "image",
-    "png": "image",
-    "pgm": "image",
-    "ppm": "image",
-    "jpg": "image",
-    "jpeg": "image",
-    "wav": "audio",
-    "avi": "video",
-    "mp4": "video",
-}
-
-
-def read_media_folder(
-    spark: SparkSession, path: str, glob: str = "*"
-) -> DataFrame:
-    """S11 — folder-of-media source via Spark's built-in ``binaryFile``
-    format (the distributed replacement for the reference's per-page
-    ``cv2.imread`` loop, ``send_to_lm_functions.py:715-737``): each file
-    becomes one MEDIA_SCHEMA row with the payload as a binary column.
-
-    binaryFile scans split at file granularity, so a folder of millions
-    of page scans parallelizes across the cluster; ``pathGlobFilter``
-    prunes at the listing, before any bytes are read."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
-    kind = F.coalesce(
-        *[
-            F.when(ext == e, F.lit(k))
-            for e, k in MEDIA_EXTENSIONS.items()
-        ],
-        F.lit("binary"),
-    )
-    return df.select(
-        F.col("path").alias("media_ref"),
-        kind.alias("kind"),
-        F.col("content").alias("payload"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("int").alias("duration_ms"),
-    )
-
-
-def join_media_to_spans(spans: DataFrame, media_feats: DataFrame) -> DataFrame:
-    """Attach media features to figure spans (broadcast if small)."""
-    return spans.join(
-        F.broadcast(media_feats.select("media_ref", "feat", "sha1")),
-        "media_ref",
-        "left",
-    )

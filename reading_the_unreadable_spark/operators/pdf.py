@@ -10,9 +10,7 @@ the standard text-showing operators (``BT/ET``, ``Tm``, ``Td``/``TD``,
 loudly on anything beyond it (encryption, other filters).
 
 Output grain is the LAYOUT grain: one row per text-showing operation
-with its text-space position, so parsed runs can feed the box pipeline
-(:func:`pdf_to_boxes` → ``operators.layout``) exactly like layout-model
-boxes do.
+with its text-space position.
 
 Spark integration is Arrow-batched ``mapInPandas`` over binary payload
 columns (per the multimodal contract: payloads never collected, never in
@@ -854,30 +852,3 @@ def parse_pdf_spans(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             yield pd.DataFrame(rows)
 
     return df.mapInPandas(fn, schema=PDF_SPAN_SCHEMA)
-
-
-def pdf_to_boxes(
-    spans: DataFrame,
-    char_width: float = 6.0,
-    line_height: float = 12.0,
-    page_height: float = 792.0,
-) -> DataFrame:
-    """Parsed PDF runs → the box frame the layout chain consumes
-    (top-left y-down coordinates, width estimated from run length): the
-    "PDF/layout parse" bridge — downstream column inference / reading
-    order / article segmentation are the SAME operators the newspaper
-    path uses."""
-    from pyspark.sql import functions as F
-
-    return spans.select(
-        F.concat_ws("#", "doc_id", F.col("page").cast("string")).alias("doc_id"),
-        F.col("run").alias("offset"),
-        F.lit("text").alias("kind"),
-        "text",
-        F.lit(None).cast("string").alias("media_ref"),
-        F.col("x").alias("x1"),
-        (F.lit(page_height) - F.col("y") - F.lit(line_height)).alias("y1"),
-        (F.col("x") + F.length("text") * F.lit(char_width)).alias("x2"),
-        (F.lit(page_height) - F.col("y")).alias("y2"),
-        F.lit(1.0).alias("confidence"),
-    )

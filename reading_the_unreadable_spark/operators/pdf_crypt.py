@@ -191,29 +191,6 @@ def _encrypt_block(rk: list[bytes], block: bytes) -> bytes:
     return b"".join(w.to_bytes(4, "big") for w in out)
 
 
-def _decrypt_block(rk: list[bytes], block: bytes) -> bytes:
-    nr = len(rk) - 1
-    s = bytearray(a ^ b for a, b in zip(block, rk[nr]))
-    for rnd in range(nr - 1, -1, -1):
-        # InvShiftRows + InvSubBytes fused
-        t = bytes(
-            _ISBOX[s[(i - 4 * (i % 4)) & 15]] for i in range(16)
-        )
-        k = rk[rnd]
-        s = bytearray(a ^ b for a, b in zip(t, k))
-        if rnd > 0:  # InvMixColumns
-            m9, m11, m13, m14 = _MUL[9], _MUL[11], _MUL[13], _MUL[14]
-            u = bytearray(16)
-            for c in range(0, 16, 4):
-                a0, a1, a2, a3 = s[c], s[c + 1], s[c + 2], s[c + 3]
-                u[c] = m14[a0] ^ m11[a1] ^ m13[a2] ^ m9[a3]
-                u[c + 1] = m9[a0] ^ m14[a1] ^ m11[a2] ^ m13[a3]
-                u[c + 2] = m13[a0] ^ m9[a1] ^ m14[a2] ^ m11[a3]
-                u[c + 3] = m11[a0] ^ m13[a1] ^ m9[a2] ^ m14[a3]
-            s = u
-    return bytes(s)
-
-
 def aes_ecb_encrypt_block(key: bytes, block: bytes) -> bytes:
     """Single-block AES-ECB (the /Perms entry of V5 dictionaries)."""
     if len(block) != 16:

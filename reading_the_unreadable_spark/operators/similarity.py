@@ -145,29 +145,17 @@ HYPERPLANE_TABLES = [HYPERPLANES] + [
 ]
 
 
-def hyperplane_bucket(v: Column, planes: list[list[float]] | None = None) -> Column:
-    """Integer LSH bucket: bit i = sign of the projection onto plane i.
-    The projection is a left-fold dot product (same association order as
-    the oracle's explicit sum, so the sign is bit-reproducible)."""
-    planes = planes or HYPERPLANES
-    bucket = F.lit(0).cast("int")
-    for i, p in enumerate(planes):
-        proj = dot(v, F.array(*[F.lit(w) for w in p]))
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
-
-
 def hyperplane_buckets_udf(tables: list[list[list[float]]] | None = None):
     """Arrow-vectorized bucket computation for CORPUS-side hashing: one
     pandas_udf returning the per-table bucket array.
 
-    Bit-identical to :func:`hyperplane_bucket` and to the SQL oracles:
-    elementwise products are IEEE-exact either way, and the summation
-    uses ``np.add.accumulate`` — strictly sequential left-to-right
-    association, the same fold order as the Catalyst ``aggregate`` and
-    the oracle's explicit ``+`` chain — so every projection SIGN matches
-    bit-for-bit.  (``np.dot``/``einsum`` would use pairwise/SIMD
-    association and could flip near-zero signs.)
+    Bit-identical to the SQL oracles' bucket expression: elementwise
+    products are IEEE-exact either way, and the summation uses
+    ``np.add.accumulate`` — strictly sequential left-to-right
+    association, the same fold order as the oracle's explicit ``+``
+    chain — so every projection SIGN matches bit-for-bit.
+    (``np.dot``/``einsum`` would use pairwise/SIMD association and
+    could flip near-zero signs.)
 
     Why a UDF here when the engine rule is expressions-first: Catalyst
     evaluates higher-order functions (aggregate/zip_with) INTERPRETED,

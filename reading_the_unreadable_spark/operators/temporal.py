@@ -23,17 +23,21 @@ per-key collect, no range explosion: cost is one exchange + one
 per-partition sort, identical to a plain windowed aggregation, and
 AQE's skew split applies to hot keys as usual.
 
-``range_point_join`` — all (interval, point) pairs with
-``start <= ts < end``, with NO equi-key required.  Naive Spark plans
-this as a cartesian/BNL join.  Here both sides are mapped onto
-fixed-width time buckets — intervals explode to the bucket ids they
-overlap (``sequence``), points map to exactly one bucket — and the
-candidate set is the bucket equi-join, bounded by bucket co-occupancy
-(replication factor = interval_len/bucket + 1, chosen by the caller to
-match the interval-length distribution).  Because a point occupies
-exactly one bucket, every qualifying pair is produced exactly once —
-no post-join dedup.  The exact predicate is applied AFTER the bucket
-join prunes candidates.
+``range_point_prefix_agg`` — per-interval count/sum over the points
+with ``start <= ts < end``, with NO equi-key.  Naive Spark plans the
+pair join as a cartesian/BNL join; here a count/sum per half-open
+interval is a difference of two prefix sums over a span-bounded cell
+table, so the cost is O(points + intervals) and no pair row exists.
+
+``range_interval_join`` — all overlapping (interval, interval) pairs,
+no equi-key.  Both sides are mapped onto fixed-width time buckets
+(intervals explode to the bucket ids they overlap, ``sequence``) and
+the candidate set is the bucket equi-join, bounded by bucket
+co-occupancy (replication factor = interval_len/bucket + 1, chosen by
+the caller to match the interval-length distribution).  Each pair is
+kept only in the bucket holding its overlap start, so every qualifying
+pair is produced exactly once — no post-join dedup.  The exact
+predicate is applied AFTER the bucket join prunes candidates.
 """
 
 from __future__ import annotations
@@ -335,41 +339,6 @@ def _asof_join_broadcast(
     )
 
 
-def range_point_join(
-    intervals: DataFrame,
-    points: DataFrame,
-    start_col: str,
-    end_col: str,
-    ts_col: str,
-    bucket_seconds: int,
-) -> DataFrame:
-    """All (interval row, point row) pairs with ``start <= ts < end``,
-    no equi-key.  Both sides bucketed to ``bucket_seconds``-wide epochs
-    so the candidate join is a bounded bucket equi-join (see module
-    docstring).  Returns intervals' columns + points' columns; callers
-    aggregate on top.  Column names must not collide.
-    """
-    b = F.lit(int(bucket_seconds)).cast("long")
-    iv = intervals.withColumn(
-        "__rng_bucket",
-        F.explode(
-            F.sequence(
-                (F.unix_timestamp(F.col(start_col)) / b).cast("long"),
-                # end is exclusive; a point in the end-instant bucket can
-                # still precede it, so include that bucket
-                (F.unix_timestamp(F.col(end_col)) / b).cast("long"),
-            )
-        ),
-    )
-    pt = points.withColumn(
-        "__rng_bucket", (F.unix_timestamp(F.col(ts_col)) / b).cast("long")
-    )
-    joined = iv.join(pt, "__rng_bucket").filter(
-        (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) < F.col(end_col))
-    )
-    return joined.drop("__rng_bucket")
-
-
 def range_point_prefix_agg(
     intervals: DataFrame,
     points: DataFrame,
@@ -379,11 +348,10 @@ def range_point_prefix_agg(
     value_col: str,
     grain_seconds: int = 86400,
 ) -> DataFrame:
-    """Per-interval ``count``/``sum`` over points in ``[start, end)``
-    — the AGGREGATION-level complement to :func:`range_point_join` for
-    callers that never need the pair rows themselves.
+    """Per-interval ``count``/``sum`` over points in ``[start, end)``,
+    for callers that never need the pair rows themselves.
 
-    :func:`range_point_join` + groupBy materializes every qualifying
+    A bucketed range join + groupBy materializes every qualifying
     (interval, point) pair before collapsing it; with dense overlapping
     windows that pair set is O(intervals x points-per-window) — it grew
     quadratically with scale factor in the bench.  A count/sum per
@@ -406,7 +374,8 @@ def range_point_prefix_agg(
 
     PRECONDITION: interval bounds aligned to ``grain_seconds`` (e.g.
     date bounds with the default day grain).  Point timestamps are
-    arbitrary.  Equivalence against the join+groupBy form is pinned in
+    arbitrary.  Equivalence against the join+groupBy form
+    (``range_point_join`` in tests/operator_specs.py) is pinned in
     tests/test_temporal.py.
 
     Output: all ``intervals`` columns + ``n_points`` (long) +
@@ -515,8 +484,7 @@ def range_interval_join(
     bucket_seconds: int,
 ) -> DataFrame:
     """All (left row, right row) pairs whose half-open intervals
-    OVERLAP (``l_start < r_end AND r_start < l_end``), no equi-key —
-    the interval×interval completion of :func:`range_point_join`.
+    OVERLAP (``l_start < r_end AND r_start < l_end``), no equi-key.
 
     Both sides reduce to their DISTINCT (start, end) intervals first,
     the distinct intervals explode to the fixed-width buckets they

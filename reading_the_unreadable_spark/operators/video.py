@@ -78,40 +78,6 @@ def encode_avi_mjpeg(frames: list[np.ndarray], fps: float = 10.0) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def encode_avi_dib(frames: list[np.ndarray], fps: float = 10.0) -> bytes:
-    """List of HxWx3 uint8 RGB frames → RIFF-AVI with UNCOMPRESSED
-    24-bit DIB ``00db`` chunks (bottom-up BGR, 4-byte-padded rows —
-    the lossless capture-card layout)."""
-    if not frames:
-        raise ValueError("no frames")
-    h, w = frames[0].shape[:2]
-    row_size = (w * 3 + 3) // 4 * 4
-    pad = b"\x00" * (row_size - w * 3)
-    payloads = []
-    for f in frames:
-        bgr = f[::-1, :, ::-1]  # bottom-up, BGR
-        payloads.append(b"".join(bgr[y].tobytes() + pad for y in range(h)))
-
-    usec_per_frame = int(round(1_000_000 / fps))
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        usec_per_frame, 0, 0, 0x10, len(frames), 0, 1, 0, w, h, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"DIB " + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1,
-                                        int(round(fps)), 0, len(frames), 0, 0, 0)
-        + struct.pack("<hhhh", 0, 0, w, h)
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, row_size * h, 0, 0, 0, 0
-    )
-    hdrl = _lst(b"hdrl", _chunk(b"avih", avih)
-                + _lst(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)))
-    movi = _lst(b"movi", b"".join(_chunk(b"00db", p) for p in payloads))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
 def _decode_dib_frame(body: bytes, w: int, h: int) -> np.ndarray:
     """One uncompressed 24-bit DIB frame (bottom-up BGR, padded rows)
     → HxWx3 RGB."""
@@ -264,110 +230,3 @@ def synth_avi_bytes(
                     ).astype(np.uint8)
         )
     return encode_avi_mjpeg(frames, fps=fps)
-
-
-# ------------------------------------------------------------- AVI audio
-def encode_avi_with_audio(
-    frames: list[np.ndarray],
-    samples: np.ndarray,
-    rate: int = 16000,
-    fps: float = 10.0,
-) -> bytes:
-    """MJPG video stream 0 + int16 PCM audio stream 1 (``01wb``
-    chunks) — the classic interleaved capture layout."""
-    if not frames:
-        raise ValueError("no frames")
-    h, w = frames[0].shape[:2]
-    vids = [encode_jpeg(f, quality=90, subsample=True) for f in frames]
-    pcm = np.clip(np.round(np.asarray(samples, np.float64) * 32768.0),
-                  -32768, 32767).astype("<i2")
-    if pcm.ndim == 1:
-        pcm = pcm[:, None]
-    ch = pcm.shape[1]
-
-    usec = int(round(1_000_000 / fps))
-    avih = struct.pack("<IIIIIIIIIIIIII",
-                       usec, 0, 0, 0x10, len(frames), 0, 2, 0, w, h, 0, 0, 0, 0)
-    strh_v = (b"vids" + b"MJPG"
-              + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, int(round(fps)),
-                            0, len(frames), 0, 0, 0)
-              + struct.pack("<hhhh", 0, 0, w, h))
-    strf_v = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, w * h * 3,
-                         0, 0, 0, 0)
-    strf_v = strf_v[:16] + b"MJPG" + strf_v[20:]
-    strh_a = (b"auds" + b"\x00" * 4
-              + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, rate, 0,
-                            pcm.shape[0], 0, 0, 0)
-              + struct.pack("<hhhh", 0, 0, 0, 0))
-    # strf for audio IS a WAVEFORMATEX: tag 1 = integer PCM, 16-bit
-    strf_a = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
-    hdrl = _lst(
-        b"hdrl",
-        _chunk(b"avih", avih)
-        + _lst(b"strl", _chunk(b"strh", strh_v) + _chunk(b"strf", strf_v))
-        + _lst(b"strl", _chunk(b"strh", strh_a) + _chunk(b"strf", strf_a)),
-    )
-    # interleave: one video frame then one audio slice per period
-    audio_bytes = pcm.tobytes()
-    per = max(1, len(audio_bytes) // max(len(frames), 1))
-    per += per % 2  # keep int16 alignment
-    movi_parts = []
-    a = 0
-    for i, v in enumerate(vids):
-        movi_parts.append(_chunk(b"00dc", v))
-        end = len(audio_bytes) if i == len(vids) - 1 else min(a + per, len(audio_bytes))
-        if a < end:
-            movi_parts.append(_chunk(b"01wb", audio_bytes[a:end]))
-            a = end
-    movi = _lst(b"movi", b"".join(movi_parts))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def extract_avi_audio(payload: bytes) -> tuple[int, np.ndarray]:
-    """AVI audio stream → (sample_rate, float64 samples in [-1, 1],
-    shape (n, ch)).  The stream's ``strf`` IS a WAVEFORMATEX — exactly
-    a WAV ``fmt `` chunk — so the stream re-wraps losslessly as a
-    RIFF/WAVE and the ENTIRE WAV codec family (int16/24/32 PCM, IEEE
-    float, G.711, IMA/MS-ADPCM — :mod:`audio`) applies unchanged.
-    Raises ValueError when the container has no audio stream."""
-    from .audio import decode_wav
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError(f"not a RIFF/AVI file: {payload[:4]!r}")
-    stream_types: list[bytes] = []
-    strfs: dict[int, bytes] = {}
-    data: dict[int, list[bytes]] = {}
-
-    def walk(d: bytes) -> None:
-        pos = 0
-        while pos + 8 <= len(d):
-            cid = d[pos : pos + 4]
-            size = struct.unpack_from("<I", d, pos + 4)[0]
-            body = d[pos + 8 : pos + 8 + size]
-            if cid == b"LIST":
-                walk(body[4:])
-            elif cid == b"strh":
-                stream_types.append(body[:4])
-            elif cid == b"strf":
-                strfs[len(stream_types) - 1] = body
-            elif len(cid) == 4 and cid[2:] == b"wb" and cid[:2].isdigit():
-                data.setdefault(int(cid[:2]), []).append(body)
-            pos += 8 + size + (size & 1)
-
-    walk(payload[12:])
-    auds = [i for i, t in enumerate(stream_types) if t == b"auds"]
-    if not auds or auds[0] not in strfs:
-        raise ValueError("AVI contains no audio stream")
-    si = auds[0]
-    fmt = strfs[si]
-    pcm = b"".join(data.get(si, []))
-    if not pcm:
-        raise ValueError("AVI audio stream has no data chunks")
-    wav = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(pcm))
-        + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(pcm)) + pcm
-    )
-    return decode_wav(wav)

@@ -18,9 +18,10 @@ bundles.  Both parsed from first principles:
   is the same stream behind (possibly concatenated) gzip members.
 
 Scale design mirrors the WARC source: archives are the natural split
-unit, so the Spark surface is the built-in ``binaryFile`` folder scan →
-``mapInPandas`` member explode — one Python crossing per Arrow batch of
-files, payload bytes never driver-side, zero exchanges (plan-pinned in
+unit, so the Spark surface is a ``(source, content)`` frame of whole
+files (a ``binaryFile`` folder scan yields one) → ``mapInPandas``
+member explode — one Python crossing per Arrow batch of files,
+payload bytes never driver-side, zero exchanges (plan-pinned in
 `tests/test_plan_quality.py`).  Corrupt archives quarantine as
 ``parse_err`` rows (the multimodal-module convention) instead of
 killing the task — at corpus scale corrupt containers are certain.
@@ -39,7 +40,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..execution import spread
 
@@ -346,18 +347,6 @@ def parse_archive_frame(files: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols)
 
     return files.mapInPandas(fn, schema=ARCHIVE_MEMBER_SCHEMA)
-
-
-def read_archive_folder(spark: SparkSession, folder: str) -> DataFrame:
-    """Folder of .zip / .tar / .tar.gz via the built-in ``binaryFile``
-    source — file-granular splits, no file ever read on the driver."""
-    files = (
-        spark.read.format("binaryFile")
-        .load(folder)
-        .select("path", "content")
-        .withColumnRenamed("path", "source")
-    )
-    return parse_archive_frame(files)
 
 
 # ------------------------------------------------- deterministic fixtures

@@ -58,59 +58,21 @@ def docs_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
     return spark.createDataFrame(rows, schema=DOCS_SCHEMA)
 
 
-def docs_from_documents_table(documents: DataFrame) -> DataFrame:
-    """Derive a docs-shaped table from the harness ``documents`` parquet
-    (doc_id, text, …): each document becomes one page whose text is split
-    into pseudo-spans — a deterministic adapter so the extraction engine
-    can also run over the driver-provided corpus."""
-    words = F.split(F.col("text"), " ")
-    n = F.size(words)
-    half = F.greatest((n / 2).cast("int"), F.lit(1))
-    first = F.array_join(F.slice(words, 1, half), " ")
-    second = F.array_join(F.slice(words, half + 1, n), " ")
-    # 3 spans per doc: every synthesized page layout has ≥3 boxes, so the
-    # deterministic geometry lookup (offsets 0..2) always resolves.
-    spans = F.array(
-        F.struct(
-            F.lit("title").alias("kind"),
-            F.upper(F.concat(F.lit("SECTION "), F.col("source"))).alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        ),
-        F.struct(
-            F.lit("text").alias("kind"),
-            first.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(1).alias("offset"),
-        ),
-        F.struct(
-            F.lit("text").alias("kind"),
-            second.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(2).alias("offset"),
-        ),
-    )
-    return documents.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("doc_id"),
-        spans.alias("spans"),
-    )
-
-
 def boxes_from_documents_table(documents: DataFrame) -> DataFrame:
     """Deterministic SQL-oracle-able boxes adapter over the harness
     ``documents`` parquet: each document becomes a single-block two-column
     page with a full-width masthead title and its text split across the
     two columns.
 
-    Unlike :func:`docs_from_documents_table` + the synthetic-geometry
-    attach (whose bbox coordinates come from a seeded RNG and therefore
-    cannot be replicated in ANSI SQL), every coordinate here is a fixed
-    constant, so the ENTIRE downstream layout analysis — column-count
-    inference, bin assignment, block segmentation, reading-order
-    reconstruction, box merge — runs through the real operators
-    (:mod:`..operators.layout`) while remaining exactly predictable by a
-    DuckDB oracle: title spans both columns → column 0 → block separator
-    → reading_order 1; the halves land in columns 1 and 2 → orders 2, 3.
+    Unlike the synthetic-geometry attach (whose bbox coordinates come
+    from a seeded RNG and therefore cannot be replicated in ANSI SQL),
+    every coordinate here is a fixed constant, so the ENTIRE downstream
+    layout analysis — column-count inference, bin assignment, block
+    segmentation, reading-order reconstruction, box merge — runs
+    through the real operators (:mod:`..operators.layout`) while
+    remaining exactly predictable by a DuckDB oracle: title spans both
+    columns → column 0 → block separator → reading_order 1; the halves
+    land in columns 1 and 2 → orders 2, 3.
 
     100% native expressions (one projection + one ``posexplode``), zero
     Python, zero shuffle before the layout exchange."""

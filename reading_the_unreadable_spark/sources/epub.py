@@ -28,7 +28,6 @@ layers (ZIP/DEFLATE/CRC) are the from-scratch ones.
 from __future__ import annotations
 
 import posixpath
-import re
 from typing import Iterator
 
 import pandas as pd

@@ -64,6 +64,16 @@ the ordered fold over manifests 1..S: drop each manifest's
 exactly Iceberg's snapshot-inheritance model, so a merge/delete is one
 tiny manifest plus the rewritten files, never a table copy.
 
+Manifest reads are bounded by the snapshot id in each manifest's file
+name: ``read_snapshot(snapshot_id=S)`` and ``read_snapshot(tag=...)``
+read only manifests 1..S, ``incremental_read`` only those inside its
+window, and ``create_tag`` / ``current_snapshot_id`` none (the listing
+suffices).  Calls that need the CURRENT state — ``read_snapshot()``
+without an id, ``merge_into``, ``delete_where``, ``rewrite_data_files``
+and ``rollback_to_snapshot`` — still fold every manifest: this layout
+has no manifest list (Iceberg's per-snapshot list of live files), so
+their driver cost grows with the number of snapshots.
+
 ALL filesystem access — data AND manifests — goes through the Hadoop
 FileSystem API resolved from the path, so on a cluster whose default FS
 is HDFS/S3 the metadata lands next to the data, never on one driver
@@ -137,8 +147,20 @@ def _manifest(spark: SparkSession, root: str, name: str) -> dict:
     return json.loads(read_file(spark, f"{root}/manifests/{name}").decode())
 
 
-def _snapshots(spark: SparkSession, root: str) -> list[dict]:
-    return [_manifest(spark, root, name) for _, name in _winning_manifests(spark, root)]
+def _snapshots(
+    spark: SparkSession,
+    root: str,
+    after: int | None = None,
+    until: int | None = None,
+) -> list[dict]:
+    """Manifests of the snapshots in ``(after, until]`` (default: all),
+    sid-ascending.  The window is picked by the snapshot id in each
+    manifest's file name, so only the manifests inside it are read."""
+    return [
+        _manifest(spark, root, name)
+        for sid, name in _winning_manifests(spark, root)
+        if (after is None or sid > after) and (until is None or sid <= until)
+    ]
 
 
 def current_snapshot_id(spark: SparkSession, root: str) -> int | None:
@@ -369,14 +391,14 @@ def read_snapshot(
         if tag not in tags:
             raise ValueError(f"unknown tag {tag!r} (known: {sorted(tags)})")
         snapshot_id = tags[tag]
-    snaps = _snapshots(spark, root)
-    if snapshot_id is not None:
-        known = {s["snapshot_id"] for s in snaps}
-        if snapshot_id not in known:
-            raise ValueError(
-                f"unknown snapshot id {snapshot_id} (known: {sorted(known)})"
-            )
-        snaps = [s for s in snaps if s["snapshot_id"] <= snapshot_id]
+    snaps = _snapshots(spark, root, until=snapshot_id)
+    if snapshot_id is not None and (
+        not snaps or snaps[-1]["snapshot_id"] != snapshot_id
+    ):
+        known = [sid for sid, _ in _winning_manifests(spark, root)]
+        raise ValueError(
+            f"unknown snapshot id {snapshot_id} (known: {known})"
+        )
     if not prune:
         return _read_snaps(spark, snaps)
     entries = _state_files(snaps)
@@ -428,13 +450,8 @@ def incremental_read(
     ``until`` as the new high-water mark — and a maintenance compaction
     running between two tail cycles is invisible to the tail instead of
     a duplicate storm."""
-    window = [
-        _manifest(spark, root, name)
-        for sid, name in _winning_manifests(spark, root)
-        if (after is None or sid > after) and (until is None or sid <= until)
-    ]
     use = []
-    for s in window:
+    for s in _snapshots(spark, root, after, until):
         op = s["operation"]
         if op == "replace":
             continue
@@ -733,13 +750,12 @@ def create_tag(
     different one it raises (tags are immutable)."""
     if not name or any(c in name for c in "/\\\x00"):
         raise ValueError(f"invalid tag name {name!r}")
-    snaps = _snapshots(spark, root)
-    known = {s["snapshot_id"] for s in snaps}
+    known = [sid for sid, _ in _winning_manifests(spark, root)]
     if snapshot_id is None:
-        snapshot_id = snaps[-1]["snapshot_id"] if snaps else None
+        snapshot_id = known[-1] if known else None
     if snapshot_id not in known:
         raise ValueError(
-            f"unknown snapshot id {snapshot_id} (known: {sorted(known)})"
+            f"unknown snapshot id {snapshot_id} (known: {known})"
         )
     existing = list_tags(spark, root)
     if name in existing:

@@ -10,11 +10,12 @@ payloads are further split into status line / headers / body.
 
 Scale design: WARC files are the natural split unit (Common Crawl caps
 them ~1 GB); records inside a file are sequential by construction, so
-the Spark surface reads a folder via the built-in ``binaryFile`` source
-and parses each file inside ``mapInPandas`` — one Python crossing per
-Arrow batch of files, records exploded executor-side, payload bytes
-never driver-side.  Corrupt archives quarantine as ``parse_err`` rows
-(the multimodal-module convention) instead of killing the task.
+the Spark surface takes a ``(source, content)`` frame of whole files (a
+``binaryFile`` folder scan yields one) and parses each file inside
+``mapInPandas`` — one Python crossing per Arrow batch of files,
+records exploded executor-side, payload bytes never driver-side.
+Corrupt archives quarantine as ``parse_err`` rows (the
+multimodal-module convention) instead of killing the task.
 
 Reference tie-in: the reference ingests page images from folder scans
 (`send_to_lm_functions.py:715-737`); a web-corpus deployment of the same
@@ -30,7 +31,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..execution import spread
 from .archives import _gunzip_members
@@ -255,20 +256,6 @@ def parse_warc_frame(files: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols)
 
     return files.mapInPandas(fn, schema=WARC_RECORD_SCHEMA)
-
-
-def read_warc_folder(spark: SparkSession, folder: str) -> DataFrame:
-    """Folder of .warc / .warc.gz via the built-in ``binaryFile`` source.
-    File-granular splits: a crawl's millions of ~1 GB archives spread
-    across executors; no file is ever read on the driver."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc*")
-        .load(folder)
-        .select("path", "content")
-        .withColumnRenamed("path", "source")
-    )
-    return parse_warc_frame(files)
 
 
 # ------------------------------------------------- deterministic fixtures

@@ -11,6 +11,7 @@ import zipfile
 import zlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from reading_the_unreadable_spark.sources.archives import (
     archives_from_documents,
@@ -20,7 +21,6 @@ from reading_the_unreadable_spark.sources.archives import (
     parse_archive_frame,
     parse_tar,
     parse_zip,
-    read_archive_folder,
 )
 
 _ZIP_MEMBERS = [
@@ -159,7 +159,10 @@ def test_spark_folder_read_and_quarantine(spark, tmp_path):
     (d / "b.tar.gz").write_bytes(build_tar(_TAR_MEMBERS, gzip_frame=True))
     (d / "c.tar").write_bytes(build_tar(_TAR_MEMBERS))
     (d / "broken.zip").write_bytes(b"PK\x03\x04 truncated nonsense")
-    rows = read_archive_folder(spark, str(d)).collect()
+    files = spark.read.format("binaryFile").load(str(d)).select(
+        F.col("path").alias("source"), "content"
+    )
+    rows = parse_archive_frame(files).collect()
     by_file = {}
     for r in rows:
         by_file.setdefault(r["source_file"].rsplit("/", 1)[-1], []).append(r)

@@ -338,10 +338,9 @@ def test_band_signatures_fused_equals_composed(spark):
     """The fused band_signatures must equal
     lsh_band_signatures(minhash_signatures(sh)) row-for-row, including
     a non-divisible n_hashes/band_rows split (ragged last band)."""
+    from operator_specs import lsh_band_signatures, minhash_signatures
     from reading_the_unreadable_spark.operators.dedup import (
         band_signatures,
-        lsh_band_signatures,
-        minhash_signatures,
         shingles,
     )
 

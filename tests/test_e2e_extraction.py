@@ -166,26 +166,6 @@ def test_articles_shape(spark, corpus):
     assert titled["title"].notna().all()
 
 
-def test_documents_table_docs_adapter(spark):
-    """docs_from_documents_table: the harness documents table adapted to
-    the north-rule docs shape runs through the FULL pipeline (synthetic
-    geometry attach included) and yields ordered spans per doc."""
-    from pyspark.sql import functions as F
-
-    from reading_the_unreadable_spark.sources.docs import docs_from_documents_table
-
-    documents = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
-    docs = docs_from_documents_table(documents)
-    assert docs.columns == ["doc_id", "spans"]
-    flat = extract(docs, num_partitions=4)
-    per_doc = flat.groupBy("doc_id").agg(
-        F.count("*").alias("n"), F.min("order").alias("mn")
-    )
-    rows = per_doc.collect()
-    assert len(rows) == 50
-    assert all(r["n"] >= 1 and r["mn"] == 1 for r in rows)
-
-
 # Hand-built ordered-box frames (doc_id, kind, text, media_ref,
 # reading_order) for the article stage's edge shapes.  Each must give the
 # same spans through the production fold (post-correct + spans_frame_pd)

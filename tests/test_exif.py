@@ -4,10 +4,10 @@ from __future__ import annotations
 
 import pytest
 
+from media_fixtures import inject_exif
 from reading_the_unreadable_spark.operators.exif import (
     build_exif,
     exif_features,
-    inject_exif,
     parse_exif,
     wrap_jpeg,
 )

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from reading_the_unreadable_spark.operators.html import (
     html_blocks,
     main_text,

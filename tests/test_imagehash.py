@@ -123,51 +123,6 @@ def test_dhash_pairs_plan_has_no_cartesian(spark):
         "BroadcastHashJoin" in plan
 
 
-def test_phash_invariances():
-    import numpy as np
-
-    from reading_the_unreadable_spark.operators.imagehash import phash64
-
-    rng = np.random.Generator(np.random.PCG64(7))
-    img = rng.integers(0, 200, (32, 32, 3)).astype(np.uint8)
-    h = phash64(img)
-    # global brightness shift moves only the DC coefficient -> hash
-    # unchanged (median thresholding)
-    brighter = np.clip(img.astype(np.int64) + 40, 0, 255).astype(np.uint8)
-    assert phash64(brighter) == h
-    # unrelated image differs in many bits
-    other = rng.integers(0, 200, (32, 32, 3)).astype(np.uint8)
-    assert bin(h ^ phash64(other)).count("1") > 10
-
-
-def test_phash_jpeg_reencode_near():
-    import numpy as np
-
-    from reading_the_unreadable_spark.operators.imagehash import phash64
-    from reading_the_unreadable_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    # a low-frequency image (random 8x8 upsampled to 32x32) has its
-    # energy inside the hash's DCT block, so JPEG re-encode moves the
-    # perceptual distance only slightly while the bytes change
-    # completely.  (A wrapping sawtooth gradient fails here: its
-    # coefficient distribution degenerates around the median and bits
-    # flip on tiny perturbations.)
-    from reading_the_unreadable_spark.operators.multimodal import (
-        resize_nearest,
-    )
-
-    rng = np.random.Generator(np.random.PCG64(11))
-    low = rng.integers(40, 215, (8, 8, 1)).astype(np.uint8)
-    img = np.repeat(resize_nearest(low, 32, 32), 3, axis=2)
-    h0 = phash64(img)
-    re = decode_jpeg(encode_jpeg(img, quality=90))
-    dist = bin(h0 ^ phash64(re)).count("1")
-    assert dist <= 6, dist
-
-
 def test_ahash_exact_bits():
     import numpy as np
 

@@ -3,15 +3,14 @@ multimodal plumbing (binary payloads through mapInPandas)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
+from media_fixtures import MEDIA_SCHEMA
 from reading_the_unreadable_spark.operators.knit import (
     combine_segments,
     reclassify_long_titles,
 )
 from reading_the_unreadable_spark.operators.multimodal import (
+    encode_bmp,
     extract_media_features,
-    synth_media_table,
 )
 
 
@@ -67,8 +66,17 @@ def test_reclassify_long_titles(spark):
 
 
 def test_media_features_real_decode(spark):
-    refs = [f"doc-{i}/img/0.png" for i in range(10)]
-    media = synth_media_table(spark, refs)
+    import numpy as np
+
+    rows = []
+    for i in range(10):
+        rng = np.random.Generator(np.random.PCG64(i))
+        grad = np.linspace(0, 255, 48, dtype=np.float32)[None, :, None]
+        noise = rng.integers(0, 64, size=(32, 48, 3)).astype(np.float32)
+        img = np.clip(grad + noise, 0, 255).astype(np.uint8)
+        payload = bytearray(encode_bmp(img))
+        rows.append((f"doc-{i}/img/0.bmp", "image", payload, 48, 32, None))
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     feats = extract_media_features(media)
     rows = feats.collect()
     assert len(rows) == 10
@@ -191,10 +199,7 @@ def test_media_features_png_end_to_end(spark):
     """PNG payloads flow through the real mapInPandas decode path."""
     import numpy as np
 
-    from reading_the_unreadable_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_png,
-    )
+    from reading_the_unreadable_spark.operators.multimodal import encode_png
 
     rng = np.random.Generator(np.random.PCG64(23))
     rows = []
@@ -209,37 +214,6 @@ def test_media_features_png_end_to_end(spark):
     for r in got:
         assert (r["width"], r["height"]) == (8, 8)
         assert abs(sum(r["feat"][4:]) - 1.0) < 1e-5
-
-
-def test_binaryfile_media_source(spark, tmp_path):
-    """S11: spark.read binaryFile folder scan → MEDIA_SCHEMA → real
-    decode, end-to-end."""
-    import numpy as np
-
-    from reading_the_unreadable_spark.operators.multimodal import (
-        encode_bmp,
-        encode_png,
-        read_media_folder,
-    )
-
-    rng = np.random.Generator(np.random.PCG64(5))
-    for i in range(3):
-        img = rng.integers(0, 256, size=(8, 12, 3)).astype(np.uint8)
-        (tmp_path / f"page_{i}.bmp").write_bytes(encode_bmp(img))
-    for i in range(2):
-        img = rng.integers(0, 256, size=(8, 12, 3)).astype(np.uint8)
-        (tmp_path / f"scan_{i}.png").write_bytes(encode_png(img))
-    media = read_media_folder(spark, str(tmp_path))
-    assert media.count() == 5
-    feats = extract_media_features(media).collect()
-    assert len(feats) == 5
-    for r in feats:
-        assert r["kind"] == "image"
-        assert (r["width"], r["height"]) == (12, 8)
-        assert abs(sum(r["feat"][4:]) - 1.0) < 1e-5
-    # glob pruning happens at the listing
-    only_png = read_media_folder(spark, str(tmp_path), glob="*.png")
-    assert only_png.count() == 2
 
 
 def test_centroid_dendrogram(spark):
@@ -269,20 +243,6 @@ def test_centroid_dendrogram(spark):
     assert {got[0]["cluster_a"], got[0]["cluster_b"]} == {"a", "b"}
     assert got[0]["distance"] < got[-1]["distance"]
     assert got[-1]["size"] == 4
-
-
-def test_media_join(spark):
-    from reading_the_unreadable_spark.operators.multimodal import join_media_to_spans
-
-    spans = spark.createDataFrame(
-        [("d1", "figure", "d1/img/0.png"), ("d1", "text", None)],
-        "doc_id string, kind string, media_ref string",
-    )
-    media = extract_media_features(synth_media_table(spark, ["d1/img/0.png"]))
-    joined = join_media_to_spans(spans, media)
-    got = {r["kind"]: r["sha1"] for r in joined.collect()}
-    assert got["figure"] is not None
-    assert got["text"] is None
 
 
 def test_jpeg_roundtrip_profiles():
@@ -348,7 +308,6 @@ def test_jpeg_via_decode_image_and_features(spark):
     import numpy as np
 
     from reading_the_unreadable_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         decode_image,
         extract_media_features,
     )
@@ -458,7 +417,6 @@ def test_audio_features_spark(spark):
         extract_audio_features,
         synth_wav_bytes,
     )
-    from reading_the_unreadable_spark.operators.multimodal import MEDIA_SCHEMA
 
     rows = [
         (f"clip{i}.wav", "audio", bytearray(synth_wav_bytes(f"clip{i}.wav")), None, None, None)
@@ -508,7 +466,6 @@ def test_avi_mjpeg_roundtrip_and_sampling():
 def test_video_frame_features_spark(spark):
     """AVI payloads flow through the mapInPandas frame-sampling path:
     one output row per sampled frame, image-path feature vectors."""
-    from reading_the_unreadable_spark.operators.multimodal import MEDIA_SCHEMA
     from reading_the_unreadable_spark.operators.video import (
         sample_frame_features,
         synth_avi_bytes,
@@ -802,10 +759,8 @@ def test_gif_roundtrip_and_contract():
     import numpy as np
     import pytest as _pytest
 
-    from reading_the_unreadable_spark.operators.multimodal import (
-        decode_image,
-        encode_gif,
-    )
+    from media_fixtures import encode_gif
+    from reading_the_unreadable_spark.operators.multimodal import decode_image
 
     rng = np.random.Generator(np.random.PCG64(13))
     for shape, ncol in [((9, 13), 5), ((16, 16), 256), ((1, 1), 1), ((7, 31), 17)]:
@@ -834,9 +789,6 @@ def test_media_quarantine_corrupt_payloads(spark):
         extract_audio_features,
     )
     from reading_the_unreadable_spark.operators.jpeg import encode_jpeg
-    from reading_the_unreadable_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-    )
     from reading_the_unreadable_spark.operators.video import (
         sample_frame_features,
         synth_avi_bytes,
@@ -886,7 +838,6 @@ def test_scan_preprocess_otsu_deskew(spark):
     the whole chain over G4-TIFF payloads with quarantine."""
     import numpy as np
 
-    from reading_the_unreadable_spark.operators.multimodal import MEDIA_SCHEMA
     from reading_the_unreadable_spark.operators.scans import (
         binarize_otsu,
         deskew,
@@ -932,7 +883,6 @@ def test_detect_page_blocks_spark(spark):
     quarantine for corrupt payloads."""
     import numpy as np
 
-    from reading_the_unreadable_spark.operators.multimodal import MEDIA_SCHEMA
     from reading_the_unreadable_spark.operators.scans import detect_page_blocks
     from reading_the_unreadable_spark.operators.tiff import encode_tiff
 
@@ -974,7 +924,6 @@ def test_xy_cut_reading_order(spark):
     reading_order per page."""
     import numpy as np
 
-    from reading_the_unreadable_spark.operators.multimodal import MEDIA_SCHEMA
     from reading_the_unreadable_spark.operators.scans import (
         add_xy_cut_order,
         detect_page_blocks,
@@ -1020,14 +969,12 @@ def test_review_regressions_codecs():
     import numpy as np
     import pytest as _pytest
 
+    from media_fixtures import encode_gif
     from reading_the_unreadable_spark.operators.jpeg import (
         decode_jpeg,
         encode_jpeg_progressive,
     )
-    from reading_the_unreadable_spark.operators.multimodal import (
-        decode_image,
-        encode_gif,
-    )
+    from reading_the_unreadable_spark.operators.multimodal import decode_image
 
     img = np.arange(16 * 24 * 3, dtype=np.uint8).reshape(16, 24, 3)
     enc = bytearray(encode_jpeg_progressive(img))
@@ -1447,10 +1394,8 @@ def test_avi_uncompressed_dib():
     import numpy as np
     import pytest
 
-    from reading_the_unreadable_spark.operators.video import (
-        decode_avi_frames,
-        encode_avi_dib,
-    )
+    from media_fixtures import encode_avi_dib
+    from reading_the_unreadable_spark.operators.video import decode_avi_frames
 
     rng = np.random.Generator(np.random.PCG64(5))
     frames = [rng.integers(0, 256, (24, 33, 3)).astype(np.uint8) for _ in range(5)]
@@ -1473,38 +1418,6 @@ def test_avi_uncompressed_dib():
         decode_avi_frames(bytes(enc2))
 
 
-def test_avi_audio_stream_extraction():
-    """An AVI audio stream ('auds' strh + 01wb chunks) re-wraps
-    losslessly as RIFF/WAVE, so the entire WAV codec family applies:
-    int16 PCM extracts to quantization accuracy, the video stream of
-    the SAME file still decodes (stream-index-aware chunk walk), and a
-    video-only AVI raises."""
-    import numpy as np
-    import pytest
-
-    from reading_the_unreadable_spark.operators.video import (
-        decode_avi_frames,
-        encode_avi_dib,
-        encode_avi_with_audio,
-        extract_avi_audio,
-    )
-
-    rng = np.random.Generator(np.random.PCG64(5))
-    frames = [rng.integers(0, 256, (16, 24, 3)).astype(np.uint8) for _ in range(4)]
-    t = np.arange(3200) / 16000
-    samples = np.stack(
-        [np.sin(2 * np.pi * 440 * t), np.sin(2 * np.pi * 220 * t)], 1
-    ) * 0.5
-    avi = encode_avi_with_audio(frames, samples, rate=16000, fps=8.0)
-    rate, got = extract_avi_audio(avi)
-    assert rate == 16000 and got.shape == (3200, 2)
-    assert np.abs(got - samples).max() < 1 / 32768 + 1e-9
-    fps, n, _sampled = decode_avi_frames(avi)
-    assert n == 4 and abs(fps - 8.0) < 0.01
-    with pytest.raises(ValueError, match="no audio stream"):
-        extract_avi_audio(encode_avi_dib(frames))
-
-
 def test_aiff_roundtrip_and_spark_features(spark):
     """AIFF (big-endian Mac-archive PCM): exact int16 round-trip, the
     80-bit-extended sample-rate field survives, 8/24-bit variants
@@ -1515,10 +1428,10 @@ def test_aiff_roundtrip_and_spark_features(spark):
     import numpy as np
     import pytest
 
+    from media_fixtures import encode_aiff
     from reading_the_unreadable_spark.operators.audio import (
         decode_aiff,
         decode_audio,
-        encode_aiff,
         extract_audio_features,
     )
 
@@ -1530,9 +1443,9 @@ def test_aiff_roundtrip_and_spark_features(spark):
 
     # 8-bit (SIGNED in AIFF) and 24-bit big-endian variants: hand-build
     def build(bits, data, ch=1, frames=4, r=8000.0):
-        from reading_the_unreadable_spark.operators.audio import _float_to_f80
+        from media_fixtures import float_to_f80
 
-        comm = _struct.pack(">hLh", ch, frames, bits) + _float_to_f80(r)
+        comm = _struct.pack(">hLh", ch, frames, bits) + float_to_f80(r)
         ssnd = _struct.pack(">LL", 0, 0) + data
 
         def chunk(cid, body):
@@ -1789,9 +1702,9 @@ def test_jpeg_12bit_precision():
     import numpy as np
     import pytest as _pytest
 
+    from media_fixtures import encode_jpeg_12
     from reading_the_unreadable_spark.operators.jpeg import (
         decode_jpeg,
-        encode_jpeg_12,
         encode_jpeg_progressive,
     )
 

@@ -2,13 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from reading_the_unreadable_spark.operators.metrics import (
-    cer,
-    cer_summary,
-    page_coverage,
-)
+from operator_specs import cer_summary
+from reading_the_unreadable_spark.operators.metrics import cer, page_coverage
 
 
 def test_coverage_simple(spark):

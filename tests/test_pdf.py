@@ -1,4 +1,4 @@
-"""PDF write/parse round-trip + the PDF→layout bridge."""
+"""PDF write/parse round-trips, encryption and the Spark parse surface."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from reading_the_unreadable_spark.operators.pdf import (
     encode_pdf,
     parse_content_text,
     parse_pdf_spans,
-    pdf_to_boxes,
 )
 
 
@@ -166,28 +165,6 @@ def test_parse_pdf_spans_spark(spark):
     assert got[0]["y"] == 720.0 and got[1]["y"] == 706.0
 
 
-def test_pdf_layout_bridge(spark):
-    """Parsed PDF runs flow through the SAME layout + extraction chain
-    as layout-model boxes (the 'PDF/layout parse' contract)."""
-    from reading_the_unreadable_spark.plans.pipeline import extract_from_boxes
-
-    pdf = encode_pdf([["first paragraph line", "second paragraph line"]])
-    df = spark.createDataFrame(
-        [("doc", bytearray(pdf))], "doc_id string, payload binary"
-    )
-    boxes = pdf_to_boxes(parse_pdf_spans(df))
-    from reading_the_unreadable_spark.operators.layout import layout
-
-    # the two runs land in one column and box-merge (paragraph-joined) …
-    merged = layout(boxes, num_partitions=2).collect()
-    assert len(merged) == 1
-    assert merged[0]["text"] == "first paragraph line\n\nsecond paragraph line"
-    # … and the text stage re-splits them into ordered paragraph spans
-    spans = extract_from_boxes(boxes, num_partitions=2).collect()
-    texts = [s["text"] for s in sorted(spans, key=lambda s: s["order"])]
-    assert texts == ["first paragraph line", "second paragraph line"]
-
-
 def test_non_tj_operator_consumes_open_array():
     """An array consumed by a non-TJ operator (dash pattern '[ ] 0 d',
     color arrays, …) must not leave in_array set — a stale array would
@@ -280,7 +257,8 @@ def test_crypto_known_answers():
     rk = pc._expand_key(bytes(range(32)))
     ct = pc._encrypt_block(rk, pt)
     assert ct == bytes.fromhex("8ea2b7ca516745bfeafc49904b496089")
-    assert pc._decrypt_block(rk, ct) == pt
+    # zero IV: one unpadded CBC block is a raw FIPS-197 block decrypt
+    assert pc.aes_cbc_decrypt(bytes(range(32)), bytes(16), ct, pad=False) == pt
     assert pc.rc4(b"Key", b"Plaintext") == bytes.fromhex("BBF316E8D940AF0AD3")
 
 

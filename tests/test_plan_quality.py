@@ -776,8 +776,8 @@ def test_hof_lambdas_do_not_reevaluate_split(spark):
     n-grams or line/word arrays bind the split outside every lambda;
     their optimized plans must keep it there."""
     from reading_the_unreadable_spark.operators.dedup import (
+        band_signatures,
         dedup_substrings,
-        minhash_signatures,
         shingles,
         winnow_fingerprints,
     )
@@ -793,7 +793,7 @@ def test_hof_lambdas_do_not_reevaluate_split(spark):
     )
     frames = {
         "shingles": shingles(docs, 3),
-        "minhash": minhash_signatures(shingles(docs, 3)),
+        "band_signatures": band_signatures(shingles(docs, 3)),
         "winnow": winnow_fingerprints(docs, k=3, w=2),
         "dedup_substrings": dedup_substrings(docs, k=4),
         "decontaminate": contamination_flags(docs, docs.limit(1), n=3),

@@ -222,14 +222,13 @@ def test_archive_codec_fuzz_contract(seed, cut, flip_val, flip_pos):
     loop ever escapes to a quarantining caller."""
     import numpy as np
 
+    from media_fixtures import encode_gif, encode_jpeg_12
     from reading_the_unreadable_spark.operators.multimodal import (
         decode_image,
-        encode_gif,
         encode_png,
     )
     from reading_the_unreadable_spark.operators.jpeg import (
         encode_jpeg,
-        encode_jpeg_12,
         encode_jpeg_progressive,
     )
     from reading_the_unreadable_spark.operators.tiff import encode_tiff
@@ -306,9 +305,9 @@ def test_audio_codec_fuzz_contract(seed, cut, flip_val, flip_pos):
     escapes to the quarantining feature path."""
     import numpy as np
 
+    from media_fixtures import encode_aiff
     from reading_the_unreadable_spark.operators.audio import (
         decode_audio,
-        encode_aiff,
         encode_g711,
         encode_wav,
         encode_wav_g711,

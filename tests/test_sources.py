@@ -1,11 +1,10 @@
-"""Source connectors: folder-of-txt ground truth (S9), NDJSON nested
-annotations (S10), JSONL LM responses with permissive corrupt handling
-(S6/S7), and the classifier-prediction join (J6)."""
+"""Source layer: the snapshot table (append, time travel, incremental
+reads, merge/delete, compaction, tags, rollback), ORC pushdown and
+docs-table validation."""
 
 from __future__ import annotations
 
 import json
-import shutil
 from pathlib import Path
 
 import pytest
@@ -13,145 +12,7 @@ from pyspark.sql import functions as F
 
 from reading_the_unreadable_spark import synth
 from reading_the_unreadable_spark.execution import write_file
-from reading_the_unreadable_spark.operators.metrics import cer
-from reading_the_unreadable_spark.sources.annotations import read_annotations_ndjson
 from reading_the_unreadable_spark.sources.docs import docs_from_rows
-from reading_the_unreadable_spark.sources.ground_truth import read_ground_truth_txt
-from reading_the_unreadable_spark.sources.lm_responses import read_lm_responses
-
-TMP = Path("/tmp/test_sources")
-
-
-@pytest.fixture(autouse=True)
-def _clean():
-    shutil.rmtree(TMP, ignore_errors=True)
-    TMP.mkdir(parents=True)
-    yield
-
-
-def test_ground_truth_txt_scan_feeds_cer(spark):
-    gt_dir = TMP / "gt"
-    gt_dir.mkdir()
-    (gt_dir / "page-1.txt").write_text("the quick brown fox")
-    (gt_dir / "page-2.txt").write_text("jumps over the lazy dog")
-    gt = read_ground_truth_txt(spark, str(gt_dir))
-    rows = {r["doc_id"]: r["text"] for r in gt.collect()}
-    assert rows == {
-        "page-1": "the quick brown fox",
-        "page-2": "jumps over the lazy dog",
-    }
-    # predictions: one perfect, one corrupted
-    preds = spark.createDataFrame(
-        [("page-1", "the quick brown fox"), ("page-2", "jumps over the hazy dog")],
-        "doc_id string, text string",
-    )
-    out = {r["doc_id"]: r["cer"] for r in cer(preds, gt).collect()}
-    assert out["page-1"] == 0.0
-    assert out["page-2"] > 0.0
-
-
-def test_annotations_ndjson_scan(spark):
-    path = TMP / "ann.ndjson"
-    rec = {
-        "data_row": {"external_id": "doc-7"},
-        "projects": {
-            "proj1": {
-                "labels": [
-                    {
-                        "performed_by": "alice",
-                        "annotations": {
-                            "objects": [
-                                {
-                                    "name": "title",
-                                    "bounding_box": {
-                                        "top": 10.0,
-                                        "left": 20.0,
-                                        "height": 30.0,
-                                        "width": 40.0,
-                                    },
-                                },
-                                {
-                                    "name": "figure",
-                                    "bounding_box": {
-                                        "top": 100.0,
-                                        "left": 0.0,
-                                        "height": 50.0,
-                                        "width": 60.0,
-                                    },
-                                },
-                            ]
-                        },
-                    }
-                ]
-            }
-        },
-    }
-    rec2 = {
-        "data_row": {"external_id": "doc-8"},
-        "projects": {
-            "proj1": {
-                "labels": [
-                    {
-                        "performed_by": "bob",
-                        "annotations": {
-                            "objects": [
-                                {
-                                    "name": "text",
-                                    "bounding_box": {
-                                        "top": 1.0,
-                                        "left": 2.0,
-                                        "height": 3.0,
-                                        "width": 4.0,
-                                    },
-                                }
-                            ]
-                        },
-                    }
-                ]
-            }
-        },
-    }
-    path.write_text(json.dumps(rec) + "\n" + json.dumps(rec2) + "\n")
-    df = read_annotations_ndjson(spark, str(path))
-    got = {(r["doc_id"], r["label"]): r for r in df.collect()}
-    assert set(got) == {("doc-7", "title"), ("doc-7", "figure"), ("doc-8", "text")}
-    t = got[("doc-7", "title")]
-    assert (t["x1"], t["y1"], t["x2"], t["y2"]) == (20.0, 10.0, 60.0, 40.0)
-    assert t["annotator"] == "alice"
-
-
-def test_lm_responses_jsonl_permissive(spark):
-    path = TMP / "responses.jsonl"
-    good = {
-        "custom_id": "doc-1_page_1_B1C1R1",
-        "response": {
-            "body": {
-                "choices": [{"message": {"content": "extracted text"}}],
-                "usage": {"prompt_tokens": 120, "completion_tokens": 48},
-            }
-        },
-    }
-    good2 = {
-        "custom_id": "doc-1_page_1_B1C2R2",
-        "response": {
-            "body": {
-                "choices": [{"message": {"content": "more text"}}],
-                "usage": {"prompt_tokens": 80, "completion_tokens": 30},
-            }
-        },
-    }
-    path.write_text(
-        json.dumps(good) + "\n" + "{this is not json\n" + json.dumps(good2) + "\n"
-    )
-    df = read_lm_responses(spark, str(path))
-    rows = df.collect()
-    assert len(rows) == 3
-    ok = {r["custom_id"]: r for r in rows if not r["is_corrupt"]}
-    assert ok["doc-1_page_1_B1C1R1"]["content"] == "extracted text"
-    assert ok["doc-1_page_1_B1C1R1"]["prompt_tokens"] == 120
-    assert ok["doc-1_page_1_B1C2R2"]["completion_tokens"] == 30
-    corrupt = [r for r in rows if r["is_corrupt"]]
-    assert len(corrupt) == 1 and corrupt[0]["content"] is None
 
 
 def test_snapshot_append_timetravel_incremental(spark, tmp_path):
@@ -507,9 +368,11 @@ def test_incremental_read_skips_compaction(spark, tmp_path):
 
 
 def test_incremental_read_reads_only_window_manifests(spark, tmp_path, monkeypatch):
-    """A tail cycle's driver cost follows its window, not the table's
-    age: incremental_read picks the manifests in (after, until] by the
-    snapshot id in their file names and reads only those."""
+    """Driver cost follows the bound, not the table's age: reads pick
+    manifests by the snapshot id in their file names.  incremental_read
+    reads only the manifests in (after, until], a time-travel read of
+    snapshot S (by id or by tag) only manifests 1..S, and create_tag
+    none."""
     from reading_the_unreadable_spark.sources import snapshots as S
 
     root = str(tmp_path / "tbl")
@@ -519,7 +382,8 @@ def test_incremental_read_reads_only_window_manifests(spark, tmp_path, monkeypat
     real = S.read_file
 
     def counting(spark_, path):
-        reads.append(path)
+        if "/manifests/" in path:
+            reads.append(path)
         return real(spark_, path)
 
     monkeypatch.setattr(S, "read_file", counting)
@@ -532,41 +396,18 @@ def test_incremental_read_reads_only_window_manifests(spark, tmp_path, monkeypat
     assert sorted(r["doc_id"] for r in got.collect()) == list(range(20, 40))
     assert len(reads) == 2
 
+    reads.clear()
+    got = S.read_snapshot(spark, root, snapshot_id=1)
+    assert sorted(r["doc_id"] for r in got.collect()) == list(range(10))
+    assert len(reads) == 1 and "/manifests/snap-1-" in reads[0]
 
-def test_snapshot_public_functions_have_callers():
-    """Every public top-level function of sources/snapshots.py is used
-    by code outside tests/: the package (the module itself included,
-    its own def excluded), scripts/, perfbench/ or __spark_entry__.py.
-    A reference is a name, attribute, imported name or string constant
-    in code — docstrings and comments do not count."""
-    import ast
+    reads.clear()
+    assert S.create_tag(spark, root, "first", snapshot_id=1) == 1
+    assert reads == []
 
-    repo = Path(__file__).resolve().parents[1]
-    pkg = repo / "reading_the_unreadable_spark"
-    module = ast.parse((pkg / "sources" / "snapshots.py").read_text())
-    public = {
-        n.name
-        for n in module.body
-        if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
-    }
-    sources = [
-        *pkg.rglob("*.py"),
-        *(repo / "scripts").rglob("*.py"),
-        *(repo / "perfbench").rglob("*.py"),
-        repo / "__spark_entry__.py",
-    ]
-    used: set[str] = set()
-    for path in sources:
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Name):
-                used.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                used.add(node.attr)
-            elif isinstance(node, ast.alias):
-                used.add(node.asname or node.name)
-            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                used.add(node.value)
-    assert public and sorted(public - used) == []
+    got = S.read_snapshot(spark, root, tag="first")
+    assert sorted(r["doc_id"] for r in got.collect()) == list(range(10))
+    assert len(reads) == 1 and "/manifests/snap-1-" in reads[0]
 
 
 def test_snapshot_zorder_rewrite(spark, tmp_path):

@@ -10,11 +10,9 @@ import re
 
 import pyspark.sql.functions as F
 
+from operator_specs import range_point_join
 from reading_the_unreadable_spark.operators.encoding import fix_mojibake
-from reading_the_unreadable_spark.operators.temporal import (
-    asof_join,
-    range_point_join,
-)
+from reading_the_unreadable_spark.operators.temporal import asof_join
 
 
 def _plan(df) -> str:
@@ -124,31 +122,6 @@ def test_range_join_boundaries_and_exactly_once(spark):
     assert got == [1, 2, 5]
 
 
-def test_range_join_plan_is_bucket_equi_join(spark):
-    iv = spark.range(100).select(
-        F.col("id").alias("iid"),
-        F.expr("timestamp'2020-01-01' + make_interval(0,0,0,0,0,0, id*86400)").alias(
-            "s"
-        ),
-        F.expr(
-            "timestamp'2020-01-01' + make_interval(0,0,0,0,0,0, id*86400 + 172800)"
-        ).alias("e"),
-    )
-    pts = spark.range(1000).select(
-        F.col("id").alias("pid"),
-        F.expr("timestamp'2020-01-01' + make_interval(0,0,0,0,0,0, id*9000)").alias(
-            "ts"
-        ),
-    )
-    plan = _plan(range_point_join(iv, pts, "s", "e", "ts", bucket_seconds=86400))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    # the candidate join is a real equi-join on the bucket id
-    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan or (
-        "ShuffledHashJoin" in plan
-    ), plan[:2000]
-
-
 def test_fix_mojibake_classes_and_idempotence(spark):
     rows = spark.createDataFrame(
         [
@@ -219,57 +192,6 @@ def test_asof_forward_and_nearest(spark):
     )
     n = len(re.findall(r"Exchange hashpartitioning", plan))
     assert n == 1, plan[:2000]
-
-
-def test_fix_mojibake_cp1252_dialect(spark):
-    from reading_the_unreadable_spark.operators.encoding import (
-        fix_mojibake_cp1252,
-    )
-
-    rows = spark.createDataFrame(
-        [
-            (0, "em dash here"),
-            (1, "price E90 today"),
-            (2, "plain ascii only"),
-            (3, "genuine café unchanged"),
-            (4, "cafÃ© latin1 dialect too"),
-            (5, None),
-        ],
-        "id long, text string",
-    )
-    # patch in the cp1252-dialect payloads (em dash / euro) without
-    # literal mojibake bytes in this source file
-    dash = "â€”"   # mojibake of U+2014
-    euro = "â‚¬"   # mojibake of U+20AC
-    quote = "â€œ"  # mojibake of U+201C
-    rows = rows.replace(
-        {"em dash here": f"{dash} em dash {quote}quoted text",
-         "price E90 today": f"price {euro}90 today"},
-        subset=["text"],
-    )
-    out = {
-        r["id"]: (r["text"], r["was_mojibake_cp1252"])
-        for r in fix_mojibake_cp1252(rows, "text").collect()
-    }
-    assert out[0] == ("— em dash “quoted text", 1)
-    assert out[1] == ("price €90 today", 1)
-    assert out[2] == ("plain ascii only", 0)
-    assert out[3] == ("genuine café unchanged", 0)
-    assert out[4] == ("café latin1 dialect too", 1)
-    assert out[5] == (None, 0)
-
-    # composes with the JVM path: only_where skips already-flagged rows
-    from reading_the_unreadable_spark.operators.encoding import fix_mojibake
-
-    both = fix_mojibake_cp1252(
-        fix_mojibake(rows, "text"), "text",
-        only_where=F.col("was_mojibake") == 0,
-    )
-    got = {r["id"]: (r["text"], r["was_mojibake"], r["was_mojibake_cp1252"])
-           for r in both.collect()}
-    assert got[4] == ("café latin1 dialect too", 1, 0)  # JVM path took it
-    assert got[0][0].startswith("— em dash")
-    assert (got[0][1], got[0][2]) == (0, 1)
 
 
 def test_asof_num_partitions_single_exchange(spark):

@@ -4,6 +4,7 @@ corruption contracts, and the Spark binaryFile surface."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from reading_the_unreadable_spark.sources.warc import (
     build_http_response,
@@ -11,7 +12,6 @@ from reading_the_unreadable_spark.sources.warc import (
     build_warc_record,
     parse_warc,
     parse_warc_frame,
-    read_warc_folder,
     split_http_response,
     warc_from_documents,
 )
@@ -92,7 +92,13 @@ def test_spark_folder_read_and_quarantine(spark, tmp_path):
         build_warc(_sample_records()[2:], gzip_members=True)
     )
     (d / "c.warc").write_bytes(b"WARC/1.0\r\nbroken")
-    rows = read_warc_folder(spark, str(d)).collect()
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.warc*")
+        .load(str(d))
+        .select(F.col("path").alias("source"), "content")
+    )
+    rows = parse_warc_frame(files).collect()
     by_file = {}
     for r in rows:
         by_file.setdefault(r["source_file"].rsplit("/", 1)[-1], []).append(r)
