@@ -10,4 +10,10 @@ entirely with Spark DataFrame transformations, window functions, and
 vectorized pandas/Arrow UDFs (zero row-at-a-time Python UDFs).
 """
 
+from .execution import skip_unchanged_archive_rereads
+
 __version__ = "0.1.0"
+
+# every Python worker that unpickles an operator UDF imports the package,
+# so this runs on the workers, where each task re-reads sys.path archives
+skip_unchanged_archive_rereads()

@@ -1,7 +1,7 @@
 """Execution policy shared by every operator: where a repartition's width
 is set, where a plan is cut into stages, how a higher-order function
-binds an expression once, and the Hadoop-FS primitives that state and
-scratch files go through.
+binds an expression once, the Hadoop-FS primitives that state and
+scratch files go through, and the Python worker's per-task import cost.
 
 This module imports nothing from the package, so any module can import
 it at top level.
@@ -10,11 +10,57 @@ it at top level.
 from __future__ import annotations
 
 import atexit
+import functools
+import os
+import sys
 import tempfile
 import uuid
+import zipimport
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+# ------------------------------------------------------- Python workers
+def skip_unchanged_archive_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    the archive file changed since this importer last read it.
+
+    A PySpark worker calls ``importlib.invalidate_caches()`` at the start
+    of EVERY task (``worker_util.setup_spark_files``).  Up to CPython 3.11
+    that re-reads the central directory of every archive on ``sys.path``,
+    once per cached ``zipimporter``: a worker of the standard Spark
+    distribution holds about 16 of them (pyspark.zip once per imported
+    subpackage, the py4j zip, the spark-core jar), and the call costs
+    ~170 ms of CPU per task before the task touches data.  CPython 3.12
+    made the re-read lazy (gh-103200), so there this installs nothing.
+
+    The stamp (inode, size, mtime_ns) is taken BEFORE the read and kept
+    per importer instance: importers of the same archive share the
+    module-level directory cache but each holds its own ``_files``, so
+    after a rewrite every one of them must re-read, not only the first.
+    An importer that has no stamp yet reads once.  Idempotent; the
+    package ``__init__`` calls it, so every worker that unpickles an
+    operator UDF runs it."""
+    if sys.version_info >= (3, 12):
+        return
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "__wrapped__", None) is not None:
+        return
+
+    @functools.wraps(reread)
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        if stamp is not None and stamp == getattr(self, "_archive_stamp", None):
+            return
+        reread(self)
+        self._archive_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 # ------------------------------------------------------------ partitioning

@@ -40,32 +40,54 @@ ORDERED_BOX_SCHEMA = (
 )
 
 
+def _layer(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    """One ``withColumns`` from SQL expression strings.
+
+    Plan building is Python→JVM round trips: every Column node costs
+    several (``F.col`` 13, ``when/otherwise`` 74, a 16-field aliased
+    ``struct`` 455), while an ``F.expr`` of any size costs 3, and each
+    chained ``withColumn`` re-analyses the whole plan.  A layer holds
+    only columns that Catalyst fused into one Project or Window when
+    they were chained, so the optimized plan is the one the chain gave.
+    Float literals carry a ``D`` suffix: a bare ``0.1`` is DECIMAL in
+    Spark SQL."""
+    return df.withColumns({name: F.expr(sql) for name, sql in exprs.items()})
+
+
+def _d(x: float) -> str:
+    """A double literal in Spark SQL."""
+    return f"{x!r}D"
+
+
+BY_DOC = "OVER (PARTITION BY doc_id)"
+
+
 def _abandon_and_print_area(boxes: DataFrame) -> DataFrame:
     """L0–L2: DocLayout-YOLO's 'plain text' class normalizes to 'text'
     BEFORE any layout math (reference ``pipeline_stages.py:193-195`` —
     without this, the L4a relabel would wrongly title-ize body text and
     L3's median text width would skip it); then print-area bounds,
     top-zone abandon reclassification, filter."""
-    w = Window.partitionBy("doc_id")
-    boxes = boxes.withColumn(
-        "kind",
-        F.when(F.col("kind") == "plain text", F.lit("text")).otherwise(F.col("kind")),
+    df = _layer(
+        boxes,
+        {
+            "kind": "CASE WHEN kind = 'plain text' THEN 'text' ELSE kind END",
+            "center_y": "(y1 + y2) / 2.0D",
+        },
     )
-    df = (
-        boxes.withColumn("center_y", (F.col("y1") + F.col("y2")) / F.lit(2.0))
-        .withColumn("_py1", F.min("y1").over(w))
-        .withColumn("_py2", F.max("y2").over(w))
-    )
-    thr = F.col("_py1") + F.lit(ABANDON_TOP_FRACTION) * (F.col("_py2") - F.col("_py1"))
-    df = df.withColumn(
-        "_abandon_line",
-        F.max(
-            F.when((F.col("kind") == "abandon") & (F.col("center_y") <= thr), F.col("y2"))
-        ).over(w),
+    df = _layer(df, {"_py1": f"min(y1) {BY_DOC}", "_py2": f"max(y2) {BY_DOC}"})
+    thr = f"_py1 + {_d(ABANDON_TOP_FRACTION)} * (_py2 - _py1)"
+    df = _layer(
+        df,
+        {
+            "_abandon_line": (
+                f"max(CASE WHEN kind = 'abandon' AND center_y <= {thr} THEN y2 END) "
+                + BY_DOC
+            )
+        },
     )
     df = df.filter(
-        (F.col("_abandon_line").isNull() | (F.col("center_y") > F.col("_abandon_line")))
-        & (F.col("kind") != "abandon")
+        "(_abandon_line IS NULL OR center_y > _abandon_line) AND kind != 'abandon'"
     )
     return df.drop("_py1", "_py2", "_abandon_line")
 
@@ -77,59 +99,42 @@ def _columns_native(df: DataFrame) -> DataFrame:
     (``bbox_functions.py:240-320``); here it is a ``sequence`` +
     higher-order ``filter`` over bin indices — no UDF, no extra shuffle.
     """
-    w = Window.partitionBy("doc_id")
-    df = (
-        df.withColumn("_px1", F.min("x1").over(w))
-        .withColumn("_px2", F.max("x2").over(w))
-        .withColumn("_pw", F.col("_px2") - F.col("_px1"))
-        .withColumn(
-            "_med_w",
-            F.median(
-                F.when(F.col("kind") == "text", F.col("x2") - F.col("x1"))
-            ).over(w),
-        )
+    df = _layer(df, {"_px1": f"min(x1) {BY_DOC}", "_px2": f"max(x2) {BY_DOC}"})
+    df = _layer(df, {"_pw": "_px2 - _px1"})
+    df = _layer(
+        df, {"_med_w": f"median(CASE WHEN kind = 'text' THEN x2 - x1 END) {BY_DOC}"}
     )
-    k = F.greatest(
-        F.coalesce(F.floor(F.col("_pw") / F.col("_med_w")), F.lit(1)).cast("int"),
-        F.lit(1),
+    df = _layer(df, {"_k": "greatest(CAST(coalesce(floor(_pw / _med_w), 1) AS INT), 1)"})
+
+    def edge(i: str) -> str:
+        return f"_px1 + CAST({i} AS DOUBLE) * (_pw + {_d(BIN_EPSILON)}) / CAST(_k AS DOUBLE)"
+
+    hits = (
+        "filter(sequence(0, _k - 1), i -> "
+        f"least(x2, {edge('i + 1')}) - greatest(x1, {edge('i')}) "
+        f">= {_d(MIN_OVERLAP_FRACTION)} * (x2 - x1))"
     )
-    df = df.withColumn("_k", k).withColumn(
-        "column_width", F.col("_pw") / F.col("_k")
-    )
-    bw = F.col("x2") - F.col("x1")
-    edge = lambda i: F.col("_px1") + i.cast("double") * (  # noqa: E731
-        F.col("_pw") + F.lit(BIN_EPSILON)
-    ) / F.col("_k").cast("double")
-    hits = F.filter(
-        F.sequence(F.lit(0), F.col("_k") - F.lit(1)),
-        lambda i: (
-            F.least(F.col("x2"), edge(i + F.lit(1)))
-            - F.greatest(F.col("x1"), edge(i))
-        )
-        >= F.lit(MIN_OVERLAP_FRACTION) * bw,
-    )
-    df = df.withColumn(
-        "column_number",
-        F.when(F.size(hits) > 1, F.lit(0))
-        .when(F.size(hits) == 1, F.element_at(hits, 1) + F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("int"),
+    df = _layer(
+        df,
+        {
+            "column_width": "_pw / _k",
+            "column_number": (
+                f"CAST(CASE WHEN size({hits}) > 1 THEN 0 "
+                f"WHEN size({hits}) = 1 THEN element_at({hits}, 1) + 1 "
+                "ELSE 0 END AS INT)"
+            ),
+        },
     )
     # column edges (reference assign_columns' c1/c2,
     # ``bbox_functions.py:296-319``): the owning bin's edges for
     # single-column boxes, the print-area edges for column-0 boxes —
     # consumed by the L8a x-widening step.
-    single = F.col("column_number") >= 1
-    df = df.withColumn(
-        "c1",
-        F.when(single, edge((F.col("column_number") - 1).cast("int"))).otherwise(
-            F.col("_px1")
-        ),
-    ).withColumn(
-        "c2",
-        F.when(single, edge(F.col("column_number").cast("int"))).otherwise(
-            F.col("_px2")
-        ),
+    df = _layer(
+        df,
+        {
+            "c1": f"CASE WHEN column_number >= 1 THEN {edge('column_number - 1')} ELSE _px1 END",
+            "c2": f"CASE WHEN column_number >= 1 THEN {edge('column_number')} ELSE _px2 END",
+        },
     )
     return df.drop("_px1", "_px2", "_pw", "_med_w", "_k")
 
@@ -145,54 +150,59 @@ def _blocks_dedup_order(df: DataFrame) -> DataFrame:
     # L4a: a real layout model emits classes beyond the canonical set
     # (isolate_formula, figure_caption, …) — everything not figure/table/
     # text becomes title (abandon rows are already gone after L2).
-    df = df.withColumn(
-        "kind",
-        F.when(F.col("kind").isin(*CANONICAL_KINDS), F.col("kind")).otherwise(
-            F.lit("title")
-        ),
-    )
-    w_scan = (
-        Window.partitionBy("doc_id")
-        .orderBy("y1", "offset")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    df = df.withColumn(
-        "page_block",
-        F.sum(F.when(F.col("column_number") == 0, 1).otherwise(0)).over(w_scan).cast("int"),
+    canonical = ", ".join(f"'{k}'" for k in CANONICAL_KINDS)
+    df = _layer(df, {"kind": f"CASE WHEN kind IN ({canonical}) THEN kind ELSE 'title' END"})
+    df = _layer(
+        df,
+        {
+            "page_block": (
+                "CAST(sum(CASE WHEN column_number = 0 THEN 1 ELSE 0 END) "
+                "OVER (PARTITION BY doc_id ORDER BY y1, `offset` "
+                "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT)"
+            )
+        },
     )
     # duplicate-box removal keeping max confidence (tie: lowest offset).
     # A row_number window over the rounded coordinates shares the doc_id
     # clustering (no exchange); measured faster than a max_by(struct)
     # hash-agg, whose whole-row struct copies cost more than the sort.
-    w_dup = Window.partitionBy(
-        "doc_id",
-        F.round("x1", 6),
-        F.round("y1", 6),
-        F.round("x2", 6),
-        F.round("y2", 6),
-    ).orderBy(F.desc("confidence"), F.asc("offset"))
-    df = (
-        df.withColumn("_dup_rank", F.row_number().over(w_dup))
-        .filter(F.col("_dup_rank") == 1)
-        .drop("_dup_rank")
+    df = _layer(
+        df,
+        {
+            "_dup_rank": (
+                "row_number() OVER (PARTITION BY doc_id, round(x1, 6), round(y1, 6), "
+                "round(x2, 6), round(y2, 6) ORDER BY confidence DESC, `offset`)"
+            )
+        },
     )
-    w_ro = Window.partitionBy("doc_id").orderBy(
-        "page_block", "column_number", "y1", "offset"
+    df = df.filter("_dup_rank = 1").drop("_dup_rank")
+    df = _layer(
+        df,
+        {
+            "reading_order": (
+                "row_number() OVER (PARTITION BY doc_id "
+                "ORDER BY page_block, column_number, y1, `offset`)"
+            )
+        },
     )
-    df = df.withColumn("reading_order", F.row_number().over(w_ro))
-    w_col = Window.partitionBy("doc_id", "page_block", "column_number").orderBy(
-        "y1", "offset"
+    df = _layer(
+        df,
+        {
+            "y2": (
+                "coalesce(lead(y1) OVER (PARTITION BY doc_id, page_block, "
+                "column_number ORDER BY y1, `offset`), y2)"
+            )
+        },
     )
-    df = df.withColumn("y2", F.coalesce(F.lead("y1").over(w_col), F.col("y2")))
     # L8a: widen non-figure boxes to their column edges (x1 := min(x1, c1),
     # x2 := max(x2, c2)) — reference adjust_x_coordinates.
-    nonfig = F.col("kind") != "figure"
-    df = df.withColumn(
-        "x1", F.when(nonfig & (F.col("x1") > F.col("c1")), F.col("c1")).otherwise(F.col("x1"))
-    ).withColumn(
-        "x2", F.when(nonfig & (F.col("x2") < F.col("c2")), F.col("c2")).otherwise(F.col("x2"))
+    return _layer(
+        df,
+        {
+            "x1": "CASE WHEN kind != 'figure' AND x1 > c1 THEN c1 ELSE x1 END",
+            "x2": "CASE WHEN kind != 'figure' AND x2 < c2 THEN c2 ELSE x2 END",
+        },
     )
-    return df
 
 
 def _fill_gaps_inline(df: DataFrame) -> DataFrame:
@@ -215,7 +225,6 @@ def _fill_gaps_inline(df: DataFrame) -> DataFrame:
     exchange cost ~24% wall at local[8] and dragged N→4N scaling
     efficiency from ~0.90 to ~0.76)."""
     cols = [c for c in df.columns if c != "doc_id"]
-    w_doc = Window.partitionBy("doc_id")
     # Column-grain min/max deliberately reuse the EXACT window spec of
     # the upstream lead-y2 window ((doc, page_block, column) ordered by
     # (y1, offset)) with an unbounded frame: CollapseWindow then fuses
@@ -223,63 +232,63 @@ def _fill_gaps_inline(df: DataFrame) -> DataFrame:
     # column) ≡ (doc, column) exactly on the single-block pages the
     # eligibility gate admits; on multi-block pages the values are
     # unused (gated by _elig).
-    w_col = (
-        Window.partitionBy("doc_id", "page_block", "column_number")
-        .orderBy("y1", "offset")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    by_col = (
+        "OVER (PARTITION BY doc_id, page_block, column_number ORDER BY y1, `offset` "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
     )
     # single-block eligibility as min==max (one distinct value) — a
     # collect_set window materializes a per-row set for the same answer;
     # first/last-in-column as reading_order == min/max over the column
     # (reading_order is unique within a doc) — two ordered row_number
-    # windows would add two differently-ordered sort passes
-    eligible = (F.max("column_number").over(w_doc) > 1) & (
-        F.min("page_block").over(w_doc) == F.max("page_block").over(w_doc)
+    # windows would add two differently-ordered sort passes.
+    # one layer per window column, as the column chain had: Catalyst then
+    # moves the doc-grain windows that do not read the lead-adjusted y2
+    # below the lead window and fuses them into ONE doc-grain WindowExec
+    # pass; a shared layer would pin all of them above it (checked on the
+    # optimized plan)
+    df = _layer(
+        df,
+        {
+            "_elig": (
+                f"max(column_number) {BY_DOC} > 1 "
+                f"AND min(page_block) {BY_DOC} = max(page_block) {BY_DOC} "
+                "AND column_number > 0"
+            )
+        },
     )
-    # w_doc columns grouped together so CollapseWindow merges them into
-    # ONE doc-grain WindowExec pass
-    df = (
-        df.withColumn("_elig", eligible & (F.col("column_number") > 0))
-        .withColumn("_dy1", F.min("y1").over(w_doc))
-        .withColumn("_dy2", F.max("y2").over(w_doc))
-        .withColumn(
-            "_first", F.col("reading_order") == F.min("reading_order").over(w_col)
-        )
-        .withColumn(
-            "_last", F.col("reading_order") == F.max("reading_order").over(w_col)
-        )
-    )
+    df = _layer(df, {"_dy1": f"min(y1) {BY_DOC}"})
+    df = _layer(df, {"_dy2": f"max(y2) {BY_DOC}"})
+    df = _layer(df, {"_first": f"reading_order = min(reading_order) {by_col}"})
+    df = _layer(df, {"_last": f"reading_order = max(reading_order) {by_col}"})
 
-    def gap_struct(y1c, y2c):
-        overrides = {
-            "offset": F.lit(-1),
-            "kind": F.lit("text"),
-            "confidence": F.lit(0.0),
-            "y1": y1c,
-            "y2": y2c,
-            "center_y": (y1c + y2c) / F.lit(2.0),
-            "reading_order": F.lit(-1),
-        }
-        return F.struct(
-            *[overrides.get(c, F.col(c)).alias(c) for c in cols]
+    def box(overrides: dict[str, str]) -> str:
+        return "struct({})".format(
+            ", ".join(f"{overrides.get(c, f'`{c}`')} AS `{c}`" for c in cols)
         )
 
-    self_struct = F.struct(*[F.col(c).alias(c) for c in cols])
-    head = F.when(
-        F.col("_elig") & F.col("_first") & (F.col("y1") > F.col("_dy1")),
-        gap_struct(F.col("_dy1"), F.col("y1")),
+    def gap(y1: str, y2: str) -> str:
+        return box(
+            {
+                "offset": "-1",
+                "kind": "'text'",
+                "confidence": "0.0D",
+                "y1": y1,
+                "y2": y2,
+                "center_y": f"({y1} + {y2}) / 2.0D",
+                "reading_order": "-1",
+            }
+        )
+
+    head = f"CASE WHEN _elig AND _first AND y1 > _dy1 THEN {gap('_dy1', 'y1')} END"
+    tail = f"CASE WHEN _elig AND _last AND y2 < _dy2 THEN {gap('y2', '_dy2')} END"
+    return df.selectExpr(
+        "doc_id", f"inline(filter(array({box({})}, {head}, {tail}), x -> x IS NOT NULL))"
     )
-    tail = F.when(
-        F.col("_elig") & F.col("_last") & (F.col("y2") < F.col("_dy2")),
-        gap_struct(F.col("y2"), F.col("_dy2")),
-    )
-    arr = F.filter(F.array(self_struct, head, tail), lambda x: x.isNotNull())
-    return df.select("doc_id", F.inline(arr))
 
 
 def _min_height_filter(df: DataFrame) -> DataFrame:
     # L8b: drop sliver boxes the y2 adjustment collapsed below min_height.
-    df = df.filter(F.col("y2") - F.col("y1") >= F.lit(MIN_BOX_HEIGHT))
+    df = df.filter(f"y2 - y1 >= {_d(MIN_BOX_HEIGHT)}")
     return df.drop("c1", "c2")
 
 
@@ -320,8 +329,9 @@ def _merge_frame(pdf: pd.DataFrame, post_correct: bool = False) -> pd.DataFrame:
             and col[i] == col[acc_head]
         )
         if same_group and (y2[i] - y1[acc_head]) <= MERGE_WIDTH_MULTIPLIER * colw[i]:
+            # the cap is measured from the run HEAD's y1, so a member
+            # leaves nothing to update for the next check
             members[acc].append(i)
-            # extend the open run's bounds for subsequent cap checks
         else:
             heads.append(i)
             members.append([i])
@@ -584,29 +594,14 @@ def _sorted_frame(
     if fill_columns:
         geo = _fill_gaps_inline(geo)
     geo = _min_height_filter(geo)
-    entry = F.element_at(F.col("_payload"), F.col("offset"))
-    df = (
-        geo.join(payload_map, "doc_id")
+    entry = "element_at(_payload, `offset`)"
+    df = _layer(
+        geo.join(payload_map, "doc_id"),
         # synthesized gap boxes (offset -1) have no payload entry → empty text
-        .withColumn("text", F.coalesce(entry["text"], F.lit("")))
-        .withColumn("media_ref", entry["media_ref"])
+        {"text": f"coalesce({entry}.text, '')", "media_ref": f"{entry}.media_ref"},
     )
-    df = df.select(
-        "doc_id",
-        "offset",
-        "kind",
-        "text",
-        "media_ref",
-        "x1",
-        "y1",
-        "x2",
-        "y2",
-        "confidence",
-        "column_number",
-        "column_width",
-        "page_block",
-        "reading_order",
-    )
+    # the merge's input columns, in ORDERED_BOX_SCHEMA order
+    df = df.selectExpr(*(f"`{f.split()[0]}`" for f in ORDERED_BOX_SCHEMA.split(", ")))
     # sort keys match the preceding window's physical order exactly
     # ((doc, block, column, y1, offset) ≡ reading_order order within the
     # group), so Catalyst elides most of this sort
@@ -627,7 +622,7 @@ def layout(
     ``num_partitions`` forces the single doc_id exchange width (skew knob;
     AQE may coalesce).  See :func:`_sorted_frame` for the narrow-row
     window design; ``post_correct=True`` folds the T1 OCR normalization
-    into the merge UDF\'s pandas pass (one Arrow text round-trip).
+    into the merge UDF's pandas pass (one Arrow text round-trip).
     ``fill_columns=True`` runs the reference's default in-chain column
     gap fill (``postprocess_bbox(fill_columns=True)``) — the pipeline
     entry points in :mod:`..plans.pipeline` default it ON to match the

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from reading_the_unreadable_spark import synth
-from reading_the_unreadable_spark.plans.pipeline import extract
+from reading_the_unreadable_spark.plans.pipeline import extract, extract_nested
 from reading_the_unreadable_spark.sources.docs import docs_from_rows
 
 SF = "/root/testdata/sf0.01"
@@ -33,6 +33,30 @@ def test_extract_shuffle_count(spark):
     n_maps = len(re.findall(r"\bMapInPandas\b", plan))
     assert n_maps == 2, f"extract plan has {n_maps} MapInPandas:\n{plan[:2000]}"
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan[:2000]
+
+
+def test_extract_plan_builds_with_few_py4j_round_trips(spark, monkeypatch):
+    """Every Column node a plan is built from costs several Python→JVM
+    round trips (``F.col`` 13, a 16-field aliased ``struct`` 455).  The
+    layout layers are SQL expression strings, one ``withColumns`` each:
+    a warm ``extract_nested`` build sent 4 651 non-memory py4j commands
+    before that, about 1 000 after."""
+    from py4j.clientserver import ClientServerConnection
+
+    docs = docs_from_rows(spark, synth.make_corpus(20))
+    extract_nested(docs, num_partitions=8)  # warm: imports, JVM class lookups
+    sent: list[str] = []
+    real = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m\n"):  # memory/GC commands
+            sent.append(command)
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    extract_nested(docs, num_partitions=8)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 1200, len(sent)
 
 
 def test_parquet_filter_pushdown(spark):
