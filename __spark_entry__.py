@@ -1002,7 +1002,7 @@ def q_crawl_schedule(spark, sf):
     slot × the host's declared Crawl-delay of k+1 seconds).  The
     oracle re-derives the gate verdict from the VALUES rule table and
     the schedule with a window — the per-host shuffle is the
-    politeness semantics, capped in production by `max_per_host`."""
+    politeness semantics."""
     from reading_the_unreadable_spark.operators.robots import (
         crawl_schedule,
         parse_robots,

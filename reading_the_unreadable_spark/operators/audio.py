@@ -280,15 +280,14 @@ def _decode_ms_adpcm(
     return stacked.reshape(-1, ch).astype(np.float64) / 32768.0
 
 
-def encode_wav_ms_adpcm(
-    samples: np.ndarray, rate: int = 8000, block_align: int = 256
-) -> bytes:
+def encode_wav_ms_adpcm(samples: np.ndarray, rate: int = 8000) -> bytes:
     """mono int16 → RIFF/WAVE format 0x02 (MS-ADPCM).  Per-block the
     encoder tries all 7 predictor pairs and keeps the one with the
     lowest squared nibble-quantization error — the spec's recommended
     strategy; the bitstream it emits is decodable by any MS-ADPCM
     reader."""
     x = np.asarray(samples, np.int64).ravel()
+    block_align = 256
     spb = (block_align - 7) * 2 + 2
     n_blocks = max(1, -(-len(x) // spb))
     x = np.pad(x, (0, n_blocks * spb - len(x)))
@@ -364,9 +363,7 @@ def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def encode_wav_ima_adpcm(
-    samples: np.ndarray, rate: int = 8000, samples_per_block: int = 505
-) -> bytes:
+def encode_wav_ima_adpcm(samples: np.ndarray, rate: int = 8000) -> bytes:
     """mono int16 → RIFF/WAVE format 0x11 (IMA ADPCM) bytes — the
     forward compander matching :func:`_decode_ima_adpcm`, for fixtures
     and synthetic archival corpora.  Vectorized across blocks the same
@@ -374,9 +371,7 @@ def encode_wav_ima_adpcm(
     usual writer behavior)."""
     if samples.dtype != np.int16 or samples.ndim != 1:
         raise ValueError("encode_wav_ima_adpcm expects mono int16")
-    if (samples_per_block - 1) % 8:
-        raise ValueError("samples_per_block must be 8k+1")
-    spb = samples_per_block
+    spb = 505  # samples per block, 8k+1
     n = len(samples)
     n_blocks = max(1, -(-n // spb))
     padded = np.zeros(n_blocks * spb, np.int32)
@@ -433,7 +428,7 @@ def encode_wav_ima_adpcm(
 
 
 def encode_wav_g711(
-    companded: np.ndarray, rate: int = 8000, law: str = "ulaw", ch: int = 1
+    companded: np.ndarray, rate: int = 8000, law: str = "ulaw"
 ) -> bytes:
     """Companded uint8 samples → RIFF/WAVE with format code 7 (mu-law)
     or 6 (A-law), 8 bits/sample — the telephone-era WAV layout."""
@@ -441,7 +436,7 @@ def encode_wav_g711(
         raise ValueError("encode_wav_g711 expects companded uint8 samples")
     code = 7 if law == "ulaw" else 6
     data = companded.tobytes()
-    fmt = struct.pack("<HHIIHHH", code, ch, rate, rate * ch, ch, 8, 0)
+    fmt = struct.pack("<HHIIHHH", code, 1, rate, rate, 1, 8, 0)
     body = (
         b"WAVE"
         + b"fmt " + struct.pack("<I", len(fmt)) + fmt
@@ -579,9 +574,7 @@ def audio_features(samples: np.ndarray, rate: int) -> np.ndarray:
     return np.concatenate([[rms, zcr, centroid, clip], bands]).astype(np.float32)
 
 
-def extract_audio_features(
-    media: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
+def extract_audio_features(media: DataFrame) -> DataFrame:
     """(media_ref, kind, payload binary, …) → one row per clip with
     decoded audio metadata + feature vector — Arrow-batched mapInPandas,
     payloads never leave the executors (same contract as the image
@@ -597,7 +590,7 @@ def extract_audio_features(
                     "decode_err",
                 )
             }
-            for ref, kind, p in zip(pdf["media_ref"], pdf["kind"], pdf[payload_col]):
+            for ref, kind, p in zip(pdf["media_ref"], pdf["kind"], pdf["payload"]):
                 if p is None:
                     continue
                 b = bytes(p)
@@ -628,16 +621,16 @@ def extract_audio_features(
 
 
 # ------------------------------------------------------------------ synth
-def synth_wav_bytes(
-    ref: str, rate: int = 8000, dur_s: float = 0.25, codec: str = "pcm"
-) -> bytes:
-    """Deterministic REAL WAV for a media_ref: a ref-seeded tone + noise
-    mix, so the decode path exercises an actual codec round-trip.
+def synth_wav_bytes(ref: str, codec: str = "pcm") -> bytes:
+    """Deterministic REAL WAV for a media_ref: 0.25 s at 8 kHz of a
+    ref-seeded tone + noise mix, so the decode path exercises an actual
+    codec round-trip.
     ``codec`` picks the container encoding — ``pcm`` (int16), ``ima``
     (format 0x11), ``ms`` (MS-ADPCM 0x02), ``ulaw``/``alaw`` (G.711)."""
     seed = int.from_bytes(hashlib.md5(ref.encode()).digest()[:4], "big")
     rng = np.random.Generator(np.random.PCG64(seed))
-    n = int(rate * dur_s)
+    rate = 8000
+    n = rate // 4
     t = np.arange(n) / rate
     freq = 200 + (seed % 1800)
     wave = 0.5 * np.sin(2 * np.pi * freq * t) + 0.05 * rng.standard_normal(n)

@@ -31,18 +31,16 @@ def _alpha_len(line: Column) -> Column:
     return F.length(F.regexp_replace(line, r"[^a-zA-Z]", ""))
 
 
-def code_quality_signals(
-    files: DataFrame, text_col: str = "code", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, code) → per-file line statistics + keep decision.
+def code_quality_signals(files: DataFrame) -> DataFrame:
+    """(doc_id, code) → per-file line statistics + keep decision.
 
-    Output: (id, n_lines, max_line_len, avg_line_len, alpha_frac,
+    Output: (doc_id, n_lines, max_line_len, avg_line_len, alpha_frac,
     is_autogen, kept).  ``avg_line_len``/``alpha_frac`` are rounded to
     6 places so the decision thresholds (and any cross-engine replica)
     are stable.  ``is_autogen`` scans only the first
     `AUTOGEN_HEADER_LINES` lines — markers deep in a file are comments
     about other tools, not provenance headers."""
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("code"), "\n")
     n_lines = F.size(lines)
     lens = F.transform(lines, F.length)
     total = F.aggregate(lens, F.lit(0), lambda a, x: a + x)
@@ -70,7 +68,7 @@ def code_quality_signals(
         & ~is_autogen
     )
     return files.select(
-        id_col,
+        "doc_id",
         n_lines.alias("n_lines"),
         max_len.alias("max_line_len"),
         avg_len.alias("avg_line_len"),

@@ -28,8 +28,12 @@ from pyspark.sql import functions as F
 from ..execution import pin_fanout, spread, stage_boundary
 from .textstats import tokens_col
 
+SHINGLE_N = 3
 N_HASHES = 8
 BAND_ROWS = 2
+CC_MAX_ROUNDS = 30
+SIMHASH_BITS = 32
+SIMHASH_BANDS = 4
 
 
 def exact_duplicates(documents: DataFrame) -> DataFrame:
@@ -45,8 +49,8 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
     )
 
 
-def shingles(documents: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc (doc_id, shingle).
+def shingles(documents: DataFrame) -> DataFrame:
+    """Distinct word ``SHINGLE_N``-gram shingles per doc (doc_id, shingle).
 
     The token array is materialized as a column first — codegen does
     not CSE inside higher-order-function lambdas, so referencing the
@@ -56,11 +60,15 @@ def shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     docs = documents.withColumn("__sh_w", tokens_col(F.col("text")))
     w = F.col("__sh_w")
     sh = F.when(
-        F.size(w) >= n,
+        F.size(w) >= SHINGLE_N,
         F.transform(
-            F.sequence(F.lit(1), F.size(w) - F.lit(n - 1)),
+            F.sequence(F.lit(1), F.size(w) - F.lit(SHINGLE_N - 1)),
             lambda i: F.concat_ws(
-                " ", *[F.element_at(w, (i + F.lit(k)).cast("int")) for k in range(n)]
+                " ",
+                *[
+                    F.element_at(w, (i + F.lit(k)).cast("int"))
+                    for k in range(SHINGLE_N)
+                ],
             ),
         ),
     ).otherwise(F.array(F.array_join(w, " ")))
@@ -69,16 +77,14 @@ def shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def band_signatures(
-    sh: DataFrame, n_hashes: int = N_HASHES, band_rows: int = BAND_ROWS
-) -> DataFrame:
+def band_signatures(sh: DataFrame) -> DataFrame:
     """(doc_id, band, band_sig) straight from the shingle frame — the
     FUSED form of ``lsh_band_signatures(minhash_signatures(sh))``.
 
-    The composed form exploded every shingle ``n_hashes`` ways and
+    The composed form exploded every shingle ``N_HASHES`` ways and
     shuffled the exploded frame twice ((doc, seed) min, then (doc,
-    band) fold).  All ``n_hashes`` minima are plain aggregates of the
-    SAME rows, so one groupBy(doc_id) with ``n_hashes`` min columns
+    band) fold).  All ``N_HASHES`` minima are plain aggregates of the
+    SAME rows, so one groupBy(doc_id) with ``N_HASHES`` min columns
     computes them with map-side partial aggregation — one shuffle of
     one row per doc — and the band fold becomes a constant-width md5
     over adjacent min columns (equal to the composed fold because
@@ -90,10 +96,10 @@ def band_signatures(
             F.min(
                 F.md5(F.concat(F.lit(f"{s}|"), F.col("shingle")))
             ).alias(f"__mh{s}")
-            for s in range(n_hashes)
+            for s in range(N_HASHES)
         ]
     )
-    n_bands = -(-n_hashes // band_rows)
+    n_bands = N_HASHES // BAND_ROWS
     bands_arr = F.array(
         *[
             F.struct(
@@ -103,10 +109,7 @@ def band_signatures(
                         ",",
                         *[
                             F.col(f"__mh{s}")
-                            for s in range(
-                                b * band_rows,
-                                min((b + 1) * band_rows, n_hashes),
-                            )
+                            for s in range(b * BAND_ROWS, (b + 1) * BAND_ROWS)
                         ],
                     )
                 ).alias("band_sig"),
@@ -119,12 +122,7 @@ def band_signatures(
     )
 
 
-def minhash_lsh_pairs(
-    documents: DataFrame,
-    n: int = 3,
-    n_hashes: int = N_HASHES,
-    band_rows: int = BAND_ROWS,
-) -> DataFrame:
+def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
     """Candidate near-dup pairs (shared ≥1 LSH band) verified with true
     shingle-set Jaccard.  Output: (doc_a, doc_b, shared_bands, jaccard).
 
@@ -139,8 +137,8 @@ def minhash_lsh_pairs(
     # shingles feed four consumers (signatures, per-doc counts, and both
     # sides of the verify join): one scratch-parquet boundary instead of
     # four full recomputes — and instead of a corpus-scale .cache()
-    sh = stage_boundary(shingles(spread(documents), n), "minhash_shingles")
-    sigs = band_signatures(sh, n_hashes, band_rows)
+    sh = stage_boundary(shingles(spread(documents)), "minhash_shingles")
+    sigs = band_signatures(sh)
     a, b = sigs.alias("a"), sigs.alias("b")
     cand = stage_boundary(
         a.join(
@@ -184,12 +182,8 @@ def minhash_lsh_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    documents: DataFrame,
-    threshold: float = 0.5,
-    bucket_col: str = "lang",
-) -> DataFrame:
-    """Word-set Jaccard over pairs co-bucketed by ``bucket_col`` AND a
+def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Word-set Jaccard over pairs co-bucketed by ``lang`` AND a
     token-count band — the join key is (bucket, size_band), so the pair
     space is bounded per bucket, not quadratic in the corpus.
 
@@ -222,7 +216,7 @@ def ngram_jaccard_pairs(
     # banded-join engine for arbitrary vocabularies.
     toks_e = documents.select(
         "doc_id",
-        F.col(bucket_col).alias("bucket"),
+        F.col("lang").alias("bucket"),
         F.explode(tokens_col(F.col("text"))).alias("token"),
     )
     vocab = _small_universe(toks_e)
@@ -241,7 +235,7 @@ def ngram_jaccard_pairs(
 
     toks = documents.select(
         "doc_id",
-        F.col(bucket_col).alias("bucket"),
+        F.col("lang").alias("bucket"),
         F.array_distinct(tokens_col(F.col("text"))).alias("toks"),
     )
     toks = toks.withColumn("n_toks", F.size("toks"))
@@ -354,7 +348,7 @@ def jaccard_verify_pairs(documents: DataFrame, pairs: DataFrame) -> DataFrame:
 HIGH_NIBBLES = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def simhash(documents: DataFrame, bits: int = 32) -> DataFrame:
+def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """32-bit SimHash: bit j of a token's hash = high bit of hex nibble j
     of md5(token) (cross-engine reproducible); document bit j = majority
     vote (±1 per token, with multiplicity).
@@ -395,7 +389,9 @@ def simhash(documents: DataFrame, bits: int = 32) -> DataFrame:
     return documents.select("doc_id", value.alias("simhash"))
 
 
-def simhash_pairs(documents: DataFrame, bits: int = 32, bands: int = 4) -> DataFrame:
+def simhash_pairs(
+    documents: DataFrame, bits: int = SIMHASH_BITS, bands: int = SIMHASH_BANDS
+) -> DataFrame:
     """Hamming-LSH over SimHash: split the hash into ``bands`` bit-slices;
     docs sharing any slice are candidates (≤ bits/bands differing bits ⇒
     guaranteed candidate).  Bucket-join, never cross join; output the
@@ -505,16 +501,16 @@ def simhash_pairs(documents: DataFrame, bits: int = 32, bands: int = 4) -> DataF
     return cross.unionByName(same)
 
 
-def simhash_pairs_oracle_sql(bits: int = 32, bands: int = 4) -> str:
-    slice_bits = bits // bands
+def simhash_pairs_oracle_sql() -> str:
+    slice_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << slice_bits) - 1
     hamming = "bit_count(xor(a.simhash, b.simhash))::INT"
     return f"""
-        WITH sh AS ({simhash_oracle_sql(bits)}),
+        WITH sh AS ({simhash_oracle_sql()}),
         sliced AS (
           SELECT doc_id, simhash, band,
                  (simhash >> (band * {slice_bits})) & {mask} AS sig
-          FROM sh, (SELECT unnest(generate_series(0, {bands - 1})) AS band)),
+          FROM sh, (SELECT unnest(generate_series(0, {SIMHASH_BANDS - 1})) AS band)),
         pairs AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
                  ({hamming}) AS hamming
@@ -524,11 +520,11 @@ def simhash_pairs_oracle_sql(bits: int = 32, bands: int = 4) -> str:
     """
 
 
-def simhash_oracle_sql(bits: int = 32) -> str:
+def simhash_oracle_sql() -> str:
     """DuckDB SQL computing the identical SimHash (shared spec)."""
     nibbles = ",".join(f"'{c}'" for c in HIGH_NIBBLES)
     terms = []
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         vote = (
             "list_sum(list_transform(string_split(text,' '), "
             f"t -> CASE WHEN substr(md5(t),{j + 1},1) IN ({nibbles}) "
@@ -540,14 +536,12 @@ def simhash_oracle_sql(bits: int = 32) -> str:
     )
 
 
-def winnow_fingerprints(
-    documents: DataFrame, k: int = 5, w: int = 4, text_col: str = "text"
-) -> DataFrame:
+def winnow_fingerprints(documents: DataFrame) -> DataFrame:
     """MOSS-style winnowing (Schleimer et al. 2003): hash every word
-    ``k``-gram (md5 — the cross-engine convention of this module) and
-    keep the MINIMUM hash of each sliding window of ``w`` consecutive
-    gram hashes.  The selected set is sparse (~2/(w+1) of the grams)
-    yet GUARANTEES any shared run of ``w + k - 1`` tokens contributes
+    ``k``-gram (k = 5; md5 — the cross-engine convention of this module)
+    and keep the MINIMUM hash of each sliding window of ``w`` = 4
+    consecutive gram hashes.  The selected set is sparse (~2/(w+1) of
+    the grams) yet GUARANTEES any shared run of ``w + k - 1`` tokens contributes
     at least one shared fingerprint — the positional robustness
     plain n-gram sampling lacks.
 
@@ -559,12 +553,13 @@ def winnow_fingerprints(
     spread across the cores it is seconds).  Docs shorter than ``k``
     words yield an empty set; docs with fewer than ``w`` grams yield
     their single minimum."""
+    k, w = 5, 4
     documents = spread(documents)
     # the words array is materialized as a column BEFORE the gram
     # transform: codegen cannot CSE across HOF lambda boundaries, so an
     # inline `split` reference re-ran the split for every gram slice
     # (the _shingle_fps lesson)
-    worded = documents.withColumn("__w_words", F.split(F.col(text_col), " "))
+    worded = documents.withColumn("__w_words", F.split(F.col("text"), " "))
     words = F.col("__w_words")
     n_g = F.size(words) - k + 1
     grams_expr = F.when(F.size(words) < k, F.array().cast("array<string>")).otherwise(
@@ -593,20 +588,13 @@ def winnow_fingerprints(
     return staged.select("doc_id", fps.alias("fingerprints"))
 
 
-def winnow_pairs(
-    documents: DataFrame,
-    k: int = 5,
-    w: int = 4,
-    min_shared: int = 2,
-    max_df: int = 100,
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_pairs(documents: DataFrame) -> DataFrame:
     """Near-dup pairs by shared winnowing fingerprints: explode the
-    sets, drop fingerprints present in more than ``max_df`` documents
+    sets, drop fingerprints present in more than 100 documents
     (a boilerplate phrase shared corpus-wide would otherwise build a
     quadratic candidate set — the standard document-frequency cap),
     self-join on the 16-byte fingerprint, and keep pairs sharing at
-    least ``min_shared`` distinct fingerprints.  One shuffle on the
+    least 2 distinct fingerprints.  One shuffle on the
     fingerprint key; pair work is candidate-bounded exactly like the
     MinHash/SimHash families in this module."""
     # explode_OUTER, not explode: plain explode lets the optimizer
@@ -617,12 +605,12 @@ def winnow_pairs(
     # explicit IS NOT NULL on the OUTPUT column cannot be substituted
     # downward.
     fp = (
-        winnow_fingerprints(documents, k=k, w=w, text_col=text_col)
+        winnow_fingerprints(documents)
         .select("doc_id", F.explode_outer("fingerprints").alias("fp"))
         .where(F.col("fp").isNotNull())
     )
     keep = fp.groupBy("fp").agg(F.count("*").alias("df")).filter(
-        F.col("df") <= max_df
+        F.col("df") <= 100
     )
     fp = fp.join(keep.select("fp"), "fp")
     a, b = fp.alias("a"), fp.alias("b")
@@ -634,13 +622,11 @@ def winnow_pairs(
             F.col("b.doc_id").alias("doc_b"),
         )
         .agg(F.count("*").cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 2)
     )
 
 
-def dedup_substrings(
-    documents: DataFrame, k: int = 20, text_col: str = "text"
-) -> DataFrame:
+def dedup_substrings(documents: DataFrame, k: int = 20) -> DataFrame:
     """Exact-SUBSTRING dedup at ``k``-token grain (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better"): every
     ``k``-token window that occurs more than once in the corpus keeps
@@ -664,7 +650,7 @@ def dedup_substrings(
     # words materialized as a column first — an inline split reference
     # inside the gram lambda re-ran the split per gram (no CSE across
     # HOF lambda boundaries; the _shingle_fps lesson)
-    worded = documents.withColumn("__words", F.split(F.col(text_col), " "))
+    worded = documents.withColumn("__words", F.split(F.col("text"), " "))
     words = F.col("__words")
     n_g = F.size(words) - k + 1
     grams_expr = F.when(
@@ -792,9 +778,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame, max_rounds: int = 30
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components of the near-duplicate graph via alternating
     large-star / small-star contraction (Kiveris et al. 2014,
     "Connected Components in MapReduce and Beyond" — the algorithm
@@ -833,7 +817,7 @@ def connected_components(
     )
     edges = edges.localCheckpoint()
     n_prev, h_prev = _cc_checksum(edges)
-    for _ in range(max_rounds):
+    for _ in range(CC_MAX_ROUNDS):
         if n_prev == 0:
             break
         edges = _small_star(_large_star(edges))
@@ -844,7 +828,7 @@ def connected_components(
         n_prev, h_prev = n_now, h_now
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
+            f"connected_components did not converge in {CC_MAX_ROUNDS} rounds"
         )
     # fixed point = star graphs: every edge points (member → root).
     members = edges.select(
@@ -856,11 +840,7 @@ def connected_components(
     return members.union(roots)
 
 
-def dup_clusters(
-    documents: DataFrame,
-    pairs: DataFrame,
-    max_rounds: int = 30,
-) -> DataFrame:
+def dup_clusters(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     """Cluster table over the whole corpus: (doc_id, cluster_id,
     cluster_size, is_canonical).  Docs in no near-dup pair are
     singletons (cluster_id = doc_id); the canonical member of every
@@ -871,7 +851,7 @@ def dup_clusters(
     clusters only) component table, plus a cluster-size groupBy; the
     iterative work happens in :func:`connected_components` over the
     pair graph, never over the corpus."""
-    cc = connected_components(pairs, max_rounds=max_rounds)
+    cc = connected_components(pairs)
     sizes = cc.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     labelled = cc.join(sizes, "cluster_id")
     return (
@@ -888,29 +868,25 @@ def dup_clusters(
     )
 
 
-def _small_universe(
-    toks: DataFrame, token_col: str = "token", cap: int = 61
-) -> list[str] | None:
-    """The sorted global token universe IF it fits ``cap`` values, else
+def _small_universe(toks: DataFrame) -> list[str] | None:
+    """The sorted global ``token`` universe IF it fits 61 values, else
     None.  One distinct probe with an early-exit limit — the probe can
-    prove 'large' after cap+1 distinct values without aggregating the
-    full vocabulary to the driver; 'small' is exact.  cap ≤ 61 keeps
+    prove 'large' after 62 distinct values without aggregating the
+    full vocabulary to the driver; 'small' is exact.  61 values keep
     every set representable as one signed-long bitmask."""
     rows = (
-        toks.select(token_col)
-        .filter(F.col(token_col).isNotNull())
+        toks.select("token")
+        .filter(F.col("token").isNotNull())
         .distinct()
-        .limit(cap + 1)
+        .limit(62)
         .collect()
     )
-    if len(rows) > cap:
+    if len(rows) > 61:
         return None
     return sorted(r[0] for r in rows)
 
 
-def _bitset_segment_masks(
-    threshold: float, v: int, max_segments: int = 16
-) -> list[int] | None:
+def _bitset_segment_masks(threshold: float, v: int) -> list[int] | None:
     """PartEnum-style universe partition for the bitset path (Arasu,
     Ganti & Kaushik, VLDB 2006): jaccard ≥ t bounds the symmetric
     difference by d = floor((1−t)·|union|) ≤ floor((1−t)·v), and by
@@ -918,7 +894,7 @@ def _bitset_segment_masks(
     of d+1 universe segments — so segment-content equality is a
     complete (no-false-negative) candidate key.  Returns the d+1
     segment bitmasks, or None when the threshold needs more than
-    ``max_segments`` segments (low thresholds: the per-segment
+    16 segments (low thresholds: the per-segment
     agreement probability stops being selective and the generic
     prefix-filter path wins)."""
     import math
@@ -929,7 +905,7 @@ def _bitset_segment_masks(
     # is always safe, a missing one loses pairs)
     d = int(math.floor((1.0 - threshold) * v + 1e-9))
     n_seg = d + 1
-    if n_seg > min(v, max_segments):
+    if n_seg > min(v, 16):
         return None
     bounds = [round(i * v / n_seg) for i in range(n_seg + 1)]
     masks = []
@@ -1078,9 +1054,7 @@ def _bitset_doc_pairs(
     return cross.unionByName(same)
 
 
-def allpairs_jaccard(
-    documents: DataFrame, threshold: float = 0.9, text_col: str = "text"
-) -> DataFrame:
+def allpairs_jaccard(documents: DataFrame, threshold: float = 0.9) -> DataFrame:
     """EXACT all-pairs Jaccard similarity join via prefix filtering
     (Bayardo, Ma & Srikant 2007, "Scaling Up All Pairs Similarity
     Search") — the deterministic complement to the LSH families: no
@@ -1124,7 +1098,7 @@ def allpairs_jaccard(
         "doc_id",
         F.explode(
             F.array_distinct(
-                F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+                F.filter(F.split(F.col("text"), " "), lambda t: t != "")
             )
         ).alias("token"),
     )
@@ -1270,27 +1244,18 @@ def allpairs_from_tokens(
     )
 
 
-def build_minhash_index(
-    documents: DataFrame,
-    n: int = 3,
-    n_hashes: int = N_HASHES,
-    band_rows: int = BAND_ROWS,
-) -> DataFrame:
+def build_minhash_index(documents: DataFrame) -> DataFrame:
     """(doc_id, band, band_sig): the MATERIALIZABLE LSH index of a
     corpus — the asset a production pipeline builds ONCE over history
     and persists (e.g. through the snapshot layer), so that gating
     each incoming batch never touches history text again.  Pure
     per-doc function (md5 minhashes, sorted band fold) — identical
     whether built over the whole corpus or per partition/batch."""
-    return band_signatures(shingles(spread(documents), n), n_hashes, band_rows)
+    return band_signatures(shingles(spread(documents)))
 
 
 def incremental_minhash_gate(
-    new_docs: DataFrame,
-    history_index: DataFrame,
-    n: int = 3,
-    n_hashes: int = N_HASHES,
-    band_rows: int = BAND_ROWS,
+    new_docs: DataFrame, history_index: DataFrame
 ) -> DataFrame:
     """Near-dup gate for an INCREMENTAL batch: which new documents
     collide (share ≥1 LSH band) with the already-ingested corpus,
@@ -1303,7 +1268,7 @@ def incremental_minhash_gate(
     Output per new doc: (doc_id, n_hit_docs — distinct history docs
     sharing a band, first_hit_doc — smallest such id, NULL when
     novel, is_novel)."""
-    new_sigs = build_minhash_index(new_docs, n, n_hashes, band_rows)
+    new_sigs = build_minhash_index(new_docs)
     hist = history_index.select(
         F.col("doc_id").alias("_hist_doc"), "band", "band_sig"
     )
@@ -1329,13 +1294,7 @@ def incremental_minhash_gate(
     )
 
 
-def lsh_recall(
-    documents: DataFrame,
-    threshold: float = 0.7,
-    n: int = 3,
-    n_hashes: int = N_HASHES,
-    band_rows: int = BAND_ROWS,
-) -> DataFrame:
+def lsh_recall(documents: DataFrame, threshold: float = 0.7) -> DataFrame:
     """MinHash-LSH candidate quality, MEASURED against exact truth —
     not estimated from the (1-(1-s^r)^b) curve: the truth side is the
     prefix-filtered EXACT all-pairs join over the same shingle sets
@@ -1352,11 +1311,11 @@ def lsh_recall(
     recall, candidate_precision) — recall is the fraction of true
     pairs the bands caught; candidate_precision the fraction of
     candidates that verify (1 − wasted verification work)."""
-    sh = stage_boundary(shingles(spread(documents), n), "lshrec_sh")
+    sh = stage_boundary(shingles(spread(documents)), "lshrec_sh")
     truth = allpairs_from_tokens(
         sh.select("doc_id", F.col("shingle").alias("token")), threshold
     ).select("doc_a", "doc_b")
-    sigs = band_signatures(sh, n_hashes, band_rows)
+    sigs = band_signatures(sh)
     a, b = sigs.alias("a"), sigs.alias("b")
     cand = (
         a.join(

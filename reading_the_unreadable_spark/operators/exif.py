@@ -266,7 +266,7 @@ EXIF_SCHEMA = (
 )
 
 
-def exif_features(files: DataFrame, payload_col: str = "payload") -> DataFrame:
+def exif_features(files: DataFrame) -> DataFrame:
     """(doc_id, payload binary) → one typed EXIF row per image via
     ``mapInPandas`` (Arrow batches; the codec-family scale shape —
     payloads never leave the executor).  Missing EXIF → NULL fields;
@@ -275,7 +275,7 @@ def exif_features(files: DataFrame, payload_col: str = "payload") -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 base = {
                     "doc_id": doc_id, "make": None, "model": None,
                     "orientation": None, "datetime": None,

@@ -455,9 +455,9 @@ def g3_decode(data: bytes, width: int, n_rows: int, two_d: bool = False) -> byte
     return _paint_rows(all_trans, width)
 
 
-def g3_encode(page, two_d: bool = False, k: int = 4) -> bytes:
+def g3_encode(page, two_d: bool = False) -> bytes:
     """Bilevel raster (truthy = BLACK) → T.4 Group 3 stream.  With
-    ``two_d`` every ``k``-th row is 1-D coded and the rows between are
+    ``two_d`` every 4th row is 1-D coded and the rows between are
     2-D coded against their predecessor (the fax K-factor, error
     resilience on real lines); ends with RTC (six EOLs)."""
     import numpy as np
@@ -471,7 +471,7 @@ def g3_encode(page, two_d: bool = False, k: int = 4) -> bytes:
         if not two_d:
             bits.append(_EOL)
             bits.extend(_mh_row_bits(cur, w))
-        elif y % k == 0:
+        elif y % 4 == 0:
             bits.append(_EOL + "1")
             bits.extend(_mh_row_bits(cur, w))
         else:

@@ -18,19 +18,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+DAMPING = 0.85
+ITERS = 3
+NDP = 9  # rounding of every per-node rank, each iteration
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iters: int = 3,
-    ndp: int = 9,
-) -> DataFrame:
-    """PageRank over (src, dst) edges, fixed ``iters`` power steps.
+
+def pagerank(edges: DataFrame) -> DataFrame:
+    """PageRank over (src, dst) edges, fixed ``ITERS`` power steps.
 
     Per iteration: contributions = edges ⋈ ranks on src (each node's
     rank split over its out-degree), one groupBy(dst) sum, dangling
     mass (nodes with no out-links) redistributed uniformly, then
-    ``rank = (1-d)/N + d·(inflow + dangling/N)`` rounded to ``ndp``.
+    ``rank = (1-d)/N + d·(inflow + dangling/N)`` rounded to ``NDP``.
     Shapes: out-degrees are one groupBy(src); each step shuffles rank
     mass once on the node id; the dangling mass is a single-row
     aggregate.  Plans are lineage-cut per step (an iterative plan left
@@ -50,9 +49,9 @@ def pagerank(
     if n == 0:
         raise ValueError("pagerank over an empty edge set")
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    d = float(damping)
-    ranks = nodes.select("node", F.lit(round(1.0 / n, ndp)).alias("rank"))
-    for _ in range(iters):
+    d = DAMPING
+    ranks = nodes.select("node", F.lit(round(1.0 / n, NDP)).alias("rank"))
+    for _ in range(ITERS):
         with_deg = ranks.join(
             out_deg, ranks["node"] == out_deg["src"], "left"
         ).select("node", "rank", "deg")
@@ -77,7 +76,7 @@ def pagerank(
                 "node",
                 F.round(
                     F.lit(base) + d * F.coalesce(F.col("inflow"), F.lit(0.0)),
-                    ndp,
+                    NDP,
                 ).alias("rank"),
             )
             .localCheckpoint()
@@ -170,18 +169,12 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
     )
 
 
-def trustrank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    damping: float = 0.85,
-    iters: int = 3,
-    ndp: int = 9,
-) -> DataFrame:
+def trustrank(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """TrustRank (Gyöngyi et al. 2004): PageRank with the teleport
     vector concentrated on a trusted seed set — the link-spam gate a
     crawl curation pipeline runs next to raw PageRank.  Trust flows
     ONLY out of seeds; a page unreachable from every seed within
-    ``iters`` hops keeps trust 0 and is spam-suspect.
+    ``ITERS`` hops keeps trust 0 and is spam-suspect.
 
     Same fixed-step/rounding discipline as :func:`pagerank` (9-dp
     per-step rounding makes scores engine-replicable; plans lineage-cut
@@ -211,7 +204,7 @@ def trustrank(
         .select(
             "node",
             F.when(
-                F.col("_s").isNotNull(), F.lit(round(1.0 / ns, ndp))
+                F.col("_s").isNotNull(), F.lit(round(1.0 / ns, NDP))
             )
             .otherwise(F.lit(0.0))
             .alias("t"),
@@ -219,9 +212,9 @@ def trustrank(
         .localCheckpoint()
     )
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    d = float(damping)
+    d = DAMPING
     ranks = tv.select("node", F.col("t").alias("rank"))
-    for _ in range(iters):
+    for _ in range(ITERS):
         with_deg = ranks.join(
             out_deg, ranks["node"] == out_deg["src"], "left"
         ).select("node", "rank", "deg")
@@ -247,7 +240,7 @@ def trustrank(
                 F.round(
                     F.lit(coef) * F.col("t")
                     + d * F.coalesce(F.col("inflow"), F.lit(0.0)),
-                    ndp,
+                    NDP,
                 ).alias("rank"),
             )
             .localCheckpoint()

@@ -51,8 +51,8 @@ HTML_ENTITIES = (
     ("&amp;", "&"),
 )
 
-DEFAULT_MIN_TEXT_CHARS = 10
-DEFAULT_MAX_LINK_DENSITY = 0.33
+MIN_TEXT_CHARS = 10
+MAX_LINK_DENSITY = 0.33
 
 
 def _strip_tags_and_entities(c: Column) -> Column:
@@ -76,19 +76,14 @@ def visible_text(c: Column) -> Column:
     return _strip_tags_and_entities(_remove_machinery(c))
 
 
-def strip_html(df: DataFrame, html_col: str = "html") -> DataFrame:
+def strip_html(df: DataFrame) -> DataFrame:
     """(doc_id, html) → (doc_id, text): the visible-text projection."""
     df = spread(df)  # regex-heavy map stage: rebalance under-split scans
 
-    return df.select("doc_id", visible_text(F.col(html_col)).alias("text"))
+    return df.select("doc_id", visible_text(F.col("html")).alias("text"))
 
 
-def html_blocks(
-    df: DataFrame,
-    html_col: str = "html",
-    min_text_chars: int = DEFAULT_MIN_TEXT_CHARS,
-    max_link_density: float = DEFAULT_MAX_LINK_DENSITY,
-) -> DataFrame:
+def html_blocks(df: DataFrame) -> DataFrame:
     """DOM-lite block segmentation + per-block content scoring.
 
     Output: (doc_id, block_idx, text, n_chars, link_chars, link_density,
@@ -98,7 +93,7 @@ def html_blocks(
     Pure map-side work: one posexplode, zero shuffles."""
     df = spread(df)  # regex-heavy map stage: rebalance under-split scans
 
-    cleaned = _remove_machinery(F.col(html_col))
+    cleaned = _remove_machinery(F.col("html"))
     blocks = F.split(cleaned, BLOCK_SPLIT_PATTERN)
     df = df.select("doc_id", F.posexplode(blocks).alias("block_idx", "_raw"))
     # `<a` must be the WHOLE tag name: `<a>` or `<a␣attrs…>` — a bare
@@ -122,23 +117,17 @@ def html_blocks(
     return df.withColumn(
         "is_content",
         (
-            (F.col("n_chars") >= min_text_chars)
-            & (F.col("link_density") <= max_link_density)
+            (F.col("n_chars") >= MIN_TEXT_CHARS)
+            & (F.col("link_density") <= MAX_LINK_DENSITY)
         ).cast("int"),
     )
 
 
-def main_text(
-    df: DataFrame,
-    html_col: str = "html",
-    min_text_chars: int = DEFAULT_MIN_TEXT_CHARS,
-    max_link_density: float = DEFAULT_MAX_LINK_DENSITY,
-    separator: str = "\n\n",
-) -> DataFrame:
+def main_text(df: DataFrame) -> DataFrame:
     """(doc_id, html) → (doc_id, text): content blocks joined in document
-    order — the main-content extraction the north rule names.  One
-    groupBy on doc_id (the only shuffle); block order restored with
-    sort_array over (block_idx, text) structs.
+    order, separated by a blank line — the main-content extraction the
+    north rule names.  One groupBy on doc_id (the only shuffle); block
+    order restored with sort_array over (block_idx, text) structs.
 
     Every input document yields exactly one output row — a page whose
     blocks are all boilerplate yields an EMPTY string, not a missing
@@ -146,7 +135,7 @@ def main_text(
     produces, so the aggregate sees only content blocks while the
     groupBy sees every doc)."""
     # html_blocks spreads the under-split scan itself
-    blocks = html_blocks(df, html_col, min_text_chars, max_link_density)
+    blocks = html_blocks(df)
     content = F.when(
         F.col("is_content") == 1, F.struct("block_idx", "text")
     )
@@ -154,7 +143,7 @@ def main_text(
         F.sort_array(F.collect_list(content)), lambda s: s["text"]
     )
     return blocks.groupBy("doc_id").agg(
-        F.array_join(ordered, separator).alias("text")
+        F.array_join(ordered, "\n\n").alias("text")
     )
 
 
@@ -192,7 +181,7 @@ LD_SCHEMA = (
 )
 
 
-def page_metadata(df: DataFrame, html_col: str = "html") -> DataFrame:
+def page_metadata(df: DataFrame) -> DataFrame:
     """Structured page metadata: ``<title>``, OpenGraph/named ``<meta>``
     tags, the canonical link, and schema.org JSON-LD article fields.
 
@@ -203,7 +192,7 @@ def page_metadata(df: DataFrame, html_col: str = "html") -> DataFrame:
     and missing tags surface as NULLs, never errors."""
     df = spread(df)  # regex-heavy map stage: rebalance under-split scans
 
-    html = F.col(html_col)
+    html = F.col("html")
     title = F.regexp_extract(html, "(?s)<title>(.*?)</title>", 1)
     ld_raw = F.regexp_extract(
         html, "(?s)<script type=\"application/ld\\+json\">(.*?)</script>", 1
@@ -224,4 +213,4 @@ def page_metadata(df: DataFrame, html_col: str = "html") -> DataFrame:
             "ld_author": ld["author"]["name"],
             "ld_word_count": ld["wordCount"],
         }
-    ).drop(html_col)
+    ).drop("html")

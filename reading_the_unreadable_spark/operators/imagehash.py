@@ -58,16 +58,14 @@ def dhash64(arr: np.ndarray) -> int:
     return int(bits @ (np.uint64(1) << np.arange(64, dtype=np.uint64)))
 
 
-def image_dhash(
-    media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """(id, payload binary) → (id, dhash bigint, decode_err).  One
+def image_dhash(media: DataFrame) -> DataFrame:
+    """(doc_id, payload binary) → (id, dhash bigint, decode_err).  One
     mapInPandas pass; corrupt payloads quarantine (null hash + err)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, hashes, errs = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
+            for i, payload in zip(pdf["doc_id"], pdf["payload"]):
                 ids.append(int(i))
                 try:
                     h = dhash64(decode_image(bytes(payload)))
@@ -83,27 +81,18 @@ def image_dhash(
                  "decode_err": pd.Series(errs, dtype=object)}
             )
 
-    return media.select(
-        F.col(id_col).alias(id_col), F.col(payload_col).alias(payload_col)
-    ).mapInPandas(fn, schema=DHASH_SCHEMA)
+    return media.select("doc_id", "payload").mapInPandas(fn, schema=DHASH_SCHEMA)
 
 
-def dhash_pairs(
-    hashes: DataFrame,
-    max_hamming: int = 3,
-    n_bands: int | None = None,
-    max_band_df: int = 2000,
-) -> DataFrame:
+def dhash_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(id, dhash) → (doc_a, doc_b, hamming) for all pairs within
-    ``max_hamming``.  With the default ``n_bands = max_hamming + 1``
-    the slice join is exhaustive (pigeonhole), so the result is the
-    EXACT all-pairs set — certified by the driver row's brute-force
-    oracle.  ``max_band_df`` caps degenerate slices (flat images) the
-    way the MinHash band join caps hot buckets; capped slices are a
-    recall boundary the caller opts into, default far above any real
-    fixture."""
-    if n_bands is None:
-        n_bands = max_hamming + 1
+    ``max_hamming``.  With ``n_bands = max_hamming + 1`` slices the
+    join is exhaustive (pigeonhole), so the result is the EXACT
+    all-pairs set — certified by the driver row's brute-force oracle.
+    A slice shared by more than 2 000 hashes (flat images) is dropped,
+    the way the MinHash band join caps hot buckets; that recall
+    boundary sits far above any real fixture."""
+    n_bands = max_hamming + 1
     if 64 % n_bands != 0:
         raise ValueError(f"n_bands must divide 64, got {n_bands}")
     width = 64 // n_bands
@@ -129,7 +118,7 @@ def dhash_pairs(
     # degenerate-slice cap (document frequency per (band, sig))
     w = Window.partitionBy("band", "sig")
     bands = bands.withColumn("df", F.count("*").over(w)).filter(
-        F.col("df") <= max_band_df
+        F.col("df") <= 2000
     )
     a = bands.alias("a")
     b = bands.alias("b")
@@ -224,10 +213,8 @@ def ahash64(arr: np.ndarray) -> int:
     return int(bits @ (np.uint64(1) << np.arange(64, dtype=np.uint64)))
 
 
-def image_ahash(
-    media: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """(id, payload binary) → (id, ahash bigint, decode_err): average
+def image_ahash(media: DataFrame) -> DataFrame:
+    """(doc_id, payload binary) → (id, ahash bigint, decode_err): average
     hash over the same one-pass mapInPandas shape — the member of the
     perceptual family whose bits an oracle can replay in EXACT integer
     arithmetic (see :func:`ahash64`)."""
@@ -235,7 +222,7 @@ def image_ahash(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, hashes, errs = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
+            for i, payload in zip(pdf["doc_id"], pdf["payload"]):
                 ids.append(int(i))
                 try:
                     h = ahash64(decode_image(bytes(payload)))

@@ -72,14 +72,14 @@ def combine_segments(segments: DataFrame) -> DataFrame:
     )
 
 
-def reclassify_long_titles(boxes: DataFrame, token_threshold: int = 50) -> DataFrame:
+def reclassify_long_titles(boxes: DataFrame) -> DataFrame:
     """Post-OCR title→text reclassification: a 'title' whose completion
-    used more than ``token_threshold`` tokens is body text (reference
+    used more than 50 tokens is body text (reference
     contract: ``pipeline_stages.py:394-398``)."""
     return boxes.withColumn(
         "class",
         F.when(
-            (F.col("class") == "title") & (F.col("completion_tokens") > token_threshold),
+            (F.col("class") == "title") & (F.col("completion_tokens") > 50),
             "text",
         ).otherwise(F.col("class")),
     )

@@ -87,12 +87,12 @@ def latex_to_text(c: Column) -> Column:
     return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
-def latex_strip(documents: DataFrame, text_col: str = "latex") -> DataFrame:
+def latex_strip(documents: DataFrame) -> DataFrame:
     """(doc_id, latex) → (doc_id, text, n_chars_in, n_chars_out,
     reduction): the arXiv cleaning projection plus the size-reduction
     diagnostic curation dashboards track."""
-    src = F.coalesce(F.col(text_col), F.lit(""))
-    txt = latex_to_text(F.col(text_col))
+    src = F.coalesce(F.col("latex"), F.lit(""))
+    txt = latex_to_text(F.col("latex"))
     return documents.select(
         "doc_id",
         txt.alias("text"),

@@ -416,11 +416,9 @@ def vertical_overlap_pct(y1a, y2a, y1b, y2b):
     return F.when(overlap <= 0, F.lit(0.0)).otherwise(overlap / min_h * 100.0)
 
 
-def merge_overlapping_boxes(
-    boxes: DataFrame, min_overlap_percent: float = 50.0
-) -> DataFrame:
+def merge_overlapping_boxes(boxes: DataFrame) -> DataFrame:
     """G4 — merge consecutive-in-reading-order boxes within (doc, column)
-    whose vertical overlap is ≥ ``min_overlap_percent`` of the smaller
+    whose vertical overlap is ≥ 50% of the smaller
     box (reference ``bbox_functions.py:459-505``, legacy pre-text merge).
 
     The reference's greedy pop-and-scan loop only ever merges PAIRS: a
@@ -443,7 +441,7 @@ def merge_overlapping_boxes(
                 F.col("y1"),
                 F.col("y2"),
             )
-            >= F.lit(min_overlap_percent)
+            >= F.lit(50.0)
         )
     )
     df = boxes.withColumn("_edge", F.coalesce(edge, F.lit(False)))
@@ -481,7 +479,7 @@ def merge_overlapping_boxes(
     )
 
 
-def fill_column_gaps(df: DataFrame, min_gap: float = 10.0) -> DataFrame:
+def fill_column_gaps(df: DataFrame) -> DataFrame:
     """G6 — synthesize empty boxes at column heads/tails so every column
     spans the page's content area (reference behavioral contract:
     ``bbox_functions.py:682-786``, eligibility per ``:696-698``: pages
@@ -498,8 +496,8 @@ def fill_column_gaps(df: DataFrame, min_gap: float = 10.0) -> DataFrame:
     chain step): this standalone operator runs AFTER layout on ordered
     boxes and spans columns to their box extents; the inline step runs at
     the reference's chain position (pre-merge) where gap boxes can still
-    merge into column text.  Both use the same ``>= min_gap``/min-height
-    10px boundary."""
+    merge into column text.  Both use the same ``>= MIN_BOX_HEIGHT``
+    (10px) boundary."""
     w_doc = Window.partitionBy("doc_id")
     w_col = Window.partitionBy("doc_id", "column_number")
     eligible = (F.max("column_number").over(w_doc) > 1) & (
@@ -538,13 +536,13 @@ def fill_column_gaps(df: DataFrame, min_gap: float = 10.0) -> DataFrame:
         F.col("_eligible")
         & F.col("_first_in_col")
         & (F.col("column_number") > 0)
-        & (F.col("_col_y1") - F.col("_doc_y1") >= min_gap)
+        & (F.col("_col_y1") - F.col("_doc_y1") >= MIN_BOX_HEIGHT)
     ).select(*base(F.col("_doc_y1"), F.col("_col_y1")))
     tail_rows = df.filter(
         F.col("_eligible")
         & F.col("_first_in_col")
         & (F.col("column_number") > 0)
-        & (F.col("_doc_y2") - F.col("_col_y2") >= min_gap)
+        & (F.col("_doc_y2") - F.col("_col_y2") >= MIN_BOX_HEIGHT)
     ).select(*base(F.col("_col_y2"), F.col("_doc_y2")))
     keep = [c for c in df.columns if not c.startswith("_")]
     return df.select(*keep).unionByName(head_rows).unionByName(tail_rows)

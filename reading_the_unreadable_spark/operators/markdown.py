@@ -106,14 +106,14 @@ def markdown_to_text(c: Column) -> Column:
     return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
-def markdown_extract(documents: DataFrame, text_col: str = "markdown") -> DataFrame:
+def markdown_extract(documents: DataFrame) -> DataFrame:
     """(doc_id, markdown) → (doc_id, text, n_chars_in, n_chars_out,
     reduction): the README/docs cleaning projection plus the
     size-reduction diagnostic, the same frame contract as
     :func:`operators.wikitext.wiki_extract` and
     :func:`operators.latex.latex_strip`."""
-    src = F.coalesce(F.col(text_col), F.lit(""))
-    txt = markdown_to_text(F.col(text_col))
+    src = F.coalesce(F.col("markdown"), F.lit(""))
+    txt = markdown_to_text(F.col("markdown"))
     return documents.select(
         "doc_id",
         txt.alias("text"),

@@ -75,42 +75,22 @@ def _coverage_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield _coverage_frame(buf)
 
 
-def page_coverage(boxes: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """boxes(doc_id, x1..y2) → per-page coverage/overlap metrics."""
+def page_coverage(boxes: DataFrame) -> DataFrame:
+    """boxes(doc_id, x1..y2) → per-page coverage/overlap metrics.  A
+    page's boxes must sit in one partition, as the explode of its docs
+    row leaves them; repartition on doc_id first otherwise."""
     df = boxes.select("doc_id", "x1", "y1", "x2", "y2")
-    if num_partitions:
-        df = df.repartition(num_partitions, "doc_id")
     return df.sortWithinPartitions("doc_id").mapInPandas(
         _coverage_stream, schema=COVERAGE_SCHEMA
     )
 
 
-def cer(predictions: DataFrame, ground_truth: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Character error rate per document: levenshtein(gt, pred)/len(gt)
-    over normalized lowercase text; native expressions only."""
-    norm = lambda c: F.lower(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
-    joined = predictions.alias("p").join(
-        ground_truth.alias("g"), key, "inner"
-    )
-    gt = norm(F.col("g.text"))
-    pred = norm(F.col("p.text"))
-    return joined.select(
-        key,
-        F.round(
-            F.levenshtein(gt, pred).cast("double") / F.length(gt), 6
-        ).alias("cer"),
-        F.length(gt).cast("long").alias("gt_len"),
-    )
-
-
-def chunk_spans(
-    df: DataFrame, text_col: str = "text", words_per_span: int = 50
-) -> DataFrame:
+def chunk_spans(df: DataFrame, words_per_span: int = 50) -> DataFrame:
     """(doc_id, text) → (doc_id, span_idx, text): fixed word-count chunks.
 
     The alignment grain for :func:`cer_spans` when the corpus has no
     natural span structure — pure native expressions, zero shuffle."""
-    w = F.split(F.col(text_col), " ")
+    w = F.split(F.col("text"), " ")
     n_spans = F.ceil(F.size(w) / F.lit(words_per_span)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_spans - F.lit(1)),
@@ -118,12 +98,10 @@ def chunk_spans(
             F.slice(w, i * words_per_span + F.lit(1), F.lit(words_per_span)), " "
         ),
     )
-    return df.select("doc_id", F.posexplode(chunks).alias("span_idx", text_col))
+    return df.select("doc_id", F.posexplode(chunks).alias("span_idx", "text"))
 
 
-def cer_spans(
-    predictions: DataFrame, ground_truth: DataFrame, keys: tuple = ("doc_id", "span_idx")
-) -> DataFrame:
+def cer_spans(predictions: DataFrame, ground_truth: DataFrame) -> DataFrame:
     """Span-grain CER, aggregated to the document: per-span edit
     distances summed over the doc, divided by the summed ground-truth
     length.
@@ -132,9 +110,9 @@ def cer_spans(
     (``result_section.py:240-242``), never per full page — and the scale
     lever: Levenshtein is O(|a|·|b|) per row, so chunking a 10 k-char
     document into k spans divides the DP work by ~k while the join and
-    aggregation stay embarrassingly parallel.  Whole-document CER (the
-    :func:`cer` operator) is quadratic in doc length and dominates any
-    corpus-scale job it appears in.
+    aggregation stay embarrassingly parallel.  Whole-document CER is
+    quadratic in doc length and dominates any corpus-scale job it
+    appears in.
 
     The join is FULL OUTER: a gt span with no prediction row counts as a
     full deletion (distance = its length), and a prediction span with no
@@ -144,12 +122,12 @@ def cer_spans(
     better than one that extracts imperfectly."""
     norm = lambda c: F.lower(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
     joined = ground_truth.alias("g").join(
-        predictions.alias("p"), list(keys), "full_outer"
+        predictions.alias("p"), ["doc_id", "span_idx"], "full_outer"
     )
     gt, pred = norm(F.col("g.text")), norm(F.col("p.text"))
     # a USING-style full-outer join already coalesces the key columns
     per_span = joined.select(
-        F.col(keys[0]).alias("doc_id"),
+        F.col("doc_id"),
         F.when(F.col("p.text").isNull(), F.length(gt))  # deletion
         .when(F.col("g.text").isNull(), F.length(pred))  # insertion
         .otherwise(F.levenshtein(gt, pred))
@@ -173,7 +151,6 @@ def _union_gram_stats(
     predictions: DataFrame,
     ground_truth: DataFrame,
     max_n: int,
-    text_col: str,
     char_level: bool = False,
 ) -> DataFrame:
     """(doc_id, n, match, p_total, r_total) for n = 1..max_n — the
@@ -211,10 +188,10 @@ def _union_gram_stats(
     Docs whose two sides are entirely empty emit no rows; a (doc, n)
     present on one side only emits with the other side's counts 0."""
     p = predictions.select(
-        "doc_id", F.col(text_col).alias("_t"), F.lit(1).alias("_s")
+        "doc_id", F.col("text").alias("_t"), F.lit(1).alias("_s")
     )
     g = ground_truth.select(
-        "doc_id", F.col(text_col).alias("_t"), F.lit(0).alias("_s")
+        "doc_id", F.col("text").alias("_t"), F.lit(0).alias("_s")
     )
     # pinned fan-out, not repartition("doc_id"): this shuffle is
     # byte-SMALL but downstream-CPU-HUGE, and AQE's byte heuristic
@@ -259,12 +236,7 @@ def _union_gram_stats(
     )
 
 
-def bleu(
-    predictions: DataFrame,
-    ground_truth: DataFrame,
-    max_n: int = 4,
-    text_col: str = "text",
-) -> DataFrame:
+def bleu(predictions: DataFrame, ground_truth: DataFrame, max_n: int = 4) -> DataFrame:
     """Per-document BLEU (Papineni et al. 2002) of predictions against
     doc-grain references: modified n-gram precisions for n = 1..max_n
     (clipped matches / candidate totals, all integer-exact), brevity
@@ -288,7 +260,7 @@ def bleu(
     Output: (doc_id, len_pred, len_ref, match_1.., total_1..,
     brevity_penalty, bleu) — counts long, floats rounded 4 dp."""
     ns = range(1, max_n + 1)
-    stats = _union_gram_stats(predictions, ground_truth, max_n, text_col)
+    stats = _union_gram_stats(predictions, ground_truth, max_n)
     pivoted = stats.groupBy("doc_id").agg(
         *[
             F.coalesce(
@@ -336,7 +308,6 @@ def rouge_n(
     predictions: DataFrame,
     ground_truth: DataFrame,
     max_n: int = 2,
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document ROUGE-N (Lin 2004) for n = 1..max_n: clipped
     n-gram precision, RECALL (the summarization-eval headline number —
@@ -349,7 +320,7 @@ def rouge_n(
     rouge_r_n, rouge_f_n) per n — counts long, ratios rounded 4 dp,
     zero denominators score 0."""
     ns = range(1, max_n + 1)
-    stats = _union_gram_stats(predictions, ground_truth, max_n, text_col)
+    stats = _union_gram_stats(predictions, ground_truth, max_n)
     wide = stats.groupBy("doc_id").agg(
         *[
             F.coalesce(
@@ -383,7 +354,6 @@ def chrf(
     ground_truth: DataFrame,
     max_n: int = 6,
     beta: float = 2.0,
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document chrF (Popović 2015): character n-gram F-score for
     n = 1..max_n over whitespace-stripped text — the eval metric of
@@ -402,7 +372,7 @@ def chrf(
     straight groupBy (no pivot — only the per-order SUMS feed the
     score).  Output: (doc_id, chrp, chrr, chrf) rounded 4 dp."""
     stats = _union_gram_stats(
-        predictions, ground_truth, max_n, text_col, char_level=True
+        predictions, ground_truth, max_n, char_level=True
     )
     p = F.when(F.col("p_total") > 0, F.col("match") / F.col("p_total")).otherwise(F.lit(0.0))
     r = F.when(F.col("r_total") > 0, F.col("match") / F.col("r_total")).otherwise(F.lit(0.0))
@@ -423,12 +393,10 @@ def chrf(
     )
 
 
-def wer(
-    predictions: DataFrame, ground_truth: DataFrame, key: str = "doc_id"
-) -> DataFrame:
+def wer(predictions: DataFrame, ground_truth: DataFrame) -> DataFrame:
     """Word error rate per document: word-level levenshtein(gt, pred) /
     |gt words| — the ASR/OCR metric at the word grain next to
-    :func:`cer`'s character grain.
+    :func:`cer_spans`'s character grain.
 
     Native trick: word-level edit distance equals CHARACTER-level edit
     distance after any bijective word→symbol map, so each pair's
@@ -442,7 +410,7 @@ def wer(
     the surrogate floor (~55k distinct words per PAIR — a full order
     above real documents; beyond it the encoding would fold).
 
-    Normalization matches :func:`cer`: lowercase, whitespace runs
+    Normalization matches :func:`cer_spans`: lowercase, whitespace runs
     collapsed to one space.
 
     r06 encode (was: JVM ``array_position`` into the pair vocab — that
@@ -457,9 +425,9 @@ def wer(
     Normalization and word-splitting stay JVM-side (exact parity with
     the previous encode).  Measured at sf1.0: 119 s → ~5 s."""
     norm = lambda c: F.lower(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
-    joined = predictions.alias("p").join(ground_truth.alias("g"), key, "inner")
+    joined = predictions.alias("p").join(ground_truth.alias("g"), "doc_id", "inner")
     j = joined.select(
-        key,
+        "doc_id",
         F.split(norm(F.col("g.text")), " ").alias("__wer_gw"),
         F.split(norm(F.col("p.text")), " ").alias("__wer_pw"),
     )
@@ -494,7 +462,7 @@ def wer(
     enc = j.withColumn("__wer_e", _encode_pair("__wer_gw", "__wer_pw"))
     edits = F.levenshtein(F.col("__wer_e.g"), F.col("__wer_e.p"))
     return enc.select(
-        key,
+        "doc_id",
         F.round(edits.cast("double") / F.size("__wer_gw"), 6).alias("wer"),
         F.size("__wer_gw").cast("long").alias("n_gt_words"),
         edits.cast("long").alias("word_edits"),

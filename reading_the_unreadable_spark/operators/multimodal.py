@@ -576,11 +576,8 @@ def image_features(arr: np.ndarray) -> np.ndarray:
     return np.concatenate([head, hist])
 
 
-def extract_media_features(
-    media: DataFrame, resize_to: tuple[int, int] | None = None
-) -> DataFrame:
-    """mapInPandas decode → (resize) → feature-extract over binary
-    payloads.
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """mapInPandas decode → feature-extract over binary payloads.
 
     Batch shape: one Arrow batch of (media_ref, payload) in, one batch of
     fixed-width float features out — per-executor codec/model state would
@@ -608,8 +605,6 @@ def extract_media_features(
                     heights.append(0)
                     errs.append(f"{type(e).__name__}: {e}"[:200])
                     continue
-                if resize_to is not None:
-                    arr = resize_nearest(arr, *resize_to)
                 feats.append(image_features(arr))
                 widths.append(int(arr.shape[1]))
                 heights.append(int(arr.shape[0]))

@@ -141,14 +141,13 @@ def _encrypt_body_streams(
 def encode_pdf(
     pages: list[list[str]],
     compress: bool = False,
-    start_y: float = 720.0,
-    leading: float = 14.0,
     xref_stream: bool = False,
     use_objstm: bool = False,
     encrypt: str | None = None,
 ) -> bytes:
     """Minimal PDF writer: one content stream per page, each line placed
-    with an absolute ``Tm`` then shown with ``Tj``.  ``compress=True``
+    with an absolute ``Tm`` (from y = 720, 14 pt apart) then shown with
+    ``Tj``.  ``compress=True``
     Flate-encodes the content streams (the common real case) so the
     parser's inflate path is exercised.  ``xref_stream=True`` writes the
     post-2005 layout: a ``/Type /XRef`` cross-reference STREAM instead
@@ -168,11 +167,11 @@ def encode_pdf(
     content_ids: list[int] = []
     for lines in pages:
         ops = [b"BT", b"/F1 12 Tf"]
-        y = start_y
+        y = 720.0
         for line in lines:
             ops.append(f"1 0 0 1 72 {y:g} Tm".encode())
             ops.append(b"(" + _escape_pdf_string(line).encode("latin-1") + b") Tj")
-            y -= leading
+            y -= 14.0
         ops.append(b"ET")
         data = b"\n".join(ops)
         filt = b""
@@ -830,7 +829,7 @@ def decode_pdf(payload: bytes) -> list[list[tuple[float, float, str]]]:
 
 
 # ------------------------------------------------------------ Spark plumbing
-def parse_pdf_spans(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def parse_pdf_spans(df: DataFrame) -> DataFrame:
     """(doc_id, payload binary) → one row per text run with its page and
     text-space position — Arrow-batched mapInPandas, payloads never leave
     the executors."""
@@ -838,7 +837,7 @@ def parse_pdf_spans(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in ("doc_id", "page", "run", "x", "y", "text")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 if payload is None:
                     continue
                 for pg, runs in enumerate(decode_pdf(bytes(payload))):

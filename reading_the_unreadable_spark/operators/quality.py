@@ -42,6 +42,10 @@ C4_BOILERPLATE_MARKERS = ("javascript", "cookie", "lorem ipsum", "privacy policy
 C4_TERMINAL_PUNCT = (".", "!", "?", '"')
 C4_MIN_WORDS_PER_LINE = 5
 C4_MIN_LINES_PER_DOC = 3
+MIX_ALPHA = 0.7  # temperature of the sampling weight share^α
+PACK_SHARD_HEX_CHARS = 1
+TRAIN_FRAC, VAL_FRAC = 0.9, 0.05  # hash-rule split shares; test gets the rest
+BOILER_MIN_DOCS = 3  # dedup_lines: a line in this many docs is boilerplate
 
 
 def _line_ok(line: Column) -> Column:
@@ -55,11 +59,7 @@ def _line_ok(line: Column) -> Column:
     return ends_ok & enough_words & no_marker
 
 
-def c4_line_filters(
-    documents: DataFrame,
-    text_col: str = "text",
-    min_lines: int = C4_MIN_LINES_PER_DOC,
-) -> DataFrame:
+def c4_line_filters(documents: DataFrame) -> DataFrame:
     """C4 §2.2 line rules: lines must end in terminal punctuation, have
     ≥5 words, and contain no boilerplate marker; documents keep their
     surviving lines joined and are flagged `kept` when enough lines
@@ -67,20 +67,19 @@ def c4_line_filters(
     possible exchange is the conditional round-robin rebalance of an
     under-split scan (a no-op on well-split production tables)."""
     documents = spread(documents)
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("text"), "\n")
     kept_lines = F.filter(lines, _line_ok)
     return documents.select(
         "doc_id",
         F.array_join(kept_lines, "\n").alias("text"),
         F.size(kept_lines).alias("n_lines_kept"),
         F.size(lines).alias("n_lines_total"),
-        (F.size(kept_lines) >= min_lines).cast("int").alias("kept"),
+        (F.size(kept_lines) >= C4_MIN_LINES_PER_DOC).cast("int").alias("kept"),
     )
 
 
 def gopher_repetition_signals(
-    documents: DataFrame, text_col: str = "text",
-    passthrough: tuple[str, ...] = (),
+    documents: DataFrame, passthrough: tuple[str, ...] = ()
 ) -> DataFrame:
     """Gopher/MassiveText repetition + shape signals, one row per doc:
 
@@ -94,7 +93,7 @@ def gopher_repetition_signals(
     All native expressions; ratios 6dp-rounded for cross-engine hashes.
     Under-split scans are rebalanced (no-op on well-split tables)."""
     documents = spread(documents)
-    text = F.col(text_col)
+    text = F.col("text")
     lines = F.split(text, "\n")
     paras = F.split(text, "\n\n")
     # whitespace-class tokenization (the Gopher paper's grain): a plain
@@ -131,7 +130,7 @@ def gopher_repetition_signals(
     )
 
 
-def unigram_logprob(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_logprob(documents: DataFrame) -> DataFrame:
     """CCNet-style language-model quality score, unigram grain: train the
     unigram distribution on the corpus itself (one groupBy on word), then
     score every document by its mean token log-probability — low scores
@@ -149,7 +148,7 @@ def unigram_logprob(documents: DataFrame, text_col: str = "text") -> DataFrame:
     documents = spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
 
     words = documents.select(
-        "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("word")
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
     )
     vocab = words.groupBy("word").agg(F.count("*").alias("c"))
     total = vocab.agg(F.sum("c").alias("total"))
@@ -167,7 +166,7 @@ def unigram_logprob(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def bigram_logprob(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_logprob(documents: DataFrame) -> DataFrame:
     """Bigram LM quality score with add-one smoothing — one step closer
     to CCNet's 5-gram KenLM than :func:`unigram_logprob`: documents are
     scored by the mean log of P(w_i | w_{i-1}) = (C(prev,cur)+1) /
@@ -182,7 +181,7 @@ def bigram_logprob(documents: DataFrame, text_col: str = "text") -> DataFrame:
     broadcast.  Docs with fewer than two tokens have no bigrams and no
     output row (contract: score what can be scored)."""
     documents = spread(documents)  # bigram explode: rebalance scans
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     n = F.size(words)
     pairs = F.arrays_zip(
         F.slice(words, 1, n - 1).alias("prev"),
@@ -194,7 +193,7 @@ def bigram_logprob(documents: DataFrame, text_col: str = "text") -> DataFrame:
     big = flat.groupBy("prev", "cur").agg(F.count("*").alias("c_ab"))
     ctx = flat.groupBy("prev").agg(F.count("*").alias("c_a"))
     vocab = documents.select(
-        F.explode(F.split(F.col(text_col), " ")).alias("w")
+        F.explode(F.split(F.col("text"), " ")).alias("w")
     ).agg(F.countDistinct("w").alias("v"))
     doc_big = flat.groupBy("doc_id", "prev", "cur").agg(F.count("*").alias("n"))
     scored = (
@@ -217,9 +216,7 @@ def bigram_logprob(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def kneser_ney_logprob(
-    documents: DataFrame, discount: float = 0.75, text_col: str = "text"
-) -> DataFrame:
+def kneser_ney_logprob(documents: DataFrame) -> DataFrame:
     """Interpolated Kneser-Ney bigram LM score (Kneser & Ney 1995;
     Chen & Goodman 1998) — the smoothing KenLM actually uses, one rung
     above :func:`bigram_logprob`'s add-one:
@@ -227,7 +224,8 @@ def kneser_ney_logprob(
         P(cur|prev) = max(c(prev,cur) - D, 0) / c(prev)
                       + (D · N1+(prev,·) / c(prev)) · N1+(·,cur) / T
 
-    with N1+(prev,·) the distinct-successor count, N1+(·,cur) the
+    with D = 0.75 the absolute discount, N1+(prev,·) the
+    distinct-successor count, N1+(·,cur) the
     distinct-PREDECESSOR count (the continuation probability — 'how
     many contexts does this word complete', the KN insight), and T the
     total number of distinct bigram types.
@@ -248,7 +246,7 @@ def kneser_ney_logprob(
     makes the score engine-exact.  Docs with fewer than two tokens
     have no bigrams and no output row."""
     documents = spread(documents)  # bigram explode: rebalance scans
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     n = F.size(words)
     pairs = F.arrays_zip(
         F.slice(words, 1, n - 1).alias("prev"),
@@ -270,8 +268,8 @@ def kneser_ney_logprob(
     )
     cont = big.groupBy("cur").agg(F.count("*").alias("n1p_rev"))
     types = big.agg(F.count("*").alias("n_types"))
-    p = F.greatest(F.col("c_ab") - discount, F.lit(0.0)) / F.col("c_a") + (
-        discount * F.col("n1p_fwd") / F.col("c_a")
+    p = F.greatest(F.col("c_ab") - 0.75, F.lit(0.0)) / F.col("c_a") + (
+        0.75 * F.col("n1p_fwd") / F.col("c_a")
     ) * (F.col("n1p_rev") / F.col("n_types"))
     scored = (
         doc_big.join(big, ["prev", "cur"])
@@ -288,31 +286,26 @@ def kneser_ney_logprob(
     )
 
 
-def source_mix(
-    documents: DataFrame,
-    source_col: str = "source",
-    alpha: float = 0.7,
-    text_col: str = "text",
-) -> DataFrame:
+def source_mix(documents: DataFrame) -> DataFrame:
     """Training-mixture statistics per source/domain: document and token
     counts, token share, and the standard temperature-scaled sampling
     weight share^α / Σ share^α (α<1 upweights small sources — the
     multilingual/domain-balancing rule).  One groupBy on the source key;
     the normalization constant is a broadcast single row."""
-    per = documents.groupBy(source_col).agg(
+    per = documents.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(F.split(F.col(text_col), " "))).alias("n_tokens"),
+        F.sum(F.size(F.split(F.col("text"), " "))).alias("n_tokens"),
     )
     tot = per.agg(
         F.sum("n_tokens").alias("_tot"),
-        F.sum(F.pow(F.col("n_tokens").cast("double"), F.lit(alpha))).alias("_z"),
+        F.sum(F.pow(F.col("n_tokens").cast("double"), F.lit(MIX_ALPHA))).alias("_z"),
     )
     share = F.col("n_tokens").cast("double") / F.col("_tot")
-    weight = F.pow(F.col("n_tokens").cast("double"), F.lit(alpha)) / F.col("_z")
+    weight = F.pow(F.col("n_tokens").cast("double"), F.lit(MIX_ALPHA)) / F.col("_z")
     return (
         per.join(F.broadcast(tot))
         .select(
-            source_col,
+            "source",
             "n_docs",
             "n_tokens",
             F.round(share, 6).alias("token_share"),
@@ -333,16 +326,13 @@ GOPHER_THRESHOLDS = {
 }
 
 
-def gopher_filter(
-    documents: DataFrame, text_col: str = "text",
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
+def gopher_filter(documents: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
     """The Gopher document-level keep/drop decision over
     :func:`gopher_repetition_signals`: a doc survives iff every signal is
     inside its threshold.  Same zero-shuffle map stage, one extra
     conjunction column."""
     t = GOPHER_THRESHOLDS
-    s = gopher_repetition_signals(documents, text_col, passthrough)
+    s = gopher_repetition_signals(documents, passthrough)
     kept = (
         (F.col("dup_line_frac") <= t["max_dup_line_frac"])
         & (F.col("dup_para_frac") <= t["max_dup_para_frac"])
@@ -354,11 +344,7 @@ def gopher_filter(
     return s.withColumn("kept", kept.cast("int"))
 
 
-def blocklist_filter(
-    documents: DataFrame,
-    blocklist: tuple[str, ...],
-    text_col: str = "text",
-) -> DataFrame:
+def blocklist_filter(documents: DataFrame, blocklist: tuple[str, ...]) -> DataFrame:
     """The C4/LDNOOBW word-boundary blocklist gate: a document is
     dropped iff ANY blocklist term appears as whole words (C4 drops the
     page outright on a single hit — `c4_line_filters` handles the
@@ -378,7 +364,7 @@ def blocklist_filter(
     Returns (doc_id, n_hits, hit_terms, kept): hit_terms is the
     blocklist-order comma-joined hit list so the frame hashes portably.
     """
-    norm = F.regexp_replace(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+    norm = F.regexp_replace(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                             r"[^a-z0-9]+", " ")
     padded = F.concat(F.lit(" "), F.trim(norm), F.lit(" "))
     hits = F.filter(
@@ -393,12 +379,7 @@ def blocklist_filter(
     )
 
 
-def blocklist_join(
-    documents: DataFrame,
-    blocklist_df: DataFrame,
-    text_col: str = "text",
-    ngram_sizes: tuple[int, ...] = (1, 2),
-) -> DataFrame:
+def blocklist_join(documents: DataFrame, blocklist_df: DataFrame) -> DataFrame:
     """The 10k+-term scale path :func:`blocklist_filter`'s docstring
     promises: the term list as a DIMENSION frame instead of a plan
     literal.  At LDNOOBW size (~400 terms) the literal+HOF projection
@@ -407,8 +388,8 @@ def blocklist_join(
     join, and a literal that large bloats every serialized task.
 
     Shape: documents normalize exactly like :func:`blocklist_filter`
-    (lowercase, non-alnum runs → one space), word n-grams for each size
-    in ``ngram_sizes`` are built with JVM higher-order functions and
+    (lowercase, non-alnum runs → one space), word unigrams and bigrams
+    are built with JVM higher-order functions and
     deduped BEFORE the explode (verdicts need presence, not counts, so
     within-doc repeats never shuffle), then one ``explode_outer`` →
     broadcast join against the term dim → one groupBy(doc_id) with
@@ -422,7 +403,7 @@ def blocklist_join(
     :func:`blocklist_filter` exactly (parity property-tested).
     """
     norm = F.regexp_replace(
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"[^a-z0-9]+", " "
+        F.lower(F.coalesce(F.col("text"), F.lit(""))), r"[^a-z0-9]+", " "
     )
     tokens = F.split(F.trim(norm), " ")
     # guard the short-doc case explicitly: sequence(1, 0) would infer a
@@ -441,7 +422,7 @@ def blocklist_join(
                 _gram_at(n),
             ),
         ).otherwise(F.array().cast("array<string>"))
-        for n in ngram_sizes
+        for n in (1, 2)
     ]
     grams = F.array_distinct(F.concat(*gram_arrays))
     exploded = documents.select(
@@ -486,10 +467,7 @@ PII_PATTERNS = (
 )
 
 
-def redact_pii(
-    documents: DataFrame, text_col: str = "text",
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
+def redact_pii(documents: DataFrame) -> DataFrame:
     """Training-data PII scrubbing: emails, phone numbers, IPv4 addresses,
     and URLs replaced with type tokens, with per-type match counts.
 
@@ -500,14 +478,13 @@ def redact_pii(
     system — names/addresses need a model pass (the mapInPandas slot in
     :mod:`multimodal` is the shape for that)."""
     documents = spread(documents)
-    out = F.col(text_col)
+    out = F.col("text")
     counts = {}
     for name, pat, token in PII_PATTERNS:
         counts[name] = F.size(F.regexp_extract_all(out, F.lit(pat), 0))
         out = F.regexp_replace(out, pat, token)
     return documents.select(
         "doc_id",
-        *passthrough,
         out.alias("text"),
         *[counts[n].alias(f"n_{n}") for n, _, _ in PII_PATTERNS],
     )
@@ -538,7 +515,7 @@ def _luhn_ok(c: Column) -> Column:
     return total % 10 == 0
 
 
-def redact_credit_cards(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_credit_cards(documents: DataFrame) -> DataFrame:
     """Checksum-validated credit-card scrubbing: digit runs that LOOK
     like card numbers are redacted only when the Luhn checksum passes —
     the false-positive guard :func:`redact_pii`'s pattern-only pass
@@ -551,7 +528,7 @@ def redact_credit_cards(documents: DataFrame, text_col: str = "text") -> DataFra
     zero shuffle, zero Python, composable in front of
     :func:`redact_pii` in the same scan.  Returns (doc_id, text,
     n_candidates, n_valid)."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     cands = F.regexp_extract_all(text, F.lit(CC_CANDIDATE), 0)
     valid = F.filter(cands, _luhn_ok)
     redacted = F.aggregate(
@@ -565,13 +542,7 @@ def redact_credit_cards(documents: DataFrame, text_col: str = "text") -> DataFra
     )
 
 
-def pack_sequences(
-    documents: DataFrame,
-    token_budget: int = 2048,
-    partition_col: str = "source",
-    text_col: str = "text",
-    shard_hex_chars: int = 1,
-) -> DataFrame:
+def pack_sequences(documents: DataFrame, token_budget: int = 2048) -> DataFrame:
     """Deterministic training-sequence packing: documents are packed into
     fixed-token-budget sequences in (partition, shard, doc_id) order — a
     doc starts in the sequence its cumulative starting offset falls into
@@ -580,22 +551,22 @@ def pack_sequences(
 
     Distributed shape: the greedy running-token-sum window is inherently
     sequential WITHIN its window partition, so partitioning by
-    ``partition_col`` alone would funnel a 100 TB corpus through one
+    ``source`` alone would funnel a 100 TB corpus through one
     sort + prefix-sum task per source (the realistic case is a handful
     of sources).  Packing is therefore SUB-SHARDED: ``shard`` is the
-    first ``shard_hex_chars`` hex digits of md5(doc_id) (deterministic
+    first ``PACK_SHARD_HEX_CHARS`` hex digits of md5(doc_id) (deterministic
     and engine-portable — same sharding in the DuckDB oracle), the
     window runs per (part, shard), and sequences never cross shards.
     Within a shard the semantics are exactly the unsharded greedy pack;
-    parallelism is sources × 16^``shard_hex_chars`` (raise to 2-3 hex
+    parallelism is sources × 16^``PACK_SHARD_HEX_CHARS`` (raise to 2-3 hex
     chars at corpus scale).  Output: one row per packed sequence with
     its doc range and fill metrics."""
-    toks = F.size(F.split(F.col(text_col), " "))
+    toks = F.size(F.split(F.col("text"), " "))
     d = documents.select(
-        F.col(partition_col).alias("part"),
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, shard_hex_chars).alias(
-            "shard"
-        ),
+        F.col("source").alias("part"),
+        F.substring(
+            F.md5(F.col("doc_id").cast("string")), 1, PACK_SHARD_HEX_CHARS
+        ).alias("shard"),
         "doc_id",
         toks.alias("n_tokens"),
     )
@@ -622,7 +593,6 @@ def pack_interleaved(
     spans: DataFrame,
     token_budget: int = 2048,
     media_budget: int = 64,
-    shard_hex_chars: int = 1,
 ) -> DataFrame:
     """Multimodal training-sequence packing over the INTERLEAVED span
     grain (doc_id, kind, text, media_ref, order) — the engine's core
@@ -635,7 +605,7 @@ def pack_interleaved(
 
     Same distributed shape as :func:`pack_sequences`: the greedy
     running-cost prefix sum is sub-sharded by the first
-    ``shard_hex_chars`` hex digits of md5(doc_id) so parallelism is
+    ``PACK_SHARD_HEX_CHARS`` hex digits of md5(doc_id) so parallelism is
     16^chars rather than one sequential task, sequences never cross
     shards, and the sharding is engine-portable (replicated verbatim
     in the DuckDB oracle).  Two shuffles total: the per-doc cost
@@ -652,7 +622,7 @@ def pack_interleaved(
     )
     d = per_doc.withColumn(
         "shard",
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, shard_hex_chars),
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, PACK_SHARD_HEX_CHARS),
     )
     w = (
         Window.partitionBy("shard")
@@ -679,9 +649,7 @@ def pack_interleaved(
     )
 
 
-def dedup_paragraphs(
-    documents: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def dedup_paragraphs(documents: DataFrame) -> DataFrame:
     """Corpus-wide exact paragraph dedup: every distinct paragraph
     (md5 of its lowercased letters-only normalization) survives only at
     its globally-first occurrence, ordered by (doc_id, para_idx)
@@ -692,7 +660,7 @@ def dedup_paragraphs(
     groupBy on doc_id is the only other shuffle).  Never an n² join;
     a boilerplate paragraph shared by millions of docs costs one
     window partition, sorted, O(k log k)."""
-    paras = F.split(F.col(text_col), "\n\n")
+    paras = F.split(F.col("text"), "\n\n")
     flat = documents.select(
         "doc_id", F.posexplode(paras).alias("para_idx", "para")
     )
@@ -723,11 +691,9 @@ def contamination_flags(
     documents: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    min_overlap: int = 1,
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark DECONTAMINATION (the GPT-3 §C / Pile / Llama recipe):
-    flag every document sharing at least ``min_overlap`` distinct word
+    flag every document sharing at least one distinct word
     ``n``-grams with a benchmark/eval set, so training data can be
     scrubbed of test-set leakage.
 
@@ -756,7 +722,7 @@ def contamination_flags(
         ).otherwise(F.array().cast("array<string>"))
 
     bench_grams = (
-        benchmark.withColumn("__cf_w", F.split(F.col(text_col), " "))
+        benchmark.withColumn("__cf_w", F.split(F.col("text"), " "))
         .select(F.explode(grams(F.col("__cf_w"))).alias("gram"))
         .distinct()
     )
@@ -765,7 +731,7 @@ def contamination_flags(
     # with the whole gram expression substituted in — evaluating it
     # serially on the scan task (see winnow_pairs for the measurement)
     doc_grams = (
-        scan.withColumn("__cf_w", F.split(F.col(text_col), " "))
+        scan.withColumn("__cf_w", F.split(F.col("text"), " "))
         .select(
             "doc_id",
             F.explode_outer(grams(F.col("__cf_w"))).alias("gram"),
@@ -781,13 +747,11 @@ def contamination_flags(
     return (
         documents.join(hits, "doc_id", "left")
         .withColumn("n_overlaps", F.coalesce("n_overlaps", F.lit(0)))
-        .withColumn("contaminated", F.col("n_overlaps") >= min_overlap)
+        .withColumn("contaminated", F.col("n_overlaps") >= 1)
     )
 
 
-def ccnet_buckets(
-    documents: DataFrame, text_col: str = "text", n_buckets: int = 3
-) -> DataFrame:
+def ccnet_buckets(documents: DataFrame) -> DataFrame:
     """CCNet's quality bucketing (Wenzek et al. 2020 §4.3): per
     LANGUAGE, rank documents by LM score and split into equal-count
     buckets — head (best), middle, tail — so downstream sampling can
@@ -800,15 +764,13 @@ def ccnet_buckets(
     makes bucket assignment deterministic and engine-replicable.
     Everything upstream is the skew-hardened LM-scoring stage."""
     names = ["head", "middle", "tail"]
-    if n_buckets != 3:
-        names = [f"b{i}" for i in range(1, n_buckets + 1)]
     scored = documents.select("doc_id", "lang").join(
-        unigram_logprob(documents, text_col), "doc_id"
+        unigram_logprob(documents), "doc_id"
     )
     w = Window.partitionBy("lang").orderBy(
         F.col("avg_logprob").desc(), F.col("doc_id")
     )
-    tile = F.ntile(n_buckets).over(w)
+    tile = F.ntile(len(names)).over(w)
     return scored.select(
         "doc_id",
         "lang",
@@ -817,13 +779,7 @@ def ccnet_buckets(
     )
 
 
-def epoch_sample(
-    documents: DataFrame,
-    epoch_docs: int,
-    alpha: float = 0.7,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def epoch_sample(documents: DataFrame, epoch_docs: int) -> DataFrame:
     """Materialize one DETERMINISTIC training-epoch sample under the
     temperature-weighted source mixture: each source contributes
     ``round(epoch_docs * weight_s)`` documents, where ``weight_s`` is
@@ -841,32 +797,24 @@ def epoch_sample(
     per-source ranking is one window sort partitioned by source — the
     shuffle a mixture materialization inherently needs (each source's
     order must be global within the source)."""
-    quotas = source_mix(
-        documents, source_col=source_col, alpha=alpha, text_col=text_col
-    ).select(
-        source_col,
+    quotas = source_mix(documents).select(
+        "source",
         F.round(F.col("sample_weight") * epoch_docs)
         .cast("long")
         .alias("quota"),
     )
-    w = Window.partitionBy(source_col).orderBy(
+    w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     ranked = documents.withColumn("__rk", F.row_number().over(w))
     return (
-        ranked.join(F.broadcast(quotas), source_col)
+        ranked.join(F.broadcast(quotas), "source")
         .where(F.col("__rk") <= F.col("quota"))
-        .select("doc_id", source_col, F.col("__rk").alias("sample_rank"))
+        .select("doc_id", "source", F.col("__rk").alias("sample_rank"))
     )
 
 
-def quality_classifier(
-    documents: DataFrame,
-    n_features: int = 32,
-    lr: float = 1.0,
-    iters: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
+def quality_classifier(documents: DataFrame) -> DataFrame:
     """GPT-3-style quality classifier (Brown et al. 2020 appendix A
     trained one over hashed features to score candidate documents
     against a curated positive set): logistic regression over hashed
@@ -881,11 +829,12 @@ def quality_classifier(
     partial aggregation; only the D+1 weights ever reach the driver.
     Output: one row per feature with its learned weight (feature -1 is
     the bias) — the artifact a scoring pass would broadcast."""
+    n_features, lr, iters = 32, 1.0, 2  # hashed features, GD step size, GD steps
     spark = documents.sparkSession
     toks = documents.select(
         "doc_id",
         (F.col("lang") == "en").cast("int").alias("y"),
-        F.explode(F.split(F.col(text_col), " ")).alias("w"),
+        F.explode(F.split(F.col("text"), " ")).alias("w"),
     )
     feats = (
         toks.withColumn(
@@ -938,18 +887,13 @@ def quality_classifier(
     return spark.createDataFrame(rows, "feature int, weight double")
 
 
-def dsir_weights(
-    documents: DataFrame,
-    n_buckets: int = 64,
-    smoothing: float = 1.0,
-    text_col: str = "text",
-) -> DataFrame:
+def dsir_weights(documents: DataFrame, n_buckets: int = 64) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw
     document by how much more likely its hashed-ngram profile is under
     the TARGET distribution than under the raw-corpus distribution —
     ``log w(doc) = Σ_b count_doc[b] · log(p_target[b] / q_raw[b])``
-    over ``n_buckets`` hashed unigram+bigram features with add-λ
+    over ``n_buckets`` hashed unigram+bigram features with add-one
     smoothing.  ``lang == 'en'`` stands in for the curated target set
     (the quality-classifier convention).
 
@@ -965,7 +909,7 @@ def dsir_weights(
     sum.
 
     Output: (doc_id, n_grams, log_weight)."""
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     grams_expr = F.concat(
         words,
         F.when(F.size(words) < 2, F.array().cast("array<string>")).otherwise(
@@ -1007,7 +951,7 @@ def dsir_weights(
     tt, tq = int(tot["tt"] or 0), int(tot["tq"] or 0)
     if tt == 0:
         raise ValueError("DSIR target partition has no grams")
-    s, b_s = float(smoothing), float(n_buckets) * float(smoothing)
+    s, b_s = 1.0, float(n_buckets)
     ratios = dist.select(
         "b",
         F.round(
@@ -1035,13 +979,7 @@ def dsir_weights(
     )
 
 
-def dsir_sample(
-    documents: DataFrame,
-    k: int = 100,
-    n_buckets: int = 64,
-    smoothing: float = 1.0,
-    text_col: str = "text",
-) -> DataFrame:
+def dsir_sample(documents: DataFrame, k: int = 100, n_buckets: int = 64) -> DataFrame:
     """DSIR's resampling step: Gumbel-top-k over the importance weights
     — ``key = log_weight + Gumbel(0,1)`` drawn from an md5(doc_id)
     uniform, so the draw is engine-reproducible (the deterministic-
@@ -1051,9 +989,7 @@ def dsir_sample(
     Scale: the perturbed key is a map-side expression over the weight
     table; selection is a global top-k (TakeOrdered — no full sort).
     Output: k rows of (doc_id, log_weight, gumbel_key)."""
-    w = dsir_weights(
-        documents, n_buckets=n_buckets, smoothing=smoothing, text_col=text_col
-    )
+    w = dsir_weights(documents, n_buckets=n_buckets)
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("double")
@@ -1067,17 +1003,13 @@ def dsir_sample(
     return keyed.orderBy(F.col("gumbel_key").desc(), "doc_id").limit(k)
 
 
-def dataset_split(
-    documents: DataFrame,
-    fractions: tuple[float, float] = (0.9, 0.05),
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def dataset_split(documents: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment + the per-(source,
     split) balance table every training pipeline reports.
 
     Assignment is a pure hash rule — ``u = md5(doc_id)`` scaled to
-    [0, 1), train if u < f_train, val if u < f_train+f_val, else test
+    [0, 1), train if u < TRAIN_FRAC, val if u < TRAIN_FRAC + VAL_FRAC,
+    else test
     — so it is reproducible across engines AND runs, needs ZERO
     shuffle per document (a window-ranked exact-quota split would
     serialize each stratum through one window partition — the very
@@ -1092,14 +1024,14 @@ def dataset_split(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("long") / F.lit(4294967296.0)
     split = (
-        F.when(u < fractions[0], F.lit("train"))
-        .when(u < fractions[0] + fractions[1], F.lit("val"))
+        F.when(u < TRAIN_FRAC, F.lit("train"))
+        .when(u < TRAIN_FRAC + VAL_FRAC, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    n_tok = F.size(F.filter(F.split(F.col(text_col), " "), lambda t: t != ""))
+    n_tok = F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != ""))
     return (
         documents.select(
-            F.col(source_col).alias("source"),
+            "source",
             split.alias("split"),
             n_tok.alias("_nt"),
         )
@@ -1111,12 +1043,7 @@ def dataset_split(
     )
 
 
-def source_overlap(
-    documents: DataFrame,
-    shingle_len: int = 8,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def source_overlap(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
     """Cross-source contamination matrix: for every source pair, how
     many DISTINCT ``shingle_len``-token shingle fingerprints appear in
     both — the audit that catches a crawl slice ingested twice under
@@ -1140,7 +1067,7 @@ def source_overlap(
     # rationale); the cross-DOC distinct shuffle below still runs, on
     # the per-doc-deduped fingerprints
     documents = spread(documents)
-    w = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    w = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     docs = documents.withColumn("__so_w", w)
     k = F.size("__so_w") - F.lit(shingle_len - 1)
     shingles = F.when(
@@ -1155,7 +1082,7 @@ def source_overlap(
         ),
     ).otherwise(F.array().cast("array<string>"))
     sfp = docs.select(
-        F.col(source_col).alias("source"),
+        "source",
         F.explode(F.array_distinct(shingles)).alias("fp"),
     ).distinct()
     a = sfp.select(F.col("source").alias("source_a"), "fp")
@@ -1171,7 +1098,6 @@ def source_overlap(
 def _shingle_fps(
     documents: DataFrame,
     shingle_len: int,
-    text_col: str,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(doc_id, *extra, fp): DISTINCT 16-byte fingerprints of the
@@ -1179,7 +1105,7 @@ def _shingle_fps(
     per-doc array_distinct makes this exactly the distinct (doc, fp)
     set with zero shuffle."""
     documents = spread(documents)  # shingle+md5 build is map-heavy
-    w = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    w = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     # materialize the token array as a column FIRST: codegen does not
     # common-subexpression-eliminate inside higher-order-function
     # lambdas, so referencing `w` directly in the transform re-ran the
@@ -1205,9 +1131,7 @@ def _shingle_fps(
     )
 
 
-def ngram_novelty(
-    documents: DataFrame, shingle_len: int = 8, text_col: str = "text"
-) -> DataFrame:
+def ngram_novelty(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
     """Per-document NOVELTY: the fraction of a doc's distinct
     ``shingle_len``-token shingles whose globally-FIRST occurrence
     (min doc_id order) is this document — the curve data-curation
@@ -1222,7 +1146,7 @@ def ngram_novelty(
 
     Output: (doc_id, n_shingles, n_novel, novelty 4 dp); docs shorter
     than the shingle length emit no row."""
-    pairs = _shingle_fps(documents, shingle_len, text_col)
+    pairs = _shingle_fps(documents, shingle_len)
     first = pairs.groupBy("fp").agg(F.min("doc_id").alias("first_doc"))
     return (
         pairs.join(first, "fp")
@@ -1239,13 +1163,7 @@ def ngram_novelty(
     )
 
 
-def cross_split_leakage(
-    documents: DataFrame,
-    fractions: tuple[float, float] = (0.9, 0.05),
-    shingle_len: int = 8,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def cross_split_leakage(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
     """The leakage audit run after every split: how many val/test
     documents share at least one ``shingle_len``-token shingle with
     ANY train document (the :func:`dataset_split` hash rule decides
@@ -1264,12 +1182,12 @@ def cross_split_leakage(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("long") / F.lit(4294967296.0)
     split = (
-        F.when(u < fractions[0], F.lit("train"))
-        .when(u < fractions[0] + fractions[1], F.lit("val"))
+        F.when(u < TRAIN_FRAC, F.lit("train"))
+        .when(u < TRAIN_FRAC + VAL_FRAC, F.lit("val"))
         .otherwise(F.lit("test"))
     )
     tagged = documents.withColumn("split", split)
-    pairs = _shingle_fps(tagged, shingle_len, text_col, ("split",))
+    pairs = _shingle_fps(tagged, shingle_len, ("split",))
     train_fps = pairs.filter(F.col("split") == "train").select("fp").distinct()
     held = pairs.filter(F.col("split") != "train")
     contaminated = (
@@ -1298,14 +1216,9 @@ def cross_split_leakage(
     )
 
 
-def curriculum_rank(
-    documents: DataFrame,
-    score_col: str,
-    ascending: bool = True,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Contiguous GLOBAL rank (0-based) by (score, id) — curriculum
-    ordering for training (easy→hard), the "zipWithIndex at 100 TB"
+def curriculum_rank(documents: DataFrame, score_col: str) -> DataFrame:
+    """Contiguous GLOBAL rank (0-based) by ascending (score, doc_id) —
+    curriculum ordering for training (easy→hard), the "zipWithIndex at 100 TB"
     pattern done DataFrame-native: a naive row_number() over a global
     ORDER BY serializes the corpus through ONE window partition; this
     runs a range repartition + per-partition sort (the standard
@@ -1320,10 +1233,7 @@ def curriculum_rank(
     Output: input columns + ``rank`` (long, 0-based, contiguous)."""
     from pyspark.sql import Window
 
-    key = [
-        F.col(score_col).asc() if ascending else F.col(score_col).desc(),
-        F.col(id_col).asc(),
-    ]
+    key = [F.col(score_col).asc(), F.col("doc_id").asc()]
     n_parts = documents.sparkSession.sparkContext.defaultParallelism
     # the pid-stamped frame MUST be materialized once: the offset
     # job and the rank job re-executing the range exchange
@@ -1359,17 +1269,12 @@ def curriculum_rank(
     )
 
 
-def dedup_lines(
-    documents: DataFrame,
-    text_col: str = "text",
-    boiler_min_docs: int = 3,
-    scope_col: str | None = None,
-) -> DataFrame:
+def dedup_lines(documents: DataFrame, scope_col: str | None = None) -> DataFrame:
     """Line-grain dedup, the RefinedWeb §3.2 / CCNet cleanup the
     paragraph pass can't express: (a) WITHIN a document, an exact
     repeat of an earlier line is dropped (nav menus and share bars
     stutter inside one page); (b) ACROSS the corpus, a line whose
-    fingerprint appears in ``boiler_min_docs``-or-more DISTINCT
+    fingerprint appears in ``BOILER_MIN_DOCS``-or-more DISTINCT
     documents is boilerplate ("Share on Facebook") and is dropped from
     every document — document frequency, not first-occurrence, is the
     verdict, because boilerplate is wrong in the first page that
@@ -1401,7 +1306,7 @@ def dedup_lines(
 
     ``scope_col`` narrows the document-frequency verdict to a grouping
     column (usually the URL host): a line then counts as boilerplate
-    only when ``boiler_min_docs`` distinct documents OF THE SAME SCOPE
+    only when ``BOILER_MIN_DOCS`` distinct documents OF THE SAME SCOPE
     carry it — the per-site template chrome ("About us | Contact")
     that is frequent within one domain yet too rare corpus-wide to
     cross a global threshold.  Scale note: scoping also de-skews the
@@ -1419,7 +1324,7 @@ def dedup_lines(
     lines = documents.select(
         "doc_id",
         *scope,
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     )
     norm = F.regexp_replace(F.lower(F.trim(F.col("line"))), "\\s+", " ")
     lines = lines.withColumn(
@@ -1432,7 +1337,7 @@ def dedup_lines(
         lines.filter(F.col("_fp").isNotNull())
         .groupBy(*scope, "_fp")
         .agg(F.count_distinct("doc_id").alias("_df"))
-        .filter(F.col("_df") >= boiler_min_docs)
+        .filter(F.col("_df") >= BOILER_MIN_DOCS)
         .select(*scope, "_fp", F.lit(True).alias("_boiler"))
     )
     tagged = lines.join(boiler, [*scope, "_fp"], "left")

@@ -30,30 +30,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+BM25_K1 = 1.2
+BM25_B = 0.75
 
-def _terms(documents: DataFrame, text_col: str) -> DataFrame:
+
+def _terms(documents: DataFrame) -> DataFrame:
     return documents.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"),
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"),
     ).filter(F.col("term") != "")
 
 
-def bm25_topk(
-    documents: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-) -> DataFrame:
-    """Top-``k`` documents per query under Okapi BM25.
+def bm25_topk(documents: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Top-``k`` documents per query under Okapi BM25 (``BM25_K1``,
+    ``BM25_B``).
 
     ``queries`` is a small (query_id: long, query_text: string) frame —
     it is broadcast, never shuffled.  Output: (query_id, doc_id,
     bm25, rank) with rank 1..k per query, bm25 rounded to 4 dp,
     ties broken by doc_id.
     """
-    toks = _terms(documents, text_col)
+    toks = _terms(documents)
     doc_tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     doc_len = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
     corpus = doc_len.agg(
@@ -85,6 +82,7 @@ def bm25_topk(
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
+    k1, b = BM25_K1, BM25_B
     tf_norm = (F.col("tf") * (k1 + 1)) / (
         F.col("tf")
         + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
@@ -102,11 +100,7 @@ def bm25_topk(
     )
 
 
-def tfidf_top_terms(
-    documents: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     """The ``k`` most characteristic terms per document by tf-idf
     (tf × ln(N/df), the classic smooth-free variant — df ≥ 1 always
     holds because tf rows exist only for observed terms).
@@ -122,7 +116,7 @@ def tfidf_top_terms(
     term_rank) with tfidf rounded to 4 dp, ties broken
     lexicographically on term.
     """
-    toks = _terms(documents, text_col)
+    toks = _terms(documents)
     doc_tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     n_docs = documents.select(
         F.count("*").alias("n_docs")

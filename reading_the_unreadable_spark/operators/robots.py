@@ -66,13 +66,9 @@ def _compile_pattern(value: Column) -> Column:
     return F.concat(F.lit("^"), body, F.when(anchored, F.lit("$")).otherwise(F.lit("")))
 
 
-def parse_robots(
-    robots: DataFrame,
-    agent: str,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
-    """One row per host: the compiled rule set for ``agent``.
+def parse_robots(robots: DataFrame, agent: str) -> DataFrame:
+    """(host, robots_txt) → one row per host: the compiled rule set
+    for ``agent``.
 
     Output: ``(host, rules array<struct<plen:int, is_allow:int,
     pattern:string, rx:string>>, crawl_delay int, sitemaps
@@ -83,20 +79,19 @@ def parse_robots(
     All window/groupBy traffic here is on the host dimension (small);
     the fact-table side never appears in this function.
     """
-    host = F.col(host_col)
     lines = robots.select(
-        host_col, F.posexplode(F.split(F.col(txt_col), "\n")).alias("ln", "raw")
+        "host", F.posexplode(F.split(F.col("robots_txt"), "\n")).alias("ln", "raw")
     )
     stripped = F.regexp_replace(F.col("raw"), "#.*$", "")
     field = F.lower(F.trim(F.regexp_extract(stripped, "^([^:]*):", 1)))
     value = F.trim(F.regexp_extract(stripped, "^[^:]*:(.*)$", 1))
     p = lines.select(
-        host_col, "ln", field.alias("field"), value.alias("value")
+        "host", "ln", field.alias("field"), value.alias("value")
     ).where(
         F.col("field").isin("user-agent", "allow", "disallow", "crawl-delay", "sitemap")
     )
 
-    w = Window.partitionBy(host_col).orderBy("ln")
+    w = Window.partitionBy("host").orderBy("ln")
     prev_field = F.lag("field").over(w)
     new_group = (F.col("field") == "user-agent") & (
         prev_field.isNull() | (prev_field != "user-agent")
@@ -111,8 +106,8 @@ def parse_robots(
         & (F.lower(F.col("value")) == agent.lower()),
         F.lit(2),
     ).when((F.col("field") == "user-agent") & (F.col("value") == "*"), F.lit(1))
-    g_spec = F.max(ua_spec).over(Window.partitionBy(host_col, "gid"))
-    host_best = F.max(g_spec).over(Window.partitionBy(host_col))
+    g_spec = F.max(ua_spec).over(Window.partitionBy("host", "gid"))
+    host_best = F.max(g_spec).over(Window.partitionBy("host"))
     p = p.withColumn("eligible", g_spec.isNotNull() & (g_spec == host_best))
 
     is_rule = (
@@ -135,7 +130,7 @@ def parse_robots(
     )
     sitemap = F.when(F.col("field") == "sitemap", F.col("value"))
 
-    agg = p.groupBy(host_col).agg(
+    agg = p.groupBy("host").agg(
         F.sort_array(F.collect_list(rule), asc=False).alias("rules"),
         F.max(delay).alias("crawl_delay"),
         F.sort_array(F.collect_list(sitemap)).alias("sitemaps"),
@@ -143,23 +138,18 @@ def parse_robots(
     return agg.withColumn("n_rules", F.size("rules"))
 
 
-def robots_gate(
-    urls: DataFrame,
-    rules: DataFrame,
-    host_col: str = "host",
-    path_col: str = "path",
-) -> DataFrame:
-    """Per-URL crawl verdict.  ``rules`` is :func:`parse_robots` output;
-    it is broadcast (hosts ≪ URLs), so the verdict adds ZERO shuffle to
-    the URL side: match = array filter with ``regexp_like``, winner =
+def robots_gate(urls: DataFrame, rules: DataFrame) -> DataFrame:
+    """Per-URL (host, path) crawl verdict.  ``rules`` is
+    :func:`parse_robots` output; it is broadcast (hosts ≪ URLs), so the
+    verdict adds ZERO shuffle to the URL side: match = array filter with ``regexp_like``, winner =
     ``array_max`` over the precedence-ordered struct, default = allow
     (no matching rule, or host absent from the robots corpus).
 
     Adds: ``allowed`` (boolean), ``matched_pattern`` (null when no rule
     matched), ``crawl_delay``, ``n_rules``.
     """
-    path = F.col(path_col)
-    joined = urls.join(F.broadcast(rules), on=host_col, how="left")
+    path = F.col("path")
+    joined = urls.join(F.broadcast(rules), on="host", how="left")
     matched = F.filter(
         F.coalesce(F.col("rules"), F.array()),
         lambda r: F.regexp_like(path, r["rx"]),
@@ -181,37 +171,25 @@ def robots_gate(
     )
 
 
-def crawl_schedule(
-    gated: DataFrame,
-    host_col: str = "host",
-    order_col: str = "doc_id",
-    delay_col: str = "crawl_delay",
-    default_delay: int = 1,
-    max_per_host: int | None = None,
-) -> DataFrame:
+def crawl_schedule(gated: DataFrame) -> DataFrame:
     """Politeness scheduling over a gated frontier: URLs that survived
     :func:`robots_gate` (``allowed``) get a per-host fetch slot in
-    ``order_col`` order and a fetch time of ``slot × crawl_delay``
-    seconds (``default_delay`` where the host declared none).
+    ``doc_id`` order and a fetch time of ``slot × crawl_delay``
+    seconds (1 s where the host declared none).
 
     Per-host sequencing is the SEMANTICS of politeness, so the one
     shuffle here (hash by host for the window) is irreducible; what is
     controllable at crawl scale is skew — a mega-host with 10^8 URLs
-    serializes its own window task.  ``max_per_host`` bounds that
-    (RefinedWeb-style frontier cap): rows past the cap are dropped
-    AFTER slot assignment, so the cap also bounds the window's output,
-    and the documented scale path is to pre-filter the frontier (e.g.
-    by priority) before scheduling rather than salt — a salted window
-    would break slot contiguity, which is the invariant downstream
-    fetchers rely on.
+    serializes its own window task.  The scale path is to pre-filter
+    the frontier (e.g. by priority) before scheduling rather than salt
+    — a salted window would break slot contiguity, which is the
+    invariant downstream fetchers rely on.
 
     Adds ``slot`` (0-based per host) and ``fetch_at_sec``.
     """
-    w = Window.partitionBy(host_col).orderBy(order_col)
+    w = Window.partitionBy("host").orderBy("doc_id")
     out = gated.where(F.col("allowed")).withColumn(
         "slot", F.row_number().over(w) - 1
     )
-    if max_per_host is not None:
-        out = out.where(F.col("slot") < max_per_host)
-    delay = F.coalesce(F.col(delay_col), F.lit(default_delay))
+    delay = F.coalesce(F.col("crawl_delay"), F.lit(1))
     return out.withColumn("fetch_at_sec", (F.col("slot") * delay).cast("long"))

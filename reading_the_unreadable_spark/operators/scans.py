@@ -55,12 +55,11 @@ def binarize_otsu(arr: np.ndarray) -> tuple[np.ndarray, int]:
     return gray > t, t
 
 
-def estimate_skew(
-    page: np.ndarray, max_deg: float = 5.0, step: float = 0.25
-) -> float:
+def estimate_skew(page: np.ndarray) -> float:
     """Projection-profile skew estimate on a bilevel page (True=white).
-    For each candidate angle the columns are sheared by integer-pixel offsets
-    (tan θ per row — exact enough under ±5°) and the variance of row
+    For each candidate angle in ±5° at 0.25° steps the columns are
+    sheared by integer-pixel offsets (tan θ per row — exact enough
+    under ±5°) and the variance of row
     INK counts is scored; text lines aligned with the raster concentrate
     ink into few rows → maximal variance.  Returns degrees with the
     sign such that ``deskew(arr, estimate_skew(page))`` straightens the
@@ -72,7 +71,7 @@ def estimate_skew(
     # column-index grid reused across angles
     cols = np.arange(w)
     best_angle, best_score = 0.0, -1.0
-    angles = np.arange(-max_deg, max_deg + 1e-9, step)
+    angles = np.arange(-5.0, 5.0 + 1e-9, 0.25)
     col_ink = ink.astype(np.int32)
     for a in angles:
         shift = np.round(np.tan(np.radians(a)) * cols).astype(np.int64)
@@ -106,9 +105,7 @@ def deskew(arr: np.ndarray, angle_deg: float) -> np.ndarray:
     return out
 
 
-def scan_preprocess_features(
-    media: DataFrame, payload_col: str = "payload", max_deg: float = 5.0
-) -> DataFrame:
+def scan_preprocess_features(media: DataFrame) -> DataFrame:
     """(media_ref, payload binary, …) → per-page scan diagnostics:
     Otsu threshold, ink ratio, estimated skew.  Quarantines corrupt
     payloads via ``decode_err`` like every media extractor here."""
@@ -123,7 +120,7 @@ def scan_preprocess_features(
                     "skew_deg", "decode_err",
                 )
             }
-            for ref, p in zip(pdf["media_ref"], pdf[payload_col]):
+            for ref, p in zip(pdf["media_ref"], pdf["payload"]):
                 if p is None:
                     continue
                 rows["media_ref"].append(ref)
@@ -138,9 +135,7 @@ def scan_preprocess_features(
                 page, t = binarize_otsu(arr)
                 rows["otsu_threshold"].append(int(t))
                 rows["ink_ratio"].append(round(float((~page).mean()), 6))
-                rows["skew_deg"].append(
-                    round(estimate_skew(page, max_deg=max_deg), 3)
-                )
+                rows["skew_deg"].append(round(estimate_skew(page), 3))
                 rows["decode_err"].append(None)
             if not rows["media_ref"]:
                 continue
@@ -158,11 +153,10 @@ def _ink_runs(row: np.ndarray) -> list[tuple[int, int]]:
     return list(zip(starts.tolist(), ends.tolist()))
 
 
-def connected_component_boxes(
-    page: np.ndarray, min_area: int = 4
-) -> list[tuple[int, int, int, int]]:
+def connected_component_boxes(page: np.ndarray) -> list[tuple[int, int, int, int]]:
     """8-connected components of the INK pixels of a bilevel page
-    (True = white), as (x1, y1, x2, y2) boxes, reading order (y1, x1).
+    (True = white), as (x1, y1, x2, y2) boxes of at least 4 pixels,
+    reading order (y1, x1).
 
     Run-based two-pass union-find: each row's ink runs are the units
     and unions link runs overlapping (±1 for 8-connectivity) between
@@ -212,7 +206,7 @@ def connected_component_boxes(
     out = [
         (b[0], b[1], b[2], b[3])
         for b in merged.values()
-        if (b[2] - b[0] + 1) * (b[3] - b[1] + 1) >= min_area
+        if (b[2] - b[0] + 1) * (b[3] - b[1] + 1) >= 4
     ]
     return sorted(out, key=lambda b: (b[1], b[0]))
 
@@ -270,13 +264,7 @@ BLOCK_SCHEMA = (
 )
 
 
-def detect_page_blocks(
-    media: DataFrame,
-    payload_col: str = "payload",
-    gap_x: int = 8,
-    gap_y: int = 4,
-    min_area: int = 4,
-) -> DataFrame:
+def detect_page_blocks(media: DataFrame, gap_x: int = 8, gap_y: int = 4) -> DataFrame:
     """(media_ref, payload binary, …) → one row per detected text
     BLOCK: decode → Otsu binarize → run-based connected components →
     proximity merge.  The pixels→boxes stand-in for the reference's
@@ -295,7 +283,7 @@ def detect_page_blocks(
                     "decode_err",
                 )
             }
-            for ref, p in zip(pdf["media_ref"], pdf[payload_col]):
+            for ref, p in zip(pdf["media_ref"], pdf["payload"]):
                 if p is None:
                     continue
                 try:
@@ -308,7 +296,7 @@ def detect_page_blocks(
                     rows["decode_err"].append(f"{type(e).__name__}: {e}"[:200])
                     continue
                 page, _t = binarize_otsu(arr)
-                glyphs = connected_component_boxes(page, min_area=min_area)
+                glyphs = connected_component_boxes(page)
                 blocks = merge_nearby_boxes(glyphs, gap_x=gap_x, gap_y=gap_y)
                 for i, (x1, y1, x2, y2) in enumerate(blocks):
                     rows["media_ref"].append(ref)
@@ -326,12 +314,10 @@ def detect_page_blocks(
 
 
 # -------------------------------------------------- XY-cut reading order
-def xy_cut_order(
-    boxes: list[tuple[int, int, int, int]], min_gap: int = 2
-) -> list[int]:
+def xy_cut_order(boxes: list[tuple[int, int, int, int]]) -> list[int]:
     """Recursive XY-cut reading order over (x1, y1, x2, y2) boxes — the
     north rule's prescribed multi-column ordering.  Vertical cuts are
-    PREFERRED (any x-projection gap ≥ min_gap → left group reads fully
+    PREFERRED (any x-projection gap ≥ 2 px → left group reads fully
     before right, the newspaper column convention); otherwise the
     TOPMOST y-projection gap cuts top-before-bottom — taking the
     topmost (not widest) gap lets a full-width banner peel off first so
@@ -355,13 +341,13 @@ def xy_cut_order(
     def rec(idxs: list[int]) -> list[int]:
         if len(idxs) <= 1:
             return idxs
-        xg = [g for g in gaps(idxs, 0, 2) if g[1] - g[0] + 1 >= min_gap]
+        xg = [g for g in gaps(idxs, 0, 2) if g[1] - g[0] + 1 >= 2]
         if xg:  # vertical cut at the LEFTMOST gutter: left reads first
             mid = (xg[0][0] + xg[0][1]) // 2
             left = [i for i in idxs if boxes[i][2] <= mid]
             right = [i for i in idxs if boxes[i][2] > mid]
             return rec(left) + rec(right)
-        yg = [g for g in gaps(idxs, 1, 3) if g[1] - g[0] + 1 >= min_gap]
+        yg = [g for g in gaps(idxs, 1, 3) if g[1] - g[0] + 1 >= 2]
         if yg:  # horizontal cut at the TOPMOST gap: banner peels first
             mid = (yg[0][0] + yg[0][1]) // 2
             top = [i for i in idxs if boxes[i][3] <= mid]
@@ -372,11 +358,9 @@ def xy_cut_order(
     return rec(list(range(len(boxes))))
 
 
-def add_xy_cut_order(
-    blocks: DataFrame, group_col: str = "media_ref", min_gap: int = 2
-) -> DataFrame:
+def add_xy_cut_order(blocks: DataFrame) -> DataFrame:
     """Per-page XY-cut: assigns ``reading_order`` (1-based) to each
-    block row via ``applyInPandas`` grouped on ``group_col`` — one
+    block row via ``applyInPandas`` grouped on ``media_ref`` — one
     page's boxes are one group, the exact granularity the recursion
     needs; quarantined rows (block_idx = -1) keep order 0."""
 
@@ -386,13 +370,10 @@ def add_xy_cut_order(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         good = pdf[pdf["block_idx"] >= 0]
-        order = xy_cut_order(
-            list(zip(good["x1"], good["y1"], good["x2"], good["y2"])),
-            min_gap=min_gap,
-        )
+        order = xy_cut_order(list(zip(good["x1"], good["y1"], good["x2"], good["y2"])))
         rank = {good.index[i]: pos + 1 for pos, i in enumerate(order)}
         pdf = pdf.copy()
         pdf["reading_order"] = [rank.get(i, 0) for i in pdf.index]
         return pdf
 
-    return blocks.groupBy(group_col).applyInPandas(fn, schema=schema)
+    return blocks.groupBy("media_ref").applyInPandas(fn, schema=schema)

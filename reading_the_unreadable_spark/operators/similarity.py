@@ -66,24 +66,22 @@ def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> Da
     )
 
 
-def sign_bucket(v: Column, n_dims: int = 4) -> Column:
-    """Deterministic LSH bucket: sign bits of the first n_dims components."""
+def sign_bucket(v: Column) -> Column:
+    """Deterministic LSH bucket: sign bits of the first 4 components."""
     parts = [
         F.when(F.element_at(v, i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(n_dims)
+        for i in range(4)
     ]
     return F.concat(*parts)
 
 
-def ann_lsh_topk(
-    embeddings: DataFrame, n_probes: int = 10, k: int = 3, n_dims: int = 4
-) -> DataFrame:
+def ann_lsh_topk(embeddings: DataFrame, n_probes: int = 10, k: int = 3) -> DataFrame:
     """Bucketed approximate top-k: probes = vec_id < n_probes; candidates
     share the probe's sign bucket.  Output (probe_id, rank, vec_id, cos)."""
     base = embeddings.select(
         "vec_id",
         _as_double(F.col("embedding")).alias("vec"),
-        sign_bucket(F.col("embedding"), n_dims).alias("bucket"),
+        sign_bucket(F.col("embedding")).alias("bucket"),
     )
     probes = base.filter(F.col("vec_id") < n_probes).select(
         F.col("vec_id").alias("probe_id"),
@@ -120,14 +118,15 @@ ANN_DIM = 64
 _ANN_SEED = 20260816
 
 
-def _gen_planes(
-    n_bits: int = ANN_BITS, dim: int = ANN_DIM, seed: int = _ANN_SEED
-) -> list[list[float]]:
+def _gen_planes(seed: int = _ANN_SEED) -> list[list[float]]:
     import numpy as np
 
     rng = np.random.Generator(np.random.PCG64(seed))
     # round to 6dp so the literals embed identically in Spark and SQL
-    return [[round(float(x), 6) for x in rng.standard_normal(dim)] for _ in range(n_bits)]
+    return [
+        [round(float(x), 6) for x in rng.standard_normal(ANN_DIM)]
+        for _ in range(ANN_BITS)
+    ]
 
 
 HYPERPLANES = _gen_planes()
@@ -353,9 +352,10 @@ def embedding_near_dup_oracle_sql(threshold: float = 0.95) -> str:
     """
 
 
-def centroid_dendrogram(embeddings: DataFrame, linkage: str = "average") -> DataFrame:
+def centroid_dendrogram(embeddings: DataFrame) -> DataFrame:
     """F17 (reference ``comparative_analysis.py:279-305``): agglomerative
-    dendrogram over the per-label centroid vectors, cosine distance.
+    dendrogram over the per-label centroid vectors, cosine distance,
+    average linkage.
 
     Same scale shape as the reference: the matrix is label×label (tiny,
     bounded by the label vocabulary), so the centroids are computed
@@ -388,7 +388,7 @@ def centroid_dendrogram(embeddings: DataFrame, linkage: str = "average") -> Data
             for j in range(i + 1, len(clusters)):
                 mi, mj = clusters[i][1], clusters[j][1]
                 block = dist[np.ix_(mi, mj)]
-                d = float(block.mean()) if linkage == "average" else float(block.min())
+                d = float(block.mean())
                 # deterministic tie-break on the (sorted) name pair
                 key = (round(d, 12), clusters[i][0], clusters[j][0])
                 if best is None or key < best[0]:
@@ -479,14 +479,12 @@ def ann_ivf_topk(
     )
 
 
-def ann_ivf_oracle_sql(
-    n_probes: int = 10, k: int = 3, nprobe_cells: int = 2, dim: int = ANN_DIM
-) -> str:
+def ann_ivf_oracle_sql(n_probes: int = 10, k: int = 3, nprobe_cells: int = 2) -> str:
     return f"""
         WITH cents AS (
           SELECT label, d,
                  round(avg(embedding[d]::DOUBLE), 6) AS c
-          FROM embeddings, (SELECT unnest(generate_series(1, {dim})) AS d)
+          FROM embeddings, (SELECT unnest(generate_series(1, {ANN_DIM})) AS d)
           GROUP BY label, d),
         cells AS (
           SELECT label AS cell, list(c ORDER BY d) AS cvec
@@ -601,17 +599,20 @@ def ann_quantized_oracle_sql(query_vec_id: int = 0, k: int = 10) -> str:
     """
 
 
-def kmeans_assignments(
-    embeddings: DataFrame, k: int = 4, iters: int = 2
-) -> DataFrame:
+KMEANS_ITERS = 2
+
+
+def kmeans_assignments(embeddings: DataFrame, k: int = 4) -> DataFrame:
     """The per-vector cluster assignment after :func:`kmeans_fixed`'s
     deterministic Lloyd iterations — (vec_id, vec, cluster), the input
     SemDeDup-style semantic dedup consumes.  Same seeding, rounding,
     and tie-break discipline; see :func:`kmeans_fixed`."""
-    return _kmeans_assign_final(embeddings, k, iters)
+    return _kmeans_assign_final(embeddings, k, KMEANS_ITERS)
 
 
-def kmeans_fixed(embeddings: DataFrame, k: int = 4, iters: int = 2) -> DataFrame:
+def kmeans_fixed(
+    embeddings: DataFrame, k: int = 4, iters: int = KMEANS_ITERS
+) -> DataFrame:
     """Distributed Lloyd k-means with DETERMINISTIC seeding and a fixed
     iteration count, so the whole run is an engine-replicable pure
     function: centroids initialize to the vectors with ``vec_id <
@@ -695,9 +696,7 @@ def _kmeans_assign_final(
     return assign(base, cents)
 
 
-def semdedup(
-    embeddings: DataFrame, k: int = 4, tau: float = 0.95, iters: int = 2
-) -> DataFrame:
+def semdedup(embeddings: DataFrame, k: int = 4, tau: float = 0.95) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means cluster the embeddings,
     then within each cluster drop every vector that has a LOWER-vec_id
     neighbor at cosine ≥ ``tau`` — semantic dedup whose pair work is
@@ -709,7 +708,7 @@ def semdedup(
     an engine-replicable pure function.  Shuffle shape: one equi-join
     on the cluster id; within-cluster pairs are the algorithm's own
     bound.  Output: (vec_id, cluster, keep)."""
-    a = kmeans_assignments(embeddings, k=k, iters=iters)
+    a = kmeans_assignments(embeddings, k=k)
     dot = lambda u, v: F.aggregate(  # noqa: E731
         F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -744,8 +743,6 @@ def power_iteration_top_component(
     embeddings: DataFrame,
     dim: int,
     iters: int = 3,
-    ndp: int = 9,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top principal component of the (mean-centered) embedding cloud
     via fixed-step power iteration — the whitening/decorrelation
@@ -754,7 +751,7 @@ def power_iteration_top_component(
 
     Engine-exact by the iterative-algorithm discipline (k-means /
     pagerank / GD classifier): fixed iteration count from a fixed
-    start (1/√dim everywhere), every cross-row sum rounded to ``ndp``
+    start (1/√dim everywhere), every cross-row sum rounded to 9
     decimals, every per-row dot product a strictly LEFT-ASSOCIATIVE
     64-term expression chain (so the fold order is identical in Spark
     and the SQL oracle — no list_sum whose summation order is the
@@ -779,10 +776,11 @@ def power_iteration_top_component(
     Output: (pos, component, eigenvalue) — dim rows; ``eigenvalue`` is
     the final pre-normalization norm (the Rayleigh estimate), repeated
     per row for a flat hashable schema."""
+    ndp = 9
     n_total = embeddings.count()
     if n_total == 0:
         raise ValueError("power iteration over an empty embedding table")
-    x = lambda i: F.col(vec_col)[i].cast("double")  # noqa: E731
+    x = lambda i: F.col("embedding")[i].cast("double")  # noqa: E731
     mean_row = embeddings.agg(
         *[F.round(F.sum(x(i)) / n_total, ndp).alias(f"m{i}") for i in range(dim)]
     ).first()

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
+CMS_DEPTH = 4
+CMS_WIDTH = 256
 
 
 def _alpha(m: int) -> float:
@@ -126,25 +128,18 @@ def approx_distinct(
     return out
 
 
-def cms_counts(
-    df: DataFrame,
-    value_col: str,
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
-    """Count-min sketch table (Cormode & Muthukrishnan 2005): ``depth``
-    md5-seeded hash rows × ``width`` columns of exact integer counts —
+def cms_counts(df: DataFrame, value_col: str) -> DataFrame:
+    """Count-min sketch table (Cormode & Muthukrishnan 2005): ``CMS_DEPTH``
+    md5-seeded hash rows × ``CMS_WIDTH`` columns of exact integer counts —
     (d, col, c).  One shuffle of at most depth·width rows (map-side
     partial sums collapse the Zipf head); integer arithmetic end to
     end, so a DuckDB replica is EXACT, not approximately equal.
 
     The table IS the sketch: merge = cell-wise sum, point query = min
     over the value's depth cells (:func:`cms_estimate`)."""
-    if depth < 1 or width < 2:
-        raise ValueError(f"bad CMS geometry depth={depth} width={width}")
     rows = F.explode(
         F.transform(
-            F.sequence(F.lit(0), F.lit(depth - 1)),
+            F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1)),
             lambda d: F.struct(
                 d.alias("d"),
                 (
@@ -163,7 +158,7 @@ def cms_counts(
                         16,
                         10,
                     ).cast("long")
-                    % width
+                    % CMS_WIDTH
                 ).cast("int").alias("col"),
             ),
         )
@@ -176,10 +171,7 @@ def cms_counts(
     )
 
 
-def cms_estimate(
-    cms: DataFrame, probes: DataFrame, value_col: str,
-    depth: int = 4, width: int = 256,
-) -> DataFrame:
+def cms_estimate(cms: DataFrame, probes: DataFrame, value_col: str) -> DataFrame:
     """Point queries against a CMS table: each probe value hashes to
     one cell per row; the estimate is the min — an upper bound on the
     true count (classic CMS guarantee).  Probes are a small frame; the
@@ -188,7 +180,7 @@ def cms_estimate(
         F.col(value_col),
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(depth - 1)),
+                F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1)),
                 lambda d: F.struct(
                     d.alias("d"),
                     (
@@ -207,7 +199,7 @@ def cms_estimate(
                             16,
                             10,
                         ).cast("long")
-                        % width
+                        % CMS_WIDTH
                     ).cast("int").alias("col"),
                 ),
             )

@@ -216,11 +216,7 @@ def _merge_fold_expr(syms: Column, a_sym: str, b_sym: str) -> Column:
     )
 
 
-def bpe_train(
-    documents: DataFrame,
-    n_merges: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_train(documents: DataFrame, n_merges: int = 5) -> DataFrame:
     """Distributed BPE tokenizer training (Sennrich et al. 2016): learn
     ``n_merges`` merge rules from corpus word frequencies — the actual
     tokenizer-training computation, not a proxy.
@@ -243,7 +239,7 @@ def bpe_train(
     spark = documents.sparkSession
     words = (
         documents.select(
-            F.explode(F.split(F.col(text_col), " ")).alias("w")
+            F.explode(F.split(F.col("text"), " ")).alias("w")
         )
         .filter(F.col("w") != "")
         .groupBy("w")
@@ -295,11 +291,7 @@ def bpe_train(
     )
 
 
-def bpe_encode(
-    documents: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_encode(documents: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply learned BPE merge rules (:func:`bpe_train` output) —
     tokenization, the other half of the tokenizer loop.
 
@@ -316,7 +308,7 @@ def bpe_encode(
 
     words = documents.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w"),
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w"),
     ).filter(F.col("w") != "")
     vocab = words.select("w").distinct().withColumn(
         "syms",
@@ -350,7 +342,6 @@ def pmi_collocations(
     documents: DataFrame,
     min_count: int = 5,
     k: int = 20,
-    text_col: str = "text",
 ) -> DataFrame:
     """Top-``k`` adjacent-word collocations by pointwise mutual
     information (Church & Hanks 1990) — the statistical phrase-mining
@@ -372,7 +363,7 @@ def pmi_collocations(
     portable, and runs as TakeOrdered — never a global sort.
     ``min_count`` suppresses the noise floor (PMI's known bias toward
     hapax pairs)."""
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     n = F.size(words)
     pairs = F.arrays_zip(
         F.slice(words, 1, n - 1).alias("prev"),
@@ -406,9 +397,7 @@ def pmi_collocations(
     return scored.orderBy(F.col("pmi").desc(), "prev", "cur").limit(k)
 
 
-def zipf_fit(
-    documents: DataFrame, top_k: int = 1000, text_col: str = "text"
-) -> DataFrame:
+def zipf_fit(documents: DataFrame, top_k: int = 1000) -> DataFrame:
     """Zipf's-law diagnostic: least-squares slope/intercept/R² of
     ln(frequency) against ln(rank) over the ``top_k`` most frequent
     tokens — the one-row corpus health check (natural language sits
@@ -430,7 +419,7 @@ def zipf_fit(
     freq = (
         documents.select(
             F.explode(
-                F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+                F.filter(F.split(F.col("text"), " "), lambda t: t != "")
             ).alias("token")
         )
         .groupBy("token")
@@ -452,9 +441,7 @@ def zipf_fit(
     )
 
 
-def tokenizer_stats(
-    documents: DataFrame, source_col: str = "source", text_col: str = "text"
-) -> DataFrame:
+def tokenizer_stats(documents: DataFrame) -> DataFrame:
     """Per-source tokenizer efficiency table — the capacity-planning
     numbers every pre-training run budgets from: how many BPE-class
     tokens a source yields per whitespace word (FERTILITY — high
@@ -471,13 +458,13 @@ def tokenizer_stats(
     fertility, chars_per_token)."""
     documents = spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
 
-    lower = F.lower(F.col(text_col))
+    lower = F.lower(F.col("text"))
     toks = F.regexp_extract_all(lower, F.lit(BPE_PATTERN), 0)
     per = documents.select(
-        F.col(source_col).alias("source"),
-        F.length(F.col(text_col)).alias("_chars"),
+        "source",
+        F.length(F.col("text")).alias("_chars"),
         F.size(toks).alias("_bpe"),
-        F.size(tokens_col(F.col(text_col))).alias("_ws"),
+        F.size(tokens_col(F.col("text"))).alias("_ws"),
     )
     return per.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -491,12 +478,7 @@ def tokenizer_stats(
     )
 
 
-def length_quantiles(
-    documents: DataFrame,
-    quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def length_quantiles(documents: DataFrame) -> DataFrame:
     """EXACT per-source token-length quantiles — the length-
     distribution audit behind truncation budgets and packing
     efficiency — computed scalably via the collapsed-histogram
@@ -511,16 +493,15 @@ def length_quantiles(
     cumulative count ≥ ⌈q·N⌉ (pure integer arithmetic — engine-exact,
     no interpolation).
 
-    Output: (source, n_docs, plus one `p<q>` long column per
-    quantile)."""
+    Output: (source, n_docs, p50, p90, p99) longs."""
     from pyspark.sql import Window
 
     n_tok = F.size(
-        F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+        F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     )
     hist = (
         documents.select(
-            F.col(source_col).alias("source"), n_tok.alias("len")
+            "source", n_tok.alias("len")
         )
         .groupBy("source", "len")
         .agg(F.count("*").alias("c"))
@@ -530,7 +511,7 @@ def length_quantiles(
         "n", F.sum("c").over(Window.partitionBy("source"))
     )
     aggs = [F.max("n").cast("long").alias("n_docs")]
-    for q in quantiles:
+    for q in (0.5, 0.9, 0.99):
         name = f"p{int(round(q * 100))}"
         aggs.append(
             F.min(
@@ -545,12 +526,7 @@ def length_quantiles(
     return cum.groupBy("source").agg(*aggs)
 
 
-def chunk_overlap(
-    documents: DataFrame,
-    size: int = 50,
-    stride: int = 40,
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_overlap(documents: DataFrame, size: int = 50, stride: int = 40) -> DataFrame:
     """Strided overlapping chunker (the RAG/embedding-index grain:
     ``size``-token windows every ``stride`` tokens, so consecutive
     chunks share ``size−stride`` tokens and no boundary sentence is
@@ -563,7 +539,7 @@ def chunk_overlap(
     Output: (doc_id, chunk_idx 0-based, text, n_tokens)."""
     if stride <= 0 or size < stride:
         raise ValueError("need 0 < stride <= size")
-    w = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    w = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     n = F.size(w)
     # number of chunks: 1 + ceil(max(n-size,0)/stride), at least 1 for
     # any non-empty doc
@@ -626,7 +602,7 @@ def sentences_col(text: Column) -> Column:
     return F.filter(restored, lambda s: s != "")
 
 
-def split_sentences(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def split_sentences(documents: DataFrame) -> DataFrame:
     """(doc_id, text) → one row per sentence: (doc_id, sent_idx 1-based,
     sentence, n_sents).  The grain C4's three-sentence dedup, eval-set
     construction, and sentence-level quality filters all want.  Pure map
@@ -634,7 +610,7 @@ def split_sentences(documents: DataFrame, text_col: str = "text") -> DataFrame:
     over 100 TB."""
     documents = spread(documents)  # compute-heavy per-doc map work: rebalance under-split scans
 
-    sents = sentences_col(F.col(text_col))
+    sents = sentences_col(F.col("text"))
     return (
         documents.select("doc_id", F.posexplode(sents).alias("i", "sentence"),
                          F.size(sents).alias("n_sents"))
@@ -647,11 +623,7 @@ def split_sentences(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def corpus_drift(
-    documents: DataFrame,
-    sid_col: str = "sid",
-    text_col: str = "text",
-) -> DataFrame:
+def corpus_drift(documents: DataFrame) -> DataFrame:
     """Crawl-over-crawl distribution drift: Jensen–Shannon divergence
     (base 2) between the unigram distributions of consecutive corpus
     snapshots — the monitoring signal that tells an incremental-crawl
@@ -659,7 +631,7 @@ def corpus_drift(
     new language mix, a broken extractor) BEFORE the mixture weights or
     quality gates silently shift downstream.
 
-    Input: documents tagged with an integer snapshot id ``sid_col``;
+    Input: documents tagged with an integer snapshot id ``sid``;
     one output row per consecutive (sid, sid+1) pair present.
 
     Determinism contract (the iterative-oracle discipline, see k-means/
@@ -682,8 +654,8 @@ def corpus_drift(
     corpus four times."""
     counts = (
         documents.select(
-            F.col(sid_col).cast("long").alias("sid"),
-            F.explode(F.split(F.col(text_col), " ")).alias("token"),
+            F.col("sid").cast("long").alias("sid"),
+            F.explode(F.split(F.col("text"), " ")).alias("token"),
         )
         .filter(F.col("token") != "")
         .groupBy("sid", "token")
@@ -734,12 +706,7 @@ def corpus_drift(
     )
 
 
-def text_tiling(
-    documents: DataFrame,
-    block_tokens: int = 20,
-    text_col: str = "text",
-    impl: str = "arrow",
-) -> DataFrame:
+def text_tiling(documents: DataFrame, block_tokens: int = 20) -> DataFrame:
     """TextTiling-style topic segmentation (Hearst 1997, the fixed-
     threshold variant): a document is cut into ``block_tokens``-token
     pseudo-sentence blocks; every gap between adjacent blocks scores
@@ -751,110 +718,33 @@ def text_tiling(
     Exactness contract: the rule compares SQUARED cosine as a rational
     number — ``boundary ⇔ 4·dot² < Σl²·Σr²`` — and reports
     ``floor(dot²·1e9 / (Σl²·Σr²))`` parts-per-billion, all integer
-    arithmetic on term counts, so there is NO float anywhere and the
-    DuckDB oracle replays every value exactly.  (The adaptive
-    depth-score threshold of the full algorithm trades that for a
-    float chain; the fixed threshold is the deterministic variant.)
+    arithmetic on term counts, so the DuckDB oracle replays every value
+    exactly.  (The adaptive depth-score threshold of the full algorithm
+    trades that for a float chain; the fixed threshold is the
+    deterministic variant.)
 
-    Shape: pure map stage — blocks, per-gap dot products and norms are
-    nested JVM higher-order functions over the token array (O(w²) per
-    gap with w = block size), zero shuffle, zero Python; streams over
-    100 TB inside the consuming scan.
+    Shape: one fused ``mapInPandas`` pass, zero shuffle.  Per gap the
+    two blocks' term counts are built once with ``Counter``; the
+    boundary rule is exact Python-int arithmetic and the ppb value
+    performs the same single long→double→divide→floor IEEE-754 chain
+    as the JVM/DuckDB expression, so no float divergence is possible.
+    The declarative higher-order-function form of the same rule is the
+    spec in tests/operator_specs.py; byte-identical output is pinned by
+    tests on the edge cases and the sf corpus.  As a production path it
+    was ~25x slower: nested HOF lambdas evaluate interpreted per
+    element, so its O(w²)-per-gap counting dominated the suite.
 
     ``block_tokens`` is capped at 180: the exactness contract runs on
     int64 (dot ≤ w², so the boundary compare computes 4·w⁴ and the ppb
     numerator w⁴·1e9), and 4·180⁴ ≈ 4.2e18 is the last comfortable
-    fit under 2⁶³ — beyond it ANSI mode would kill the job mid-scan.
-
-    ``impl``: ``"hof"`` is the declarative higher-order-function spec
-    above; ``"arrow"`` (default) is the fused mapInPandas twin —
-    byte-identical output (pinned by test across the edge cases AND
-    the sf corpus), same zero-shuffle plan shape, but ~25x faster:
-    nested HOF lambdas evaluate interpreted per element (no codegen),
-    so the O(w²)-per-gap counting dominated the suite, while the Arrow
-    pass does the same exact-integer arithmetic (Python ints for the
-    boundary rule, one float64 division for the ppb value — the same
-    IEEE-754 op the JVM/DuckDB expression performs) in Counter
-    lookups."""
+    fit under 2⁶³, the integer width the HOF spec and the DuckDB
+    oracle compute in."""
     if block_tokens > 180 or block_tokens < 1:
         raise ValueError(
             f"block_tokens must be in [1, 180] (int64 exactness bound), "
             f"got {block_tokens}"
         )
-    if impl not in ("arrow", "hof"):
-        raise ValueError(f"unknown text_tiling impl: {impl!r}")
-    if impl == "arrow":
-        return _text_tiling_arrow(documents, block_tokens, text_col)
     w = block_tokens
-    tokens = F.split(F.col(text_col), " ")
-    n_tokens = F.size(tokens)
-    n_blocks = F.ceil(n_tokens / F.lit(w)).cast("int")
-
-    def _cnt(arr, t):
-        return F.size(F.filter(arr, lambda e: e == t)).cast("long")
-
-    def _gap(g):
-        left = F.slice(tokens, (g - 1) * w + 1, w)
-        right = F.slice(tokens, g * w + 1, w)
-        dot = F.aggregate(
-            F.array_distinct(left),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + _cnt(left, t) * _cnt(right, t),
-        )
-        ss_l = F.aggregate(
-            F.array_distinct(left),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + _cnt(left, t) * _cnt(left, t),
-        )
-        ss_r = F.aggregate(
-            F.array_distinct(right),
-            F.lit(0).cast("long"),
-            lambda acc, t: acc + _cnt(right, t) * _cnt(right, t),
-        )
-        sim2_ppb = F.floor(
-            (dot * dot * F.lit(1_000_000_000)).cast("double") / (ss_l * ss_r)
-        ).cast("long")
-        return F.struct(
-            g.cast("int").alias("gap"),
-            sim2_ppb.alias("sim2_ppb"),
-            (4 * dot * dot < ss_l * ss_r).alias("boundary"),
-        )
-
-    gaps = F.when(
-        n_blocks >= 2,
-        F.transform(F.sequence(F.lit(1), n_blocks - 1), _gap),
-    ).otherwise(
-        F.array().cast(
-            "array<struct<gap:int,sim2_ppb:bigint,boundary:boolean>>"
-        )
-    )
-    bounds = F.filter(gaps, lambda s: s["boundary"])
-    return documents.select(
-        "doc_id",
-        n_tokens.cast("int").alias("n_tokens"),
-        n_blocks.alias("n_blocks"),
-        F.size(bounds).alias("n_boundaries"),
-        (F.size(bounds) + 1).alias("n_segments"),
-        F.array_join(
-            F.transform(bounds, lambda s: s["gap"].cast("string")), ","
-        ).alias("boundaries"),
-        F.array_join(
-            F.transform(gaps, lambda s: s["sim2_ppb"].cast("string")), ","
-        ).alias("gap_sims_ppb"),
-    )
-
-
-def _text_tiling_arrow(
-    documents: DataFrame, w: int, text_col: str
-) -> DataFrame:
-    """Fused Arrow twin of the :func:`text_tiling` HOF spec — identical
-    values (see the spec's exactness contract; equality pinned by
-    tests/test_quality.py on edge cases and the sf corpus).  Per-block
-    term counts are built once per gap with ``Counter`` (the HOF spec
-    recounts per distinct token, interpreted); the boundary rule stays
-    exact Python-int arithmetic and the ppb value performs the same
-    single long→double→divide→floor IEEE-754 chain as the JVM/DuckDB
-    expression, so no float divergence is possible."""
     documents = spread(documents)  # per-doc numpy tiling: rebalance under-split scans
 
     import math
@@ -872,7 +762,7 @@ def _text_tiling_arrow(
     def run(batches):
         for pdf in batches:
             n_tok, n_blk, n_bnd, n_seg, bnds, sims = [], [], [], [], [], []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 if text is None or (isinstance(text, float) and math.isnan(text)):
                     # split(NULL) is NULL: null token/block counts, no gaps
                     n_tok.append(None)
@@ -918,10 +808,10 @@ def _text_tiling_arrow(
                 }
             )
 
-    return documents.select("doc_id", text_col).mapInPandas(run, schema)
+    return documents.select("doc_id", "text").mapInPandas(run, schema)
 
 
-def charclass_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def charclass_stats(documents: DataFrame) -> DataFrame:
     """Character-class mix per document — the cheap script/spam signal
     web-scale quality filters run before anything tokenizes: digit
     floods (price/spam pages), non-ASCII floods in a declared-ASCII
@@ -933,7 +823,7 @@ def charclass_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     digit_frac > 0.3 or other_frac > 0.1."""
     documents = spread(documents)  # char-class regex scans: rebalance
 
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n = F.length(t)
 
     def cnt(pat):

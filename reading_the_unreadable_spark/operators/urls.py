@@ -28,7 +28,7 @@ HOST_RE = "^[a-z][a-z0-9+.-]*://([^/:?#]+)"
 PORT_RE = "^[a-z][a-z0-9+.-]*://[^/:?#]+:([0-9]+)"
 REG_DOMAIN_RE = "([^.]+\\.[^.]+)$"
 
-DEFAULT_BLOCKED_WORDS = ("casino", "poker", "viagra", "xxx")
+BLOCKED_WORDS = ("casino", "poker", "viagra", "xxx")
 
 
 def _host(lurl: Column) -> Column:
@@ -36,15 +36,13 @@ def _host(lurl: Column) -> Column:
     return F.regexp_replace(F.regexp_extract(lurl, HOST_RE, 1), ":[0-9]+$", "")
 
 
-def url_features(
-    documents: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def url_features(documents: DataFrame) -> DataFrame:
     """Adds host / reg_domain / port / path_depth / n_query_params /
     url_len / host_digit_frac — the raw signals the filter thresholds.
     Pure projections over the input (column-pruned, shuffle-free).
     Structural regexps run on the lowercased URL (schemes and hosts are
     case-insensitive per RFC 3986; path case never feeds a feature)."""
-    url = F.col(url_col)
+    url = F.col("url")
     lurl = F.lower(url)
     host = _host(lurl)
     path = F.regexp_extract(lurl, "^[a-z][a-z0-9+.-]*://[^/?#]*(/[^?#]*)", 1)
@@ -80,22 +78,17 @@ def url_features(
 def url_filter(
     documents: DataFrame,
     blocked_domains: tuple[str, ...] = (),
-    blocked_words: tuple[str, ...] = DEFAULT_BLOCKED_WORDS,
-    max_url_len: int = 200,
-    max_query_params: int = 8,
-    max_host_digit_frac: float = 0.4,
-    url_col: str = "url",
 ) -> DataFrame:
     """Per-doc keep/drop verdict with its reasons (comma-joined, stable
     order, engine-portable).  Blocklists arrive as array LITERALS in
     the plan — they are configuration-sized (UT1 is ~4M lines; at that
     size swap the literal for a broadcast join on reg_domain, same
     semantics), so no shuffle is ever introduced."""
-    feats = url_features(documents, url_col)
-    url_lc = F.lower(F.col(url_col))
+    feats = url_features(documents)
+    url_lc = F.lower(F.col("url"))
     dom_arr = F.array(*[F.lit(d) for d in blocked_domains]) if blocked_domains else None
     word_hits = F.filter(
-        F.array(*[F.lit(w) for w in blocked_words]),
+        F.array(*[F.lit(w) for w in BLOCKED_WORDS]),
         lambda w: F.contains(url_lc, w),
     )
     reasons = F.array_compact(
@@ -110,12 +103,12 @@ def url_filter(
             ),
             F.when(F.size(word_hits) > 0, F.lit("blocked_word")),
             F.when(
-                F.col("host_digit_frac") > max_host_digit_frac,
+                F.col("host_digit_frac") > 0.4,
                 F.lit("digit_host"),
             ),
-            F.when(F.col("url_len") > max_url_len, F.lit("long_url")),
+            F.when(F.col("url_len") > 200, F.lit("long_url")),
             F.when(
-                F.col("n_query_params") > max_query_params,
+                F.col("n_query_params") > 8,
                 F.lit("deep_query"),
             ),
         )
@@ -188,9 +181,7 @@ def _remove_dot_segments(path: Column) -> Column:
     return F.array_join(folded, "/")
 
 
-def canonicalize_url(
-    documents: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def canonicalize_url(documents: DataFrame) -> DataFrame:
     """Crawl-frontier URL canonicalization — the normalization pass that
     makes URL-grain dedup meaningful (the same page arrives as
     ``HTTPS://News.Example.COM:443/a/./b/../p?utm_source=x&b=2&a=1#sec``
@@ -206,7 +197,7 @@ def canonicalize_url(
     Pure projection — every rule a native expression, zero shuffle;
     schemeless inputs pass through unchanged (changed = 0).  Returns
     (doc_id, url, canonical_url, changed)."""
-    url = F.col(url_col)
+    url = F.col("url")
     u0 = F.regexp_replace(url, "#.*$", "")
     scheme = F.lower(
         F.regexp_extract(u0, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1)

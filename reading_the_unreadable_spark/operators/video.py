@@ -50,9 +50,10 @@ def _lst(kind: bytes, data: bytes) -> bytes:
     return b"LIST" + struct.pack("<I", len(body)) + body
 
 
-def encode_avi_mjpeg(frames: list[np.ndarray], fps: float = 10.0) -> bytes:
-    """List of HxWx3 uint8 RGB frames → minimal RIFF-AVI with one MJPG
-    ``00dc`` chunk per frame (the classic camera/scanner layout)."""
+def encode_avi_mjpeg(frames: list[np.ndarray]) -> bytes:
+    """List of HxWx3 uint8 RGB frames → minimal 10 fps RIFF-AVI with one
+    MJPG ``00dc`` chunk per frame (the classic camera/scanner layout)."""
+    fps = 10
     if not frames:
         raise ValueError("no frames")
     h, w = frames[0].shape[:2]
@@ -164,9 +165,7 @@ def decode_avi_frames(
 
 
 # -------------------------------------------------------------- sampling
-def sample_frame_features(
-    media: DataFrame, every_n: int = 1, payload_col: str = "payload"
-) -> DataFrame:
+def sample_frame_features(media: DataFrame, every_n: int = 1) -> DataFrame:
     """(media_ref, payload binary, …) → one row per SAMPLED frame with
     the same feature vector the image path computes — Arrow-batched
     mapInPandas; only sampled frames are JPEG-decoded."""
@@ -180,7 +179,7 @@ def sample_frame_features(
                     "width", "height", "feat", "decode_err",
                 )
             }
-            for ref, p in zip(pdf["media_ref"], pdf[payload_col]):
+            for ref, p in zip(pdf["media_ref"], pdf["payload"]):
                 if p is None:
                     continue
                 try:
@@ -213,12 +212,11 @@ def sample_frame_features(
 
 
 # ------------------------------------------------------------------ synth
-def synth_avi_bytes(
-    ref: str, n_frames: int = 6, w: int = 32, h: int = 24, fps: float = 10.0
-) -> bytes:
-    """Deterministic REAL AVI/MJPG clip for a media_ref: a ref-seeded
-    gradient that brightens per frame, so frame order is observable in
-    the decoded features."""
+def synth_avi_bytes(ref: str, n_frames: int = 6) -> bytes:
+    """Deterministic REAL 32x24 AVI/MJPG clip for a media_ref: a
+    ref-seeded gradient that brightens per frame, so frame order is
+    observable in the decoded features."""
+    w, h = 32, 24
     seed = int.from_bytes(hashlib.md5(ref.encode()).digest()[:4], "big")
     rng = np.random.Generator(np.random.PCG64(seed))
     base = rng.integers(0, 40, (h, w, 3)).astype(np.float32)
@@ -229,4 +227,4 @@ def synth_avi_bytes(
             np.clip(base + grad + i * (100.0 / max(n_frames - 1, 1)), 0, 255
                     ).astype(np.uint8)
         )
-    return encode_avi_mjpeg(frames, fps=fps)
+    return encode_avi_mjpeg(frames)

@@ -102,14 +102,14 @@ def wikitext_to_text(c: Column) -> Column:
     return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
-def wiki_extract(documents: DataFrame, text_col: str = "wikitext") -> DataFrame:
+def wiki_extract(documents: DataFrame) -> DataFrame:
     """(doc_id, wikitext) → (doc_id, text, n_chars_in, n_chars_out,
     reduction): the Wikipedia cleaning projection plus the
     size-reduction diagnostic curation dashboards track — the same
     contract shape as :func:`operators.latex.latex_strip`."""
     documents = spread(documents)  # regex-chain map stage: rebalance
-    src = F.coalesce(F.col(text_col), F.lit(""))
-    txt = wikitext_to_text(F.col(text_col))
+    src = F.coalesce(F.col("wikitext"), F.lit(""))
+    txt = wikitext_to_text(F.col("wikitext"))
     return documents.select(
         "doc_id",
         txt.alias("text"),

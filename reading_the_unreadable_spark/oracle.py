@@ -320,26 +320,3 @@ def extract(docs: pd.DataFrame, fill_columns: bool = False) -> pd.DataFrame:
     out = spans[["doc_id", "kind", "text", "media_ref", "order"]].copy()
     out["media_ref"] = out["media_ref"].where(pd.notna(out["media_ref"]), None)
     return out.sort_values(["doc_id", "order"]).reset_index(drop=True)
-
-
-def articles(spans: pd.DataFrame) -> pd.DataFrame:
-    """Secondary output: group title + following content into articles."""
-    df = spans.sort_values(["doc_id", "order"]).copy()
-    is_t = df["kind"] == "title"
-    df["article_id"] = is_t.astype(int).groupby(df["doc_id"]).cumsum()
-    rows = []
-    for (doc_id, aid), g in df.groupby(["doc_id", "article_id"], sort=True):
-        title = g.loc[g["kind"] == "title", "text"]
-        content = g.loc[g["kind"].isin(["text", "table"]), "text"]
-        media = [m for m in g["media_ref"] if m]
-        rows.append(
-            {
-                "doc_id": doc_id,
-                "article_id": int(aid),
-                "title": title.iloc[0] if len(title) else None,
-                "content": "\n\n".join(content),
-                "media_refs": media,
-                "n_spans": len(g),
-            }
-        )
-    return pd.DataFrame.from_records(rows)

@@ -62,9 +62,7 @@ def read_checkpoints(spark: SparkSession, ckpt_path: str) -> DataFrame:
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def compact_checkpoints(
-    spark: SparkSession, ckpt_path: str, max_files: int = 8
-) -> int:
+def compact_checkpoints(spark: SparkSession, ckpt_path: str) -> int:
     """Bound the checkpoint table's file count across thousands of
     resumes — the compaction half of the MERGE-INTO semantics the
     append-only parquet table stands in for (on Iceberg the append
@@ -78,9 +76,10 @@ def compact_checkpoints(
     cleanup.  Readers are never broken: the directory always contains
     at least one complete copy of every surviving row.
 
-    Returns the number of files removed (0 = under threshold)."""
+    Runs only above 8 part files; returns the number of files removed
+    (0 = under threshold)."""
     old_files = list_names(spark, ckpt_path, "part-")
-    if len(old_files) <= max_files:
+    if len(old_files) <= 8:
         return 0
     compacted = read_checkpoints(spark, ckpt_path)
     # tiny metadata table (≤ stages × n_buckets rows): one file

@@ -21,20 +21,15 @@ from ..operators.quality import gopher_filter, redact_pii
 from ..operators.urls import url_filter
 
 
-def curate(
-    pages: DataFrame,
-    blocked_domains: tuple[str, ...] = (),
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def curate(pages: DataFrame, blocked_domains: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, url, html) → (doc_id, url_kept, gopher_kept,
     final_kept, text, n_email): both gate verdicts, the final keep,
     and the redacted extracted text for kept docs."""
     uv = url_filter(
-        pages.select("doc_id", F.col(url_col).alias("url")),
+        pages.select("doc_id", "url"),
         blocked_domains=blocked_domains,
     ).select("doc_id", F.col("url_keep").cast("int").alias("url_kept"))
-    extracted = main_text(pages.select("doc_id", html_col), html_col=html_col)
+    extracted = main_text(pages.select("doc_id", "html"))
     survivors = extracted.join(
         uv.filter(F.col("url_kept") == 1).select("doc_id"), "doc_id"
     )

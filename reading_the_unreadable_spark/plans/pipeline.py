@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..operators.articles import build_articles, nest_spans
+from ..operators.articles import nest_spans
 from ..operators.geometry import docs_payload, docs_to_geo_boxes
 from ..operators.layout import layout_extract_spans
 
@@ -75,7 +75,4 @@ def extract_nested(
         extract(docs, num_partitions=num_partitions, fill_columns=fill_columns)
     )
 
-
-def extract_articles(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    return build_articles(extract(docs, num_partitions=num_partitions))
 

@@ -288,8 +288,10 @@ def _gunzip_members(data: bytes) -> bytes:
 # ------------------------------------------------------------------ sniff
 def parse_archive(data: bytes) -> tuple[str, list[dict]]:
     """(container, members) — container sniffed by magic: gzip frames
-    unwrap first (re-sniffed as tar inside), ``PK`` prefixes parse as
-    ZIP, ustar headers as TAR.  Unknown magic raises ValueError."""
+    unwrap first (re-sniffed as tar inside), a ZIP local-header or
+    end-of-central-directory signature parses as ZIP, ustar headers as
+    TAR (a tar whose first member name starts with ``PK`` stays TAR).
+    Unknown magic raises ValueError."""
     if len(data) < 4:
         raise ValueError("archive too short to sniff")
     if data[:2] == b"\x1f\x8b":
@@ -297,7 +299,7 @@ def parse_archive(data: bytes) -> tuple[str, list[dict]]:
         if len(inner) >= 262 and inner[257:262] == b"ustar":
             return "tar.gz", parse_tar(inner)
         raise ValueError("gzip payload is not a tar stream")
-    if data[:2] == b"PK":
+    if data[:4] in (_ZIP_LOCAL_SIG, _ZIP_EOCD_SIG):
         return "zip", parse_zip(data)
     if len(data) >= 262 and data[257:262] == b"ustar":
         return "tar", parse_tar(data)

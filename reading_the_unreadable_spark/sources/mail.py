@@ -48,9 +48,9 @@ MAIL_PART_SCHEMA = (
 
 
 # ------------------------------------------------------------- encodings
-def qp_encode(text: str, width: int = 72) -> str:
+def qp_encode(text: str) -> str:
     """Quoted-printable with ``=XX`` escapes for non-printables/=, soft
-    line breaks at ``width`` — deterministic, round-trips exactly."""
+    line breaks at 72 columns — deterministic, round-trips exactly."""
     out: list[str] = []
     col = 0
     for ch in text:
@@ -60,7 +60,7 @@ def qp_encode(text: str, width: int = 72) -> str:
             if (" " <= ch <= "~" and ch != "=")
             else "".join(f"={x:02X}" for x in b)
         )
-        if col + len(enc) > width:
+        if col + len(enc) > 72:
             out.append("=\n")
             col = 0
         out.append(enc)
@@ -80,9 +80,9 @@ def qp_decode(data: str) -> str:
     return raw.encode("latin-1").decode("utf-8", errors="replace")
 
 
-def b64_encode_wrapped(payload: bytes, width: int = 76) -> str:
+def b64_encode_wrapped(payload: bytes) -> str:
     enc = binascii.b2a_base64(payload, newline=False).decode("ascii")
-    return "\n".join(enc[i : i + width] for i in range(0, len(enc), width))
+    return "\n".join(enc[i : i + 76] for i in range(0, len(enc), 76))
 
 
 def _b64_decode(data: str) -> bytes:

@@ -740,23 +740,18 @@ def rewrite_data_files(
     }
 
 
-def create_tag(
-    spark: SparkSession, root: str, name: str, snapshot_id: int | None = None
-) -> int:
-    """Iceberg ``create_tag``: a named, immutable reference to a
-    snapshot (default: the current one) — the audit/report pin Iceberg
-    refs exist for, readable via ``read_snapshot(tag=...)``.
-    Re-tagging the same name to the same snapshot is idempotent; to a
-    different one it raises (tags are immutable)."""
+def create_tag(spark: SparkSession, root: str, name: str) -> int:
+    """Iceberg ``create_tag``: a named, immutable reference to the
+    current snapshot — the audit/report pin Iceberg refs exist for,
+    readable via ``read_snapshot(tag=...)``.  Re-tagging the same name
+    to the same snapshot is idempotent; to a different one it raises
+    (tags are immutable)."""
     if not name or any(c in name for c in "/\\\x00"):
         raise ValueError(f"invalid tag name {name!r}")
     known = [sid for sid, _ in _winning_manifests(spark, root)]
-    if snapshot_id is None:
-        snapshot_id = known[-1] if known else None
-    if snapshot_id not in known:
-        raise ValueError(
-            f"unknown snapshot id {snapshot_id} (known: {known})"
-        )
+    if not known:
+        raise ValueError(f"no snapshot to tag in {root}")
+    snapshot_id = known[-1]
     existing = list_tags(spark, root)
     if name in existing:
         if existing[name] == snapshot_id:

@@ -52,22 +52,19 @@ def build_warc_record(
     payload: bytes,
     *,
     target_uri: str | None = None,
-    warc_date: str = "2026-01-01T00:00:00Z",
-    record_id: str | None = None,
     content_type: str = "application/octet-stream",
 ) -> bytes:
     """One WARC/1.0 record: header block + Content-Length payload +
-    double-CRLF trailer.  ``record_id`` defaults to a deterministic
-    urn:uuid derived from the payload (fixtures must be reproducible —
-    no wall clock, no randomness)."""
-    if record_id is None:
-        h = hashlib.md5(record_type.encode() + b"\x00" + payload).hexdigest()
-        record_id = f"urn:uuid:{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:]}"
+    double-CRLF trailer.  The record id is a deterministic urn:uuid
+    derived from the payload and the date is fixed (fixtures must be
+    reproducible — no wall clock, no randomness)."""
+    h = hashlib.md5(record_type.encode() + b"\x00" + payload).hexdigest()
+    record_id = f"urn:uuid:{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:]}"
     lines = [
         b"WARC/1.0",
         b"WARC-Type: " + record_type.encode(),
         b"WARC-Record-ID: <" + record_id.encode() + b">",
-        b"WARC-Date: " + warc_date.encode(),
+        b"WARC-Date: 2026-01-01T00:00:00Z",
     ]
     if target_uri is not None:
         lines.append(b"WARC-Target-URI: " + target_uri.encode())
@@ -76,14 +73,12 @@ def build_warc_record(
     return CRLF.join(lines) + CRLF + CRLF + payload + CRLF + CRLF
 
 
-def build_http_response(
-    body: bytes, *, status: int = 200, content_type: str = "text/html"
-) -> bytes:
-    """An HTTP/1.1 response message — the payload of a WARC ``response``
-    record (status line + headers + blank line + body)."""
+def build_http_response(body: bytes) -> bytes:
+    """An HTTP/1.1 200 text/html response message — the payload of a
+    WARC ``response`` record (status line + headers + blank line + body)."""
     head = (
-        f"HTTP/1.1 {status} OK\r\n"
-        f"Content-Type: {content_type}\r\n"
+        "HTTP/1.1 200 OK\r\n"
+        "Content-Type: text/html\r\n"
         f"Content-Length: {len(body)}\r\n\r\n"
     )
     return head.encode() + body

@@ -200,7 +200,7 @@ def test_archives_from_documents_round_trips(spark):
 
 
 # ----------------------------------------------------------- property fuzz
-from hypothesis import given, settings  # noqa: E402
+from hypothesis import example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 _NAME = st.text(
@@ -214,6 +214,7 @@ _PAYLOAD = st.binary(min_size=0, max_size=400)
 @given(st.lists(st.tuples(_NAME, _PAYLOAD), min_size=1, max_size=5,
                 unique_by=lambda t: t[0]),
        st.sampled_from(["zip", "tar", "tar.gz"]))
+@example([("PK", b"")], "tar")  # a tar header starts with the member name
 def test_arbitrary_payloads_round_trip(members, kind):
     """Any byte payload — including PK / ustar / gzip magic inside —
     survives the container round trip exactly."""

@@ -54,11 +54,14 @@ def test_cc_matches_union_find_on_random_graphs(spark):
         assert got == {x: want[x] for x in touched}
 
 
-def test_cc_resolves_a_long_transitive_chain(spark):
+def test_cc_resolves_a_long_transitive_chain(spark, monkeypatch):
     # a 40-node path is the adversarial diameter case for plain label
-    # propagation; star contraction must fold it within max_rounds
+    # propagation; star contraction must fold it within 12 rounds
+    from reading_the_unreadable_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 12)
     edges = [(i, i + 1) for i in range(39)]
-    got = connected_components(_pairs_df(spark, edges), max_rounds=12)
+    got = connected_components(_pairs_df(spark, edges))
     rows = got.collect()
     assert len(rows) == 40
     assert {r["cluster_id"] for r in rows} == {0}
@@ -88,10 +91,13 @@ def test_dup_clusters_covers_singletons(spark):
         )
 
 
-def test_cc_nonconvergence_raises(spark):
+def test_cc_nonconvergence_raises(spark, monkeypatch):
+    from reading_the_unreadable_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
     edges = [(i, i + 1) for i in range(30)]
     try:
-        connected_components(_pairs_df(spark, edges), max_rounds=1)
+        connected_components(_pairs_df(spark, edges))
     except RuntimeError as e:
         assert "converge" in str(e)
     else:
@@ -336,8 +342,7 @@ def test_jaccard_verify_pairs_bitset_matches_array_path(spark):
 
 def test_band_signatures_fused_equals_composed(spark):
     """The fused band_signatures must equal
-    lsh_band_signatures(minhash_signatures(sh)) row-for-row, including
-    a non-divisible n_hashes/band_rows split (ragged last band)."""
+    lsh_band_signatures(minhash_signatures(sh)) row-for-row."""
     from operator_specs import lsh_band_signatures, minhash_signatures
     from reading_the_unreadable_spark.operators.dedup import (
         band_signatures,
@@ -353,16 +358,12 @@ def test_band_signatures_fused_equals_composed(spark):
         ],
         "doc_id long, text string",
     )
-    sh = shingles(docs, 3)
-    for n_hashes, band_rows in [(8, 2), (7, 3)]:
-        fused = {
-            (r["doc_id"], r["band"]): r["band_sig"]
-            for r in band_signatures(sh, n_hashes, band_rows).collect()
-        }
-        composed = {
-            (r["doc_id"], r["band"]): r["band_sig"]
-            for r in lsh_band_signatures(
-                minhash_signatures(sh, n_hashes), band_rows
-            ).collect()
-        }
-        assert fused == composed and fused
+    sh = shingles(docs)
+    fused = {
+        (r["doc_id"], r["band"]): r["band_sig"] for r in band_signatures(sh).collect()
+    }
+    composed = {
+        (r["doc_id"], r["band"]): r["band_sig"]
+        for r in lsh_band_signatures(minhash_signatures(sh)).collect()
+    }
+    assert fused == composed and fused

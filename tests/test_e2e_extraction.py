@@ -7,9 +7,15 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from operator_specs import articles
+
 from reading_the_unreadable_spark import oracle, synth
-from reading_the_unreadable_spark.operators.articles import _post_correct_pd, spans_frame_pd
-from reading_the_unreadable_spark.plans.pipeline import extract, extract_articles
+from reading_the_unreadable_spark.operators.articles import (
+    _post_correct_pd,
+    build_articles,
+    spans_frame_pd,
+)
+from reading_the_unreadable_spark.plans.pipeline import extract
 from reading_the_unreadable_spark.sources.docs import docs_from_rows
 
 N_DOCS = 120  # covers all case families incl. 3 XL skew docs
@@ -151,7 +157,7 @@ def test_every_doc_extracted(oracle_spans, corpus):
 
 def test_articles_shape(spark, corpus):
     docs = docs_from_rows(spark, corpus)
-    arts = extract_articles(docs).toPandas()
+    arts = build_articles(extract(docs)).toPandas()
     assert len(arts) > len(corpus)  # multiple articles per page on average
     assert set(arts.columns) == {
         "doc_id",
@@ -164,6 +170,29 @@ def test_articles_shape(spark, corpus):
     # articles with a title have non-null titles; article 0 (pre-title) may not
     titled = arts[arts["article_id"] > 0]
     assert titled["title"].notna().all()
+
+
+def test_articles_spark_equals_spec(spark, corpus, oracle_spans):
+    """build_articles over the Spark spans == the pandas ``articles``
+    spec over the oracle's spans, article for article in every doc."""
+
+    def rows(df):
+        return {
+            (r["doc_id"], int(r["article_id"])): (
+                r["title"],
+                r["content"],
+                list(r["media_refs"]),
+                int(r["n_spans"]),
+            )
+            for r in df.to_dict("records")
+        }
+
+    docs = docs_from_rows(spark, corpus)
+    got = rows(build_articles(extract(docs, num_partitions=8)).toPandas())
+    want = rows(articles(oracle_spans))
+    assert {d for d, _ in want} == {c["doc_id"] for c in corpus}
+    bad = sorted(k for k in want.keys() | got.keys() if want.get(k) != got.get(k))
+    assert not bad, [(k, want.get(k), got.get(k)) for k in bad[:5]]
 
 
 # Hand-built ordered-box frames (doc_id, kind, text, media_ref,

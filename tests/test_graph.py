@@ -96,7 +96,7 @@ def test_trustrank_flows_only_from_seeds(spark):
         [(1, 2), (2, 3), (4, 5)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r["node"]: r for r in trustrank(edges, seeds, iters=3).collect()}
+    got = {r["node"]: r for r in trustrank(edges, seeds).collect()}
     # seed keeps teleport mass; 2 and 3 receive down the chain
     assert got[1]["trust"] > 0 and got[1]["suspect"] == 0
     assert got[2]["trust"] > 0 and got[3]["trust"] > 0

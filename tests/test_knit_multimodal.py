@@ -209,10 +209,10 @@ def test_media_features_png_end_to_end(spark):
             (f"p{i}.png", "image", bytearray(encode_png(img, filter_type=i % 5)), 24, 16, None)
         )
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = extract_media_features(media, resize_to=(8, 8)).collect()
+    got = extract_media_features(media).collect()
     assert len(got) == 6
     for r in got:
-        assert (r["width"], r["height"]) == (8, 8)
+        assert (r["width"], r["height"]) == (24, 16)
         assert abs(sum(r["feat"][4:]) - 1.0) < 1e-5
 
 

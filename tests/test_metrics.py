@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
-from operator_specs import cer_summary
-from reading_the_unreadable_spark.operators.metrics import cer, page_coverage
+from operator_specs import cer, cer_summary
+from pyspark.sql import functions as F
+
+from reading_the_unreadable_spark.operators.metrics import cer_spans, page_coverage
 
 
 def test_coverage_simple(spark):
@@ -16,7 +18,7 @@ def test_coverage_simple(spark):
         ("d2", 0.0, 0.0, 40.0, 40.0),
     ]
     df = spark.createDataFrame(rows, "doc_id string, x1 double, y1 double, x2 double, y2 double")
-    got = {r["doc_id"]: r for r in page_coverage(df, num_partitions=2).collect()}
+    got = {r["doc_id"]: r for r in page_coverage(df.repartition(2, "doc_id")).collect()}
     assert got["d1"]["covered_frac"] == 1.0
     assert abs(got["d1"]["overlap_frac"] - 0.5) < 1e-6  # middle box doubles 40/80
     assert got["d2"]["covered_frac"] == 1.0
@@ -39,13 +41,17 @@ def test_cer(spark):
     s = cer_summary(cer(preds, gt)).first()
     assert s["n_docs"] == 2
     assert s["median_cer"] < 0.05
+    # one span per doc: the span-grain operator equals the whole-doc spec
+    one_span = lambda df: df.withColumn("span_idx", F.lit(0))  # noqa: E731
+    spans = {r["doc_id"]: r for r in cer_spans(one_span(preds), one_span(gt)).collect()}
+    assert {d: (r["cer"], r["gt_len"]) for d, r in spans.items()} == {
+        d: (r["cer"], r["gt_len"]) for d, r in got.items()
+    }
 
 
 def test_cer_spans_missing_prediction_counts_as_deletion(spark):
     """Span-grain CER: a ground-truth span the system never produced is
     charged its full length, not silently excluded."""
-    from reading_the_unreadable_spark.operators.metrics import cer_spans
-
     gt = spark.createDataFrame(
         [("a", 0, "hello world"), ("a", 1, "gone span")],
         "doc_id string, span_idx int, text string",
@@ -89,7 +95,7 @@ def test_coverage_on_pipeline_boxes(spark):
     from reading_the_unreadable_spark.sources.docs import docs_from_rows
 
     docs = docs_from_rows(spark, synth.make_corpus(12, seed_tag="cov"))
-    cov = page_coverage(docs_to_boxes(docs), num_partitions=4)
+    cov = page_coverage(docs_to_boxes(docs).repartition(4, "doc_id"))
     rows = cov.collect()
     assert len(rows) == 12
     assert all(0 < r["covered_frac"] <= 1.0 for r in rows)
@@ -100,8 +106,6 @@ def test_cer_spans_pure_hallucination_doc_not_null(spark):
     """A doc present ONLY in predictions has gt_len 0; its cer must be a
     finite penalty (the inserted-char count), never NULL/dropped — a
     NULL would silently vanish from cer_summary's percentiles."""
-    from reading_the_unreadable_spark.operators.metrics import cer_spans
-
     gt = spark.createDataFrame(
         [("a", 0, "hello")], "doc_id string, span_idx int, text string"
     )

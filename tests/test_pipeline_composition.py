@@ -41,7 +41,10 @@ def test_full_cleaning_pipeline(spark):
         ),
         _page(
             "doc-b",
-            ["another article entirely with its own sentence content here."],
+            [
+                "another article entirely with its own sentence content here.",
+                "and a second line of this other article is long enough too.",
+            ],
             shared,
         ),
         _page("doc-c", [], shared),  # boilerplate-only page
@@ -49,17 +52,18 @@ def test_full_cleaning_pipeline(spark):
     df = spark.createDataFrame(rows, "doc_id string, html string")
 
     # 1. HTML → main content (nav/footer drop, every doc keeps a row)
-    main = main_text(df, separator="\n")
+    main = main_text(df)
     got_main = {r["doc_id"]: r["text"] for r in main.collect()}
     assert "home" not in got_main["doc-a"] and "terms" not in got_main["doc-a"]
     assert got_main["doc-c"] == shared  # only the boilerplate para survived
 
-    # 2. C4 line rules (all these sentences end with '.', ≥5 words)
-    cleaned = c4_line_filters(main, min_lines=1)
+    # 2. C4 line rules (all these sentences end with '.', ≥5 words; the
+    #    blank lines between blocks are dropped; doc-c has too few lines)
+    cleaned = c4_line_filters(main)
     assert {r["doc_id"]: r["kept"] for r in cleaned.collect()} == {
         "doc-a": 1,
         "doc-b": 1,
-        "doc-c": 1,
+        "doc-c": 0,
     }
 
     # 3. corpus-wide paragraph dedup: the shared sentence survives only in

@@ -273,7 +273,7 @@ def test_winnowing_guarantee_property(spark, seed, run_len, pre, post):
     fingerprint, wherever the run sits in either document."""
     import numpy as np
 
-    from reading_the_unreadable_spark.operators.dedup import winnow_pairs
+    from reading_the_unreadable_spark.operators.dedup import winnow_fingerprints
 
     rng = np.random.Generator(np.random.PCG64(seed))
     vocab = [f"w{i}" for i in range(50)]
@@ -284,11 +284,8 @@ def test_winnowing_guarantee_property(spark, seed, run_len, pre, post):
     docs = spark.createDataFrame(
         [(1, doc_a), (2, doc_b)], "doc_id long, text string"
     )
-    pairs = winnow_pairs(docs, min_shared=1).collect()
-    assert any(r["doc_a"] == 1 and r["doc_b"] == 2 for r in pairs), (
-        doc_a,
-        doc_b,
-    )
+    fps = {r["doc_id"]: set(r["fingerprints"]) for r in winnow_fingerprints(docs).collect()}
+    assert fps[1] & fps[2], (doc_a, doc_b)
 
 
 @settings(max_examples=40, deadline=None)

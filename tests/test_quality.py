@@ -253,10 +253,6 @@ def test_contamination_flags(spark):
     for bad in ("BatchEvalPython", "ArrowEvalPython"):
         assert bad not in plan, plan[:1500]
 
-    # min_overlap raises the bar
-    strict = contamination_flags(docs, bench, n=8, min_overlap=3)
-    assert not any(r["contaminated"] for r in strict.collect())
-
 
 def test_ccnet_buckets_equal_terciles(spark):
     """CCNet bucketing: per-language equal-count head/middle/tail (the
@@ -556,7 +552,7 @@ def test_dedup_lines_within_doc_and_boilerplate(spark):
         ("doc-c", f"gamma body\n{boiler}"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    got = {r["doc_id"]: r for r in dedup_lines(df, boiler_min_docs=3).collect()}
+    got = {r["doc_id"]: r for r in dedup_lines(df).collect()}
     # boiler appears in 3 distinct docs -> dropped from every doc,
     # including the first one that carried it
     assert got["doc-a"]["text"] == "alpha body\n\nalpha tail"
@@ -578,7 +574,7 @@ def test_dedup_lines_below_threshold_kept(spark):
         ("doc-b", "shared line\nunique b"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    got = {r["doc_id"]: r for r in dedup_lines(df, boiler_min_docs=3).collect()}
+    got = {r["doc_id"]: r for r in dedup_lines(df).collect()}
     # df=2 < 3: the shared line is NOT boilerplate, kept in both docs
     assert got["doc-a"]["text"] == "shared line\nunique a"
     assert got["doc-b"]["text"] == "shared line\nunique b"
@@ -592,7 +588,7 @@ def test_dedup_lines_empty_lines_never_collide(spark):
         [("doc-a", "x\n\n\ny"), ("doc-b", "\n\nz"), ("doc-c", "\nw")],
         "doc_id string, text string",
     )
-    got = {r["doc_id"]: r for r in dedup_lines(df, boiler_min_docs=2).collect()}
+    got = {r["doc_id"]: r for r in dedup_lines(df).collect()}
     # blank lines normalize to empty -> null fp -> never duplicates,
     # within-doc or corpus-wide
     assert got["doc-a"]["text"] == "x\n\n\ny"
@@ -667,14 +663,14 @@ def test_dedup_lines_host_scoped_verdict(spark):
         ("b2", "h2", "global line\nbody b2"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, host string, text string")
-    scoped = {r["doc_id"]: r for r in dedup_lines(df, boiler_min_docs=3, scope_col="host").collect()}
+    scoped = {r["doc_id"]: r for r in dedup_lines(df, scope_col="host").collect()}
     # "global line": df=4 corpus-wide, but 2 per host -> kept everywhere
     assert scoped["a1"]["text"] == "global line\nbody a1"
     assert scoped["b1"]["text"] == "global line\nbody b1"
     # "tpl one": 3 distinct docs on h1 -> host template, dropped
     assert scoped["a3"]["text"] == "body a3"
     assert scoped["a1"]["n_dropped_boiler"] == 1
-    unscoped = {r["doc_id"]: r for r in dedup_lines(df, boiler_min_docs=3).collect()}
+    unscoped = {r["doc_id"]: r for r in dedup_lines(df).collect()}
     # global verdict drops "global line" (df=4 >= 3)
     assert unscoped["a1"]["text"] == "body a1"
     assert unscoped["b1"]["text"] == "body b1"
@@ -748,14 +744,15 @@ def test_charclass_stats(spark):
 
 
 def test_text_tiling_arrow_equals_hof_spec(spark):
-    """The fused Arrow twin (default impl) is byte-identical to the
-    declarative HOF spec: edge cases (empty string, repeated spaces,
+    """The fused Arrow operator is byte-identical to the declarative
+    HOF spec: edge cases (empty string, repeated spaces,
     exact-multiple lengths, null text, repeated tokens) plus a slice
     of the real sf0.001 corpus, plus block_tokens=180 — the int64
     exactness ceiling where the ppb value's long→double cast actually
     rounds, so IEEE-754 parity is exercised, not just small-int
     arithmetic."""
     import pyspark.sql.functions as F
+    from operator_specs import text_tiling_hof
 
     from reading_the_unreadable_spark.operators.textstats import text_tiling
 
@@ -773,27 +770,21 @@ def test_text_tiling_arrow_equals_hof_spec(spark):
         return sorted(tuple(r) for r in out.collect())
 
     for w in (1, 2, 4):
-        assert canon(text_tiling(df, w, impl="arrow")) == canon(
-            text_tiling(df, w, impl="hof")
-        ), w
+        assert canon(text_tiling(df, w)) == canon(text_tiling_hof(df, w)), w
 
     # double-rounding parity at the 180 cap (w^4 * 1e9 > 2^53)
     big = spark.createDataFrame(
         [("g", " ".join(f"t{i % 11}" for i in range(400)))],
         "doc_id string, text string",
     )
-    assert canon(text_tiling(big, 180, impl="arrow")) == canon(
-        text_tiling(big, 180, impl="hof")
-    )
+    assert canon(text_tiling(big, 180)) == canon(text_tiling_hof(big, 180))
 
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
         .limit(200)
     )
-    assert canon(text_tiling(docs, 10, impl="arrow")) == canon(
-        text_tiling(docs, 10, impl="hof")
-    )
+    assert canon(text_tiling(docs, 10)) == canon(text_tiling_hof(docs, 10))
 
 
 def test_text_tiling_block_size_bound(spark):

@@ -119,14 +119,9 @@ def test_bloom_no_false_negatives(spark):
 
 
 def test_sketch_geometry_bounds(spark):
-    from reading_the_unreadable_spark.operators.sketches import (
-        bloom_bits,
-        cms_counts,
-    )
+    from reading_the_unreadable_spark.operators.sketches import bloom_bits
 
     df = spark.createDataFrame([("x",)], "v string")
-    with pytest.raises(ValueError, match="CMS"):
-        cms_counts(df, "v", depth=0)
     with pytest.raises(ValueError, match="bloom"):
         bloom_bits(df, "v", k=0)
 

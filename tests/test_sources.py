@@ -376,8 +376,6 @@ def test_incremental_read_reads_only_window_manifests(spark, tmp_path, monkeypat
     from reading_the_unreadable_spark.sources import snapshots as S
 
     root = str(tmp_path / "tbl")
-    for i in range(6):
-        S.append_snapshot(spark.range(i * 10, (i + 1) * 10).toDF("doc_id"), root)
     reads = []
     real = S.read_file
 
@@ -387,6 +385,13 @@ def test_incremental_read_reads_only_window_manifests(spark, tmp_path, monkeypat
         return real(spark_, path)
 
     monkeypatch.setattr(S, "read_file", counting)
+    for i in range(6):
+        S.append_snapshot(spark.range(i * 10, (i + 1) * 10).toDF("doc_id"), root)
+        if i == 0:
+            reads.clear()
+            assert S.create_tag(spark, root, "first") == 1
+            assert reads == []
+    reads.clear()
     got = sorted(r["doc_id"] for r in S.incremental_read(spark, root, after=5).collect())
     assert got == list(range(50, 60))
     assert len(reads) == 1 and "/manifests/snap-6-" in reads[0]
@@ -402,9 +407,6 @@ def test_incremental_read_reads_only_window_manifests(spark, tmp_path, monkeypat
     assert len(reads) == 1 and "/manifests/snap-1-" in reads[0]
 
     reads.clear()
-    assert S.create_tag(spark, root, "first", snapshot_id=1) == 1
-    assert reads == []
-
     got = S.read_snapshot(spark, root, tag="first")
     assert sorted(r["doc_id"] for r in got.collect()) == list(range(10))
     assert len(reads) == 1 and "/manifests/snap-1-" in reads[0]
@@ -527,17 +529,18 @@ def test_snapshot_tags(spark, tmp_path):
     mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
         "id as doc_id", "id % 7 as v"
     ).repartition(2)
+    with pytest.raises(ValueError, match="no snapshot"):
+        S.create_tag(spark, root, "nope")
     for i in range(5):
         S.append_snapshot(mk(i * 50, (i + 1) * 50), root)  # snaps 1-5
+        if i == 1:
+            assert S.create_tag(spark, root, "audit-q1") == 2
 
-    assert S.create_tag(spark, root, "audit-q1", snapshot_id=2) == 2
-    assert S.create_tag(spark, root, "latest") == 5  # default: current
+    assert S.create_tag(spark, root, "latest") == 5  # the current snapshot
     assert S.list_tags(spark, root) == {"audit-q1": 2, "latest": 5}
-    assert S.create_tag(spark, root, "audit-q1", snapshot_id=2) == 2  # idempotent
+    assert S.create_tag(spark, root, "latest") == 5  # idempotent
     with pytest.raises(ValueError, match="immutable"):
-        S.create_tag(spark, root, "audit-q1", snapshot_id=3)
-    with pytest.raises(ValueError, match="unknown snapshot"):
-        S.create_tag(spark, root, "nope", snapshot_id=99)
+        S.create_tag(spark, root, "audit-q1")
 
     assert S.read_snapshot(spark, root, tag="audit-q1").count() == 100
     with pytest.raises(ValueError, match="unknown tag"):
