@@ -2765,7 +2765,7 @@ def q_pdf_extract(spark, sf):
 
     # PDF build+crypt is the whole per-row cost: rebalance under-split scans
     payloads = spread(d).mapInPandas(enc, "doc_id string, payload binary")
-    return parse_pdf_spans(payloads)
+    return parse_pdf_spans(payloads).select("doc_id", "page", "run", "x", "y", "text")
 
 
 def q_combine_segments(spark, sf):
@@ -3448,7 +3448,7 @@ def q_page_blocks_pixels(spark, sf):
     media = spread(d).mapInPandas(
         gen, "media_ref string, kind string, payload binary"
     )
-    blocks = detect_page_blocks(media, gap_x=8, gap_y=4)
+    blocks = detect_page_blocks(media)
     return (
         blocks.groupBy("media_ref")
         .agg(F.count("*").cast("long").alias("n_blocks"))
@@ -3498,7 +3498,7 @@ def q_xy_cut_pixels(spark, sf):
     media = spread(d).mapInPandas(
         gen, "media_ref string, kind string, payload binary"
     )
-    ordered = add_xy_cut_order(detect_page_blocks(media, gap_x=8, gap_y=4))
+    ordered = add_xy_cut_order(detect_page_blocks(media))
     # column-major iff every block with order <= m (m = n/2) is in the
     # left column (x1 < 140); n per doc comes from a window, the flag
     # sums in a plain aggregation
@@ -3629,9 +3629,9 @@ def q_media_pipeline(spark, sf):
     aud = extract_audio_features(media.filter(F.col("kind") == "audio")).select(
         "kind", F.element_at("feat", 1).alias("f0")  # RMS
     )
-    vid = sample_frame_features(
-        media.filter(F.col("kind") == "video"), every_n=2
-    ).select(F.lit("video").alias("kind"), F.element_at("feat", 3).alias("f0"))
+    vid = sample_frame_features(media.filter(F.col("kind") == "video")).select(
+        F.lit("video").alias("kind"), F.element_at("feat", 3).alias("f0")
+    )
     return (
         img.unionByName(aud)
         .unionByName(vid)

@@ -1,7 +1,9 @@
 """Execution policy shared by every operator: where a repartition's width
 is set, where a plan is cut into stages, how a higher-order function
-binds an expression once, the Hadoop-FS primitives that state and
-scratch files go through, and the Python worker's per-task import cost.
+binds an expression once, how a Python stage decodes binary payloads
+and quarantines the ones that fail, how it re-chunks a doc-clustered
+stream, the Hadoop-FS primitives that state and scratch files go
+through, and the Python worker's per-task import cost.
 
 This module imports nothing from the package, so any module can import
 it at top level.
@@ -16,6 +18,7 @@ import sys
 import tempfile
 import uuid
 import zipimport
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,6 +117,92 @@ def bind_once(expr: Column, fn) -> Column:
     one-element array transform makes the lambda variable the
     materialised value."""
     return F.element_at(F.transform(F.array(expr), fn), 1)
+
+
+# ------------------------------------------------------- Python stages
+# What a payload decoder may raise on bad input.  Anything else is a
+# decoder bug and fails the task.
+QUARANTINE_ERRORS = (ValueError, NotImplementedError)
+
+
+def quarantine_reason(err: Exception) -> str:
+    """The reason a quarantine row carries: ``Type: message``, cut at
+    200 characters."""
+    return f"{type(err).__name__}: {err}"[:200]
+
+
+def decode_payloads(
+    frame: DataFrame,
+    schema: str,
+    keys: tuple[str, ...],
+    decode: Callable[[bytes], Iterable[tuple]],
+    quarantine: tuple = (),
+    payload: str = "payload",
+) -> DataFrame:
+    """Decode the binary ``payload`` column of ``frame`` into rows of
+    ``schema`` in one ``mapInPandas`` stage, one Python call per Arrow
+    batch.  Every input row gets a defined outcome, so no payload can
+    fail the task.
+
+    The first ``len(keys)`` output columns copy the input columns
+    ``keys``, and the last output column is the reason.  ``decode(b)``
+    yields the values of every other column of one output row, reason
+    included (None for a decoded row).  A null payload, or one whose
+    decode raises a :data:`QUARANTINE_ERRORS` error, gets exactly one
+    quarantine row: the key, then ``quarantine`` (all NULL when empty),
+    then the reason (``null payload`` or :func:`quarantine_reason`).
+
+    Columns are built as object Series, so Arrow converts each value as
+    the schema types it: 64-bit integers stay exact where a column
+    with NULLs would otherwise pass through float64.  A batch that
+    yields no rows yields no frame."""
+    names = [f.split(" ")[0] for f in schema.split(", ")]
+    fill = quarantine or (None,) * (len(names) - len(keys) - 1)
+
+    def fn(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out: list[tuple] = []
+            for *key, p in zip(*(pdf[k] for k in keys), pdf[payload]):
+                if p is None:
+                    rows = [(*fill, "null payload")]
+                else:
+                    try:
+                        rows = list(decode(bytes(p)))
+                    except QUARANTINE_ERRORS as e:
+                        rows = [(*fill, quarantine_reason(e))]
+                out += [(*key, *row) for row in rows]
+            if out:
+                cols = zip(names, zip(*out, strict=True), strict=True)
+                yield pd.DataFrame({n: pd.Series(c, dtype=object) for n, c in cols})
+
+    return frame.mapInPandas(fn, schema=schema)
+
+
+def doc_complete_stream(batches, frame_fn):
+    """mapInPandas wrapper: one Python call per Arrow batch (not per doc).
+    Batches may split a document, so a tail buffer holds the last doc_id's
+    rows until the next batch proves it complete — the classic
+    partition-iterator re-chunking pattern."""
+    import pandas as pd
+
+    buf: pd.DataFrame | None = None
+    for pdf in batches:
+        if buf is not None and len(buf):
+            pdf = pd.concat([buf, pdf], ignore_index=True)
+            buf = None
+        if not len(pdf):
+            continue
+        last = pdf["doc_id"].iloc[-1]
+        first_of_last = int((pdf["doc_id"].to_numpy() == last).argmax())
+        if first_of_last == 0:
+            buf = pdf
+            continue
+        yield frame_fn(pdf.iloc[:first_of_last])
+        buf = pdf.iloc[first_of_last:].reset_index(drop=True)
+    if buf is not None and len(buf):
+        yield frame_fn(buf)
 
 
 # ------------------------------------------------------- Hadoop FS helpers

@@ -18,20 +18,21 @@ filters on (silence/clipping/tone detection): duration, RMS level,
 zero-crossing rate, spectral centroid, and an 8-band octave energy
 profile from a numpy rFFT — no external DSP library.
 
-Scale shape: identical to the image path — ``mapInPandas`` over binary
-payloads (one Python entry per Arrow batch), payloads never collected,
-never in a row-wise UDF.
+Scale shape: identical to the image path — the payload-decode stage of
+:func:`..execution.decode_payloads` (one Python entry per Arrow batch,
+a defined outcome for every payload), payloads never collected, never
+in a row-wise UDF.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..execution import decode_payloads
 
 N_BANDS = 8
 AUDIO_FEATURE_SCHEMA = (
@@ -576,48 +577,21 @@ def audio_features(samples: np.ndarray, rate: int) -> np.ndarray:
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
     """(media_ref, kind, payload binary, …) → one row per clip with
-    decoded audio metadata + feature vector — Arrow-batched mapInPandas,
-    payloads never leave the executors (same contract as the image
-    path)."""
+    decoded audio metadata + feature vector, through
+    :func:`..execution.decode_payloads`."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_ref", "kind", "n_bytes", "sha1",
-                    "sample_rate", "n_channels", "duration_ms", "feat",
-                    "decode_err",
-                )
-            }
-            for ref, kind, p in zip(pdf["media_ref"], pdf["kind"], pdf["payload"]):
-                if p is None:
-                    continue
-                b = bytes(p)
-                rows["media_ref"].append(ref)
-                rows["kind"].append(kind)
-                rows["n_bytes"].append(len(b))
-                rows["sha1"].append(hashlib.sha1(b).hexdigest())
-                try:
-                    rate, samples = decode_audio(b)
-                except (ValueError, NotImplementedError) as e:
-                    # quarantine, don't kill the task (see image path)
-                    rows["sample_rate"].append(0)
-                    rows["n_channels"].append(0)
-                    rows["duration_ms"].append(0)
-                    rows["feat"].append([0.0] * (4 + N_BANDS))
-                    rows["decode_err"].append(f"{type(e).__name__}: {e}"[:200])
-                    continue
-                rows["sample_rate"].append(int(rate))
-                rows["n_channels"].append(int(samples.shape[1]))
-                rows["duration_ms"].append(int(round(1000 * samples.shape[0] / rate)))
-                rows["feat"].append(audio_features(samples, rate).tolist())
-                rows["decode_err"].append(None)
-            if not rows["media_ref"]:
-                continue  # empty frame would dtype-confuse Arrow (list cols)
-            yield pd.DataFrame(rows)
+    def rows(b: bytes):
+        rate, samples = decode_audio(b)
+        yield (
+            len(b), hashlib.sha1(b).hexdigest(), int(rate), int(samples.shape[1]),
+            int(round(1000 * samples.shape[0] / rate)),
+            audio_features(samples, rate).tolist(), None,
+        )
 
-    return media.mapInPandas(fn, schema=AUDIO_FEATURE_SCHEMA)
+    return decode_payloads(
+        media, AUDIO_FEATURE_SCHEMA, ("media_ref", "kind"), rows,
+        (0, None, 0, 0, 0, [0.0] * (4 + N_BANDS)),
+    )
 
 
 # ------------------------------------------------------------------ synth

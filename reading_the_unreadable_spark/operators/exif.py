@@ -8,9 +8,9 @@ orders of magnitude cheaper than decode.  The reference reads images
 with cv2 and never touches EXIF (`send_to_lm_functions.py:715-737`);
 this is a beyond-reference member of the codec family
 (`operators/jpeg.py`, `operators/tiff.py`) and follows its conventions:
-pure-numpy/stdlib parsing inside ``mapInPandas``, loud ``ValueError``
-on malformed structures, quarantine-row error surfacing at the frame
-level.
+pure-numpy/stdlib parsing inside the payload-decode stage of
+:func:`..execution.decode_payloads`, loud ``ValueError`` on malformed
+structures.
 
 Wire format implemented (EXIF 2.3 over TIFF 6.0):
 
@@ -24,18 +24,16 @@ Wire format implemented (EXIF 2.3 over TIFF 6.0):
 
 A payload with no APP1/Exif marker yields all-NULL fields (absence is
 data, not an error); a structurally corrupt EXIF block raises
-``ValueError``, which the frame-level extractor converts into a
-quarantine row so one bad image never sinks its batch.
+``ValueError``, and the decode stage turns it into a quarantine row.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..execution import decode_payloads
 
 # IFD0
 TAG_MAKE = 0x010F
@@ -267,29 +265,13 @@ EXIF_SCHEMA = (
 
 
 def exif_features(files: DataFrame) -> DataFrame:
-    """(doc_id, payload binary) → one typed EXIF row per image via
-    ``mapInPandas`` (Arrow batches; the codec-family scale shape —
-    payloads never leave the executor).  Missing EXIF → NULL fields;
-    a malformed block → a quarantine row with ``err`` set."""
+    """(doc_id, payload binary) → one typed EXIF row per image, through
+    :func:`..execution.decode_payloads`.  Missing EXIF → NULL fields."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                base = {
-                    "doc_id": doc_id, "make": None, "model": None,
-                    "orientation": None, "datetime": None,
-                    "exposure_s": None, "f_number": None, "iso": None,
-                    "width": None, "height": None, "gps_lat": None,
-                    "gps_lon": None, "err": None,
-                }
-                try:
-                    parsed = parse_exif(bytes(payload))
-                    if parsed is not None:
-                        base.update(parsed)
-                except ValueError as exc:
-                    base["err"] = str(exc)
-                rows.append(base)
-            yield pd.DataFrame(rows)
+    fields = [f.split(" ")[0] for f in EXIF_SCHEMA.split(", ")][1:-1]
 
-    return files.mapInPandas(fn, EXIF_SCHEMA)
+    def rows(b: bytes):
+        parsed = parse_exif(b) or {}
+        yield (*(parsed.get(k) for k in fields), None)
+
+    return decode_payloads(files, EXIF_SCHEMA, ("doc_id",), rows)

@@ -10,11 +10,10 @@ few bits, so near-duplicates are pairs within a small Hamming radius.
 
 Scale design (the SimHash discipline, `operators/dedup.py`):
 
-- **Hashing** is one ``mapInPandas`` pass over the payload column —
-  decode through the from-scratch codecs (`multimodal.decode_image`),
-  undecodable payloads quarantined as ``decode_err`` rows (never a
-  task kill); the 64-bit hash leaves the stage as one BIGINT per
-  image, payload bytes never shuffle.
+- **Hashing** is one pass of :func:`..execution.decode_payloads` over
+  the payload column — decode through the from-scratch codecs
+  (`multimodal.decode_image`); the 64-bit hash leaves the stage as one
+  BIGINT per image, payload bytes never shuffle.
 - **Pairing** bit-slices the hash into ``n_bands`` disjoint slices and
   equi-joins on (band, slice-value): by pigeonhole, any pair within
   Hamming distance ``n_bands - 1`` agrees on at least one full slice,
@@ -42,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..execution import spread
+from ..execution import decode_payloads, spread
 from .multimodal import decode_image, resize_nearest
 
 DHASH_SCHEMA = "id long, dhash long, decode_err string"
@@ -58,30 +57,19 @@ def dhash64(arr: np.ndarray) -> int:
     return int(bits @ (np.uint64(1) << np.arange(64, dtype=np.uint64)))
 
 
+def _signed64(h: int) -> int:
+    """An unsigned 64-bit hash as the signed BIGINT that stores it
+    (two's complement view)."""
+    return h - (1 << 64) if h >= (1 << 63) else h
+
+
 def image_dhash(media: DataFrame) -> DataFrame:
-    """(doc_id, payload binary) → (id, dhash bigint, decode_err).  One
-    mapInPandas pass; corrupt payloads quarantine (null hash + err)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, errs = [], [], []
-            for i, payload in zip(pdf["doc_id"], pdf["payload"]):
-                ids.append(int(i))
-                try:
-                    h = dhash64(decode_image(bytes(payload)))
-                    # store as signed 64-bit (two's complement view)
-                    hashes.append(h - (1 << 64) if h >= (1 << 63) else h)
-                    errs.append(None)
-                except (ValueError, NotImplementedError) as e:
-                    hashes.append(None)
-                    errs.append(f"{type(e).__name__}: {e}"[:200])
-            yield pd.DataFrame(
-                {"id": ids,
-                 "dhash": pd.Series(hashes, dtype="Int64"),
-                 "decode_err": pd.Series(errs, dtype=object)}
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(fn, schema=DHASH_SCHEMA)
+    """(doc_id, payload binary) → (id, dhash bigint, decode_err), through
+    :func:`..execution.decode_payloads`."""
+    return decode_payloads(
+        media.select("doc_id", "payload"), DHASH_SCHEMA, ("doc_id",),
+        lambda b: [(_signed64(dhash64(decode_image(b))), None)],
+    )
 
 
 def dhash_pairs(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -215,29 +203,13 @@ def ahash64(arr: np.ndarray) -> int:
 
 def image_ahash(media: DataFrame) -> DataFrame:
     """(doc_id, payload binary) → (id, ahash bigint, decode_err): average
-    hash over the same one-pass mapInPandas shape — the member of the
-    perceptual family whose bits an oracle can replay in EXACT integer
-    arithmetic (see :func:`ahash64`)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, errs = [], [], []
-            for i, payload in zip(pdf["doc_id"], pdf["payload"]):
-                ids.append(int(i))
-                try:
-                    h = ahash64(decode_image(bytes(payload)))
-                    hashes.append(h - (1 << 64) if h >= (1 << 63) else h)
-                    errs.append(None)
-                except (ValueError, NotImplementedError) as e:
-                    hashes.append(None)
-                    errs.append(f"{type(e).__name__}: {e}"[:200])
-            yield pd.DataFrame(
-                {"id": ids,
-                 "ahash": pd.Series(hashes, dtype="Int64"),
-                 "decode_err": errs}
-            )
-
-    return media.mapInPandas(fn, schema="id long, ahash long, decode_err string")
+    hash over the same decode stage — the member of the perceptual
+    family whose bits an oracle can replay in EXACT integer arithmetic
+    (see :func:`ahash64`)."""
+    return decode_payloads(
+        media, "id long, ahash long, decode_err string", ("doc_id",),
+        lambda b: [(_signed64(ahash64(decode_image(b))), None)],
+    )
 
 
 def synth_ahash_images(documents: DataFrame) -> DataFrame:

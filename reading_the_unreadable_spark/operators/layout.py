@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..execution import doc_complete_stream
 from .articles import _post_correct_pd, spans_frame_pd
 
 MERGE_WIDTH_MULTIPLIER = 1.5
@@ -384,29 +385,6 @@ def _merge_frame(pdf: pd.DataFrame, post_correct: bool = False) -> pd.DataFrame:
     return out
 
 
-def _doc_complete_stream(batches, frame_fn):
-    """mapInPandas wrapper: one Python call per Arrow batch (not per doc).
-    Batches may split a document, so a tail buffer holds the last doc_id's
-    rows until the next batch proves it complete — the classic
-    partition-iterator re-chunking pattern."""
-    buf: pd.DataFrame | None = None
-    for pdf in batches:
-        if buf is not None and len(buf):
-            pdf = pd.concat([buf, pdf], ignore_index=True)
-            buf = None
-        if not len(pdf):
-            continue
-        last = pdf["doc_id"].iloc[-1]
-        first_of_last = int((pdf["doc_id"].to_numpy() == last).argmax())
-        if first_of_last == 0:
-            buf = pdf
-            continue
-        yield frame_fn(pdf.iloc[:first_of_last])
-        buf = pdf.iloc[first_of_last:].reset_index(drop=True)
-    if buf is not None and len(buf):
-        yield frame_fn(buf)
-
-
 def vertical_overlap_pct(y1a, y2a, y1b, y2b):
     """F21 — vertical overlap percentage of two boxes, relative to the
     SMALLER box's height (reference ``bbox_functions.py:424-439``).
@@ -630,7 +608,7 @@ def layout(
     extracted SPANS are identical either way (T2 drops empty parts),
     only box geometry consumers differ."""
     merged = _sorted_frame(boxes, num_partitions, payload, fill_columns).mapInPandas(
-        lambda batches: _doc_complete_stream(
+        lambda batches: doc_complete_stream(
             batches, lambda pdf: _merge_frame(pdf, post_correct)
         ),
         schema=ORDERED_BOX_SCHEMA,
@@ -659,7 +637,7 @@ def layout_extract_spans(
     sort, explode or second Arrow round-trip.  Its span sequences are
     pinned to :func:`..oracle.extract` by tests/test_e2e_extraction.py."""
     return _sorted_frame(boxes, num_partitions, payload, fill_columns).mapInPandas(
-        lambda batches: _doc_complete_stream(
+        lambda batches: doc_complete_stream(
             batches, lambda pdf: spans_frame_pd(_merge_frame(pdf, post_correct=True))
         ),
         schema=SPAN_SCHEMA,

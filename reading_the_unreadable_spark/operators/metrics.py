@@ -12,14 +12,12 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..execution import pin_fanout, spread
+from ..execution import doc_complete_stream, pin_fanout, spread
 
 COVERAGE_SCHEMA = (
     "doc_id string, print_area double, covered_frac double, "
@@ -56,32 +54,14 @@ def _coverage_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _coverage_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    buf: pd.DataFrame | None = None
-    for pdf in batches:
-        if buf is not None and len(buf):
-            pdf = pd.concat([buf, pdf], ignore_index=True)
-            buf = None
-        if not len(pdf):
-            continue
-        last = pdf["doc_id"].iloc[-1]
-        cut = int((pdf["doc_id"].to_numpy() == last).argmax())
-        if cut == 0:
-            buf = pdf
-            continue
-        yield _coverage_frame(pdf.iloc[:cut])
-        buf = pdf.iloc[cut:].reset_index(drop=True)
-    if buf is not None and len(buf):
-        yield _coverage_frame(buf)
-
-
 def page_coverage(boxes: DataFrame) -> DataFrame:
-    """boxes(doc_id, x1..y2) → per-page coverage/overlap metrics.  A
-    page's boxes must sit in one partition, as the explode of its docs
-    row leaves them; repartition on doc_id first otherwise."""
-    df = boxes.select("doc_id", "x1", "y1", "x2", "y2")
+    """boxes(doc_id, x1..y2) → per-page coverage/overlap metrics.  One
+    exchange on doc_id puts each page's boxes in one partition, sorted
+    so each page's rows are contiguous."""
+    df = boxes.select("doc_id", "x1", "y1", "x2", "y2").repartition("doc_id")
     return df.sortWithinPartitions("doc_id").mapInPandas(
-        _coverage_stream, schema=COVERAGE_SCHEMA
+        lambda batches: doc_complete_stream(batches, _coverage_frame),
+        schema=COVERAGE_SCHEMA,
     )
 
 

@@ -16,20 +16,21 @@ The genuinely rare tails (arithmetic-coded JPEG, planar TIFF tiles,
 …) raise NotImplementedError with a clear message; swapping in PIL
 later changes only ``decode_image``.
 
-Scale design: decode/feature runs in ``mapInPandas`` (one Python entry
-per Arrow batch, per-worker init scope for model/codec state); media
-payloads never pass through a row-wise UDF and are never collected.
+Scale design: decode/feature runs in the payload-decode stage of
+:func:`..execution.decode_payloads` (one Python entry per Arrow batch,
+a defined outcome for every payload); media payloads never pass
+through a row-wise UDF and are never collected.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..execution import decode_payloads
 
 N_HIST_BINS = 16
 FEATURE_SCHEMA = (
@@ -577,54 +578,18 @@ def image_features(arr: np.ndarray) -> np.ndarray:
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
-    """mapInPandas decode → feature-extract over binary payloads.
+    """(media_ref, kind, payload binary, …) → one row per image with its
+    size, sha1 and fixed-width feature vector, through
+    :func:`..execution.decode_payloads`."""
 
-    Batch shape: one Arrow batch of (media_ref, payload) in, one batch of
-    fixed-width float features out — per-executor codec/model state would
-    hang off the iterator scope here, initialized once per worker."""
+    def rows(b: bytes):
+        arr = decode_image(b)
+        yield (
+            len(b), hashlib.sha1(b).hexdigest(), int(arr.shape[1]),
+            int(arr.shape[0]), image_features(arr).tolist(), None,
+        )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-task init scope (codec/model load goes here, once per worker)
-        for pdf in batches:
-            feats, widths, heights, errs = [], [], [], []
-            for p in pdf["payload"]:
-                if p is None:
-                    feats.append(np.zeros(4 + N_HIST_BINS, np.float32))
-                    widths.append(0)
-                    heights.append(0)
-                    errs.append(None)
-                    continue
-                try:
-                    arr = decode_image(bytes(p))
-                except (ValueError, NotImplementedError) as e:
-                    # quarantine, don't kill the task: at corpus scale a
-                    # handful of corrupt payloads is CERTAIN — the row
-                    # stays auditable via decode_err
-                    feats.append(np.zeros(4 + N_HIST_BINS, np.float32))
-                    widths.append(0)
-                    heights.append(0)
-                    errs.append(f"{type(e).__name__}: {e}"[:200])
-                    continue
-                feats.append(image_features(arr))
-                widths.append(int(arr.shape[1]))
-                heights.append(int(arr.shape[0]))
-                errs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "kind": pdf["kind"],
-                    "n_bytes": [
-                        len(bytes(p)) if p is not None else 0 for p in pdf["payload"]
-                    ],
-                    "sha1": [
-                        hashlib.sha1(bytes(p)).hexdigest() if p is not None else None
-                        for p in pdf["payload"]
-                    ],
-                    "width": widths,
-                    "height": heights,
-                    "feat": [f.tolist() for f in feats],
-                    "decode_err": errs,
-                }
-            )
-
-    return media.mapInPandas(fn, schema=FEATURE_SCHEMA)
+    return decode_payloads(
+        media, FEATURE_SCHEMA, ("media_ref", "kind"), rows,
+        (0, None, 0, 0, [0.0] * (4 + N_HIST_BINS)),
+    )

@@ -12,9 +12,10 @@ loudly on anything beyond it (encryption, other filters).
 Output grain is the LAYOUT grain: one row per text-showing operation
 with its text-space position.
 
-Spark integration is Arrow-batched ``mapInPandas`` over binary payload
-columns (per the multimodal contract: payloads never collected, never in
-a row-wise UDF).
+Spark integration is the payload-decode stage of
+:func:`..execution.decode_payloads` over binary payload columns
+(payloads never collected, never in a row-wise UDF; a PDF that fails
+to parse becomes one ``decode_err`` row).
 """
 
 from __future__ import annotations
@@ -23,14 +24,16 @@ import hashlib
 import re
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..execution import decode_payloads
 from . import pdf_crypt
 
-PDF_SPAN_SCHEMA = "doc_id string, page int, run int, x double, y double, text string"
+PDF_SPAN_SCHEMA = (
+    "doc_id string, page int, run int, x double, y double, text string, "
+    "decode_err string"
+)
 
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.S)
 _REF_RE = re.compile(rb"/Contents\s+(\d+)\s+\d+\s+R")
@@ -831,23 +834,11 @@ def decode_pdf(payload: bytes) -> list[list[tuple[float, float, str]]]:
 # ------------------------------------------------------------ Spark plumbing
 def parse_pdf_spans(df: DataFrame) -> DataFrame:
     """(doc_id, payload binary) → one row per text run with its page and
-    text-space position — Arrow-batched mapInPandas, payloads never leave
-    the executors."""
+    text-space position, through :func:`..execution.decode_payloads`."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "page", "run", "x", "y", "text")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                for pg, runs in enumerate(decode_pdf(bytes(payload))):
-                    for i, (x, y, text) in enumerate(runs):
-                        rows["doc_id"].append(doc_id)
-                        rows["page"].append(pg)
-                        rows["run"].append(i)
-                        rows["x"].append(x)
-                        rows["y"].append(y)
-                        rows["text"].append(text)
-            yield pd.DataFrame(rows)
+    def rows(b: bytes):
+        for pg, runs in enumerate(decode_pdf(b)):
+            for i, (x, y, text) in enumerate(runs):
+                yield pg, i, x, y, text, None
 
-    return df.mapInPandas(fn, schema=PDF_SPAN_SCHEMA)
+    return decode_payloads(df, PDF_SPAN_SCHEMA, ("doc_id",), rows)

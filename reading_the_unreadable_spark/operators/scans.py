@@ -10,17 +10,17 @@ the raster).  Both are classical published algorithms; both compose
 with the rest of this repo — the binarized page is exactly what the
 Group-4 TIFF writer (:mod:`tiff`/:mod:`g4`) consumes.
 
-Scale shape: per-page numpy inside ``mapInPandas`` (same contract as
-every media operator here — Arrow batches, no per-row Python UDF, no
-collect)."""
+Scale shape: per-page numpy inside the payload-decode stage of
+:func:`..execution.decode_payloads` (same as every media operator here
+— Arrow batches, no per-row Python UDF, no collect)."""
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..execution import decode_payloads
 
 SCAN_FEATURE_SCHEMA = (
     "media_ref string, otsu_threshold int, ink_ratio double, "
@@ -107,41 +107,20 @@ def deskew(arr: np.ndarray, angle_deg: float) -> np.ndarray:
 
 def scan_preprocess_features(media: DataFrame) -> DataFrame:
     """(media_ref, payload binary, …) → per-page scan diagnostics:
-    Otsu threshold, ink ratio, estimated skew.  Quarantines corrupt
-    payloads via ``decode_err`` like every media extractor here."""
+    Otsu threshold, ink ratio, estimated skew, through
+    :func:`..execution.decode_payloads`."""
     from .multimodal import decode_image
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_ref", "otsu_threshold", "ink_ratio",
-                    "skew_deg", "decode_err",
-                )
-            }
-            for ref, p in zip(pdf["media_ref"], pdf["payload"]):
-                if p is None:
-                    continue
-                rows["media_ref"].append(ref)
-                try:
-                    arr = decode_image(bytes(p))
-                except (ValueError, NotImplementedError) as e:
-                    rows["otsu_threshold"].append(0)
-                    rows["ink_ratio"].append(0.0)
-                    rows["skew_deg"].append(0.0)
-                    rows["decode_err"].append(f"{type(e).__name__}: {e}"[:200])
-                    continue
-                page, t = binarize_otsu(arr)
-                rows["otsu_threshold"].append(int(t))
-                rows["ink_ratio"].append(round(float((~page).mean()), 6))
-                rows["skew_deg"].append(round(estimate_skew(page), 3))
-                rows["decode_err"].append(None)
-            if not rows["media_ref"]:
-                continue
-            yield pd.DataFrame(rows)
+    def rows(b: bytes):
+        page, t = binarize_otsu(decode_image(b))
+        yield (
+            int(t), round(float((~page).mean()), 6),
+            round(estimate_skew(page), 3), None,
+        )
 
-    return media.mapInPandas(fn, schema=SCAN_FEATURE_SCHEMA)
+    return decode_payloads(
+        media, SCAN_FEATURE_SCHEMA, ("media_ref",), rows, (0, 0.0, 0.0)
+    )
 
 
 # ------------------------------------------------ pixels → layout blocks
@@ -211,14 +190,17 @@ def connected_component_boxes(page: np.ndarray) -> list[tuple[int, int, int, int
     return sorted(out, key=lambda b: (b[1], b[0]))
 
 
+BLOCK_GAP_X, BLOCK_GAP_Y = 8, 4  # px: glyphs closer than this share a block
+
+
 def merge_nearby_boxes(
-    boxes: list[tuple[int, int, int, int]], gap_x: int = 8, gap_y: int = 4
+    boxes: list[tuple[int, int, int, int]],
 ) -> list[tuple[int, int, int, int]]:
     """Cluster glyph/word boxes into text blocks: union boxes whose
-    bounding boxes come within (gap_x, gap_y) of each other, repeat via
-    union-find, return merged boxes in reading order.  This is the
-    classic morphological-dilation-then-CC step expressed on boxes
-    (#glyphs², fine at page scale — pages are batch-grain units)."""
+    bounding boxes come within (BLOCK_GAP_X, BLOCK_GAP_Y) of each other,
+    repeat via union-find, return merged boxes in reading order.  This
+    is the classic morphological-dilation-then-CC step expressed on
+    boxes (#glyphs², fine at page scale — pages are batch-grain units)."""
     n = len(boxes)
     parent = list(range(n))
 
@@ -233,10 +215,10 @@ def merge_nearby_boxes(
         for j in range(i + 1, n):
             x1b, y1b, x2b, y2b = boxes[j]
             if (
-                x1b <= x2a + gap_x
-                and x1a <= x2b + gap_x
-                and y1b <= y2a + gap_y
-                and y1a <= y2b + gap_y
+                x1b <= x2a + BLOCK_GAP_X
+                and x1a <= x2b + BLOCK_GAP_X
+                and y1b <= y2a + BLOCK_GAP_Y
+                and y1a <= y2b + BLOCK_GAP_Y
             ):
                 ra, rb = find(i), find(j)
                 if ra != rb:
@@ -264,53 +246,25 @@ BLOCK_SCHEMA = (
 )
 
 
-def detect_page_blocks(media: DataFrame, gap_x: int = 8, gap_y: int = 4) -> DataFrame:
+def detect_page_blocks(media: DataFrame) -> DataFrame:
     """(media_ref, payload binary, …) → one row per detected text
     BLOCK: decode → Otsu binarize → run-based connected components →
-    proximity merge.  The pixels→boxes stand-in for the reference's
-    GPU layout model (``DocLayout``): downstream the boxes feed the
-    same column-assignment / reading-order chain
-    (``operators/layout.py``) the reference feeds model detections.
-    Quarantines corrupt payloads via ``decode_err``."""
+    proximity merge, through :func:`..execution.decode_payloads`.  The
+    pixels→boxes stand-in for the reference's GPU layout model
+    (``DocLayout``): downstream the boxes feed the same column-assignment
+    / reading-order chain (``operators/layout.py``) the reference feeds
+    model detections."""
     from .multimodal import decode_image
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_ref", "block_idx", "x1", "y1", "x2", "y2",
-                    "decode_err",
-                )
-            }
-            for ref, p in zip(pdf["media_ref"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    arr = decode_image(bytes(p))
-                except (ValueError, NotImplementedError) as e:
-                    rows["media_ref"].append(ref)
-                    rows["block_idx"].append(-1)
-                    for c in ("x1", "y1", "x2", "y2"):
-                        rows[c].append(0)
-                    rows["decode_err"].append(f"{type(e).__name__}: {e}"[:200])
-                    continue
-                page, _t = binarize_otsu(arr)
-                glyphs = connected_component_boxes(page)
-                blocks = merge_nearby_boxes(glyphs, gap_x=gap_x, gap_y=gap_y)
-                for i, (x1, y1, x2, y2) in enumerate(blocks):
-                    rows["media_ref"].append(ref)
-                    rows["block_idx"].append(i)
-                    rows["x1"].append(int(x1))
-                    rows["y1"].append(int(y1))
-                    rows["x2"].append(int(x2))
-                    rows["y2"].append(int(y2))
-                    rows["decode_err"].append(None)
-            if not rows["media_ref"]:
-                continue
-            yield pd.DataFrame(rows)
+    def rows(b: bytes):
+        page, _t = binarize_otsu(decode_image(b))
+        blocks = merge_nearby_boxes(connected_component_boxes(page))
+        for i, (x1, y1, x2, y2) in enumerate(blocks):
+            yield i, int(x1), int(y1), int(x2), int(y2), None
 
-    return media.mapInPandas(fn, schema=BLOCK_SCHEMA)
+    return decode_payloads(
+        media, BLOCK_SCHEMA, ("media_ref",), rows, (-1, 0, 0, 0, 0)
+    )
 
 
 # -------------------------------------------------- XY-cut reading order

@@ -16,23 +16,24 @@ needs (decode every Nth frame, never materialize the rest): the
 ``00dc`` chunk walk is cheap byte slicing, so skipped frames cost no
 JPEG work.
 
-Scale shape: ``mapInPandas`` over binary payloads, one output row per
-SAMPLED frame — payloads never collected, never in a row-wise UDF.
+Scale shape: the payload-decode stage of
+:func:`..execution.decode_payloads`, one output row per SAMPLED frame —
+payloads never collected, never in a row-wise UDF.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..execution import decode_payloads
 from .jpeg import decode_jpeg, encode_jpeg
 from .multimodal import image_features
 
+SAMPLE_EVERY_N = 2  # sample_frame_features decodes frames 0, 2, 4, …
 FRAME_FEATURE_SCHEMA = (
     "media_ref string, frame_idx int, n_frames int, fps double, "
     "width int, height int, feat array<float>, decode_err string"
@@ -165,50 +166,24 @@ def decode_avi_frames(
 
 
 # -------------------------------------------------------------- sampling
-def sample_frame_features(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """(media_ref, payload binary, …) → one row per SAMPLED frame with
-    the same feature vector the image path computes — Arrow-batched
-    mapInPandas; only sampled frames are JPEG-decoded."""
+def sample_frame_features(media: DataFrame) -> DataFrame:
+    """(media_ref, payload binary, …) → one row per SAMPLED frame (every
+    ``SAMPLE_EVERY_N``-th) with the same feature vector the image path
+    computes, through :func:`..execution.decode_payloads`; only sampled
+    frames are JPEG-decoded."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_ref", "frame_idx", "n_frames", "fps",
-                    "width", "height", "feat", "decode_err",
-                )
-            }
-            for ref, p in zip(pdf["media_ref"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    fps, n, sampled = decode_avi_frames(bytes(p), every_n=every_n)
-                except (ValueError, NotImplementedError) as e:
-                    # quarantine, don't kill the task: one marker row
-                    rows["media_ref"].append(ref)
-                    rows["frame_idx"].append(-1)
-                    rows["n_frames"].append(0)
-                    rows["fps"].append(0.0)
-                    rows["width"].append(0)
-                    rows["height"].append(0)
-                    rows["feat"].append([])
-                    rows["decode_err"].append(f"{type(e).__name__}: {e}"[:200])
-                    continue
-                for idx, arr in sampled:
-                    rows["media_ref"].append(ref)
-                    rows["frame_idx"].append(idx)
-                    rows["n_frames"].append(n)
-                    rows["fps"].append(float(fps))
-                    rows["width"].append(int(arr.shape[1]))
-                    rows["height"].append(int(arr.shape[0]))
-                    rows["feat"].append(image_features(arr).tolist())
-                    rows["decode_err"].append(None)
-            if not rows["media_ref"]:
-                continue  # empty frame would dtype-confuse Arrow (list cols)
-            yield pd.DataFrame(rows)
+    def rows(b: bytes):
+        fps, n, sampled = decode_avi_frames(b, every_n=SAMPLE_EVERY_N)
+        for idx, arr in sampled:
+            yield (
+                idx, n, float(fps), int(arr.shape[1]), int(arr.shape[0]),
+                image_features(arr).tolist(), None,
+            )
 
-    return media.mapInPandas(fn, schema=FRAME_FEATURE_SCHEMA)
+    return decode_payloads(
+        media, FRAME_FEATURE_SCHEMA, ("media_ref",), rows,
+        (-1, 0, 0.0, 0, 0, []),
+    )
 
 
 # ------------------------------------------------------------------ synth

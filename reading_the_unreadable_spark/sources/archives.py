@@ -19,12 +19,11 @@ bundles.  Both parsed from first principles:
 
 Scale design mirrors the WARC source: archives are the natural split
 unit, so the Spark surface is a ``(source, content)`` frame of whole
-files (a ``binaryFile`` folder scan yields one) → ``mapInPandas``
-member explode — one Python crossing per Arrow batch of files,
-payload bytes never driver-side, zero exchanges (plan-pinned in
-`tests/test_plan_quality.py`).  Corrupt archives quarantine as
-``parse_err`` rows (the multimodal-module convention) instead of
-killing the task — at corpus scale corrupt containers are certain.
+files (a ``binaryFile`` folder scan yields one) → member explode in
+the payload-decode stage of :func:`..execution.decode_payloads` — one
+Python crossing per Arrow batch of files, payload bytes never
+driver-side, zero exchanges (plan-pinned in
+`tests/test_plan_quality.py`).
 
 Reference tie-in: the reference ingests from folder scans of already-
 unpacked files (`send_to_lm_functions.py:715-737`); at the 100 TB tier
@@ -42,7 +41,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from ..execution import spread
+from ..execution import decode_payloads, spread
 
 ARCHIVE_MEMBER_SCHEMA = (
     "source_file string, container string, member_name string, "
@@ -308,47 +307,21 @@ def parse_archive(data: bytes) -> tuple[str, list[dict]]:
 
 # ------------------------------------------------------------- Spark surface
 def parse_archive_frame(files: DataFrame) -> DataFrame:
-    """(source, content: binary) → one row per archive member, corrupt
-    archives quarantined as ``parse_err`` rows.  mapInPandas: the
-    archive is the split unit, members explode executor-side."""
+    """(source, content: binary) → one row per archive member, through
+    :func:`..execution.decode_payloads`: the archive is the split unit,
+    members explode executor-side."""
 
-    cols = [f.split(" ")[0] for f in ARCHIVE_MEMBER_SCHEMA.split(", ")]
+    def rows(b: bytes):
+        container, members = parse_archive(b)
+        for m in members:
+            yield (
+                container, m["member_name"], m["method"], len(m["payload"]),
+                m["crc_ok"], m["payload"], None,
+            )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for source, content in zip(pdf["source"], pdf["content"]):
-                try:
-                    container, members = parse_archive(bytes(content))
-                    for m in members:
-                        rows.append(
-                            {
-                                "source_file": source,
-                                "container": container,
-                                "member_name": m["member_name"],
-                                "method": m["method"],
-                                "member_bytes": len(m["payload"]),
-                                "crc_ok": m["crc_ok"],
-                                "payload": bytearray(m["payload"]),
-                                "parse_err": None,
-                            }
-                        )
-                except (ValueError, NotImplementedError) as e:
-                    rows.append(
-                        {
-                            "source_file": source,
-                            "container": None,
-                            "member_name": None,
-                            "method": None,
-                            "member_bytes": None,
-                            "crc_ok": None,
-                            "payload": None,
-                            "parse_err": f"{type(e).__name__}: {e}"[:200],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(fn, schema=ARCHIVE_MEMBER_SCHEMA)
+    return decode_payloads(
+        files, ARCHIVE_MEMBER_SCHEMA, ("source",), rows, payload="content"
+    )
 
 
 # ------------------------------------------------- deterministic fixtures

@@ -24,9 +24,8 @@ figure/table).
 
 Scale shape mirrors `sources/archives.py`: the .docx file is the split
 unit (``binaryFile`` folder scan or any (source, content) frame) →
-``mapInPandas`` explodes spans executor-side, one Python crossing per
-Arrow batch, payload bytes never driver-side.  Malformed files
-quarantine as ``parse_err`` rows instead of killing the task.
+:func:`..execution.decode_payloads` explodes spans executor-side, one
+Python crossing per Arrow batch, payload bytes never driver-side.
 
 XML is parsed with the stdlib ``xml.etree.ElementTree`` (a non-validating
 pull parser; OOXML is well-formed XML by spec — the binary container
@@ -47,7 +46,7 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame
 
-from ..execution import spread
+from ..execution import decode_payloads, spread
 from .archives import build_zip, parse_zip
 
 _W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
@@ -274,41 +273,16 @@ def parse_docx(data: bytes) -> list[dict]:
 
 
 def parse_docx_frame(files: DataFrame) -> DataFrame:
-    """(source, content: binary) → one row per span; malformed files
-    become a single ``parse_err`` row (the archive-source quarantine
-    convention).  mapInPandas — the file is the split unit."""
-    cols = [f.split(" ")[0] for f in DOCX_SPAN_SCHEMA.split(", ")]
+    """(source, content: binary) → one row per span, through
+    :func:`..execution.decode_payloads` — the file is the split unit."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for source, content in zip(pdf["source"], pdf["content"]):
-                try:
-                    for s in parse_docx(bytes(content)):
-                        rows.append(
-                            {
-                                "source_file": source,
-                                "span_order": s["order"],
-                                "kind": s["kind"],
-                                "text": s["text"],
-                                "media_ref": s["media_ref"],
-                                "parse_err": None,
-                            }
-                        )
-                except (ValueError, NotImplementedError) as e:
-                    rows.append(
-                        {
-                            "source_file": source,
-                            "span_order": None,
-                            "kind": None,
-                            "text": None,
-                            "media_ref": None,
-                            "parse_err": f"{type(e).__name__}: {e}"[:200],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(b: bytes):
+        for s in parse_docx(b):
+            yield s["order"], s["kind"], s["text"], s["media_ref"], None
 
-    return files.mapInPandas(fn, schema=DOCX_SPAN_SCHEMA)
+    return decode_payloads(
+        files, DOCX_SPAN_SCHEMA, ("source",), rows, payload="content"
+    )
 
 
 def docx_from_documents(documents: DataFrame) -> DataFrame:

@@ -19,10 +19,11 @@ source for the same main-content extraction the web pipeline runs.
 The ``mimetype`` member is validated when present (spec: stored,
 ``application/epub+zip``).
 
-Scale shape: file-granular ``mapInPandas`` explode, quarantine on
-malformed containers — identical to `sources/archives.py` /
-`sources/docx.py`.  XML via stdlib ElementTree; the binary container
-layers (ZIP/DEFLATE/CRC) are the from-scratch ones.
+Scale shape: file-granular explode in
+:func:`..execution.decode_payloads` — identical to
+`sources/archives.py` / `sources/docx.py`.  XML via stdlib
+ElementTree; the binary container layers (ZIP/DEFLATE/CRC) are the
+from-scratch ones.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame
 
-from ..execution import spread
+from ..execution import decode_payloads, spread
 from .archives import build_zip, parse_zip
 
 _CNT = "{urn:oasis:names:tc:opendocument:xmlns:container}"
@@ -137,38 +138,16 @@ def parse_epub(data: bytes) -> list[dict]:
 
 
 def parse_epub_frame(files: DataFrame) -> DataFrame:
-    """(source, content: binary) → one row per spine chapter; malformed
-    files quarantine as ``parse_err`` rows."""
-    cols = [f.split(" ")[0] for f in EPUB_CHAPTER_SCHEMA.split(", ")]
+    """(source, content: binary) → one row per spine chapter, through
+    :func:`..execution.decode_payloads`."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for source, content in zip(pdf["source"], pdf["content"]):
-                try:
-                    for ch in parse_epub(bytes(content)):
-                        rows.append(
-                            {
-                                "source_file": source,
-                                "chapter_order": ch["order"],
-                                "href": ch["href"],
-                                "html": ch["html"],
-                                "parse_err": None,
-                            }
-                        )
-                except (ValueError, NotImplementedError) as e:
-                    rows.append(
-                        {
-                            "source_file": source,
-                            "chapter_order": None,
-                            "href": None,
-                            "html": None,
-                            "parse_err": f"{type(e).__name__}: {e}"[:200],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(b: bytes):
+        for ch in parse_epub(b):
+            yield ch["order"], ch["href"], ch["html"], None
 
-    return files.mapInPandas(fn, schema=EPUB_CHAPTER_SCHEMA)
+    return decode_payloads(
+        files, EPUB_CHAPTER_SCHEMA, ("source",), rows, payload="content"
+    )
 
 
 def epub_from_documents(documents: DataFrame) -> DataFrame:

@@ -25,9 +25,9 @@ Output is one row per MIME part, ``(part_order, content_type, subject,
 from, text, payload)`` — text parts decoded to strings, other parts
 kept as bytes for the multimodal decoders downstream.  Scale shape:
 the mbox file is the split unit (``binaryFile`` scan or any
-(source, content) frame) → ``mapInPandas`` explodes messages and
-parts executor-side; malformed messages quarantine as ``parse_err``
-rows (the container-source convention of `sources/archives.py`).
+(source, content) frame) → :func:`..execution.decode_payloads`
+explodes messages and parts executor-side; a malformed message
+quarantines on its own, with its ``msg_index``.
 """
 
 from __future__ import annotations
@@ -39,6 +39,8 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..execution import QUARANTINE_ERRORS, decode_payloads, quarantine_reason
 
 MAIL_PART_SCHEMA = (
     "source_file string, msg_index int, part_order int, "
@@ -256,68 +258,27 @@ def parse_mbox(data: bytes) -> list[bytes]:
 
 def parse_mbox_frame(files: DataFrame) -> DataFrame:
     """(source, content: binary) → one row per MIME part across every
-    message in every mbox; malformed messages quarantine per-message
-    (a broken mail must not sink its whole archive)."""
-    cols = [f.split(" ")[0] for f in MAIL_PART_SCHEMA.split(", ")]
+    message in every mbox, through :func:`..execution.decode_payloads`.
+    A malformed message quarantines on its own (a broken mail must not
+    sink its whole archive): one row with its ``msg_index`` and the
+    reason."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for source, content in zip(pdf["source"], pdf["content"]):
-                try:
-                    msgs = parse_mbox(bytes(content))
-                except ValueError as e:
-                    rows.append(
-                        {
-                            "source_file": source,
-                            "msg_index": None,
-                            "part_order": None,
-                            "content_type": None,
-                            "subject": None,
-                            "sender": None,
-                            "text": None,
-                            "payload": None,
-                            "parse_err": f"{type(e).__name__}: {e}"[:200],
-                        }
-                    )
-                    continue
-                for idx, msg in enumerate(msgs):
-                    try:
-                        for p in parse_eml(msg):
-                            rows.append(
-                                {
-                                    "source_file": source,
-                                    "msg_index": idx,
-                                    "part_order": p["part_order"],
-                                    "content_type": p["content_type"],
-                                    "subject": p["subject"],
-                                    "sender": p["sender"],
-                                    "text": p["text"],
-                                    "payload": (
-                                        bytearray(p["payload"])
-                                        if p["payload"] is not None
-                                        else None
-                                    ),
-                                    "parse_err": None,
-                                }
-                            )
-                    except (ValueError, NotImplementedError) as e:
-                        rows.append(
-                            {
-                                "source_file": source,
-                                "msg_index": idx,
-                                "part_order": None,
-                                "content_type": None,
-                                "subject": None,
-                                "sender": None,
-                                "text": None,
-                                "payload": None,
-                                "parse_err": f"{type(e).__name__}: {e}"[:200],
-                            }
-                        )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(b: bytes):
+        for idx, msg in enumerate(parse_mbox(b)):
+            try:
+                parts = parse_eml(msg)
+            except QUARANTINE_ERRORS as e:
+                yield idx, None, None, None, None, None, None, quarantine_reason(e)
+                continue
+            for p in parts:
+                yield (
+                    idx, p["part_order"], p["content_type"], p["subject"],
+                    p["sender"], p["text"], p["payload"], None,
+                )
 
-    return files.mapInPandas(fn, schema=MAIL_PART_SCHEMA)
+    return decode_payloads(
+        files, MAIL_PART_SCHEMA, ("source",), rows, payload="content"
+    )
 
 
 def mbox_from_documents(documents: DataFrame) -> DataFrame:

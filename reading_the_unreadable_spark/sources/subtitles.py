@@ -29,9 +29,8 @@ fmt, cue_index, start_ms, end_ms, text)`` with times in integer
 milliseconds — no float timestamps, so cross-engine equality is exact.
 
 Scale shape: the subtitle file is the split unit (``binaryFile`` scan
-or any (source, content) frame) → ``mapInPandas`` explodes cues
-executor-side; a malformed file quarantines as a ``parse_err`` row
-without sinking its batch.  Reference corpus analogue: the reference
+or any (source, content) frame) → :func:`..execution.decode_payloads`
+explodes cues executor-side.  Reference corpus analogue: the reference
 pipeline carries per-box text spans with reading-order indices
 (`bbox_functions.py`); a cue sheet is the same span model keyed by time
 instead of page geometry.
@@ -46,7 +45,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from ..execution import spread
+from ..execution import decode_payloads, spread
 
 SUBTITLE_SCHEMA = (
     "source_file string, fmt string, cue_index int, start_ms long, "
@@ -156,45 +155,19 @@ def parse_subtitles(data: bytes) -> list[dict]:
 
 
 def parse_subtitles_frame(files: DataFrame) -> DataFrame:
-    """(source, content: binary) → one row per cue across every file;
-    malformed files quarantine per-file as ``parse_err`` rows."""
+    """(source, content: binary) → one row per cue across every file,
+    through :func:`..execution.decode_payloads`."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [c.split(" ")[0] for c in SUBTITLE_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows: list[dict] = []
-            for source, content in zip(pdf["source"], pdf["content"]):
-                try:
-                    cues = parse_subtitles(bytes(content))
-                except ValueError as e:
-                    rows.append(
-                        {
-                            "source_file": source,
-                            "fmt": None,
-                            "cue_index": None,
-                            "start_ms": None,
-                            "end_ms": None,
-                            "text": None,
-                            "parse_err": f"{type(e).__name__}: {e}"[:200],
-                        }
-                    )
-                    continue
-                for c in cues:
-                    rows.append(
-                        {
-                            "source_file": source,
-                            "fmt": c["fmt"],
-                            "cue_index": c["cue_index"],
-                            "start_ms": c["start_ms"],
-                            "end_ms": c["end_ms"],
-                            "text": c["text"],
-                            "parse_err": None,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(b: bytes):
+        for c in parse_subtitles(b):
+            yield (
+                c["fmt"], c["cue_index"], c["start_ms"], c["end_ms"], c["text"],
+                None,
+            )
 
-    return files.select("source", "content").mapInPandas(
-        fn, schema=SUBTITLE_SCHEMA
+    return decode_payloads(
+        files.select("source", "content"), SUBTITLE_SCHEMA, ("source",), rows,
+        payload="content",
     )
 
 

@@ -12,10 +12,9 @@ Scale design: WARC files are the natural split unit (Common Crawl caps
 them ~1 GB); records inside a file are sequential by construction, so
 the Spark surface takes a ``(source, content)`` frame of whole files (a
 ``binaryFile`` folder scan yields one) and parses each file inside
-``mapInPandas`` — one Python crossing per Arrow batch of files,
-records exploded executor-side, payload bytes never driver-side.
-Corrupt archives quarantine as ``parse_err`` rows (the
-multimodal-module convention) instead of killing the task.
+:func:`..execution.decode_payloads` — one Python crossing per Arrow
+batch of files, records exploded executor-side, payload bytes never
+driver-side.
 
 Reference tie-in: the reference ingests page images from folder scans
 (`send_to_lm_functions.py:715-737`); a web-corpus deployment of the same
@@ -33,7 +32,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from ..execution import spread
+from ..execution import decode_payloads, spread
 from .archives import _gunzip_members
 
 CRLF = b"\r\n"
@@ -189,68 +188,29 @@ def parse_warc(data: bytes) -> list[dict]:
 
 
 # ------------------------------------------------------------- Spark surface
-def _records_to_rows(source: str, data: bytes) -> list[dict]:
-    rows = []
-    for rec in parse_warc(data):
-        status, http_ctype = None, None
-        ct = (rec["warc_content_type"] or "").lower()
-        if rec["record_type"] == "response" and ct.startswith("application/http"):
-            try:
-                status, http_ctype, body = split_http_response(rec["payload"])
-            except ValueError:
-                body = rec["payload"]  # keep raw; downstream sees no status
-        else:
-            body = rec["payload"]
-        rows.append(
-            {
-                "source_file": source,
-                "record_type": rec["record_type"],
-                "target_uri": rec["target_uri"],
-                "warc_date": rec["warc_date"],
-                "record_id": rec["record_id"],
-                "warc_content_type": rec["warc_content_type"],
-                "http_status": status,
-                "http_content_type": http_ctype,
-                "payload": bytearray(body),
-                "parse_err": None,
-            }
-        )
-    return rows
-
-
-def _quarantine_row(source: str, err: Exception) -> dict:
-    return {
-        "source_file": source,
-        "record_type": None,
-        "target_uri": None,
-        "warc_date": None,
-        "record_id": None,
-        "warc_content_type": None,
-        "http_status": None,
-        "http_content_type": None,
-        "payload": None,
-        "parse_err": f"{type(err).__name__}: {err}"[:200],
-    }
-
-
 def parse_warc_frame(files: DataFrame) -> DataFrame:
     """(source, content: binary) → one row per WARC record, HTTP
-    responses split, corrupt files quarantined as ``parse_err`` rows.
-    mapInPandas: the file is the split unit, records explode
-    executor-side."""
+    responses split, through :func:`..execution.decode_payloads`: the
+    file is the split unit, records explode executor-side."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.split(" ")[0] for f in WARC_RECORD_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows: list[dict] = []
-            for source, content in zip(pdf["source"], pdf["content"]):
+    def rows(b: bytes):
+        for rec in parse_warc(b):
+            status, http_ctype, body = None, None, rec["payload"]
+            ct = (rec["warc_content_type"] or "").lower()
+            if rec["record_type"] == "response" and ct.startswith("application/http"):
                 try:
-                    rows.extend(_records_to_rows(source, bytes(content)))
-                except ValueError as e:
-                    rows.append(_quarantine_row(source, e))
-            yield pd.DataFrame(rows, columns=cols)
+                    status, http_ctype, body = split_http_response(body)
+                except ValueError:
+                    pass  # keep raw; downstream sees no status
+            yield (
+                rec["record_type"], rec["target_uri"], rec["warc_date"],
+                rec["record_id"], rec["warc_content_type"], status, http_ctype,
+                body, None,
+            )
 
-    return files.mapInPandas(fn, schema=WARC_RECORD_SCHEMA)
+    return decode_payloads(
+        files, WARC_RECORD_SCHEMA, ("source",), rows, payload="content"
+    )
 
 
 # ------------------------------------------------- deterministic fixtures

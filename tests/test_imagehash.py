@@ -83,14 +83,20 @@ def test_band_join_is_exhaustive_vs_brute_force(spark, max_h):
 
 
 def test_image_dhash_quarantines_bad_payloads(spark):
+    noisy = np.random.default_rng(5).integers(0, 256, (16, 18, 3), dtype=np.uint8)
     rows = [
         (1, bytearray(encode_bmp(np.zeros((8, 9, 3), np.uint8)))),
         (2, bytearray(b"\x00\x01 not an image")),
+        (3, bytearray(encode_bmp(noisy))),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
+    df = spark.createDataFrame(rows, "doc_id long, payload binary").coalesce(1)
     got = {r["id"]: r for r in image_dhash(df).collect()}
     assert got[1]["dhash"] == 0 and got[1]["decode_err"] is None
     assert got[2]["dhash"] is None and "ValueError" in got[2]["decode_err"]
+    # all 64 bits survive a batch that also holds a NULL hash
+    h = dhash64(noisy)
+    assert h >= 1 << 53
+    assert got[3]["dhash"] == (h - (1 << 64) if h >= 1 << 63 else h)
 
 
 def test_synth_fixture_group_structure(spark):

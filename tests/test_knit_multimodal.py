@@ -476,7 +476,7 @@ def test_video_frame_features_spark(spark):
         for i in range(3)
     ]
     df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = sample_frame_features(df, every_n=2).collect()
+    got = sample_frame_features(df).collect()
     assert len(got) == 3 * 3  # 6 frames, every 2nd
     for r in got:
         assert r["n_frames"] == 6 and r["fps"] == 10.0
@@ -827,7 +827,7 @@ def test_media_quarantine_corrupt_payloads(spark):
     frames = sample_frame_features(media).collect()
     ok = [r for r in frames if r["media_ref"] == "ok.avi"]
     bad = [r for r in frames if r["media_ref"] == "bad.avi"]
-    assert len(ok) == 3 and all(r["decode_err"] is None for r in ok)
+    assert len(ok) == 2 and all(r["decode_err"] is None for r in ok)  # frames 0, 2
     assert len(bad) == 1 and bad[0]["frame_idx"] == -1 and bad[0]["decode_err"]
 
 
@@ -903,7 +903,7 @@ def test_detect_page_blocks_spark(spark):
         )
     rows.append(("bad.tif", "image", bytearray(b"II*\x00xx"), None, None, None))
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = detect_page_blocks(media, gap_x=8, gap_y=4).collect()
+    got = detect_page_blocks(media).collect()
     per_ref = {}
     for r in got:
         per_ref.setdefault(r["media_ref"], []).append(r)
@@ -949,7 +949,7 @@ def test_xy_cut_reading_order(spark):
         [("page.tif", "image", bytearray(encode_tiff(page, "g4")), None, None, None)],
         MEDIA_SCHEMA,
     )
-    blocks = detect_page_blocks(media, gap_x=8, gap_y=5)
+    blocks = detect_page_blocks(media)
     ordered = add_xy_cut_order(blocks).orderBy("reading_order").collect()
     assert [r["reading_order"] for r in ordered] == [1, 2, 3, 4, 5, 6]
     # column-major: first three blocks share the LEFT column x-range

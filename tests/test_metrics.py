@@ -18,7 +18,7 @@ def test_coverage_simple(spark):
         ("d2", 0.0, 0.0, 40.0, 40.0),
     ]
     df = spark.createDataFrame(rows, "doc_id string, x1 double, y1 double, x2 double, y2 double")
-    got = {r["doc_id"]: r for r in page_coverage(df.repartition(2, "doc_id")).collect()}
+    got = {r["doc_id"]: r for r in page_coverage(df).collect()}
     assert got["d1"]["covered_frac"] == 1.0
     assert abs(got["d1"]["overlap_frac"] - 0.5) < 1e-6  # middle box doubles 40/80
     assert got["d2"]["covered_frac"] == 1.0

@@ -4,7 +4,8 @@ referenced by code outside tests/ — the package itself, scripts/,
 perfbench/, __spark_entry__.py, bench.py or bench_extra.py.  Fixture
 encoders and the specs of fused operators live under tests/.  Every
 defaulted parameter of a top-level package function must be set by
-one of those callers: an option nothing sets is a constant."""
+one of those callers: an option nothing sets is a constant.  A
+quarantine row's reason is formatted in ``execution.py`` only."""
 
 from __future__ import annotations
 
@@ -148,3 +149,25 @@ def test_defaulted_parameters_have_callers():
     assert not stale, "allowlisted options now set outside tests/:\n" + "\n".join(stale)
     unlisted = [u for u in unset if u not in TEST_SET_OPTIONS]
     assert not unlisted, "no caller outside tests/ sets:\n" + "\n".join(unlisted)
+
+
+def test_quarantine_reason_formatted_once():
+    """A quarantine row's reason is spelled in one place,
+    ``execution.quarantine_reason``: no other package module formats an
+    f-string from ``type(…).__name__``."""
+    sites = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "execution.py" and path.parent == PKG:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.JoinedStr) and any(
+                isinstance(n, ast.Attribute)
+                and n.attr == "__name__"
+                and isinstance(n.value, ast.Call)
+                and getattr(n.value.func, "id", None) == "type"
+                for n in ast.walk(node)
+            ):
+                sites.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not sites, (
+        "format the reason with execution.quarantine_reason:\n" + "\n".join(sites)
+    )

@@ -163,6 +163,18 @@ def test_parse_pdf_spans_spark(spark):
         ("b", 0, 0, "only line"),
     ]
     assert got[0]["y"] == 720.0 and got[1]["y"] == 706.0
+    assert all(r["decode_err"] is None for r in got)
+
+
+def test_parse_pdf_spans_quarantines_corrupt_pdf(spark):
+    """One corrupt PDF becomes one quarantine row; the job and the other
+    document's spans survive it."""
+    rows = [("ok", bytearray(encode_pdf([["kept"]]))), ("bad", bytearray(b"not a pdf"))]
+    df = spark.createDataFrame(rows, "doc_id string, payload binary")
+    got = {r["doc_id"]: r for r in parse_pdf_spans(df).collect()}
+    assert got["ok"]["text"] == "kept" and got["ok"]["decode_err"] is None
+    assert got["bad"]["decode_err"].startswith("ValueError: not a PDF")
+    assert got["bad"]["page"] is None and got["bad"]["text"] is None
 
 
 def test_non_tj_operator_consumes_open_array():
