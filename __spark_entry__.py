@@ -436,7 +436,7 @@ def q_lsh_recall(spark, sf):
     prefix-filtered all-pairs truth over the same shingle sets —
     recall of the bands + fraction of candidates that verify, the
     one-row confusion summary bands/rows are tuned with."""
-    return D.lsh_recall(_t(spark, sf, "documents"), threshold=0.7)
+    return D.lsh_recall(_t(spark, sf, "documents"))
 
 
 def q_pca_component(spark, sf):
@@ -445,12 +445,11 @@ def q_pca_component(spark, sf):
     iterative-algorithm discipline (fixed start, per-step 9-dp
     rounding, strictly left-associative dot chains mirrored in the
     oracle)."""
-    return S.power_iteration_top_component(
-        _t(spark, sf, "embeddings"), dim=64, iters=3
-    )
+    return S.power_iteration_top_component(_t(spark, sf, "embeddings"))
 
 
-def _pca_oracle_sql(dim: int = 64, iters: int = 3, ndp: int = 9) -> str:
+def _pca_oracle_sql() -> str:
+    dim, iters, ndp = S.ANN_DIM, S.PCA_ITERS, S.PCA_NDP
     e = lambda i: f"embedding[{i + 1}]::DOUBLE"  # noqa: E731
     mean_cols = ", ".join(
         f"round(sum({e(i)}) / any_value(nn.n), {ndp}) AS m{i}"
@@ -511,10 +510,10 @@ def q_bpe_merges(spark, sf):
     left-to-right semantics as the Spark-side F.aggregate fold."""
     from reading_the_unreadable_spark.operators.textstats import bpe_train
 
-    return bpe_train(_t(spark, sf, "documents"), n_merges=5)
+    return bpe_train(_t(spark, sf, "documents"))
 
 
-def _bpe_oracle_sql(n_merges: int = 5) -> str:
+def _bpe_oracle_sql() -> str:
     head = """
         WITH RECURSIVE words AS (
           SELECT w, count(*) AS freq FROM (
@@ -525,7 +524,7 @@ def _bpe_oracle_sql(n_merges: int = 5) -> str:
                    AS syms, freq
           FROM words)"""
     blocks = []
-    for k in range(n_merges):
+    for k in range(TS.BPE_MERGES):
         blocks.append(f""",
         p{k} AS (
           SELECT pr AS pair, sum(freq) AS c FROM (
@@ -552,7 +551,7 @@ def _bpe_oracle_sql(n_merges: int = 5) -> str:
     finals = "\n            UNION ALL ".join(
         f"SELECT {k} AS merge_rank, pair, replace(pair, ' ', '') AS merged, "
         f"c::BIGINT AS pair_count FROM top{k}"
-        for k in range(n_merges)
+        for k in range(TS.BPE_MERGES)
     )
     return head + "".join(blocks) + "\n        " + finals
 
@@ -648,7 +647,7 @@ def q_bm25(spark, sf):
     queries = spark.createDataFrame(
         _BM25_QUERIES, "query_id long, query_text string"
     )
-    return bm25_topk(_t(spark, sf, "documents"), queries, k=10)
+    return bm25_topk(_t(spark, sf, "documents"), queries)
 
 
 def _bm25_oracle_sql() -> str:
@@ -706,7 +705,7 @@ def q_tfidf_terms(spark, sf):
         tfidf_top_terms,
     )
 
-    return tfidf_top_terms(_t(spark, sf, "documents"), k=3)
+    return tfidf_top_terms(_t(spark, sf, "documents"))
 
 
 _TFIDF_ORACLE_SQL = """
@@ -740,7 +739,7 @@ def q_pmi_collocations(spark, sf):
         pmi_collocations,
     )
 
-    return pmi_collocations(_t(spark, sf, "documents"), min_count=5, k=20)
+    return pmi_collocations(_t(spark, sf, "documents"))
 
 
 _PMI_ORACLE_SQL = """
@@ -794,8 +793,8 @@ def q_hll_distinct(spark, sf):
     estimated from 64 registers whose values are pure string functions
     of md5 hex — DuckDB replays the registers bit-for-bit and the
     2^-rho sum is exact dyadic arithmetic, so even the ESTIMATE
-    hash-matches.  with_exact adds the true count for accuracy
-    evidencing (the branch production would drop)."""
+    hash-matches.  The true count and relative error sit next to the
+    estimate as accuracy evidence."""
     from reading_the_unreadable_spark.operators.sketches import (
         approx_distinct,
     )
@@ -803,7 +802,7 @@ def q_hll_distinct(spark, sf):
     toks = _t(spark, sf, "documents").select(
         "lang", F.explode(F.split("text", " ")).alias("w")
     )
-    return approx_distinct(toks, "w", ["lang"], p=6, with_exact=True)
+    return approx_distinct(toks, "w", ["lang"])
 
 
 def q_pagerank(spark, sf):
@@ -846,7 +845,7 @@ def q_hits(spark, sf):
             d.alias("src"), F.pmod(d * 13 + 5, F.lit(n)).alias("dst")
         )
     )
-    return hits(edges, iters=2)
+    return hits(edges)
 
 
 def q_length_quantiles(spark, sf):
@@ -885,7 +884,7 @@ def q_anchor_texts(spark, sf):
         F.pmod(d * 7 + 3, F.lit(n)).alias("dst"),
         F.concat(F.lit("w"), (d % 7).cast("string")).alias("anchor"),
     )
-    return anchor_texts(links, max_anchors=4)
+    return anchor_texts(links)
 
 
 def q_url_filter(spark, sf):
@@ -1025,7 +1024,7 @@ def q_dsir(spark, sf):
     the selected k exactly."""
     from reading_the_unreadable_spark.operators.quality import dsir_sample
 
-    return dsir_sample(_t(spark, sf, "documents"), k=100, n_buckets=64)
+    return dsir_sample(_t(spark, sf, "documents"))
 
 
 def q_warc_extract(spark, sf):
@@ -1662,7 +1661,7 @@ def q_semdedup(spark, sf):
             "vec_id", F.col("vec_id") + 100000
         )
     )
-    return semdedup(injected, k=4, tau=0.9)
+    return semdedup(injected)
 
 
 def q_dedup_substrings(spark, sf):
@@ -1684,7 +1683,7 @@ def q_dedup_substrings(spark, sf):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    return dedup_substrings(d, k=20)
+    return dedup_substrings(d)
 
 
 def q_kmeans(spark, sf):
@@ -1695,7 +1694,7 @@ def q_kmeans(spark, sf):
     steps in DuckDB via list lambdas + window argmin."""
     from reading_the_unreadable_spark.operators.similarity import kmeans_fixed
 
-    return kmeans_fixed(_t(spark, sf, "embeddings"), k=4, iters=2)
+    return kmeans_fixed(_t(spark, sf, "embeddings"))
 
 
 def q_near_dup_verified(spark, sf):
@@ -2348,7 +2347,7 @@ def q_curation_pipeline(spark, sf):
     pages = d.select("doc_id", url.alias("url"), html.alias("html"))
     # the reusable chain (plans/curation.py) — the same function the
     # Structured-Streaming form runs per micro-batch
-    return curate(pages, blocked_domains=("bad.net",))
+    return curate(pages)
 
 
 def q_orc_roundtrip(spark, sf):
@@ -2440,8 +2439,8 @@ def q_bloom_gate(spark, sf):
     d = _t(spark, sf, "documents")
     fp = d.select("doc_id", F.md5(F.col("text")).alias("fp"))
     members = fp.filter(F.col("doc_id") % 97 == 0).select("fp")
-    bits = bloom_bits(members, "fp", k=5, m_bits=4096)
-    verdict = bloom_contains(bits, fp.select("fp"), "fp", k=5, m_bits=4096)
+    bits = bloom_bits(members, "fp")
+    verdict = bloom_contains(bits, fp.select("fp"), "fp")
     return (
         fp.join(verdict, "fp")
         .select(
@@ -2557,7 +2556,7 @@ def q_source_overlap(spark, sf):
     double-counts them."""
     from reading_the_unreadable_spark.operators.quality import source_overlap
 
-    return source_overlap(_t(spark, sf, "documents"), shingle_len=8)
+    return source_overlap(_t(spark, sf, "documents"))
 
 
 def q_zipf_fit(spark, sf):
@@ -2567,7 +2566,7 @@ def q_zipf_fit(spark, sf):
     this templated corpus reports its slope honestly."""
     from reading_the_unreadable_spark.operators.textstats import zipf_fit
 
-    return zipf_fit(_t(spark, sf, "documents"), top_k=1000)
+    return zipf_fit(_t(spark, sf, "documents"))
 
 
 def q_curriculum(spark, sf):
@@ -2591,7 +2590,7 @@ def q_chunk_overlap(spark, sf):
         chunk_overlap,
     )
 
-    return chunk_overlap(_t(spark, sf, "documents"), size=40, stride=30)
+    return chunk_overlap(_t(spark, sf, "documents"))
 
 
 def q_ngram_novelty(spark, sf):
@@ -2600,7 +2599,7 @@ def q_ngram_novelty(spark, sf):
     curve of a crawl."""
     from reading_the_unreadable_spark.operators.quality import ngram_novelty
 
-    return ngram_novelty(_t(spark, sf, "documents"), shingle_len=8)
+    return ngram_novelty(_t(spark, sf, "documents"))
 
 
 def q_split_leakage(spark, sf):
@@ -2611,7 +2610,7 @@ def q_split_leakage(spark, sf):
         cross_split_leakage,
     )
 
-    return cross_split_leakage(_t(spark, sf, "documents"), shingle_len=8)
+    return cross_split_leakage(_t(spark, sf, "documents"))
 
 
 def q_source_mix(spark, sf):
@@ -2687,7 +2686,7 @@ def q_decontaminate(spark, sf):
 
     d = _t(spark, sf, "documents")
     bench = d.filter(F.col("doc_id") % 97 == 0)
-    return contamination_flags(d, bench, n=8).select(
+    return contamination_flags(d, bench).select(
         "doc_id", "n_overlaps", "contaminated"
     )
 
@@ -2710,7 +2709,7 @@ def q_pack_sequences(spark, sf):
     source."""
     from reading_the_unreadable_spark.operators.quality import pack_sequences
 
-    return pack_sequences(_t(spark, sf, "documents"), token_budget=2048)
+    return pack_sequences(_t(spark, sf, "documents"))
 
 
 def q_pdf_extract(spark, sf):
@@ -2902,7 +2901,7 @@ def q_cer_eval(spark, sf):
     reference computes CER per cropped box, result_section.py:240-242)
     so the quadratic edit-distance DP runs on short strings."""
     d = _t(spark, sf, "documents")
-    gt = M.chunk_spans(d.select("doc_id", "text"), words_per_span=20)
+    gt = M.chunk_spans(d.select("doc_id", "text"))
     pred = gt.select(
         "doc_id", "span_idx", F.regexp_replace("text", "e", "").alias("text")
     )
@@ -2927,11 +2926,11 @@ def q_bleu_eval(spark, sf):
             "info",
         ).alias("text"),
     )
-    return M.bleu(pred, gt, max_n=4)
+    return M.bleu(pred, gt)
 
 
-def _bleu_oracle_sql(max_n: int = 4) -> str:
-    ns = range(1, max_n + 1)
+def _bleu_oracle_sql() -> str:
+    ns = range(1, M.BLEU_MAX_N + 1)
     gram_blocks = []
     for n in ns:
         for side, src in (("p", "pt"), ("g", "gtt")):
@@ -2991,7 +2990,7 @@ def _bleu_oracle_sql(max_n: int = 4) -> str:
                {", ".join(f"total_{n}" for n in ns)},
                round(bp, 4) AS brevity_penalty,
                CASE WHEN {zero} THEN 0.0
-                    ELSE round(bp * exp(({logs}) / {max_n}), 4)
+                    ELSE round(bp * exp(({logs}) / {M.BLEU_MAX_N}), 4)
                END AS bleu
         FROM scored
     """
@@ -3027,11 +3026,11 @@ def q_rouge_eval(spark, sf):
             "info",
         ).alias("text"),
     )
-    return M.rouge_n(pred, gt, max_n=2)
+    return M.rouge_n(pred, gt)
 
 
-def _rouge_oracle_sql(max_n: int = 2) -> str:
-    ns = range(1, max_n + 1)
+def _rouge_oracle_sql() -> str:
+    ns = range(1, M.ROUGE_MAX_N + 1)
     blocks = []
     for n in ns:
         for side, src in (("p", "pt"), ("g", "gtt")):
@@ -3114,11 +3113,11 @@ def q_chrf_eval(spark, sf):
             "info",
         ).alias("text"),
     )
-    return M.chrf(pred, gt, max_n=6, beta=2.0)
+    return M.chrf(pred, gt)
 
 
-def _chrf_oracle_sql(max_n: int = 6) -> str:
-    ns = range(1, max_n + 1)
+def _chrf_oracle_sql() -> str:
+    ns = range(1, M.CHRF_MAX_N + 1)
     blocks = []
     for n in ns:
         for side, src in (("p", "ps"), ("g", "gs")):
@@ -3171,16 +3170,16 @@ def _chrf_oracle_sql(max_n: int = 6) -> str:
 
 # --------------------------------------------------------------- similarity
 def q_cosine_topk(spark, sf):
-    return S.cosine_topk(_t(spark, sf, "embeddings"), query_vec_id=0, k=10)
+    return S.cosine_topk(_t(spark, sf, "embeddings"))
 
 
 def q_ann_lsh(spark, sf):
-    return S.ann_lsh_topk(_t(spark, sf, "embeddings"), n_probes=10, k=3)
+    return S.ann_lsh_topk(_t(spark, sf, "embeddings"))
 
 
 def q_ann_multiprobe(spark, sf):
     """Scale ANN: 12-bit random-hyperplane LSH + Hamming-1 multiprobe."""
-    return S.ann_multiprobe_topk(_t(spark, sf, "embeddings"), n_probes=10, k=3)
+    return S.ann_multiprobe_topk(_t(spark, sf, "embeddings"))
 
 
 def q_embedding_near_dup(spark, sf):
@@ -3188,20 +3187,20 @@ def q_embedding_near_dup(spark, sf):
     gate).  The synthetic embeddings are near-orthogonal random vectors,
     so the demo threshold sits at 0.3 to keep the result non-trivial; on
     a real near-dup corpus this is ~0.9."""
-    return S.embedding_near_dup_pairs(_t(spark, sf, "embeddings"), threshold=0.3)
+    return S.embedding_near_dup_pairs(_t(spark, sf, "embeddings"))
 
 
 def q_ann_ivf(spark, sf):
     """IVF inverted-file ANN: broadcast coarse quantizer, nearest-cell
     assignment, nprobe-cell search."""
-    return S.ann_ivf_topk(_t(spark, sf, "embeddings"), n_probes=10, k=3, nprobe_cells=2)
+    return S.ann_ivf_topk(_t(spark, sf, "embeddings"))
 
 
 def q_ann_quantized(spark, sf):
     """Int8-quantized brute-force ANN: per-vector symmetric scale,
     cosine over the integer vectors (scales cancel exactly).  The 4x
     shuffle/scan-byte lever for embedding stages at corpus scale."""
-    return S.ann_quantized_topk(_t(spark, sf, "embeddings"), query_vec_id=0, k=10)
+    return S.ann_quantized_topk(_t(spark, sf, "embeddings"))
 
 
 def q_label_centroids(spark, sf):
@@ -3617,7 +3616,7 @@ def q_media_pipeline(spark, sf):
                 )
                 rows["media_ref"].append(f"{ref}.avi")
                 rows["kind"].append("video")
-                rows["payload"].append(synth_avi_bytes(f"{ref}.avi", n_frames=4))
+                rows["payload"].append(synth_avi_bytes(f"{ref}.avi"))
             yield pd_local.DataFrame(rows)
 
     media = spread(d).mapInPandas(
@@ -3882,9 +3881,7 @@ def q_range_join(spark, sf):
     # pair-join form is pinned in tests/test_temporal.py; the driver
     # oracle (DuckDB IEJoin) is unchanged.  sum cast to double to match
     # the oracle's HUGEINT->float64 output dtype (r05 hash mismatch).
-    j = range_point_prefix_agg(
-        iv, ev, "w_start", "w_end", "ts2", "mv", grain_seconds=86400
-    )
+    j = range_point_prefix_agg(iv, ev, "w_start", "w_end", "ts2", "mv")
     return j.select(
         "o_orderkey",
         F.col("n_points").alias("n_events"),
@@ -3918,7 +3915,7 @@ def q_fix_mojibake(spark, sf):
         .otherwise(head)
     )
     corrupted = d.select("doc_id", moji.alias("text"))
-    return fix_mojibake(corrupted, "text")
+    return fix_mojibake(corrupted)
 
 
 def q_interval_join(spark, sf):
@@ -3999,7 +3996,7 @@ def q_pack_interleaved(spark, sf):
         )
     )
     spans = title.unionByName(body).unionByName(figure)
-    return pack_interleaved(spans, token_budget=96, media_budget=32)
+    return pack_interleaved(spans)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -5401,7 +5398,7 @@ def oracle_sql() -> dict[str, str]:
         # BPE training: five chained merge steps; rule application
         # recurses a boundary-anchored first-occurrence replace to its
         # fixed point (== the Spark-side greedy fold); counts integer
-        "bpe_merges": _bpe_oracle_sql(5),
+        "bpe_merges": _bpe_oracle_sql(),
         # BPE encode: same fixed-point rule replay over the distinct
         # vocabulary, then words rejoin (doc, pos) and re-assemble
         "bpe_encode": _bpe_encode_oracle_sql(_PRETRAINED_MERGES),
@@ -5410,7 +5407,7 @@ def oracle_sql() -> dict[str, str]:
         "bm25": _bm25_oracle_sql(),
         "tfidf_terms": _TFIDF_ORACLE_SQL,
         # BLEU: integer-exact clipped n-gram counts; bp/bleu mirrored
-        "bleu_eval": _bleu_oracle_sql(4),
+        "bleu_eval": _bleu_oracle_sql(),
         # LSH recall: brute-force shingle-set truth (algorithm-
         # independent) vs the md5 band-bucket candidate replica
         "lsh_recall": """
@@ -5459,7 +5456,7 @@ def oracle_sql() -> dict[str, str]:
             FROM j
         """,
         # PCA: chained per-step CTEs, left-assoc chains, 9-dp rounds
-        "pca_component": _pca_oracle_sql(64, 3),
+        "pca_component": _pca_oracle_sql(),
         # incremental gate: md5 minhash/band fold mirrored (same CTEs
         # as minhash_lsh); history/new split by doc_id parity
         "incremental_gate": """
@@ -5513,9 +5510,9 @@ def oracle_sql() -> dict[str, str]:
             FROM pairs WHERE i * 1.0 / u >= 0.95
         """,
         # ROUGE: clipped counts integer-exact; P/R/F expression-mirrored
-        "rouge_eval": _rouge_oracle_sql(2),
+        "rouge_eval": _rouge_oracle_sql(),
         # chrF: char-gram stats per effective order; fold mirrored
-        "chrf_eval": _chrf_oracle_sql(6),
+        "chrf_eval": _chrf_oracle_sql(),
         # PMI: double-product mirrored; cutoff on rounded pmi
         "pmi_collocations": _PMI_ORACLE_SQL,
         # CMS: integer cells keyed by seeded md5 — exact replica, and the
@@ -7409,9 +7406,9 @@ def oracle_sql() -> dict[str, str]:
                 ORDER BY cos_sim DESC, vec_id) AS rank
               FROM scored) WHERE rank <= 3
         """,
-        "ann_multiprobe": S.ann_multiprobe_oracle_sql(n_probes=10, k=3),
-        "ann_ivf": S.ann_ivf_oracle_sql(n_probes=10, k=3, nprobe_cells=2),
-        "embedding_near_dup": S.embedding_near_dup_oracle_sql(threshold=0.3),
+        "ann_multiprobe": S.ann_multiprobe_oracle_sql(),
+        "ann_ivf": S.ann_ivf_oracle_sql(),
+        "embedding_near_dup": S.embedding_near_dup_oracle_sql(),
         # DERIVED oracle (not a literal): the construction puts
         # k = 2 + (doc_id//10) % 3 blocks on each sampled doc's page and
         # detection must recover k exactly, so the distribution of k over
@@ -7539,7 +7536,7 @@ def oracle_sql() -> dict[str, str]:
                    coalesce(sum(length(text)), 0)::BIGINT
             FROM documents WHERE doc_id % 3 IN (0, 1)
         """,
-        "ann_quantized": S.ann_quantized_oracle_sql(query_vec_id=0, k=10),
+        "ann_quantized": S.ann_quantized_oracle_sql(),
         "label_centroids": """
             SELECT label, (dim - 1)::INT AS dim,
                    round(avg(embedding[dim]::DOUBLE), 6) AS centroid,

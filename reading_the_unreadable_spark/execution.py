@@ -147,10 +147,11 @@ def decode_payloads(
     The first ``len(keys)`` output columns copy the input columns
     ``keys``, and the last output column is the reason.  ``decode(b)``
     yields the values of every other column of one output row, reason
-    included (None for a decoded row).  A null payload, or one whose
-    decode raises a :data:`QUARANTINE_ERRORS` error, gets exactly one
-    quarantine row: the key, then ``quarantine`` (all NULL when empty),
-    then the reason (``null payload`` or :func:`quarantine_reason`).
+    included (None for a decoded row).  A null payload, one that decodes
+    to no rows, or one whose decode raises a :data:`QUARANTINE_ERRORS`
+    error, gets exactly one quarantine row: the key, then
+    ``quarantine`` (all NULL when empty), then the reason (``null
+    payload``, ``no rows`` or :func:`quarantine_reason`).
 
     Columns are built as object Series, so Arrow converts each value as
     the schema types it: 64-bit integers stay exact where a column
@@ -169,7 +170,7 @@ def decode_payloads(
                     rows = [(*fill, "null payload")]
                 else:
                     try:
-                        rows = list(decode(bytes(p)))
+                        rows = list(decode(bytes(p))) or [(*fill, "no rows")]
                     except QUARANTINE_ERRORS as e:
                         rows = [(*fill, quarantine_reason(e))]
                 out += [(*key, *row) for row in rows]

@@ -34,6 +34,8 @@ BAND_ROWS = 2
 CC_MAX_ROUNDS = 30
 SIMHASH_BITS = 32
 SIMHASH_BANDS = 4
+SUBSTRING_TOKENS = 20  # dedup_substrings' window length
+LSH_RECALL_JACCARD = 0.7  # lsh_recall's truth threshold
 
 
 def exact_duplicates(documents: DataFrame) -> DataFrame:
@@ -626,10 +628,10 @@ def winnow_pairs(documents: DataFrame) -> DataFrame:
     )
 
 
-def dedup_substrings(documents: DataFrame, k: int = 20) -> DataFrame:
-    """Exact-SUBSTRING dedup at ``k``-token grain (Lee et al. 2021,
-    "Deduplicating Training Data Makes Language Models Better"): every
-    ``k``-token window that occurs more than once in the corpus keeps
+def dedup_substrings(documents: DataFrame) -> DataFrame:
+    """Exact-SUBSTRING dedup at ``SUBSTRING_TOKENS``-token grain (Lee et
+    al. 2021, "Deduplicating Training Data Makes Language Models
+    Better"): every ``SUBSTRING_TOKENS``-token window that occurs more than once in the corpus keeps
     only its FIRST occurrence (ordered by (doc_id, start)); all later
     occurrences are masked out of their documents, overlapping masked
     windows merged into spans (gaps-and-islands), and the surviving
@@ -652,16 +654,18 @@ def dedup_substrings(documents: DataFrame, k: int = 20) -> DataFrame:
     # HOF lambda boundaries; the _shingle_fps lesson)
     worded = documents.withColumn("__words", F.split(F.col("text"), " "))
     words = F.col("__words")
-    n_g = F.size(words) - k + 1
+    n_g = F.size(words) - SUBSTRING_TOKENS + 1
     grams_expr = F.when(
-        F.size(words) < k,
+        F.size(words) < SUBSTRING_TOKENS,
         F.array().cast("array<struct<start:int,gh:string>>"),
     ).otherwise(
         F.transform(
             F.sequence(F.lit(0), n_g - 1),
             lambda i: F.struct(
                 i.cast("int").alias("start"),
-                F.md5(F.array_join(F.slice(words, i + 1, k), " ")).alias("gh"),
+                F.md5(
+                    F.array_join(F.slice(words, i + 1, SUBSTRING_TOKENS), " ")
+                ).alias("gh"),
             ),
         )
     )
@@ -677,7 +681,7 @@ def dedup_substrings(documents: DataFrame, k: int = 20) -> DataFrame:
     dups = (
         g.withColumn("rn", F.row_number().over(w_first))
         .where(F.col("rn") > 1)
-        .select("doc_id", "start", (F.col("start") + k).alias("end"))
+        .select("doc_id", "start", (F.col("start") + SUBSTRING_TOKENS).alias("end"))
     )
     # gaps-and-islands merge of overlapping masked windows per doc
     w_prev = (
@@ -1294,11 +1298,12 @@ def incremental_minhash_gate(
     )
 
 
-def lsh_recall(documents: DataFrame, threshold: float = 0.7) -> DataFrame:
+def lsh_recall(documents: DataFrame) -> DataFrame:
     """MinHash-LSH candidate quality, MEASURED against exact truth —
     not estimated from the (1-(1-s^r)^b) curve: the truth side is the
     prefix-filtered EXACT all-pairs join over the same shingle sets
-    (:func:`allpairs_from_tokens` — no false negatives), the candidate
+    (:func:`allpairs_from_tokens` at Jaccard ``LSH_RECALL_JACCARD`` —
+    no false negatives), the candidate
     side is the band-bucket pair set the LSH index would hand to
     verification, and the output is the one-row confusion summary a
     pipeline owner tunes bands/rows with.
@@ -1313,7 +1318,7 @@ def lsh_recall(documents: DataFrame, threshold: float = 0.7) -> DataFrame:
     candidates that verify (1 − wasted verification work)."""
     sh = stage_boundary(shingles(spread(documents)), "lshrec_sh")
     truth = allpairs_from_tokens(
-        sh.select("doc_id", F.col("shingle").alias("token")), threshold
+        sh.select("doc_id", F.col("shingle").alias("token")), LSH_RECALL_JACCARD
     ).select("doc_a", "doc_b")
     sigs = band_signatures(sh)
     a, b = sigs.alias("a"), sigs.alias("b")
@@ -1334,7 +1339,7 @@ def lsh_recall(documents: DataFrame, threshold: float = 0.7) -> DataFrame:
         cand.withColumn("_c", F.lit(1)), ["doc_a", "doc_b"], "full"
     )
     return joined.agg(
-        F.lit(threshold).alias("threshold"),
+        F.lit(LSH_RECALL_JACCARD).alias("threshold"),
         F.sum(F.coalesce("_t", F.lit(0))).cast("long").alias("n_true_pairs"),
         F.sum(F.coalesce("_c", F.lit(0)))
         .cast("long")

@@ -44,19 +44,19 @@ from pyspark.sql import functions as F
 _MOJI_GATE = "^(?:[\\x00-\\x7F]|[\u00C2\u00C3][\u0080-\u00BF])*+$"
 
 
-def fix_mojibake(df: DataFrame, col: str = "text") -> DataFrame:
-    """Repair Latin-1 mojibake in ``col`` in place and add an int
+def fix_mojibake(df: DataFrame) -> DataFrame:
+    """Repair Latin-1 mojibake in the ``text`` column in place and add an int
     ``was_mojibake`` flag column (1 = the gate matched and the text was
     round-tripped).  Strings that are pure ASCII, already-correct
     UTF-8, or an unrepairable mojibake dialect pass through unchanged
     with flag 0."""
-    c = F.col(col)
+    c = F.col("text")
     is_moji = c.isNotNull() & c.rlike(_MOJI_GATE) & c.rlike("[ÂÃ]")
-    # flag FIRST: the repair below overwrites `col`, and a flag computed
+    # flag FIRST: the repair below overwrites `text`, and a flag computed
     # against the repaired text would always read 0
     flagged = df.withColumn("was_mojibake", is_moji.cast("int"))
     return flagged.withColumn(
-        col,
+        "text",
         F.when(
             F.col("was_mojibake") == 1,
             F.decode(F.encode(c, "ISO-8859-1"), "UTF-8"),

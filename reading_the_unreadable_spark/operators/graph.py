@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 DAMPING = 0.85
 ITERS = 3
 NDP = 9  # rounding of every per-node rank, each iteration
+MAX_ANCHORS = 4  # anchors kept per link target
+HITS_ITERS = 2
 
 
 def pagerank(edges: DataFrame) -> DataFrame:
@@ -84,11 +86,9 @@ def pagerank(edges: DataFrame) -> DataFrame:
     return ranks
 
 
-def anchor_texts(
-    links: DataFrame, max_anchors: int = 8
-) -> DataFrame:
+def anchor_texts(links: DataFrame) -> DataFrame:
     """Anchor-text aggregation onto link targets: (src, dst, anchor) →
-    per-target distinct anchors, lexicographically first ``max_anchors``
+    per-target distinct anchors, lexicographically first ``MAX_ANCHORS``
     joined with ``" | "`` plus in-degree counts.  One shuffle on dst;
     the per-target anchor list is slice-bounded so a billion-in-link
     hub cannot blow the row.  Deterministic: distinct + sort before the
@@ -100,7 +100,7 @@ def anchor_texts(
             F.count_distinct("src").alias("n_src"),
             F.array_join(
                 F.slice(
-                    F.array_sort(F.collect_set("anchor")), 1, max_anchors
+                    F.array_sort(F.collect_set("anchor")), 1, MAX_ANCHORS
                 ),
                 " | ",
             ).alias("anchors"),
@@ -108,9 +108,9 @@ def anchor_texts(
     )
 
 
-def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
+def hits(edges: DataFrame) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over (src, dst) edges,
-    ``iters`` fixed mutual-reinforcement steps, UNNORMALIZED: with a
+    ``HITS_ITERS`` fixed mutual-reinforcement steps, UNNORMALIZED: with a
     fixed iteration count the normalization constant scales every
     score identically (rankings are invariant), and dropping it makes
     every score an exact INTEGER — authority_k counts the alternating
@@ -137,7 +137,7 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
     )
     hub = nodes.select("node", F.lit(1).cast("long").alias("hub"))
     auth = None
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         a_in = (
             e.join(hub, e["src"] == hub["node"])
             .groupBy("dst")

@@ -65,17 +65,21 @@ def page_coverage(boxes: DataFrame) -> DataFrame:
     )
 
 
-def chunk_spans(df: DataFrame, words_per_span: int = 50) -> DataFrame:
-    """(doc_id, text) → (doc_id, span_idx, text): fixed word-count chunks.
+SPAN_WORDS = 20
+
+
+def chunk_spans(df: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, span_idx, text): chunks of
+    ``SPAN_WORDS`` words (the last one shorter).
 
     The alignment grain for :func:`cer_spans` when the corpus has no
     natural span structure — pure native expressions, zero shuffle."""
     w = F.split(F.col("text"), " ")
-    n_spans = F.ceil(F.size(w) / F.lit(words_per_span)).cast("int")
+    n_spans = F.ceil(F.size(w) / F.lit(SPAN_WORDS)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_spans - F.lit(1)),
         lambda i: F.array_join(
-            F.slice(w, i * words_per_span + F.lit(1), F.lit(words_per_span)), " "
+            F.slice(w, i * SPAN_WORDS + F.lit(1), F.lit(SPAN_WORDS)), " "
         ),
     )
     return df.select("doc_id", F.posexplode(chunks).alias("span_idx", "text"))
@@ -216,9 +220,17 @@ def _union_gram_stats(
     )
 
 
-def bleu(predictions: DataFrame, ground_truth: DataFrame, max_n: int = 4) -> DataFrame:
+# Highest n-gram order of each metric; the DuckDB oracles read the same.
+BLEU_MAX_N = 4
+ROUGE_MAX_N = 2
+CHRF_MAX_N = 6
+CHRF_BETA = 2.0
+
+
+def bleu(predictions: DataFrame, ground_truth: DataFrame) -> DataFrame:
     """Per-document BLEU (Papineni et al. 2002) of predictions against
-    doc-grain references: modified n-gram precisions for n = 1..max_n
+    doc-grain references: modified n-gram precisions for n =
+    1..``BLEU_MAX_N``
     (clipped matches / candidate totals, all integer-exact), brevity
     penalty, and the geometric-mean BLEU (0 when any precision is 0 —
     the unsmoothed definition).
@@ -239,8 +251,8 @@ def bleu(predictions: DataFrame, ground_truth: DataFrame, max_n: int = 4) -> Dat
 
     Output: (doc_id, len_pred, len_ref, match_1.., total_1..,
     brevity_penalty, bleu) — counts long, floats rounded 4 dp."""
-    ns = range(1, max_n + 1)
-    stats = _union_gram_stats(predictions, ground_truth, max_n)
+    ns = range(1, BLEU_MAX_N + 1)
+    stats = _union_gram_stats(predictions, ground_truth, BLEU_MAX_N)
     pivoted = stats.groupBy("doc_id").agg(
         *[
             F.coalesce(
@@ -271,7 +283,7 @@ def bleu(predictions: DataFrame, ground_truth: DataFrame, max_n: int = 4) -> Dat
         term = F.log(F.col(f"match_{n}") * 1.0 / F.col(f"total_{n}"))
         log_sum = term if log_sum is None else (log_sum + term)
     score = F.when(any_zero, F.lit(0.0)).otherwise(
-        F.round(bp * F.exp(log_sum / max_n), 4)
+        F.round(bp * F.exp(log_sum / BLEU_MAX_N), 4)
     )
     return d.select(
         "doc_id",
@@ -284,12 +296,8 @@ def bleu(predictions: DataFrame, ground_truth: DataFrame, max_n: int = 4) -> Dat
     )
 
 
-def rouge_n(
-    predictions: DataFrame,
-    ground_truth: DataFrame,
-    max_n: int = 2,
-) -> DataFrame:
-    """Per-document ROUGE-N (Lin 2004) for n = 1..max_n: clipped
+def rouge_n(predictions: DataFrame, ground_truth: DataFrame) -> DataFrame:
+    """Per-document ROUGE-N (Lin 2004) for n = 1..``ROUGE_MAX_N``: clipped
     n-gram precision, RECALL (the summarization-eval headline number —
     matches over REFERENCE totals, where BLEU divides by candidate
     totals), and their F1.  Counts integer-exact; the
@@ -299,8 +307,8 @@ def rouge_n(
     Output: (doc_id, match_n, p_total_n, r_total_n, rouge_p_n,
     rouge_r_n, rouge_f_n) per n — counts long, ratios rounded 4 dp,
     zero denominators score 0."""
-    ns = range(1, max_n + 1)
-    stats = _union_gram_stats(predictions, ground_truth, max_n)
+    ns = range(1, ROUGE_MAX_N + 1)
+    stats = _union_gram_stats(predictions, ground_truth, ROUGE_MAX_N)
     wide = stats.groupBy("doc_id").agg(
         *[
             F.coalesce(
@@ -329,14 +337,9 @@ def rouge_n(
     return wide.select(*cols)
 
 
-def chrf(
-    predictions: DataFrame,
-    ground_truth: DataFrame,
-    max_n: int = 6,
-    beta: float = 2.0,
-) -> DataFrame:
+def chrf(predictions: DataFrame, ground_truth: DataFrame) -> DataFrame:
     """Per-document chrF (Popović 2015): character n-gram F-score for
-    n = 1..max_n over whitespace-stripped text — the eval metric of
+    n = 1..``CHRF_MAX_N`` over whitespace-stripped text — the eval metric of
     record for morphology-rich MT, robust where word-level BLEU/ROUGE
     shatter on tokenization.  chrP/chrR are the ARITHMETIC MEANS of
     the per-order precisions/recalls over the EFFECTIVE orders — the
@@ -344,7 +347,7 @@ def chrf(
     order reduction: without it a 2-char identity scores 0.33, not
     1.0); an order present on only one side contributes 0 with a full
     divisor share.  chrF_β = (1+β²)·chrP·chrR / (β²·chrP + chrR),
-    β = 2.
+    β = ``CHRF_BETA``.
 
     Same scale core as the word metrics (:func:`_union_gram_stats`,
     char_level: whitespace-stripped substrings): one text shuffle,
@@ -352,7 +355,7 @@ def chrf(
     straight groupBy (no pivot — only the per-order SUMS feed the
     score).  Output: (doc_id, chrp, chrr, chrf) rounded 4 dp."""
     stats = _union_gram_stats(
-        predictions, ground_truth, max_n, char_level=True
+        predictions, ground_truth, CHRF_MAX_N, char_level=True
     )
     p = F.when(F.col("p_total") > 0, F.col("match") / F.col("p_total")).otherwise(F.lit(0.0))
     r = F.when(F.col("r_total") > 0, F.col("match") / F.col("r_total")).otherwise(F.lit(0.0))
@@ -360,7 +363,7 @@ def chrf(
         (F.sum(p) / F.count("*")).alias("chrp_raw"),
         (F.sum(r) / F.count("*")).alias("chrr_raw"),
     )
-    b2 = beta * beta
+    b2 = CHRF_BETA * CHRF_BETA
     cp, cr = F.col("chrp_raw"), F.col("chrr_raw")
     score = F.when(
         cp + cr > 0, (1 + b2) * cp * cr / (b2 * cp + cr)

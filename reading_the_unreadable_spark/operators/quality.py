@@ -44,6 +44,12 @@ C4_MIN_WORDS_PER_LINE = 5
 C4_MIN_LINES_PER_DOC = 3
 MIX_ALPHA = 0.7  # temperature of the sampling weight share^α
 PACK_SHARD_HEX_CHARS = 1
+PACK_TOKENS = 2048  # token budget of one packed training sequence
+PACK_MEDIA_TOKENS = 32  # what one media span costs in pack_interleaved
+INTERLEAVED_PACK_TOKENS = 96  # token budget of one interleaved sequence
+SHINGLE_LEN = 8  # tokens per shingle of the overlap/leakage audits
+DSIR_BUCKETS = 64  # hashed n-gram features of the DSIR weights
+DSIR_SAMPLE = 100  # documents dsir_sample draws
 TRAIN_FRAC, VAL_FRAC = 0.9, 0.05  # hash-rule split shares; test gets the rest
 BOILER_MIN_DOCS = 3  # dedup_lines: a line in this many docs is boilerplate
 
@@ -542,9 +548,9 @@ def redact_credit_cards(documents: DataFrame) -> DataFrame:
     )
 
 
-def pack_sequences(documents: DataFrame, token_budget: int = 2048) -> DataFrame:
+def pack_sequences(documents: DataFrame) -> DataFrame:
     """Deterministic training-sequence packing: documents are packed into
-    fixed-token-budget sequences in (partition, shard, doc_id) order — a
+    ``PACK_TOKENS``-token sequences in (partition, shard, doc_id) order — a
     doc starts in the sequence its cumulative starting offset falls into
     (GPT-style contiguous packing, so a doc may finish past the budget
     rather than be split).
@@ -576,30 +582,27 @@ def pack_sequences(documents: DataFrame, token_budget: int = 2048) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     d = d.withColumn("_cum", F.sum("n_tokens").over(w))
-    seq = F.floor((F.col("_cum") - F.col("n_tokens")) / F.lit(token_budget))
+    seq = F.floor((F.col("_cum") - F.col("n_tokens")) / F.lit(PACK_TOKENS))
     d = d.withColumn("seq_id", seq.cast("int"))
     return d.groupBy("part", "shard", "seq_id").agg(
         F.count("*").cast("int").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("n_tokens"),
         F.round(
-            F.sum("n_tokens").cast("double") / F.lit(float(token_budget)), 6
+            F.sum("n_tokens").cast("double") / F.lit(float(PACK_TOKENS)), 6
         ).alias("fill_ratio"),
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
     )
 
 
-def pack_interleaved(
-    spans: DataFrame,
-    token_budget: int = 2048,
-    media_budget: int = 64,
-) -> DataFrame:
+def pack_interleaved(spans: DataFrame) -> DataFrame:
     """Multimodal training-sequence packing over the INTERLEAVED span
     grain (doc_id, kind, text, media_ref, order) — the engine's core
     data model (BASELINE input_hint): text spans cost their whitespace
-    token count, media spans cost a fixed ``media_budget`` (the
+    token count, media spans cost a fixed ``PACK_MEDIA_TOKENS`` (the
     patch-token allowance an interleaved trainer reserves per image),
-    and documents are packed ATOMICALLY — a doc's spans never split
+    sequences hold ``INTERLEAVED_PACK_TOKENS``, and documents are
+    packed ATOMICALLY — a doc's spans never split
     across sequences, exactly like :func:`pack_sequences`' GPT-style
     contiguous packing but with the mixed-modality cost model.
 
@@ -614,7 +617,7 @@ def pack_interleaved(
     text_toks = F.when(
         is_media | F.col("text").isNull() | (F.length("text") == 0), F.lit(0)
     ).otherwise(F.size(F.split(F.col("text"), " ")))
-    cost = F.when(is_media, F.lit(media_budget)).otherwise(text_toks)
+    cost = F.when(is_media, F.lit(PACK_MEDIA_TOKENS)).otherwise(text_toks)
     per_doc = spans.groupBy("doc_id").agg(
         F.sum(cost).cast("long").alias("doc_cost"),
         F.sum(text_toks).cast("long").alias("n_text_tokens"),
@@ -632,9 +635,9 @@ def pack_interleaved(
     d = d.withColumn("_cum", F.sum("doc_cost").over(w))
     d = d.withColumn(
         "seq_id",
-        F.floor((F.col("_cum") - F.col("doc_cost")) / F.lit(token_budget)).cast(
-            "int"
-        ),
+        F.floor(
+            (F.col("_cum") - F.col("doc_cost")) / F.lit(INTERLEAVED_PACK_TOKENS)
+        ).cast("int"),
     )
     return d.groupBy("shard", "seq_id").agg(
         F.count("*").cast("int").alias("n_docs"),
@@ -642,7 +645,9 @@ def pack_interleaved(
         F.sum("n_media_spans").cast("int").alias("n_media_spans"),
         F.sum("doc_cost").cast("long").alias("total_cost"),
         F.round(
-            F.sum("doc_cost").cast("double") / F.lit(float(token_budget)), 6
+            F.sum("doc_cost").cast("double")
+            / F.lit(float(INTERLEAVED_PACK_TOKENS)),
+            6,
         ).alias("fill_ratio"),
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
@@ -687,14 +692,10 @@ def dedup_paragraphs(documents: DataFrame) -> DataFrame:
     return rebuilt
 
 
-def contamination_flags(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-) -> DataFrame:
+def contamination_flags(documents: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark DECONTAMINATION (the GPT-3 §C / Pile / Llama recipe):
     flag every document sharing at least one distinct word
-    ``n``-grams with a benchmark/eval set, so training data can be
+    ``SHINGLE_LEN``-grams with a benchmark/eval set, so training data can be
     scrubbed of test-set leakage.
 
     Scale shape: the benchmark is tiny next to a 100 TB corpus, so its
@@ -714,10 +715,10 @@ def contamination_flags(
     # reference re-ran the split for every gram (see _shingle_fps)
     def grams(words: Column) -> Column:
         return F.when(
-            F.size(words) >= n,
+            F.size(words) >= SHINGLE_LEN,
             F.transform(
-                F.sequence(F.lit(1), F.size(words) - n + 1),
-                lambda i: F.array_join(F.slice(words, i, n), " "),
+                F.sequence(F.lit(1), F.size(words) - SHINGLE_LEN + 1),
+                lambda i: F.array_join(F.slice(words, i, SHINGLE_LEN), " "),
             ),
         ).otherwise(F.array().cast("array<string>"))
 
@@ -887,13 +888,13 @@ def quality_classifier(documents: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, "feature int, weight double")
 
 
-def dsir_weights(documents: DataFrame, n_buckets: int = 64) -> DataFrame:
+def dsir_weights(documents: DataFrame) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw
     document by how much more likely its hashed-ngram profile is under
     the TARGET distribution than under the raw-corpus distribution —
     ``log w(doc) = Σ_b count_doc[b] · log(p_target[b] / q_raw[b])``
-    over ``n_buckets`` hashed unigram+bigram features with add-one
+    over ``DSIR_BUCKETS`` hashed unigram+bigram features with add-one
     smoothing.  ``lang == 'en'`` stands in for the curated target set
     (the quality-classifier convention).
 
@@ -901,7 +902,7 @@ def dsir_weights(documents: DataFrame, n_buckets: int = 64) -> DataFrame:
     and exploded with ``explode_outer`` (the InferFiltersFromGenerate
     lesson, SURVEY §30); both distributions come from ONE
     groupBy(bucket) with conditional sums (partial-agg collapses the
-    Zipf head map-side); the bucket→log-ratio table is ``n_buckets``
+    Zipf head map-side); the bucket→log-ratio table is ``DSIR_BUCKETS``
     rows joined back broadcast; the per-doc reduce is one
     groupBy(doc_id).  Engine-replicability: bucket counts are exact
     integers, the only float is the single log per bucket (4-dp
@@ -935,7 +936,7 @@ def dsir_weights(documents: DataFrame, n_buckets: int = 64) -> DataFrame:
         "is_target",
         (
             F.conv(F.substring(F.md5("g"), 1, 4), 16, 10).cast("long")
-            % n_buckets
+            % DSIR_BUCKETS
         ).cast("int").alias("b"),
     )
     counts = buckets.groupBy("doc_id", "is_target", "b").agg(
@@ -951,7 +952,7 @@ def dsir_weights(documents: DataFrame, n_buckets: int = 64) -> DataFrame:
     tt, tq = int(tot["tt"] or 0), int(tot["tq"] or 0)
     if tt == 0:
         raise ValueError("DSIR target partition has no grams")
-    s, b_s = 1.0, float(n_buckets)
+    s, b_s = 1.0, float(DSIR_BUCKETS)
     ratios = dist.select(
         "b",
         F.round(
@@ -979,7 +980,7 @@ def dsir_weights(documents: DataFrame, n_buckets: int = 64) -> DataFrame:
     )
 
 
-def dsir_sample(documents: DataFrame, k: int = 100, n_buckets: int = 64) -> DataFrame:
+def dsir_sample(documents: DataFrame) -> DataFrame:
     """DSIR's resampling step: Gumbel-top-k over the importance weights
     — ``key = log_weight + Gumbel(0,1)`` drawn from an md5(doc_id)
     uniform, so the draw is engine-reproducible (the deterministic-
@@ -988,8 +989,8 @@ def dsir_sample(documents: DataFrame, k: int = 100, n_buckets: int = 64) -> Data
 
     Scale: the perturbed key is a map-side expression over the weight
     table; selection is a global top-k (TakeOrdered — no full sort).
-    Output: k rows of (doc_id, log_weight, gumbel_key)."""
-    w = dsir_weights(documents, n_buckets=n_buckets)
+    Output: ``DSIR_SAMPLE`` rows of (doc_id, log_weight, gumbel_key)."""
+    w = dsir_weights(documents)
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("double")
@@ -1000,7 +1001,7 @@ def dsir_sample(documents: DataFrame, k: int = 100, n_buckets: int = 64) -> Data
         "log_weight",
         F.round(F.col("log_weight") - F.log(-F.log(u)), 4).alias("gumbel_key"),
     )
-    return keyed.orderBy(F.col("gumbel_key").desc(), "doc_id").limit(k)
+    return keyed.orderBy(F.col("gumbel_key").desc(), "doc_id").limit(DSIR_SAMPLE)
 
 
 def dataset_split(documents: DataFrame) -> DataFrame:
@@ -1043,9 +1044,9 @@ def dataset_split(documents: DataFrame) -> DataFrame:
     )
 
 
-def source_overlap(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
+def source_overlap(documents: DataFrame) -> DataFrame:
     """Cross-source contamination matrix: for every source pair, how
-    many DISTINCT ``shingle_len``-token shingle fingerprints appear in
+    many DISTINCT ``SHINGLE_LEN``-token shingle fingerprints appear in
     both — the audit that catches a crawl slice ingested twice under
     two names, or boilerplate shared across domains, BEFORE training
     double-counts it.  Token shingles (the decontamination-family
@@ -1069,14 +1070,14 @@ def source_overlap(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
     documents = spread(documents)
     w = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     docs = documents.withColumn("__so_w", w)
-    k = F.size("__so_w") - F.lit(shingle_len - 1)
+    k = F.size("__so_w") - F.lit(SHINGLE_LEN - 1)
     shingles = F.when(
         k >= 1,
         F.transform(
             F.sequence(F.lit(1), k),
             lambda i: F.md5(
                 F.array_join(
-                    F.slice(F.col("__so_w"), i, F.lit(shingle_len)), " "
+                    F.slice(F.col("__so_w"), i, F.lit(SHINGLE_LEN)), " "
                 )
             ),
         ),
@@ -1095,13 +1096,9 @@ def source_overlap(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
     )
 
 
-def _shingle_fps(
-    documents: DataFrame,
-    shingle_len: int,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def _shingle_fps(documents: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, *extra, fp): DISTINCT 16-byte fingerprints of the
-    ``shingle_len``-token shingles — map-side explode + md5; the
+    ``SHINGLE_LEN``-token shingles — map-side explode + md5; the
     per-doc array_distinct makes this exactly the distinct (doc, fp)
     set with zero shuffle."""
     documents = spread(documents)  # shingle+md5 build is map-heavy
@@ -1114,14 +1111,14 @@ def _shingle_fps(
     # SHUFFLE outright — (doc, fp) distinctness is per-document, so the
     # map-side dedup is exact and the operator becomes shuffle-free
     docs = documents.withColumn("__sfp_w", w)
-    k = F.size("__sfp_w") - F.lit(shingle_len - 1)
+    k = F.size("__sfp_w") - F.lit(SHINGLE_LEN - 1)
     sh = F.when(
         k >= 1,
         F.transform(
             F.sequence(F.lit(1), k),
             lambda i: F.md5(
                 F.array_join(
-                    F.slice(F.col("__sfp_w"), i, F.lit(shingle_len)), " "
+                    F.slice(F.col("__sfp_w"), i, F.lit(SHINGLE_LEN)), " "
                 )
             ),
         ),
@@ -1131,9 +1128,9 @@ def _shingle_fps(
     )
 
 
-def ngram_novelty(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
+def ngram_novelty(documents: DataFrame) -> DataFrame:
     """Per-document NOVELTY: the fraction of a doc's distinct
-    ``shingle_len``-token shingles whose globally-FIRST occurrence
+    ``SHINGLE_LEN``-token shingles whose globally-FIRST occurrence
     (min doc_id order) is this document — the curve data-curation
     teams watch to see a crawl's marginal value decay (late documents
     in a templated crawl contribute almost nothing new).
@@ -1146,7 +1143,7 @@ def ngram_novelty(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
 
     Output: (doc_id, n_shingles, n_novel, novelty 4 dp); docs shorter
     than the shingle length emit no row."""
-    pairs = _shingle_fps(documents, shingle_len)
+    pairs = _shingle_fps(documents)
     first = pairs.groupBy("fp").agg(F.min("doc_id").alias("first_doc"))
     return (
         pairs.join(first, "fp")
@@ -1163,9 +1160,9 @@ def ngram_novelty(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
     )
 
 
-def cross_split_leakage(documents: DataFrame, shingle_len: int = 8) -> DataFrame:
+def cross_split_leakage(documents: DataFrame) -> DataFrame:
     """The leakage audit run after every split: how many val/test
-    documents share at least one ``shingle_len``-token shingle with
+    documents share at least one ``SHINGLE_LEN``-token shingle with
     ANY train document (the :func:`dataset_split` hash rule decides
     membership).  Benchmarks leak into training data exactly this way
     — decontamination checks the eval sets, this checks the split
@@ -1187,7 +1184,7 @@ def cross_split_leakage(documents: DataFrame, shingle_len: int = 8) -> DataFrame
         .otherwise(F.lit("test"))
     )
     tagged = documents.withColumn("split", split)
-    pairs = _shingle_fps(tagged, shingle_len, ("split",))
+    pairs = _shingle_fps(tagged, ("split",))
     train_fps = pairs.filter(F.col("split") == "train").select("fp").distinct()
     held = pairs.filter(F.col("split") != "train")
     contaminated = (

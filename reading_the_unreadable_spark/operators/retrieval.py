@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+BM25_TOPK = 10  # documents ranked per query
+TFIDF_TOPK = 3  # terms kept per document
 
 
 def _terms(documents: DataFrame) -> DataFrame:
@@ -41,13 +43,13 @@ def _terms(documents: DataFrame) -> DataFrame:
     ).filter(F.col("term") != "")
 
 
-def bm25_topk(documents: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """Top-``k`` documents per query under Okapi BM25 (``BM25_K1``,
+def bm25_topk(documents: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-``BM25_TOPK`` documents per query under Okapi BM25 (``BM25_K1``,
     ``BM25_B``).
 
     ``queries`` is a small (query_id: long, query_text: string) frame —
     it is broadcast, never shuffled.  Output: (query_id, doc_id,
-    bm25, rank) with rank 1..k per query, bm25 rounded to 4 dp,
+    bm25, rank) with rank 1..BM25_TOPK per query, bm25 rounded to 4 dp,
     ties broken by doc_id.
     """
     toks = _terms(documents)
@@ -95,13 +97,13 @@ def bm25_topk(documents: DataFrame, queries: DataFrame, k: int = 10) -> DataFram
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= BM25_TOPK)
         .select("query_id", "doc_id", "bm25", "rank")
     )
 
 
-def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
-    """The ``k`` most characteristic terms per document by tf-idf
+def tfidf_top_terms(documents: DataFrame) -> DataFrame:
+    """The ``TFIDF_TOPK`` most characteristic terms per document by tf-idf
     (tf × ln(N/df), the classic smooth-free variant — df ≥ 1 always
     holds because tf rows exist only for observed terms).
 
@@ -139,6 +141,6 @@ def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     )
     return (
         scored.withColumn("term_rank", F.row_number().over(w))
-        .filter(F.col("term_rank") <= k)
+        .filter(F.col("term_rank") <= TFIDF_TOPK)
         .select("doc_id", "term", "tf", "tfidf", "term_rank")
     )

@@ -37,14 +37,27 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
-    """Brute-force top-k by cosine to the embedding of ``query_vec_id``
-    (broadcast single-row probe; excludes the probe itself)."""
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
+# The brute-force top-k operators rank the TOPK nearest vectors to the
+# one with vec_id QUERY_VEC_ID; the bucketed ANN operators rank PROBE_TOPK
+# neighbours for each of the probes vec_id < N_PROBES (IVF probes search
+# their NPROBE_CELLS closest cells).  The DuckDB oracle texts read the
+# same constants.
+QUERY_VEC_ID = 0
+TOPK = 10
+N_PROBES = 10
+PROBE_TOPK = 3
+NPROBE_CELLS = 2
+
+
+def cosine_topk(embeddings: DataFrame) -> DataFrame:
+    """Brute-force top-``TOPK`` by cosine to the embedding of
+    ``QUERY_VEC_ID`` (broadcast single-row probe; excludes the probe
+    itself)."""
+    q = embeddings.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         _as_double(F.col("embedding")).alias("qvec")
     )
     scored = (
-        embeddings.filter(F.col("vec_id") != query_vec_id)
+        embeddings.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(q))
         .select(
             "vec_id",
@@ -56,8 +69,8 @@ def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> Da
     )
     # top-k via TakeOrdered (distributed partial top-k per partition, no
     # single-partition global window); rank is then assigned on k rows.
-    topk = scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
-    # deliberately unpartitioned window over the ≤k post-limit rows —
+    topk = scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(TOPK)
+    # deliberately unpartitioned window over the ≤TOPK post-limit rows —
     # single-partition is correct and size-bounded (warning silenced at
     # the logger, see session.py; invariant pinned by plan test)
     w = Window.orderBy(F.desc("cos_sim"), F.asc("vec_id"))
@@ -75,15 +88,16 @@ def sign_bucket(v: Column) -> Column:
     return F.concat(*parts)
 
 
-def ann_lsh_topk(embeddings: DataFrame, n_probes: int = 10, k: int = 3) -> DataFrame:
-    """Bucketed approximate top-k: probes = vec_id < n_probes; candidates
-    share the probe's sign bucket.  Output (probe_id, rank, vec_id, cos)."""
+def ann_lsh_topk(embeddings: DataFrame) -> DataFrame:
+    """Bucketed approximate top-k: probes = vec_id < ``N_PROBES``;
+    candidates share the probe's sign bucket.  Output (probe_id, rank,
+    vec_id, cos)."""
     base = embeddings.select(
         "vec_id",
         _as_double(F.col("embedding")).alias("vec"),
         sign_bucket(F.col("embedding")).alias("bucket"),
     )
-    probes = base.filter(F.col("vec_id") < n_probes).select(
+    probes = base.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("vec").alias("pvec"),
         "bucket",
@@ -102,7 +116,7 @@ def ann_lsh_topk(embeddings: DataFrame, n_probes: int = 10, k: int = 3) -> DataF
     w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= PROBE_TOPK)
         .select("probe_id", "rank", "vec_id", "cos_sim")
     )
 
@@ -184,9 +198,7 @@ def hyperplane_buckets_udf(tables: list[list[list[float]]] | None = None):
     return _buckets
 
 
-def ann_multiprobe_topk(
-    embeddings: DataFrame, n_probes: int = 10, k: int = 3
-) -> DataFrame:
+def ann_multiprobe_topk(embeddings: DataFrame) -> DataFrame:
     """ANN top-k via random-hyperplane LSH + Hamming-1 multiprobe:
     candidates live in ONE bucket each; every probe searches its own
     bucket plus the ``ANN_BITS`` buckets one bit-flip away (explode on
@@ -205,7 +217,7 @@ def ann_multiprobe_topk(
         *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(ANN_BITS)],
     )
     probes = (
-        base.filter(F.col("vec_id") < n_probes)
+        base.filter(F.col("vec_id") < N_PROBES)
         .select(
             F.col("vec_id").alias("probe_id"),
             F.col("vec").alias("pvec"),
@@ -225,12 +237,12 @@ def ann_multiprobe_topk(
     w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= PROBE_TOPK)
         .select("probe_id", "rank", "vec_id", "cos_sim")
     )
 
 
-def ann_multiprobe_oracle_sql(n_probes: int = 10, k: int = 3) -> str:
+def ann_multiprobe_oracle_sql() -> str:
     """DuckDB replica: identical plane literals, identical left-to-right
     projection sums, identical multiprobe bucket list."""
     projs = []
@@ -251,7 +263,7 @@ def ann_multiprobe_oracle_sql(n_probes: int = 10, k: int = 3) -> str:
         probes AS (
           SELECT vec_id AS probe_id, vec AS pvec,
                  unnest([bucket, {flip_list}]) AS bucket
-          FROM base WHERE vec_id < {n_probes}),
+          FROM base WHERE vec_id < {N_PROBES}),
         scored AS (
           SELECT p.probe_id, c.vec_id,
                  round(list_cosine_similarity(p.pvec, c.vec), 6) AS cos_sim
@@ -260,7 +272,7 @@ def ann_multiprobe_oracle_sql(n_probes: int = 10, k: int = 3) -> str:
         SELECT probe_id, rank::INT AS rank, vec_id, cos_sim FROM (
           SELECT *, row_number() OVER (PARTITION BY probe_id
             ORDER BY cos_sim DESC, vec_id) AS rank
-          FROM scored) WHERE rank <= {k}
+          FROM scored) WHERE rank <= {PROBE_TOPK}
     """
 
 
@@ -276,14 +288,18 @@ def label_centroids(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame, threshold: float = 0.95
-) -> DataFrame:
+# Cosine gate of the near-dup pairs.  The synthetic embeddings are
+# near-orthogonal random vectors, so it sits at 0.3 to keep the result
+# non-trivial; on a real near-dup corpus it would be ~0.9.
+NEAR_DUP_COS = 0.3
+
+
+def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the vector-space dedup
     variant: candidates are generated by OR-amplified hyperplane LSH
     (``ANN_TABLES`` independent 12-bit tables; a pair sharing a bucket in
     ANY table is a candidate — see the recall math at
-    ``HYPERPLANE_TABLES``), then gated by exact cosine ≥ threshold.
+    ``HYPERPLANE_TABLES``), then gated by exact cosine ≥ ``NEAR_DUP_COS``.
 
     Join key is (table, bucket) — pair space is Σ over (table, bucket)
     of |bucket|², never n²; per-side replication is exactly T (an
@@ -311,7 +327,7 @@ def embedding_near_dup_pairs(
         .select("vec_a", "vec_b", cos.alias("cos_sim"))
         .groupBy("vec_a", "vec_b")
         .agg(F.min("cos_sim").alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= NEAR_DUP_COS)
     )
 
 
@@ -328,7 +344,7 @@ def _bucket_sql(planes: list[list[float]]) -> str:
     )
 
 
-def embedding_near_dup_oracle_sql(threshold: float = 0.95) -> str:
+def embedding_near_dup_oracle_sql() -> str:
     buckets = ", ".join(
         f"({_bucket_sql(p)}) AS b{t}" for t, p in enumerate(HYPERPLANE_TABLES)
     )
@@ -348,7 +364,7 @@ def embedding_near_dup_oracle_sql(threshold: float = 0.95) -> str:
                round(list_cosine_similarity(a.vec, b.vec), 6) AS cos_sim
         FROM cand c JOIN base a ON c.vec_a = a.vec_id
                     JOIN base b ON c.vec_b = b.vec_id
-        WHERE round(list_cosine_similarity(a.vec, b.vec), 6) >= {threshold}
+        WHERE round(list_cosine_similarity(a.vec, b.vec), 6) >= {NEAR_DUP_COS}
     """
 
 
@@ -421,12 +437,7 @@ def _cell_vectors(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def ann_ivf_topk(
-    embeddings: DataFrame,
-    n_probes: int = 10,
-    k: int = 3,
-    nprobe_cells: int = 2,
-) -> DataFrame:
+def ann_ivf_topk(embeddings: DataFrame) -> DataFrame:
     """IVF approximate top-k — the inverted-file scale path:
 
     1. train the coarse quantizer (per-label centroid cells — at real
@@ -434,10 +445,10 @@ def ann_ivf_topk(
        BROADCAST);
     2. assign every vector to its nearest cell (broadcast join + rank,
        one pass over the corpus);
-    3. probes search only their ``nprobe_cells`` closest cells' inverted
+    3. probes search only their ``NPROBE_CELLS`` closest cells' inverted
        lists — the classic recall/cost dial.
 
-    Per-probe work is nprobe_cells/n_cells of the corpus, never all of
+    Per-probe work is NPROBE_CELLS/n_cells of the corpus, never all of
     it; the big side is touched by exactly one broadcast-join pass for
     assignment and one bucket equi-join for search."""
     cells = _cell_vectors(embeddings).select(
@@ -457,7 +468,7 @@ def ann_ivf_topk(
     )
     probe_cells = (
         ranked.filter(
-            (F.col("vec_id") < n_probes) & (F.col("cell_rank") <= nprobe_cells)
+            (F.col("vec_id") < N_PROBES) & (F.col("cell_rank") <= NPROBE_CELLS)
         )
         .select(F.col("vec_id").alias("probe_id"), F.col("vec").alias("pvec"), "cell")
     )
@@ -474,12 +485,12 @@ def ann_ivf_topk(
     w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= PROBE_TOPK)
         .select("probe_id", "rank", "vec_id", "cos_sim")
     )
 
 
-def ann_ivf_oracle_sql(n_probes: int = 10, k: int = 3, nprobe_cells: int = 2) -> str:
+def ann_ivf_oracle_sql() -> str:
     return f"""
         WITH cents AS (
           SELECT label, d,
@@ -502,7 +513,7 @@ def ann_ivf_oracle_sql(n_probes: int = 10, k: int = 3, nprobe_cells: int = 2) ->
           SELECT vec_id, vec, cell FROM ranked WHERE cell_rank = 1),
         probe_cells AS (
           SELECT vec_id AS probe_id, vec AS pvec, cell
-          FROM ranked WHERE vec_id < {n_probes} AND cell_rank <= {nprobe_cells}),
+          FROM ranked WHERE vec_id < {N_PROBES} AND cell_rank <= {NPROBE_CELLS}),
         scored AS (
           SELECT p.probe_id, a.vec_id,
                  round(list_cosine_similarity(p.pvec, a.vec), 6) AS cos_sim
@@ -511,7 +522,7 @@ def ann_ivf_oracle_sql(n_probes: int = 10, k: int = 3, nprobe_cells: int = 2) ->
         SELECT probe_id, rank::INT AS rank, vec_id, cos_sim FROM (
           SELECT *, row_number() OVER (PARTITION BY probe_id
             ORDER BY cos_sim DESC, vec_id) AS rank
-          FROM scored) WHERE rank <= {k}
+          FROM scored) WHERE rank <= {PROBE_TOPK}
     """
 
 
@@ -543,20 +554,18 @@ def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def ann_quantized_topk(
-    embeddings: DataFrame, query_vec_id: int = 0, k: int = 10
-) -> DataFrame:
+def ann_quantized_topk(embeddings: DataFrame) -> DataFrame:
     """Brute-force top-k by cosine over int8-QUANTIZED vectors —
     the same shape as :func:`cosine_topk` (broadcast probe,
     TakeOrdered) but every shuffled/compared byte is quantized.  The
     per-vector scales cancel in the cosine, so the score is simply the
     cosine of the integer vectors, rounded to 6 dp."""
     q = quantize_embeddings(embeddings)
-    probe = q.filter(F.col("vec_id") == query_vec_id).select(
+    probe = q.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         _as_double(F.col("qvec")).alias("pvec")
     )
     scored = (
-        q.filter(F.col("vec_id") != query_vec_id)
+        q.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(F.broadcast(probe))
         .select(
             "vec_id",
@@ -566,14 +575,14 @@ def ann_quantized_topk(
             ).alias("qcos_sim"),
         )
     )
-    topk = scored.orderBy(F.desc("qcos_sim"), F.asc("vec_id")).limit(k)
+    topk = scored.orderBy(F.desc("qcos_sim"), F.asc("vec_id")).limit(TOPK)
     w = Window.orderBy(F.desc("qcos_sim"), F.asc("vec_id"))
     return topk.withColumn("rank", F.row_number().over(w)).select(
         "rank", "vec_id", "label", "qcos_sim"
     )
 
 
-def ann_quantized_oracle_sql(query_vec_id: int = 0, k: int = 10) -> str:
+def ann_quantized_oracle_sql() -> str:
     """DuckDB replica: identical quantization formula (round half away
     from zero matches Spark's HALF_UP on these values), identical
     tie-break."""
@@ -587,36 +596,29 @@ def ann_quantized_oracle_sql(query_vec_id: int = 0, k: int = 10) -> str:
                                  y -> abs(y::DOUBLE))) / 127.0, 1e-12))
                  ) AS qvec
           FROM embeddings),
-        probe AS (SELECT qvec AS pvec FROM q WHERE vec_id = {query_vec_id}),
+        probe AS (SELECT qvec AS pvec FROM q WHERE vec_id = {QUERY_VEC_ID}),
         scored AS (
           SELECT q.vec_id, q.label,
                  round(list_cosine_similarity(q.qvec, p.pvec), 6) AS qcos_sim
-          FROM q, probe p WHERE q.vec_id != {query_vec_id})
+          FROM q, probe p WHERE q.vec_id != {QUERY_VEC_ID})
         SELECT rank::INT AS rank, vec_id, label, qcos_sim FROM (
           SELECT *, row_number() OVER (
             ORDER BY qcos_sim DESC, vec_id) AS rank
-          FROM scored) WHERE rank <= {k}
+          FROM scored) WHERE rank <= {TOPK}
     """
 
 
+KMEANS_K = 4
 KMEANS_ITERS = 2
+SEMDEDUP_TAU = 0.9
 
 
-def kmeans_assignments(embeddings: DataFrame, k: int = 4) -> DataFrame:
-    """The per-vector cluster assignment after :func:`kmeans_fixed`'s
-    deterministic Lloyd iterations — (vec_id, vec, cluster), the input
-    SemDeDup-style semantic dedup consumes.  Same seeding, rounding,
-    and tie-break discipline; see :func:`kmeans_fixed`."""
-    return _kmeans_assign_final(embeddings, k, KMEANS_ITERS)
-
-
-def kmeans_fixed(
-    embeddings: DataFrame, k: int = 4, iters: int = KMEANS_ITERS
-) -> DataFrame:
-    """Distributed Lloyd k-means with DETERMINISTIC seeding and a fixed
-    iteration count, so the whole run is an engine-replicable pure
+def kmeans_fixed(embeddings: DataFrame) -> DataFrame:
+    """Distributed Lloyd k-means (``KMEANS_K`` clusters) with
+    DETERMINISTIC seeding and a fixed iteration count
+    (``KMEANS_ITERS``), so the whole run is an engine-replicable pure
     function: centroids initialize to the vectors with ``vec_id <
-    k``, assignments break distance ties toward the lower cluster id,
+    KMEANS_K``, assignments break distance ties toward the lower cluster id,
     and both distances and intermediate centroids round (9 dp) so
     float summation order can never flip an assignment across engines.
 
@@ -628,7 +630,7 @@ def kmeans_fixed(
     driver (same driver-side grain as the reference's dendrogram
     step).  Output: one row per (cluster, dim) with the final
     centroid (6 dp) and the cluster's vector count."""
-    assigned = _kmeans_assign_final(embeddings, k, iters)
+    assigned = kmeans_assignments(embeddings)
     return (
         assigned.select("cluster", F.posexplode("vec").alias("dim", "x"))
         .groupBy("cluster", "dim")
@@ -639,9 +641,11 @@ def kmeans_fixed(
     )
 
 
-def _kmeans_assign_final(
-    embeddings: DataFrame, k: int, iters: int
-) -> DataFrame:
+def kmeans_assignments(embeddings: DataFrame) -> DataFrame:
+    """The per-vector cluster assignment after :func:`kmeans_fixed`'s
+    deterministic Lloyd iterations — (vec_id, vec, cluster), the input
+    SemDeDup-style semantic dedup consumes.  Same seeding, rounding,
+    and tie-break discipline; see :func:`kmeans_fixed`."""
     base = embeddings.select(
         "vec_id", _as_double(F.col("embedding")).alias("vec")
     )
@@ -656,10 +660,10 @@ def _kmeans_assign_final(
 
     cents = [
         list(r["vec"])
-        for r in base.filter(F.col("vec_id") < k).orderBy("vec_id").collect()
+        for r in base.filter(F.col("vec_id") < KMEANS_K).orderBy("vec_id").collect()
     ]
-    if len(cents) < k:
-        raise ValueError(f"need vec_id 0..{k-1} present to seed {k} clusters")
+    if len(cents) < KMEANS_K:
+        raise ValueError(f"need vec_id 0..{KMEANS_K - 1} to seed the clusters")
 
     def assign(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
         dists = [
@@ -685,7 +689,7 @@ def _kmeans_assign_final(
             (F.array_position(arr, F.array_min(arr)) - 1).cast("int"),
         )
 
-    for _it in range(iters - 1):
+    for _it in range(KMEANS_ITERS - 1):
         assigned = assign(base, cents)
         agg = (
             assigned.select("cluster", F.posexplode("vec").alias("dim", "x"))
@@ -696,10 +700,10 @@ def _kmeans_assign_final(
     return assign(base, cents)
 
 
-def semdedup(embeddings: DataFrame, k: int = 4, tau: float = 0.95) -> DataFrame:
+def semdedup(embeddings: DataFrame) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means cluster the embeddings,
     then within each cluster drop every vector that has a LOWER-vec_id
-    neighbor at cosine ≥ ``tau`` — semantic dedup whose pair work is
+    neighbor at cosine ≥ ``SEMDEDUP_TAU`` — semantic dedup whose pair work is
     bounded by cluster size instead of n² (the paper's point: at scale
     k grows with n, keeping clusters near-constant).
 
@@ -708,7 +712,7 @@ def semdedup(embeddings: DataFrame, k: int = 4, tau: float = 0.95) -> DataFrame:
     an engine-replicable pure function.  Shuffle shape: one equi-join
     on the cluster id; within-cluster pairs are the algorithm's own
     bound.  Output: (vec_id, cluster, keep)."""
-    a = kmeans_assignments(embeddings, k=k)
+    a = kmeans_assignments(embeddings)
     dot = lambda u, v: F.aggregate(  # noqa: E731
         F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -725,7 +729,7 @@ def semdedup(embeddings: DataFrame, k: int = 4, tau: float = 0.95) -> DataFrame:
             (F.col("x.cluster") == F.col("y.cluster"))
             & (F.col("y.vec_id") < F.col("x.vec_id")),
         )
-        .where(cos >= tau)
+        .where(cos >= SEMDEDUP_TAU)
         .select(F.col("x.vec_id").alias("vec_id"))
         .distinct()
     )
@@ -739,11 +743,13 @@ def semdedup(embeddings: DataFrame, k: int = 4, tau: float = 0.95) -> DataFrame:
     )
 
 
-def power_iteration_top_component(
-    embeddings: DataFrame,
-    dim: int,
-    iters: int = 3,
-) -> DataFrame:
+# Power iteration: PCA_ITERS steps over the ANN_DIM embedding
+# dimensions, every cross-row sum rounded to PCA_NDP decimals.
+PCA_ITERS = 3
+PCA_NDP = 9
+
+
+def power_iteration_top_component(embeddings: DataFrame) -> DataFrame:
     """Top principal component of the (mean-centered) embedding cloud
     via fixed-step power iteration — the whitening/decorrelation
     primitive ANN and SemDeDup pipelines run before indexing (project
@@ -751,63 +757,64 @@ def power_iteration_top_component(
 
     Engine-exact by the iterative-algorithm discipline (k-means /
     pagerank / GD classifier): fixed iteration count from a fixed
-    start (1/√dim everywhere), every cross-row sum rounded to 9
-    decimals, every per-row dot product a strictly LEFT-ASSOCIATIVE
-    64-term expression chain (so the fold order is identical in Spark
-    and the SQL oracle — no list_sum whose summation order is the
-    engine's choice), and the normalization arithmetic (norm², sqrt,
-    divide) done on the ROUNDED component sums in both engines.
+    start (1/√ANN_DIM everywhere), every cross-row sum rounded to
+    ``PCA_NDP`` decimals, every per-row dot product a strictly
+    LEFT-ASSOCIATIVE ``ANN_DIM``-term expression chain (so the fold
+    order is identical in Spark and the SQL oracle — no list_sum whose
+    summation order is the engine's choice), and the normalization
+    arithmetic (norm², sqrt, divide) done on the ROUNDED component sums
+    in both engines.
 
     Scale shape: per iteration ONE aggregation pass over the data —
-    the per-row dot is a single projected column reused by all ``dim``
-    component sums (never ``dim`` copies of the dot expression), the
-    result is a dim-sized driver vector (tiny collect by design, like
-    pagerank's dangling mass), and the next step's vector re-enters as
-    literals.  Cost: iters passes, zero shuffles beyond each agg's.
+    the per-row dot is a single projected column reused by all
+    ``ANN_DIM`` component sums (never ``ANN_DIM`` copies of the dot
+    expression), the result is an ANN_DIM-sized driver vector (tiny
+    collect by design, like pagerank's dangling mass), and the next
+    step's vector re-enters as literals.  Cost: ``PCA_ITERS`` passes,
+    zero shuffles beyond each agg's.
 
-    Convergence is data-dependent — error shrinks as (λ2/λ1)^iters, so
-    a planted dominant direction is recovered in 3 steps (pinned by
+    Convergence is data-dependent — error shrinks as
+    (λ2/λ1)^PCA_ITERS, so a planted dominant direction is recovered in
+    3 steps (pinned by
     test) while a spectral-gap-free isotropic cloud moves slowly by
     MATH, not by bug (the sf0.01 synthetic embeddings have
     λ2/λ1 = 0.987; the test therefore pins same-step equality against
-    a numpy reference, not full convergence).  Callers chasing a flat
-    spectrum should raise ``iters`` (cost: one agg pass each).
+    a numpy reference, not full convergence).  A flat spectrum needs
+    more steps (cost: one agg pass each).
 
-    Output: (pos, component, eigenvalue) — dim rows; ``eigenvalue`` is
+    Output: (pos, component, eigenvalue) — ANN_DIM rows; ``eigenvalue`` is
     the final pre-normalization norm (the Rayleigh estimate), repeated
     per row for a flat hashable schema."""
-    ndp = 9
     n_total = embeddings.count()
     if n_total == 0:
         raise ValueError("power iteration over an empty embedding table")
     x = lambda i: F.col("embedding")[i].cast("double")  # noqa: E731
-    mean_row = embeddings.agg(
-        *[F.round(F.sum(x(i)) / n_total, ndp).alias(f"m{i}") for i in range(dim)]
-    ).first()
-    mean = [mean_row[f"m{i}"] for i in range(dim)]
-    v = [round(1.0 / dim**0.5, ndp)] * dim
+    means = [F.round(F.sum(x(i)) / n_total, PCA_NDP) for i in range(ANN_DIM)]
+    mean_row = embeddings.agg(*[m.alias(f"m{i}") for i, m in enumerate(means)]).first()
+    mean = [mean_row[f"m{i}"] for i in range(ANN_DIM)]
+    v = [round(1.0 / ANN_DIM**0.5, PCA_NDP)] * ANN_DIM
     eigenvalue = 0.0
-    for _ in range(iters):
+    for _ in range(PCA_ITERS):
         dot = (x(0) - mean[0]) * v[0]
-        for i in range(1, dim):
+        for i in range(1, ANN_DIM):
             dot = dot + (x(i) - mean[i]) * v[i]
-        with_dot = embeddings.withColumn("_dot", F.round(dot, ndp))
+        with_dot = embeddings.withColumn("_dot", F.round(dot, PCA_NDP))
         comp_row = with_dot.agg(
             *[
-                F.round(F.sum(F.col("_dot") * (x(i) - mean[i])), ndp).alias(
+                F.round(F.sum(F.col("_dot") * (x(i) - mean[i])), PCA_NDP).alias(
                     f"c{i}"
                 )
-                for i in range(dim)
+                for i in range(ANN_DIM)
             ]
         ).first()
-        comps = [comp_row[f"c{i}"] for i in range(dim)]
+        comps = [comp_row[f"c{i}"] for i in range(ANN_DIM)]
         norm_sq = comps[0] * comps[0]
         for c in comps[1:]:
             norm_sq = norm_sq + c * c
         eigenvalue = norm_sq**0.5
-        v = [round(c / eigenvalue, ndp) for c in comps]
+        v = [round(c / eigenvalue, PCA_NDP) for c in comps]
     spark = embeddings.sparkSession
     return spark.createDataFrame(
-        [(i, v[i], round(eigenvalue, ndp)) for i in range(dim)],
+        [(i, v[i], round(eigenvalue, PCA_NDP)) for i in range(ANN_DIM)],
         "pos int, component double, eigenvalue double",
     )

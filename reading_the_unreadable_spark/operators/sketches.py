@@ -25,13 +25,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
+# HLL: 2^HLL_P = 64 registers per group, whose bias constant α is 0.709.
+HLL_P = 6
+HLL_ALPHA = 0.709
 CMS_DEPTH = 4
 CMS_WIDTH = 256
-
-
-def _alpha(m: int) -> float:
-    return _ALPHA.get(m, 0.7213 / (1 + 1.079 / m))
+# Bloom filter geometry: BLOOM_K hashes into BLOOM_M_BITS bits.
+BLOOM_K = 5
+BLOOM_M_BITS = 4096
 
 
 def _rho(tail_hex: Column, bits: int) -> Column:
@@ -52,17 +53,13 @@ def _rho(tail_hex: Column, bits: int) -> Column:
     )
 
 
-def hll_registers(
-    df: DataFrame, value_col: str, group_cols: list[str], p: int = 6
-) -> DataFrame:
+def hll_registers(df: DataFrame, value_col: str, group_cols: list[str]) -> DataFrame:
     """Per-group HLL registers: (group..., bucket, r) with
     r = max rho over the group's values in that bucket.  One shuffle on
     (group, bucket); partial aggregation collapses duplicates map-side,
     so the network carries ≤ m rows per group regardless of input
     size."""
-    if not 4 <= p <= 12:
-        raise ValueError(f"p={p} outside the supported 4..12 range")
-    m = 1 << p
+    m = 1 << HLL_P
     h = F.md5(F.col(value_col).cast("string"))
     bucket = (
         F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % m
@@ -75,22 +72,14 @@ def hll_registers(
     )
 
 
-def approx_distinct(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    p: int = 6,
-    with_exact: bool = False,
-) -> DataFrame:
+def approx_distinct(df: DataFrame, value_col: str, group_cols: list[str]) -> DataFrame:
     """Per-group HLL cardinality estimate (4-dp rounded), with the
     standard small-range linear-counting correction (E ≤ 2.5m with
-    empty registers → m·ln(m/V)).  ``with_exact=True`` adds the true
-    distinct count for accuracy evidencing — that branch costs the
-    value shuffle the sketch exists to avoid; leave it off in
-    production."""
-    m = 1 << p
-    alpha = _alpha(m)
-    regs = hll_registers(df, value_col, group_cols, p)
+    empty registers → m·ln(m/V)), next to the true distinct count and
+    the estimate's relative error — the accuracy evidence; the exact
+    count costs the value shuffle the sketch alone avoids."""
+    m = 1 << HLL_P
+    regs = hll_registers(df, value_col, group_cols)
     agg = regs.groupBy(*group_cols).agg(
         F.sum(F.pow(F.lit(2.0), -F.col("r"))).alias("s_present"),
         F.count("*").alias("n_present"),
@@ -98,7 +87,7 @@ def approx_distinct(
     # absent registers contribute 2^0 = 1 each; V = count of empties
     s = F.col("s_present") + (F.lit(m) - F.col("n_present"))
     v = F.lit(m) - F.col("n_present")
-    raw = F.lit(alpha * m * m) / s
+    raw = F.lit(HLL_ALPHA * m * m) / s
     est = F.round(
         F.when(
             (raw <= 2.5 * m) & (v > 0), F.lit(float(m)) * F.log(F.lit(m) / v)
@@ -110,22 +99,20 @@ def approx_distinct(
         F.col("n_present").alias("n_registers_hit"),
         est.alias("hll_estimate"),
     )
-    if with_exact:
-        exact = df.groupBy(*group_cols).agg(
-            F.count_distinct(F.col(value_col)).alias("n_exact")
-        )
-        out = out.join(exact, group_cols).select(
-            *group_cols,
-            "n_exact",
-            "n_registers_hit",
-            "hll_estimate",
-            F.round(
-                F.abs(F.col("hll_estimate") - F.col("n_exact"))
-                / F.greatest(F.col("n_exact"), F.lit(1)),
-                4,
-            ).alias("rel_err"),
-        )
-    return out
+    exact = df.groupBy(*group_cols).agg(
+        F.count_distinct(F.col(value_col)).alias("n_exact")
+    )
+    return out.join(exact, group_cols).select(
+        *group_cols,
+        "n_exact",
+        "n_registers_hit",
+        "hll_estimate",
+        F.round(
+            F.abs(F.col("hll_estimate") - F.col("n_exact"))
+            / F.greatest(F.col("n_exact"), F.lit(1)),
+            4,
+        ).alias("rel_err"),
+    )
 
 
 def cms_counts(df: DataFrame, value_col: str) -> DataFrame:
@@ -212,20 +199,12 @@ def cms_estimate(cms: DataFrame, probes: DataFrame, value_col: str) -> DataFrame
     )
 
 
-def bloom_bits(
-    df: DataFrame, value_col: str, k: int = 5, m_bits: int = 4096
-) -> DataFrame:
-    """Bloom filter bit set as a table of distinct set-bit positions —
-    (bit).  ``k`` md5-seeded hashes per value; one distinct-shuffle of
-    at most ``m_bits`` rows.  Integer positions only → exact DuckDB
-    parity.  Membership = all k positions present
-    (:func:`bloom_contains`): no false negatives, false positives at
-    the standard (1 - e^{-kn/m})^k rate."""
-    if k < 1 or m_bits < 8:
-        raise ValueError(f"bad bloom geometry k={k} m_bits={m_bits}")
-    bits = F.explode(
+def _bloom_positions(value_col: str) -> Column:
+    """The ``BLOOM_K`` md5-seeded bit positions of each value, one row
+    per position."""
+    return F.explode(
         F.transform(
-            F.sequence(F.lit(0), F.lit(k - 1)),
+            F.sequence(F.lit(0), F.lit(BLOOM_K - 1)),
             lambda i: (
                 F.conv(
                     F.substring(
@@ -242,45 +221,28 @@ def bloom_bits(
                     16,
                     10,
                 ).cast("long")
-                % m_bits
+                % BLOOM_M_BITS
             ).cast("int"),
         )
     )
-    return df.select(bits.alias("bit")).distinct()
 
 
-def bloom_contains(
-    bits: DataFrame, probes: DataFrame, value_col: str,
-    k: int = 5, m_bits: int = 4096,
-) -> DataFrame:
-    """Membership verdict per probe: present ⟺ all k bit positions are
-    set.  The bit table is ≤ m_bits rows — broadcast it; probes never
-    shuffle."""
+def bloom_bits(df: DataFrame, value_col: str) -> DataFrame:
+    """Bloom filter bit set as a table of distinct set-bit positions —
+    (bit).  ``BLOOM_K`` md5-seeded hashes per value; one
+    distinct-shuffle of at most ``BLOOM_M_BITS`` rows.  Integer
+    positions only → exact DuckDB parity.  Membership = all k positions
+    present (:func:`bloom_contains`): no false negatives, false
+    positives at the standard (1 - e^{-kn/m})^k rate."""
+    return df.select(_bloom_positions(value_col).alias("bit")).distinct()
+
+
+def bloom_contains(bits: DataFrame, probes: DataFrame, value_col: str) -> DataFrame:
+    """Membership verdict per probe: present ⟺ all ``BLOOM_K`` bit
+    positions are set.  The bit table is ≤ ``BLOOM_M_BITS`` rows —
+    broadcast it; probes never shuffle."""
     probe_bits = probes.select(
-        F.col(value_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(k - 1)),
-                lambda i: (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    i.cast("string"),
-                                    F.lit("#"),
-                                    F.col(value_col).cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % m_bits
-                ).cast("int"),
-            )
-        ).alias("bit"),
+        F.col(value_col), _bloom_positions(value_col).alias("bit")
     )
     from pyspark.sql.functions import broadcast
 

@@ -339,6 +339,9 @@ def _asof_join_broadcast(
     )
 
 
+GRAIN_SECONDS = 86400  # range_point_prefix_agg's cell: one day
+
+
 def range_point_prefix_agg(
     intervals: DataFrame,
     points: DataFrame,
@@ -346,7 +349,6 @@ def range_point_prefix_agg(
     end_col: str,
     ts_col: str,
     value_col: str,
-    grain_seconds: int = 86400,
 ) -> DataFrame:
     """Per-interval ``count``/``sum`` over points in ``[start, end)``,
     for callers that never need the pair rows themselves.
@@ -358,7 +360,7 @@ def range_point_prefix_agg(
     half-open interval is a difference of two PREFIX SUMS, so this
     operator is O(points + intervals):
 
-    1. points pre-aggregate to ``grain_seconds`` cells (one map-side-
+    1. points pre-aggregate to ``GRAIN_SECONDS`` cells (one map-side-
        combined shuffle; output is bounded by the corpus TIME SPAN /
        grain, not by data size);
     2. a single-row higher-order fold turns the sorted cell array into
@@ -372,8 +374,8 @@ def range_point_prefix_agg(
     inner-join + groupBy contract.  Null point timestamps never match
     (predicate semantics).
 
-    PRECONDITION: interval bounds aligned to ``grain_seconds`` (e.g.
-    date bounds with the default day grain).  Point timestamps are
+    PRECONDITION: interval bounds aligned to ``GRAIN_SECONDS`` (date
+    bounds: the grain is one day).  Point timestamps are
     arbitrary.  Equivalence against the join+groupBy form
     (``range_point_join`` in tests/operator_specs.py) is pinned in
     tests/test_temporal.py.
@@ -381,7 +383,7 @@ def range_point_prefix_agg(
     Output: all ``intervals`` columns + ``n_points`` (long) +
     ``sum_value`` (same type family as ``sum(value_col)``).
     """
-    g = F.lit(int(grain_seconds)).cast("long")
+    g = F.lit(GRAIN_SECONDS).cast("long")
     cell = lambda c: F.floor(F.unix_timestamp(F.col(c)) / g).cast("long")  # noqa: E731
     cells = (
         points.filter(F.col(ts_col).isNotNull())

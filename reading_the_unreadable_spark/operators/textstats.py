@@ -216,9 +216,12 @@ def _merge_fold_expr(syms: Column, a_sym: str, b_sym: str) -> Column:
     )
 
 
-def bpe_train(documents: DataFrame, n_merges: int = 5) -> DataFrame:
+BPE_MERGES = 5
+
+
+def bpe_train(documents: DataFrame) -> DataFrame:
     """Distributed BPE tokenizer training (Sennrich et al. 2016): learn
-    ``n_merges`` merge rules from corpus word frequencies — the actual
+    ``BPE_MERGES`` merge rules from corpus word frequencies — the actual
     tokenizer-training computation, not a proxy.
 
     Shape per merge step (the scale story): symbol pairs explode from
@@ -253,7 +256,7 @@ def bpe_train(documents: DataFrame, n_merges: int = 5) -> DataFrame:
         "freq",
     ).localCheckpoint()
     rules = []
-    for rank in range(n_merges):
+    for rank in range(BPE_MERGES):
         toks = F.split(F.col("syms"), " ")
         pairs = vocab.select(
             "freq",
@@ -338,12 +341,12 @@ def bpe_encode(documents: DataFrame, merges: list[tuple[str, str]]) -> DataFrame
     )
 
 
-def pmi_collocations(
-    documents: DataFrame,
-    min_count: int = 5,
-    k: int = 20,
-) -> DataFrame:
-    """Top-``k`` adjacent-word collocations by pointwise mutual
+PMI_MIN_COUNT = 5
+PMI_TOPK = 20
+
+
+def pmi_collocations(documents: DataFrame) -> DataFrame:
+    """Top-``PMI_TOPK`` adjacent-word collocations by pointwise mutual
     information (Church & Hanks 1990) — the statistical phrase-mining
     pass tokenizer/phrase-list pipelines run before training:
 
@@ -361,7 +364,7 @@ def pmi_collocations(
     doubles (c_ab·N overflows int64 at corpus scale).  Top-k orders
     by the ROUNDED pmi (then the pair) so the cutoff is engine-
     portable, and runs as TakeOrdered — never a global sort.
-    ``min_count`` suppresses the noise floor (PMI's known bias toward
+    ``PMI_MIN_COUNT`` suppresses the noise floor (PMI's known bias toward
     hapax pairs)."""
     words = F.split(F.col("text"), " ")
     n = F.size(words)
@@ -377,7 +380,7 @@ def pmi_collocations(
     right = big.groupBy("cur").agg(F.sum("c_ab").alias("c_b"))
     total = big.agg(F.sum("c_ab").alias("n_big"))
     scored = (
-        big.filter(F.col("c_ab") >= min_count)
+        big.filter(F.col("c_ab") >= PMI_MIN_COUNT)
         .join(left, "prev")
         .join(right, "cur")
         .join(F.broadcast(total))
@@ -394,12 +397,15 @@ def pmi_collocations(
             ).alias("pmi"),
         )
     )
-    return scored.orderBy(F.col("pmi").desc(), "prev", "cur").limit(k)
+    return scored.orderBy(F.col("pmi").desc(), "prev", "cur").limit(PMI_TOPK)
 
 
-def zipf_fit(documents: DataFrame, top_k: int = 1000) -> DataFrame:
+ZIPF_TOPK = 1000
+
+
+def zipf_fit(documents: DataFrame) -> DataFrame:
     """Zipf's-law diagnostic: least-squares slope/intercept/R² of
-    ln(frequency) against ln(rank) over the ``top_k`` most frequent
+    ln(frequency) against ln(rank) over the ``ZIPF_TOPK`` most frequent
     tokens — the one-row corpus health check (natural language sits
     near slope −1; a slope collapsing toward 0 means templated or
     deduplicated-to-death text, a cliff past rank ~100 means a
@@ -427,7 +433,7 @@ def zipf_fit(documents: DataFrame, top_k: int = 1000) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    top = freq.orderBy(F.col("c").desc(), "token").limit(top_k)
+    top = freq.orderBy(F.col("c").desc(), "token").limit(ZIPF_TOPK)
     ranked = top.withColumn(
         "rank",
         F.row_number().over(Window.orderBy(F.col("c").desc(), "token")),
@@ -526,19 +532,22 @@ def length_quantiles(documents: DataFrame) -> DataFrame:
     return cum.groupBy("source").agg(*aggs)
 
 
-def chunk_overlap(documents: DataFrame, size: int = 50, stride: int = 40) -> DataFrame:
+CHUNK_TOKENS = 40
+CHUNK_STRIDE = 30
+
+
+def chunk_overlap(documents: DataFrame) -> DataFrame:
     """Strided overlapping chunker (the RAG/embedding-index grain:
-    ``size``-token windows every ``stride`` tokens, so consecutive
-    chunks share ``size−stride`` tokens and no boundary sentence is
-    ever split away from all its context).  Chunks start at 0,
-    stride, 2·stride, …; the last chunk is the first one whose window
-    reaches the end of the document (shorter than ``size`` only when
-    the document itself is).  Pure map stage — transform + posexplode,
-    zero shuffle, streams over 100 TB.
+    ``CHUNK_TOKENS``-token windows every ``CHUNK_STRIDE`` tokens, so
+    consecutive chunks share CHUNK_TOKENS − CHUNK_STRIDE tokens and no
+    boundary sentence is ever split away from all its context).
+    Chunks start at 0, stride, 2·stride, …; the last chunk is the
+    first one whose window reaches the end of the document (shorter
+    than ``CHUNK_TOKENS`` only when the document itself is).  Pure map
+    stage — transform + posexplode, zero shuffle, streams over 100 TB.
 
     Output: (doc_id, chunk_idx 0-based, text, n_tokens)."""
-    if stride <= 0 or size < stride:
-        raise ValueError("need 0 < stride <= size")
+    size, stride = CHUNK_TOKENS, CHUNK_STRIDE
     w = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     n = F.size(w)
     # number of chunks: 1 + ceil(max(n-size,0)/stride), at least 1 for

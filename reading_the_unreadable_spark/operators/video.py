@@ -187,19 +187,22 @@ def sample_frame_features(media: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------------ synth
-def synth_avi_bytes(ref: str, n_frames: int = 6) -> bytes:
-    """Deterministic REAL 32x24 AVI/MJPG clip for a media_ref: a
-    ref-seeded gradient that brightens per frame, so frame order is
-    observable in the decoded features."""
+SYNTH_FRAMES = 4
+
+
+def synth_avi_bytes(ref: str) -> bytes:
+    """Deterministic REAL 32x24 AVI/MJPG clip of ``SYNTH_FRAMES``
+    frames for a media_ref: a ref-seeded gradient that brightens per
+    frame, so frame order is observable in the decoded features."""
     w, h = 32, 24
     seed = int.from_bytes(hashlib.md5(ref.encode()).digest()[:4], "big")
     rng = np.random.Generator(np.random.PCG64(seed))
     base = rng.integers(0, 40, (h, w, 3)).astype(np.float32)
     frames = []
-    for i in range(n_frames):
+    for i in range(SYNTH_FRAMES):
         grad = np.linspace(0, 150, w, dtype=np.float32)[None, :, None]
         frames.append(
-            np.clip(base + grad + i * (100.0 / max(n_frames - 1, 1)), 0, 255
+            np.clip(base + grad + i * (100.0 / (SYNTH_FRAMES - 1)), 0, 255
                     ).astype(np.uint8)
         )
     return encode_avi_mjpeg(frames)

@@ -21,13 +21,17 @@ from ..operators.quality import gopher_filter, redact_pii
 from ..operators.urls import url_filter
 
 
-def curate(pages: DataFrame, blocked_domains: tuple[str, ...] = ()) -> DataFrame:
+BLOCKED_DOMAINS = ("bad.net",)
+
+
+def curate(pages: DataFrame) -> DataFrame:
     """(doc_id, url, html) → (doc_id, url_kept, gopher_kept,
     final_kept, text, n_email): both gate verdicts, the final keep,
-    and the redacted extracted text for kept docs."""
+    and the redacted extracted text for kept docs.  The URL gate
+    blocks ``BLOCKED_DOMAINS``."""
     uv = url_filter(
         pages.select("doc_id", "url"),
-        blocked_domains=blocked_domains,
+        blocked_domains=BLOCKED_DOMAINS,
     ).select("doc_id", F.col("url_keep").cast("int").alias("url_kept"))
     extracted = main_text(pages.select("doc_id", "html"))
     survivors = extracted.join(

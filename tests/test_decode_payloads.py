@@ -92,7 +92,7 @@ DECODERS = {
     "scan_preprocess_features": (scan_preprocess_features, "media_ref", MEDIA, _page),
     "detect_page_blocks": (detect_page_blocks, "media_ref", MEDIA, _page),
     "sample_frame_features": (sample_frame_features, "media_ref", MEDIA,
-                              lambda: synth_avi_bytes("ok.avi", n_frames=3)),
+                              lambda: synth_avi_bytes("ok.avi")),
     "parse_archive_frame": (parse_archive_frame, "source_file", FILES,
                             lambda: build_zip([("a.txt", b"hi", "stored"),
                                                ("b.txt", b"there", "deflate")])),
@@ -115,6 +115,23 @@ DECODERS = {
 
 def _rows(df) -> list[tuple]:
     return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize(
+    "name, empty",
+    [
+        ("detect_page_blocks", lambda: encode_tiff(np.ones((40, 80), bool), "g4")),
+        ("parse_pdf_spans", lambda: encode_pdf([[]])),
+        ("parse_archive_frame", lambda: build_zip([])),
+    ],
+)
+def test_zero_row_payload_gets_one_quarantine_row(spark, name, empty):
+    """A payload that decodes to no rows (a blank page, a PDF without
+    text runs, an empty ZIP) still gets its one outcome row."""
+    decoder, key_out, (schema, keys, make_row), _ = DECODERS[name]
+    df = spark.createDataFrame([make_row(keys[0], bytearray(empty()))], schema)
+    got = decoder(df).collect()
+    assert [(r[key_out], r[-1]) for r in got] == [(keys[0], "no rows")]
 
 
 @pytest.mark.parametrize("name", sorted(DECODERS))

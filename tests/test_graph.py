@@ -60,13 +60,14 @@ def test_pagerank_empty_raises(spark):
 
 def test_anchor_texts_bounded_and_sorted(spark):
     links = spark.createDataFrame(
-        [(s, 9, f"w{s % 3}") for s in range(12)] + [(0, 7, "only")],
+        [(s, 9, f"w{s % 6}") for s in range(12)] + [(0, 7, "only")],
         "src long, dst long, anchor string",
     )
-    rows = {r["dst"]: r for r in anchor_texts(links, max_anchors=2).collect()}
+    rows = {r["dst"]: r for r in anchor_texts(links).collect()}
     hub = rows[9]
     assert hub["n_inlinks"] == 12 and hub["n_src"] == 12
-    assert hub["anchors"] == "w0 | w1"  # distinct, sorted, sliced to 2
+    # distinct, sorted, sliced to MAX_ANCHORS = 4
+    assert hub["anchors"] == "w0 | w1 | w2 | w3"
     assert rows[7]["anchors"] == "only" and rows[7]["n_inlinks"] == 1
 
 
@@ -83,7 +84,7 @@ def test_hits_hand_computed(spark):
     )
     got = {
         r["node"]: (r["authority"], r["hub"])
-        for r in hits(edges, iters=2).collect()
+        for r in hits(edges).collect()
     }
     assert got == {1: (0, 8), 2: (3, 5), 3: (5, 0)}
 

@@ -450,11 +450,11 @@ def test_avi_mjpeg_roundtrip_and_sampling():
         synth_avi_bytes,
     )
 
-    avi = synth_avi_bytes("clip.avi", n_frames=6)
+    avi = synth_avi_bytes("clip.avi")
     fps, n, sampled = decode_avi_frames(avi)
-    assert (fps, n, len(sampled)) == (10.0, 6, 6)
+    assert (fps, n, len(sampled)) == (10.0, 4, 4)
     means = [s[1].mean() for s in sampled]
-    assert all(means[i] < means[i + 1] for i in range(5))  # frame order
+    assert all(means[i] < means[i + 1] for i in range(3))  # frame order
     _, _, every3 = decode_avi_frames(avi, every_n=3)
     assert [i for i, _ in every3] == [0, 3]
     with _pytest.raises(NotImplementedError):
@@ -477,11 +477,11 @@ def test_video_frame_features_spark(spark):
     ]
     df = spark.createDataFrame(rows, MEDIA_SCHEMA)
     got = sample_frame_features(df).collect()
-    assert len(got) == 3 * 3  # 6 frames, every 2nd
+    assert len(got) == 3 * 2  # 4 frames, every 2nd
     for r in got:
-        assert r["n_frames"] == 6 and r["fps"] == 10.0
+        assert r["n_frames"] == 4 and r["fps"] == 10.0
         assert (r["width"], r["height"]) == (32, 24)
-        assert r["frame_idx"] in (0, 2, 4)
+        assert r["frame_idx"] in (0, 2)
         assert abs(sum(r["feat"][4:]) - 1.0) < 1e-5  # normalized histogram
 
 
@@ -818,7 +818,7 @@ def test_media_quarantine_corrupt_payloads(spark):
     assert got["ok.wav"]["decode_err"] is None and got["ok.wav"]["sample_rate"] == 8000
     assert got["bad.wav"]["decode_err"] and got["bad.wav"]["sample_rate"] == 0
 
-    avi = synth_avi_bytes("clip.avi", n_frames=3)
+    avi = synth_avi_bytes("clip.avi")
     rows = [
         ("ok.avi", "video", bytearray(avi), None, None, 300),
         ("bad.avi", "video", bytearray(avi[:40]), None, None, 0),

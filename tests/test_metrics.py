@@ -78,14 +78,13 @@ def test_cer_spans_missing_prediction_counts_as_deletion(spark):
 def test_chunk_spans_grid(spark):
     from reading_the_unreadable_spark.operators.metrics import chunk_spans
 
-    d = spark.createDataFrame(
-        [("a", "one two three four five")], "doc_id string, text string"
-    )
-    got = chunk_spans(d, words_per_span=2).orderBy("span_idx").collect()
+    words = [f"w{i}" for i in range(45)]
+    d = spark.createDataFrame([("a", " ".join(words))], "doc_id string, text string")
+    got = chunk_spans(d).orderBy("span_idx").collect()
     assert [(r["span_idx"], r["text"]) for r in got] == [
-        (0, "one two"),
-        (1, "three four"),
-        (2, "five"),
+        (0, " ".join(words[:20])),
+        (1, " ".join(words[20:40])),
+        (2, " ".join(words[40:])),
     ]
 
 

@@ -3,9 +3,11 @@ function, class and assigned name of every package module must be
 referenced by code outside tests/ — the package itself, scripts/,
 perfbench/, __spark_entry__.py, bench.py or bench_extra.py.  Fixture
 encoders and the specs of fused operators live under tests/.  Every
-defaulted parameter of a top-level package function must be set by
-one of those callers: an option nothing sets is a constant.  A
-quarantine row's reason is formatted in ``execution.py`` only."""
+defaulted parameter of a top-level function of the package or of
+``__spark_entry__.py`` must take more than one value from those
+callers: an option nothing sets, or that every call sets to the same
+literal, is a constant.  A quarantine row's reason is formatted in
+``execution.py`` only."""
 
 from __future__ import annotations
 
@@ -64,8 +66,10 @@ CALLERS = [
     REPO / "bench_extra.py",
 ]
 
-# Encoder options that only tests set: each builds decoder input that
-# production never writes, to drive a production decode path.
+# Options whose other values only tests use: an encoder option builds
+# decoder input that production never writes, to drive a production
+# decode path; an operator option is swept by a test against a spec or
+# a brute-force reference.  Each entry names the test that needs it.
 TEST_SET_OPTIONS = {
     "operators/jpeg.py _encode_plane_block(shift=)":
         "media_fixtures.encode_jpeg_12 level-shifts 12-bit samples by 2048 "
@@ -80,44 +84,109 @@ TEST_SET_OPTIONS = {
     "operators/multimodal.py encode_png(interlace=)":
         "test_png_adam7_and_palette and test_archive_codec_fuzz_contract "
         "decode Adam7-interlaced PNGs",
+    "operators/jpeg.py encode_jpeg(quality=)":
+        "test_jpeg_roundtrip_profiles and test_jpeg_16bit_quant_tables decode "
+        "q85-q95 tables; test_progressive_jpeg_exact_vs_baseline compares at q50/q90",
+    "operators/jpeg.py encode_jpeg(subsample=)":
+        "test_jpeg_via_decode_image_and_features decodes 4:4:4 and 4:2:0; "
+        "test_archive_codec_fuzz_contract rejects 4:2:2",
+    "operators/multimodal.py encode_png(filter_type=)":
+        "test_png_roundtrip_all_filters decodes each of the 5 PNG row filters",
+    "sources/archives.py build_tar(gzip_frame=)":
+        "test_arbitrary_payloads_round_trip and test_sniff_routes_by_magic "
+        "read gzip-framed tars",
+    "sources/warc.py build_warc(gzip_members=)":
+        "test_round_trip and test_truncation_never_returns_wrong_records "
+        "read per-record gzip members",
+    "operators/dedup.py allpairs_jaccard(threshold=)":
+        "test_allpairs_jaccard_exact_vs_bruteforce and "
+        "test_allpairs_jaccard_random_corpora_exact sweep thresholds against brute force",
+    "operators/dedup.py ngram_jaccard_pairs(threshold=)":
+        "test_ngram_jaccard_bitset_vs_bruteforce sweeps thresholds against brute force",
+    "operators/imagehash.py dhash_pairs(max_hamming=)":
+        "test_band_join_is_exhaustive_vs_brute_force checks radii 1, 3 and 7 "
+        "against brute force",
+    "operators/textstats.py text_tiling(block_tokens=)":
+        "test_text_tiling_arrow_equals_hof_spec compares with text_tiling_hof "
+        "at several block sizes",
+    "operators/temporal.py asof_join(tiebreak=)":
+        "names an input column: test_asof_tiebreak_deterministic ties on 'pri', "
+        "and the brute-force as-of tests have no tie column",
 }
 
 
-def _defaulted(path: Path) -> list[tuple[str, str, int | None]]:
-    """(function, parameter, positional index or None) of every
-    defaulted parameter of the module's top-level functions."""
+def _defaulted(path: Path) -> list[tuple[str, str, int | None, ast.expr]]:
+    """(function, parameter, positional index or None, default) of
+    every defaulted parameter of the module's top-level functions."""
     out = []
     for node in ast.parse(path.read_text()).body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             a = node.args
             pos = a.posonlyargs + a.args
             first = len(pos) - len(a.defaults)
-            out += [(node.name, p.arg, i) for i, p in enumerate(pos) if i >= first]
             out += [
-                (node.name, p.arg, None)
+                (node.name, p.arg, i, a.defaults[i - first])
+                for i, p in enumerate(pos)
+                if i >= first
+            ]
+            out += [
+                (node.name, p.arg, None, d)
                 for p, d in zip(a.kwonlyargs, a.kw_defaults)
                 if d is not None
             ]
     return out
 
 
-def _call_sites(paths: list[Path]) -> dict[str, list[tuple[float, set]]]:
-    """Callee name → (positional count, keywords) per call by name or
-    attribute; a ``*args`` call counts as passing every position and a
-    ``**kwargs`` call as passing every keyword (key None)."""
-    sites: dict[str, list[tuple[float, set]]] = {}
+def _call_sites(paths: list[Path]) -> dict[str, list[ast.Call]]:
+    """Callee name → every call by that name or attribute."""
+    sites: dict[str, list[ast.Call]] = {}
     for path in paths:
         for node in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(node, ast.Call):
-                continue
-            func = node.func
-            name = getattr(func, "id", None) or getattr(func, "attr", None)
-            if name is None:
-                continue
-            star = any(isinstance(a, ast.Starred) for a in node.args)
-            n_pos = float("inf") if star else len(node.args)
-            sites.setdefault(name, []).append((n_pos, {k.arg for k in node.keywords}))
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = getattr(func, "id", None) or getattr(func, "attr", None)
+                if name is not None:
+                    sites.setdefault(name, []).append(node)
     return sites
+
+
+def _literal(node: ast.expr) -> str | None:
+    """The literal's value with its type, or None for any other
+    expression."""
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return None
+    return f"{type(value).__name__}:{value!r}"
+
+
+def _one_value_options(path: Path, sites: dict[str, list[ast.Call]]) -> list[str]:
+    """Defaulted parameters that are options in name only.  A call that
+    passes ``*``/``**`` counts as setting every parameter; otherwise a
+    parameter is flagged when no call sets it (by keyword or by
+    position), or when every call gives it one and the same literal
+    (the argument it passes, or the default when it passes none)."""
+    label = path.relative_to(PKG) if PKG in path.parents else path.name
+    out = []
+    for fn, param, index, default in _defaulted(path):
+        calls = sites.get(fn, [])
+        if any(
+            any(isinstance(a, ast.Starred) for a in c.args)
+            or any(k.arg is None for k in c.keywords)
+            for c in calls
+        ):
+            continue
+        passed = []
+        for c in calls:
+            args = [k.value for k in c.keywords if k.arg == param]
+            if index is not None:
+                args += c.args[index : index + 1]
+            passed.append(args[0] if args else None)
+        values = {_literal(default if a is None else a) for a in passed}
+        unset = all(a is None for a in passed)
+        if unset or (len(values) == 1 and None not in values):
+            out.append(f"{label} {fn}({param}=)")
+    return out
 
 
 def test_package_symbols_have_callers():
@@ -137,18 +206,15 @@ def test_package_symbols_have_callers():
 
 def test_defaulted_parameters_have_callers():
     sites = _call_sites(CALLERS)
-    unset = []
-    for path in sorted(PKG.rglob("*.py")):
-        for fn, param, index in _defaulted(path):
-            if not any(
-                None in kws or param in kws or (index is not None and n_pos > index)
-                for n_pos, kws in sites.get(fn, [])
-            ):
-                unset.append(f"{path.relative_to(PKG)} {fn}({param}=)")
-    stale = sorted(set(TEST_SET_OPTIONS) - set(unset))
+    modules = [*sorted(PKG.rglob("*.py")), REPO / "__spark_entry__.py"]
+    flagged = [o for path in modules for o in _one_value_options(path, sites)]
+    stale = sorted(set(TEST_SET_OPTIONS) - set(flagged))
     assert not stale, "allowlisted options now set outside tests/:\n" + "\n".join(stale)
-    unlisted = [u for u in unset if u not in TEST_SET_OPTIONS]
-    assert not unlisted, "no caller outside tests/ sets:\n" + "\n".join(unlisted)
+    unlisted = [o for o in flagged if o not in TEST_SET_OPTIONS]
+    assert not unlisted, (
+        f"{len(unlisted)} options in name only (set by no call outside tests/, "
+        "or to one literal by every call):\n" + "\n".join(unlisted)
+    )
 
 
 def test_quarantine_reason_formatted_once():

@@ -83,8 +83,7 @@ def test_full_cleaning_pipeline(spark):
 
     # 5. sequence packing of the survivors (single partition key)
     packed = pack_sequences(
-        deduped.filter(F.length("text") > 0).withColumn("source", F.lit("web")),
-        token_budget=16,
+        deduped.filter(F.length("text") > 0).withColumn("source", F.lit("web"))
     )
     total_docs = sum(r["n_docs"] for r in packed.collect())
     assert total_docs == 2  # doc-a and doc-b packed, doc-c emptied out

@@ -378,11 +378,11 @@ def test_ann_quantized_plan_and_recall(spark):
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = ann_quantized_topk(emb, query_vec_id=0, k=10)
+    df = ann_quantized_topk(emb)
     plan = _plan(df)
     assert "TakeOrderedAndProject" in plan, plan[:1500]
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    exact = {r["vec_id"] for r in cosine_topk(emb, 0, 10).collect()}
+    exact = {r["vec_id"] for r in cosine_topk(emb).collect()}
     quant = {r["vec_id"] for r in df.collect()}
     assert len(exact & quant) >= 8, (exact, quant)
 
@@ -572,7 +572,7 @@ def test_tfidf_df_join_not_forced_broadcast(spark):
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    df = tfidf_top_terms(docs, k=3)
+    df = tfidf_top_terms(docs)
     logical = df._jdf.queryExecution().optimizedPlan().toString()
     # exactly one broadcast hint: the 1-row n_docs frame
     assert logical.count("ResolvedHint") <= 1, logical[:2000]
@@ -592,7 +592,7 @@ def test_pmi_topk_is_take_ordered(spark):
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(pmi_collocations(docs, min_count=5, k=20))
+    plan = _plan(pmi_collocations(docs))
     assert "TakeOrderedAndProject" in plan, plan[:2000]
     assert "CartesianProduct" not in plan
     # no exchange introduced by a global orderBy: Sort appears only
@@ -807,8 +807,8 @@ def test_hof_lambdas_do_not_reevaluate_split(spark):
         "shingles": shingles(docs),
         "band_signatures": band_signatures(shingles(docs)),
         "winnow": winnow_fingerprints(docs),
-        "dedup_substrings": dedup_substrings(docs, k=4),
-        "decontaminate": contamination_flags(docs, docs.limit(1), n=3),
+        "dedup_substrings": dedup_substrings(docs),
+        "decontaminate": contamination_flags(docs, docs.limit(1)),
         "gopher_signals": gopher_repetition_signals(docs),
     }
     for name, df in frames.items():

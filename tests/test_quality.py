@@ -145,26 +145,27 @@ def test_pack_sequences(spark):
     from reading_the_unreadable_spark.operators.quality import pack_sequences
 
     # md5 first hex digit: 1→'c', 2→'c', 8→'c' (same shard); 3→'e'; 4→'a'
+    # budget PACK_TOKENS = 2048
     rows = [
-        (1, "a " * 59 + "a", "s1"),   # 60 tokens, shard c
-        (2, "b " * 49 + "b", "s1"),   # 50 tokens, shard c -> starts at 60, seq 0
-        (8, "c " * 19 + "c", "s1"),   # 20 tokens, shard c -> starts at 110, seq 1
-        (3, "e " * 149 + "e", "s1"),  # 150 tokens, shard e: independent shard
-        (4, "d " * 9 + "d", "s2"),    # 10 tokens, own source partition
+        (1, "a " * 1199 + "a", "s1"),  # 1200 tokens, shard c
+        (2, "b " * 999 + "b", "s1"),   # 1000 tokens, shard c -> starts at 1200, seq 0
+        (8, "c " * 399 + "c", "s1"),   # 400 tokens, shard c -> starts at 2200, seq 1
+        (3, "e " * 2999 + "e", "s1"),  # 3000 tokens, shard e: independent shard
+        (4, "d " * 199 + "d", "s2"),   # 200 tokens, own source partition
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
     got = {
         (r["part"], r["shard"], r["seq_id"]): r
-        for r in pack_sequences(df, token_budget=100).collect()
+        for r in pack_sequences(df).collect()
     }
-    assert got[("s1", "c", 0)]["n_docs"] == 2  # 60 + 50 (doc 2 STARTS inside budget)
-    assert got[("s1", "c", 0)]["n_tokens"] == 110
+    assert got[("s1", "c", 0)]["n_docs"] == 2  # 1200 + 1000 (doc 2 STARTS inside budget)
+    assert got[("s1", "c", 0)]["n_tokens"] == 2200
     assert got[("s1", "c", 1)]["first_doc"] == 8
     # doc 3 packs in its own shard, unaffected by shard c's running sum
     assert got[("s1", "e", 0)]["first_doc"] == 3
-    assert got[("s1", "e", 0)]["n_tokens"] == 150
-    assert got[("s2", "a", 0)]["n_tokens"] == 10
-    assert abs(got[("s1", "c", 0)]["fill_ratio"] - 1.1) < 1e-9
+    assert got[("s1", "e", 0)]["n_tokens"] == 3000
+    assert got[("s2", "a", 0)]["n_tokens"] == 200
+    assert got[("s1", "c", 0)]["fill_ratio"] == round(2200 / 2048, 6)
 
 
 def test_gopher_filter_decision(spark):
@@ -238,7 +239,7 @@ def test_contamination_flags(spark):
         [(100, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    out = contamination_flags(docs, bench, n=8)
+    out = contamination_flags(docs, bench)
     got = {r["doc_id"]: (r["n_overlaps"], r["contaminated"]) for r in out.collect()}
     assert got == {1: (2, True), 2: (0, False), 3: (2, True), 4: (0, False)}
 
@@ -293,14 +294,14 @@ def test_dsir_weights_favor_target_like_docs(spark):
         (4, "fr", "zeta eta theta zeta eta theta"),     # does not
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    got = {r["doc_id"]: r for r in dsir_weights(df, n_buckets=16).collect()}
+    got = {r["doc_id"]: r for r in dsir_weights(df).collect()}
     assert len(got) == 4
     # doc 3 shares the target's gram profile, doc 4 doesn't
     assert got[3]["log_weight"] > got[4]["log_weight"]
     # unigrams + bigrams: n tokens → 2n-1 grams
     assert got[1]["n_grams"] == 11
     # deterministic across runs
-    again = {r["doc_id"]: r for r in dsir_weights(df, n_buckets=16).collect()}
+    again = {r["doc_id"]: r for r in dsir_weights(df).collect()}
     assert {k: v["log_weight"] for k, v in got.items()} == {
         k: v["log_weight"] for k, v in again.items()
     }
@@ -328,20 +329,20 @@ def test_dsir_sample_is_gumbel_top_k(spark):
 
     rows = [
         (i, "en" if i % 2 == 0 else "de", f"tok{i % 5} tok{i % 3} tok{i % 7}")
-        for i in range(40)
+        for i in range(400)
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    got = dsir_sample(df, k=10, n_buckets=16).collect()
-    assert len(got) == 10
+    got = dsir_sample(df).collect()
+    assert len(got) == 100  # DSIR_SAMPLE
     keys = [r["gumbel_key"] for r in got]
     assert keys == sorted(keys, reverse=True)
     # the perturbed key never loses the weight signal entirely: the
     # selection must differ from plain top-k by weight (gumbel active)
     plain = [
         r["doc_id"]
-        for r in dsir_weights(df, n_buckets=16)
+        for r in dsir_weights(df)
         .orderBy(F.col("log_weight").desc(), "doc_id")
-        .limit(10)
+        .limit(100)
         .collect()
     ]
     assert {r["doc_id"] for r in got} != set(plain)
@@ -417,20 +418,20 @@ def test_dataset_split_deterministic_and_total(spark):
 
 
 def test_source_overlap_hand_computed(spark):
-    """Two sources sharing one 3-token run, a third sharing nothing."""
+    """Two sources sharing one 8-token run, a third sharing nothing."""
     from reading_the_unreadable_spark.operators.quality import source_overlap
 
     df = spark.createDataFrame(
         [
-            (1, "s1", "the quick brown fox jumps"),
-            (2, "s2", "lazy the quick brown cat"),
-            (3, "s3", "completely different words here"),
+            (1, "s1", "the quick brown fox jumps over the lazy dog"),
+            (2, "s2", "a the quick brown fox jumps over the lazy cat"),
+            (3, "s3", "completely different words here and there and everywhere"),
         ],
         "doc_id long, source string, text string",
     )
-    rows = source_overlap(df, shingle_len=3).collect()
+    rows = source_overlap(df).collect()
     assert [(r["source_a"], r["source_b"], r["n_shared_shingles"]) for r in rows] == [
-        ("s1", "s2", 1)  # only 'the quick brown'
+        ("s1", "s2", 1)  # only 'the quick brown fox jumps over the lazy'
     ]
 
 
@@ -442,7 +443,7 @@ def test_zipf_fit_matches_numpy_polyfit(spark):
     # frequencies 8,4,2,1 by construction
     text = " ".join(["a"] * 8 + ["b"] * 4 + ["c"] * 2 + ["d"])
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    r = zipf_fit(df, top_k=10).collect()[0]
+    r = zipf_fit(df).collect()[0]
     assert r["n_types_fitted"] == 4 and r["n_tokens_fitted"] == 15
     x = np.log(np.arange(1, 5, dtype=float))
     y = np.log(np.array([8.0, 4.0, 2.0, 1.0]))
@@ -459,15 +460,15 @@ def test_ngram_novelty_hand_computed(spark):
 
     df = spark.createDataFrame(
         [
-            (1, "a b c d"),
-            (2, "a b c d e"),  # 'a b c' & 'b c d' seen; 'c d e' novel
+            (1, "a b c d e f g h i"),
+            (2, "a b c d e f g h i j"),  # 'a … h' & 'b … i' seen; 'c … j' novel
             (3, "x y"),
         ],
         "doc_id long, text string",
     )
     got = {
         r["doc_id"]: (r["n_shingles"], r["n_novel"], r["novelty"])
-        for r in ngram_novelty(df, shingle_len=3).collect()
+        for r in ngram_novelty(df).collect()
     }
     assert got == {1: (2, 2, 1.0), 2: (3, 1, round(1 / 3, 4))}
 
@@ -816,10 +817,10 @@ def test_pack_interleaved_cost_model_and_atomicity(spark):
     spans = spark.createDataFrame(
         rows, "doc_id long, kind string, text string, media_ref string, order int"
     )
-    out = pack_interleaved(spans, token_budget=50, media_budget=20).collect()
+    out = pack_interleaved(spans).collect()
 
-    # cost conservation: 40 docs x 13 text tokens + 10 figures x 20
-    assert sum(r["total_cost"] for r in out) == 40 * 13 + 10 * 20
+    # cost conservation: 40 docs x 13 text tokens + 10 figures x 32
+    assert sum(r["total_cost"] for r in out) == 40 * 13 + 10 * 32
     assert sum(r["n_docs"] for r in out) == 40
     assert sum(r["n_media_spans"] for r in out) == 10
     # doc-atomic: every (shard, seq) holds >= 1 whole doc, and within a
@@ -834,8 +835,8 @@ def test_pack_interleaved_cost_model_and_atomicity(spark):
 
     # an oversized doc (cost > budget) still forms/joins exactly one seq
     big = spark.createDataFrame(
-        [(1, "text", " ".join(["w"] * 100), None, 0)],
+        [(1, "text", " ".join(["w"] * 200), None, 0)],
         "doc_id long, kind string, text string, media_ref string, order int",
     )
-    bout = pack_interleaved(big, token_budget=50, media_budget=20).collect()
-    assert len(bout) == 1 and bout[0]["n_docs"] == 1 and bout[0]["total_cost"] == 100
+    bout = pack_interleaved(big).collect()
+    assert len(bout) == 1 and bout[0]["n_docs"] == 1 and bout[0]["total_cost"] == 200

@@ -51,7 +51,7 @@ def test_bm25_matches_python_reference(spark):
     )
     got = {
         (r["query_id"], r["doc_id"]): (r["bm25"], r["rank"])
-        for r in bm25_topk(docs, queries, k=10).collect()
+        for r in bm25_topk(docs, queries).collect()
     }
     for qid, qtext in [(1, "hash join"), (2, "scan missing")]:
         ref = _ref_bm25(qtext)
@@ -63,7 +63,7 @@ def test_bm25_matches_python_reference(spark):
 
 def test_tfidf_top_terms_ranks_and_rounds(spark):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    rows = tfidf_top_terms(docs, k=2).collect()
+    rows = tfidf_top_terms(docs).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)

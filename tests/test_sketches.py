@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from reading_the_unreadable_spark.operators.sketches import (
@@ -38,7 +37,7 @@ def test_accuracy_standard_and_small_range(spark):
     df = spark.createDataFrame(rows, "g string, v string")
     got = {
         r["g"]: r
-        for r in approx_distinct(df, "v", ["g"], p=6, with_exact=True).collect()
+        for r in approx_distinct(df, "v", ["g"]).collect()
     }
     assert got["big"]["n_exact"] == 5000
     # HLL standard error at m=64 is ~13%; 35% is a generous determinism-
@@ -66,12 +65,6 @@ def test_registers_merge_by_max(spark):
     assert {
         (r["bucket"], r["r"]) for r in both.collect()
     } == {(r["bucket"], r["r"]) for r in merged.collect()}
-
-
-def test_p_bounds(spark):
-    df = spark.createDataFrame([("g", "x")], "g string, v string")
-    with pytest.raises(ValueError, match="p="):
-        hll_registers(df, "v", ["g"], p=3)
 
 
 def test_cms_upper_bound_and_exactness_at_low_load(spark):
@@ -118,14 +111,6 @@ def test_bloom_no_false_negatives(spark):
     assert fp == 0
 
 
-def test_sketch_geometry_bounds(spark):
-    from reading_the_unreadable_spark.operators.sketches import bloom_bits
-
-    df = spark.createDataFrame([("x",)], "v string")
-    with pytest.raises(ValueError, match="bloom"):
-        bloom_bits(df, "v", k=0)
-
-
 def test_power_iteration_matches_numpy_same_steps(spark):
     """The operator is a FIXED-STEP power iteration, value-exact per
     step — so the ground truth is numpy running the SAME three rounded
@@ -158,9 +143,7 @@ def test_power_iteration_matches_numpy_same_steps(spark):
         emb.select("embedding").toPandas()["embedding"].tolist(),
         dtype=np.float64,
     )
-    rows = power_iteration_top_component(emb, dim=64, iters=3).orderBy(
-        "pos"
-    ).collect()
+    rows = power_iteration_top_component(emb).orderBy("pos").collect()
     v_ref, ev_ref = reference(X)
     v_got = np.array([r["component"] for r in rows])
     assert np.allclose(v_got, v_ref, atol=1e-6)
@@ -168,16 +151,15 @@ def test_power_iteration_matches_numpy_same_steps(spark):
 
     # case 2: planted dominant direction -> 3 steps recover it
     rng = np.random.RandomState(7)
-    base = rng.normal(size=(200, 8))
-    planted = np.array([3.0, 0, 0, 0, 0, 0, 0, 0])
+    base = rng.normal(size=(200, 64))
+    planted = np.zeros(64)
+    planted[0] = 3.0
     Xp = base + rng.normal(size=(200, 1)) * planted * 4
     dfp = spark.createDataFrame(
         [(i, [float(x) for x in Xp[i]]) for i in range(200)],
         "vec_id long, embedding array<float>",
     )
-    rp = power_iteration_top_component(dfp, dim=8, iters=3).orderBy(
-        "pos"
-    ).collect()
+    rp = power_iteration_top_component(dfp).orderBy("pos").collect()
     vp = np.array([r["component"] for r in rp])
     Xc = Xp - Xp.mean(0)
     true_top = np.linalg.eigh(Xc.T @ Xc)[1][:, -1]

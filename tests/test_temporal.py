@@ -134,7 +134,7 @@ def test_fix_mojibake_classes_and_idempotence(spark):
         ],
         "id long, text string",
     )
-    fixed = fix_mojibake(rows, "text")
+    fixed = fix_mojibake(rows)
     got = {r["id"]: (r["text"], r["was_mojibake"]) for r in fixed.collect()}
     assert got[0] == ("café crème", 1)
     assert got[1] == ("résumé © 2024", 1)
@@ -144,7 +144,7 @@ def test_fix_mojibake_classes_and_idempotence(spark):
     assert got[5] == (None, 0)
 
     # idempotent: a second application changes nothing and flags nothing
-    again = fix_mojibake(fixed.drop("was_mojibake"), "text")
+    again = fix_mojibake(fixed.drop("was_mojibake"))
     got2 = {r["id"]: (r["text"], r["was_mojibake"]) for r in again.collect()}
     assert all(got2[i] == (got[i][0], 0) for i in got2)
 

@@ -140,9 +140,9 @@ def test_bpe_train_matches_scalar_reference(spark):
     )
     got = [
         (r["merge_rank"], r["pair"], r["merged"], r["pair_count"])
-        for r in bpe_train(df, n_merges=6).collect()
+        for r in bpe_train(df).collect()
     ]
-    assert got == ref(texts, 6)
+    assert got == ref(texts, 5)  # BPE_MERGES
 
 
 def test_bpe_encode_applies_learned_rules(spark):
@@ -155,7 +155,7 @@ def test_bpe_encode_applies_learned_rules(spark):
         [(1, "low lower low"), (2, "newer new lowest")],
         "doc_id long, text string",
     )
-    rules = bpe_train(df, n_merges=3).collect()
+    rules = bpe_train(df).collect()
     merges = [tuple(r["pair"].split(" ", 1)) for r in rules]
     got = {r["doc_id"]: r for r in bpe_encode(df, merges).collect()}
     assert got[1]["n_words"] == 3
@@ -178,18 +178,19 @@ def test_pmi_collocations_hand_computed(spark):
         pmi_collocations,
     )
 
-    # "x y" always adjacent (3x); "a b" once; fillers break adjacency
+    # "x y" always adjacent (5x, at PMI_MIN_COUNT); every other bigram
+    # occurs at most 3x; fillers break adjacency
     df = spark.createDataFrame(
-        [(1, "x y q a b q x y"), (2, "x y q b a")],
+        [(1, "x y q a b q x y q x y"), (2, "x y q b a q x y")],
         "doc_id long, text string",
     )
-    rows = pmi_collocations(df, min_count=3, k=5).collect()
+    rows = pmi_collocations(df).collect()
     assert [(r["prev"], r["cur"]) for r in rows] == [("x", "y")]
     r = rows[0]
-    # bigram stream: doc1 has 7, doc2 has 4 -> N=11; c_xy=3
-    # left marginal c_x = 3 (x always precedes y); right c_y = 3
-    assert r["c_ab"] == 3
-    assert r["pmi"] == round(math.log(3 * 1.0 * 11 / (3 * 1.0 * 3)), 4)
+    # bigram stream: doc1 has 10, doc2 has 7 -> N=17; c_xy=5
+    # left marginal c_x = 5 (x always precedes y); right c_y = 5
+    assert r["c_ab"] == 5
+    assert r["pmi"] == round(math.log(5 * 1.0 * 17 / (5 * 1.0 * 5)), 4)
 
 
 def test_length_quantiles_hand_computed(spark):
@@ -214,14 +215,15 @@ def test_chunk_overlap_invariants(spark):
         chunk_overlap,
     )
 
+    # CHUNK_TOKENS = 40 every CHUNK_STRIDE = 30
     rows = [
-        (1, " ".join(f"t{i}" for i in range(23))),
-        (2, " ".join(f"u{i}" for i in range(5))),
+        (1, " ".join(f"t{i}" for i in range(103))),
+        (2, " ".join(f"u{i}" for i in range(35))),
         (3, "solo"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {}
-    for r in chunk_overlap(df, size=8, stride=5).collect():
+    for r in chunk_overlap(df).collect():
         out.setdefault(r["doc_id"], []).append(
             (r["chunk_idx"], r["text"].split(" "))
         )
@@ -231,8 +233,8 @@ def test_chunk_overlap_invariants(spark):
         # coverage: the union of chunk tokens in order == original
         seen = set()
         for ci, ch in enumerate(chunks):
-            start = ci * 5
-            assert ch == toks[start : start + 8], (doc_id, ci)
+            start = ci * 30
+            assert ch == toks[start : start + 40], (doc_id, ci)
             seen.update(range(start, start + len(ch)))
         assert seen == set(range(len(toks))), doc_id
     assert len(out[2]) == 1 and len(out[3]) == 1  # short docs: one chunk
