@@ -631,8 +631,8 @@ def winnow_pairs(documents: DataFrame) -> DataFrame:
 def dedup_substrings(documents: DataFrame) -> DataFrame:
     """Exact-SUBSTRING dedup at ``SUBSTRING_TOKENS``-token grain (Lee et
     al. 2021, "Deduplicating Training Data Makes Language Models
-    Better"): every ``SUBSTRING_TOKENS``-token window that occurs more than once in the corpus keeps
-    only its FIRST occurrence (ordered by (doc_id, start)); all later
+    Better"): every ``SUBSTRING_TOKENS``-token window that occurs more
+    than once in the corpus keeps only its FIRST occurrence (ordered by (doc_id, start)); all later
     occurrences are masked out of their documents, overlapping masked
     windows merged into spans (gaps-and-islands), and the surviving
     tokens re-joined.  This is the operation paragraph-grain dedup
