@@ -4,11 +4,13 @@ span-sequence construction.
 The reference implements this stage as pandas loops + ProcessPool
 batches (``function_modules/analysis_functions.py:229-476``).  Here T1–T5
 (post-correct, paragraph split, title reclass, title merge, final order)
-are vectorized pandas over one doc-complete Arrow batch
-(:func:`_post_correct_pd` + :func:`spans_frame_pd`), run inside the
-layout stage's box-merge UDF, so the text crosses the Arrow boundary
-once.  :func:`..oracle.text_stage` is their spec.  Re-nesting and
-article grouping (:func:`nest_spans`, :func:`build_articles`) are native
+run over one doc-complete Arrow batch inside the layout stage's box-merge
+UDF, so the text crosses the Arrow boundary once.  Each string is
+visited once, by plain ``str`` code (:mod:`..functions.text`): T1 is one
+list pass over the boxes (:func:`_post_correct_pd`), T2–T5 one loop over
+the paragraphs that emits the spans in order (:func:`spans_frame_pd`).
+:func:`..oracle.text_stage` is their spec.  Re-nesting and article
+grouping (:func:`nest_spans`, :func:`build_articles`) are native
 aggregations over the flat spans.
 """
 
@@ -18,21 +20,21 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import is_title_pd, normalize_text_pd, strip_fences_pd
+from ..functions.text import is_title, normalize_text, strip_fences
 
 
 def _post_correct_pd(kind: pd.Series, text: pd.Series) -> pd.Series:
     """T1: fence-strip tables, normalize everything else (figures pass
-    through untouched — their text is empty); vectorized over one Arrow
-    batch."""
-    out = text.copy()
-    is_table = kind == "table"
-    is_norm = ~is_table & (kind != "figure")
-    if is_table.any():
-        out[is_table] = strip_fences_pd(text[is_table])
-    if is_norm.any():
-        out[is_norm] = normalize_text_pd(text[is_norm])
-    return out
+    through untouched — their text is empty; a null text reads as "")."""
+    return pd.Series(
+        [
+            t if k == "figure" else strip_fences(t or "") if k == "table"
+            else normalize_text(t or "")
+            for k, t in zip(kind.tolist(), text.tolist())
+        ],
+        index=text.index,
+        dtype=object,
+    )
 
 
 def spans_frame_pd(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -40,61 +42,69 @@ def spans_frame_pd(pdf: pd.DataFrame) -> pd.DataFrame:
     order) over ONE batch of merged, post-corrected, reading_order-sorted
     boxes (doc-complete).
 
+    One pass over the boxes emits the spans in order: a text or title box
+    yields its stripped non-empty paragraphs, any other box itself.  A
+    title paragraph that follows a title span of the same doc joins that
+    span's run, and each run is joined with "\\n" once, at the end.
+
     Semantics are pinned to :func:`..oracle.text_stage`
     (tests/test_e2e_extraction.py asserts per-document span-sequence
     equality); the production plan runs this inside the layout merge UDF
     so the article stage costs zero extra JVM sorts, explodes, or Arrow
     trips."""
-    import numpy as np
-
-    df = pdf[["doc_id", "kind", "text", "media_ref", "reading_order"]].reset_index(
-        drop=True
+    docs: list = []
+    kinds: list = []
+    texts: list = []
+    media: list = []
+    runs: list[tuple[int, list[str]]] = []  # (span index, title paragraphs)
+    for d, k, t, m in zip(
+        pdf["doc_id"].tolist(),
+        pdf["kind"].tolist(),
+        pdf["text"].tolist(),
+        pdf["media_ref"].tolist(),
+    ):
+        if k != "text" and k != "title":
+            docs.append(d)
+            kinds.append(k)
+            texts.append(t)
+            media.append(m)
+            continue
+        for p in t.split("\n\n") if t else ():
+            p = p.strip()
+            if not p:
+                continue
+            if k == "title" or is_title(p):
+                if kinds and kinds[-1] == "title" and docs[-1] == d:
+                    runs[-1][1].append(p)
+                    continue
+                runs.append((len(texts), [p]))
+                k_out = "title"
+            else:
+                k_out = "text"
+            docs.append(d)
+            kinds.append(k_out)
+            texts.append(p)
+            media.append(m)
+    for i, paras in runs:
+        if len(paras) > 1:
+            texts[i] = "\n".join(paras)
+    df = pd.DataFrame(
+        {"doc_id": docs, "kind": kinds, "text": texts, "media_ref": media}, dtype=object
     )
-    sp = df["kind"].isin(("text", "title"))
-    plist = pd.Series(
-        np.where(sp, df["text"].str.split("\n\n"), df["text"].map(lambda t: [t])),
-        index=df.index,
-    )
-    df = df.assign(_parts=plist, _sp=sp).explode("_parts")
-    df["sub_order"] = df.groupby(level=0).cumcount()
-    stripped = df["_parts"].str.strip()
-    df["text"] = stripped.where(df["_sp"], df["_parts"])
-    df = df[~df["_sp"] | (df["text"].str.len() > 0)]
-    reclass = (df["kind"] == "text") & is_title_pd(df["text"])
-    if reclass.any():
-        df = df.copy()
-        df.loc[reclass, "kind"] = "title"
-    df = df.reset_index(drop=True)
-    new_run = df["doc_id"].ne(df["doc_id"].shift()) | df["kind"].ne(df["kind"].shift())
-    run = new_run.cumsum()
-    is_title_row = (df["kind"] == "title").to_numpy()
-    if is_title_row.any():
-        joined = df.loc[is_title_row].groupby(run[is_title_row])["text"].agg("\n".join)
-        first_of_run = (~run.duplicated()).to_numpy()
-        df = df.copy()
-        head = is_title_row & first_of_run
-        df.loc[head, "text"] = run[head].map(joined).to_numpy()
-        df = df[~is_title_row | first_of_run].reset_index(drop=True)
     df["order"] = (df.groupby("doc_id", sort=False).cumcount() + 1).astype("int32")
-    return df[["doc_id", "kind", "text", "media_ref", "order"]]
+    return df
 
 
 def nest_spans(flat: DataFrame) -> DataFrame:
     """Re-nest to extracted(doc_id, spans array<struct<kind,text,
     media_ref,order>>) ordered by span order."""
-    sortable = F.sort_array(
-        F.collect_list(F.struct("order", "kind", "text", "media_ref"))
+    return flat.groupBy("doc_id").agg(
+        F.expr(
+            "transform(sort_array(collect_list(struct(`order`, kind, text, media_ref))), "
+            "s -> struct(s.kind AS kind, s.text AS text, s.media_ref AS media_ref, "
+            "s.`order` AS `order`)) AS spans"
+        )
     )
-    spans = F.transform(
-        sortable,
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["order"].alias("order"),
-        ),
-    )
-    return flat.groupBy("doc_id").agg(spans.alias("spans"))
 
 
 def build_articles(flat: DataFrame) -> DataFrame:

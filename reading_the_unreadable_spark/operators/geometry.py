@@ -26,7 +26,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..synth import page_arrays
 
@@ -100,12 +99,9 @@ def docs_to_geo_boxes(docs: DataFrame, num_partitions: int | None = None) -> Dat
     ``num_partitions`` round-robin rebalances the SLIM projection (a
     docs table of few files would serialize the Python stage) — the
     rebalance shuffles only (doc_id, offsets, kinds), never text."""
-    slim = docs.select(
+    slim = docs.selectExpr(
         "doc_id",
-        F.transform(
-            "spans",
-            lambda s: F.struct(s["offset"].alias("offset"), s["kind"].alias("kind")),
-        ).alias("spans"),
+        "transform(spans, s -> struct(s.`offset` AS `offset`, s.kind AS kind)) AS spans",
     )
     if num_partitions:
         slim = slim.repartition(num_partitions)
@@ -116,17 +112,8 @@ def docs_payload(docs: DataFrame) -> DataFrame:
     """docs(doc_id, spans) → (doc_id, _payload map<offset, (text,
     media_ref)>) — a pure native projection (zero Python, zero shuffle);
     the layout stage joins it back by doc_id after its window sorts."""
-    return docs.select(
+    return docs.selectExpr(
         "doc_id",
-        F.map_from_entries(
-            F.transform(
-                "spans",
-                lambda s: F.struct(
-                    s["offset"].alias("offset"),
-                    F.struct(
-                        s["text"].alias("text"), s["media_ref"].alias("media_ref")
-                    ).alias("payload"),
-                ),
-            )
-        ).alias("_payload"),
+        "map_from_entries(transform(spans, s -> struct(s.`offset` AS `offset`, "
+        "struct(s.text AS text, s.media_ref AS media_ref) AS payload))) AS _payload",
     )

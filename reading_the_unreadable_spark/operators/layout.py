@@ -299,90 +299,75 @@ def _merge_frame(pdf: pd.DataFrame, post_correct: bool = False) -> pd.DataFrame:
     within (doc, block, column>0) while the merged span height stays
     ≤ 1.5 × column_width.
 
-    Implemented as a numpy index walk (no per-row dict materialization —
-    the fold only reads scalar geometry; texts are touched once per merged
-    run at assembly time)."""
+    A box can extend the open run only when it and the box before it are
+    text in the same (doc, block, column>0) group; that test is one
+    vectorized shift-compare.  The cap is measured from the run HEAD's
+    y1, so whether such a box joins depends on where the run started and
+    is not a prefix scan: a Python loop over plain floats decides it, for
+    those boxes only.  Every output column is then built once from the
+    run starts — the head's values, ``np.minimum/maximum.reduceat`` for
+    x1, x2 and confidence, the run end's y2, and one ``"\\n\\n".join``
+    per multi-box run."""
     n = len(pdf)
-    doc = pd.factorize(pdf["doc_id"])[0]
+    if n == 0:
+        return pdf.copy()
+    doc = pdf["doc_id"].to_numpy()
     block = pdf["page_block"].to_numpy()
     col = pdf["column_number"].to_numpy()
-    is_text = (pdf["kind"] == "text").to_numpy()
     y1 = pdf["y1"].to_numpy()
     y2 = pdf["y2"].to_numpy()
-    colw = pdf["column_width"].to_numpy()
-
-    # runs[i] = (head_idx, [member indices])
-    heads: list[int] = []
-    members: list[list[int]] = []
-    acc = -1  # index into heads/members of the open run, -1 = none
-    acc_head = -1
-    for i in range(n):
-        mergeable = is_text[i] and col[i] != 0
-        if not mergeable:
-            acc = -1
-            heads.append(i)
-            members.append([i])
-            continue
-        same_group = (
-            acc != -1
-            and doc[i] == doc[acc_head]
-            and block[i] == block[acc_head]
-            and col[i] == col[acc_head]
-        )
-        if same_group and (y2[i] - y1[acc_head]) <= MERGE_WIDTH_MULTIPLIER * colw[i]:
-            # the cap is measured from the run HEAD's y1, so a member
-            # leaves nothing to update for the next check
-            members[acc].append(i)
-        else:
-            heads.append(i)
-            members.append([i])
-            acc = len(heads) - 1
-            acc_head = i
-    out = pdf.iloc[heads].copy()
-    multi = [(j, m) for j, m in enumerate(members) if len(m) > 1]
-    if multi:
-        texts = pdf["text"].to_numpy()
-        x1a = pdf["x1"].to_numpy()
-        x2a = pdf["x2"].to_numpy()
-        conf = pdf["confidence"].to_numpy()
-        oc = {c: out.columns.get_loc(c) for c in ("text", "x1", "x2", "y2", "confidence")}
-        for j, m in multi:
-            out.iat[j, oc["text"]] = "\n\n".join(texts[m])
-            out.iat[j, oc["x1"]] = x1a[m].min()
-            out.iat[j, oc["x2"]] = x2a[m].max()
-            out.iat[j, oc["y2"]] = y2[m[-1]]
-            out.iat[j, oc["confidence"]] = conf[m].max()
+    mergeable = (pdf["kind"] == "text").to_numpy() & (col != 0)
+    cont = np.zeros(n, dtype=bool)
+    cont[1:] = (
+        mergeable[1:]
+        & mergeable[:-1]
+        & (doc[1:] == doc[:-1])
+        & (block[1:] == block[:-1])
+        & (col[1:] == col[:-1])
+    )
+    is_start = ~cont
+    y1l, y2l, contl = y1.tolist(), y2.tolist(), cont.tolist()
+    capl = (MERGE_WIDTH_MULTIPLIER * pdf["column_width"].to_numpy()).tolist()
+    head_y1 = 0.0
+    for i in np.flatnonzero(cont).tolist():
+        if not contl[i - 1]:
+            head_y1 = y1l[i - 1]
+        if not y2l[i] - head_y1 <= capl[i]:
+            is_start[i] = True
+            head_y1 = y1l[i]
+    starts = np.flatnonzero(is_start)
+    ends = np.append(starts[1:], n)  # exclusive
+    out = {c: pdf[c].to_numpy()[starts] for c in pdf.columns}
+    out["x1"] = np.minimum.reduceat(pdf["x1"].to_numpy(), starts)
+    out["x2"] = np.maximum.reduceat(pdf["x2"].to_numpy(), starts)
+    out["confidence"] = np.maximum.reduceat(pdf["confidence"].to_numpy(), starts)
+    texts = pdf["text"].tolist()
+    for j in np.flatnonzero(ends - starts > 1).tolist():
+        out["text"][j] = "\n\n".join(texts[starts[j] : ends[j]])
     # L9b second y2 adjustment (reference postprocess_bbox re-runs
     # adjust_y2_coordinates after the merge/deletion pass): rows within
     # (doc, block, column) are already in ascending-y1 emit order, so
     # "next row's y1 where the (doc, block, column) key is unchanged"
-    # re-closes the gaps the min-height deletions opened.  Pure numpy
-    # shift-compare — a pandas groupby here cost ~8% of the whole merge
-    # pass per Arrow batch.
-    if len(out) > 1:
-        doc_o = pd.factorize(out["doc_id"])[0]
-        blk_o = out["page_block"].to_numpy()
-        col_o = out["column_number"].to_numpy()
-        same = (
-            (doc_o[:-1] == doc_o[1:])
-            & (blk_o[:-1] == blk_o[1:])
-            & (col_o[:-1] == col_o[1:])
-        )
-        y1_o = out["y1"].to_numpy()
-        y2_o = out["y2"].to_numpy().copy()
-        y2_o[:-1] = np.where(same, y1_o[1:], y2_o[:-1])
-        out["y2"] = y2_o
+    # re-closes the gaps the min-height deletions opened.
+    y2_o = y2[ends - 1]
+    doc_o, blk_o, col_o = out["doc_id"], out["page_block"], out["column_number"]
+    same = (doc_o[:-1] == doc_o[1:]) & (blk_o[:-1] == blk_o[1:]) & (col_o[:-1] == col_o[1:])
+    y2_o[:-1] = np.where(same, out["y1"][1:], y2_o[:-1])
+    out["y2"] = y2_o
     # L10 renumber in-UDF: head emit order within a doc IS ascending old
     # reading_order (both follow (block, column, y1, offset)), so the
-    # renumber is a per-doc cumcount — saves a whole post-merge window
-    # sort over wide rows.
-    out["reading_order"] = out.groupby("doc_id", sort=False).cumcount() + 1
+    # renumber is the position within the doc's contiguous rows — saves
+    # a whole post-merge window sort over wide rows.
+    doc_first = np.flatnonzero(np.append(True, doc_o[1:] != doc_o[:-1]))
+    doc_len = np.diff(np.append(doc_first, len(starts)))
+    out["reading_order"] = np.arange(len(starts)) - np.repeat(doc_first, doc_len) + 1
+    merged = pd.DataFrame(out)
     if post_correct:
         # T1 folded into the merge's pandas pass: the text is already in
         # Python here, so normalizing now saves a second full Arrow
         # round-trip of every byte of text through ArrowEvalPython.
-        out["text"] = _post_correct_pd(out["kind"], out["text"])
-    return out
+        merged["text"] = _post_correct_pd(merged["kind"], merged["text"])
+    return merged
 
 
 def vertical_overlap_pct(y1a, y2a, y1b, y2b):
@@ -582,7 +567,7 @@ def _sorted_frame(
     # ((doc, block, column, y1, offset) ≡ reading_order order within the
     # group), so Catalyst elides most of this sort
     return df.sortWithinPartitions(
-        "doc_id", "page_block", "column_number", "y1", "offset"
+        *(F.expr(f"`{c}`") for c in ("doc_id", "page_block", "column_number", "y1", "offset"))
     )
 
 
@@ -637,8 +622,11 @@ def layout_extract_spans(
     sort, explode or second Arrow round-trip.  Its span sequences are
     pinned to :func:`..oracle.extract` by tests/test_e2e_extraction.py."""
     return _sorted_frame(boxes, num_partitions, payload, fill_columns).mapInPandas(
-        lambda batches: doc_complete_stream(
-            batches, lambda pdf: spans_frame_pd(_merge_frame(pdf, post_correct=True))
-        ),
-        schema=SPAN_SCHEMA,
+        lambda batches: doc_complete_stream(batches, _fold_spans), schema=SPAN_SCHEMA
     )
+
+
+def _fold_spans(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The fused fold over one doc-complete batch of the sorted stream:
+    box merge with T1 post-correct, then T2–T5 (:data:`SPAN_SCHEMA` rows)."""
+    return spans_frame_pd(_merge_frame(pdf, post_correct=True))

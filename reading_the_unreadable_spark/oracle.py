@@ -68,7 +68,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .functions.text import is_title_pd, normalize_text_pd, strip_fences_pd
+from .functions.text import is_title, normalize_text, strip_fences
 from .synth import page_arrays
 
 MERGE_WIDTH_MULTIPLIER = 1.5
@@ -274,9 +274,9 @@ def text_stage(g: pd.DataFrame) -> pd.DataFrame:
     df = g.copy()
     is_table = df["kind"] == "table"
     is_fig = df["kind"] == "figure"
-    df.loc[is_table, "text"] = strip_fences_pd(df.loc[is_table, "text"])
-    df.loc[~is_table & ~is_fig, "text"] = normalize_text_pd(
-        df.loc[~is_table & ~is_fig, "text"]
+    df.loc[is_table, "text"] = df.loc[is_table, "text"].fillna("").map(strip_fences)
+    df.loc[~is_table & ~is_fig, "text"] = (
+        df.loc[~is_table & ~is_fig, "text"].fillna("").map(normalize_text)
     )
     # T2 paragraph split for text/title kinds
     splittable = df["kind"].isin(["text", "title"])
@@ -290,7 +290,7 @@ def text_stage(g: pd.DataFrame) -> pd.DataFrame:
     whole["sub_order"] = 0
     df = pd.concat([flat, whole], ignore_index=True)
     # T3 title heuristic (text paragraphs only; titles stay titles)
-    caps = is_title_pd(df["text"].fillna(""))
+    caps = df["text"].fillna("").map(is_title).astype(bool)
     df.loc[(df["kind"] == "text") & caps, "kind"] = "title"
     # T4 merge adjacent titles
     df = df.sort_values(["doc_id", "reading_order", "sub_order"]).reset_index(drop=True)

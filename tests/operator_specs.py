@@ -11,15 +11,25 @@ check each production operator against its spec here row for row.
   span rows (doc_id, kind, text, media_ref, order).
 - ``cer`` is the whole-document form of ``metrics.cer_spans``: with
   one span per document on both sides the two agree.
-- ``cer_summary`` is the median/mean CER roll-up of a CER frame."""
+- ``cer_summary`` is the median/mean CER roll-up of a CER frame.
+- ``merge_frame``, ``post_correct`` and ``spans_frame`` are the pandas
+  column-pass forms of the fused fold's three phases
+  (``layout._merge_frame``, ``articles._post_correct_pd`` and
+  ``articles.spans_frame_pd``): a per-run ``.iat`` merge and chained
+  ``.str`` passes with an ``explode`` and a groupby title join.  They
+  call the ``.str`` forms of the text rules here (``normalize_text_pd``,
+  ``is_title_pd``, ``strip_fences_pd``), not ``functions/text.py``."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from reading_the_unreadable_spark.functions.text import LIGATURES, PARA_MARKER
 from reading_the_unreadable_spark.operators.dedup import BAND_ROWS, N_HASHES
+from reading_the_unreadable_spark.operators.layout import MERGE_WIDTH_MULTIPLIER
 
 
 def minhash_signatures(sh: DataFrame) -> DataFrame:
@@ -192,3 +202,143 @@ def articles(spans: pd.DataFrame) -> pd.DataFrame:
             }
         )
     return pd.DataFrame.from_records(rows)
+
+
+def normalize_text_pd(s: pd.Series) -> pd.Series:
+    out = s.fillna("")
+    for lig, rep in LIGATURES:
+        out = out.str.replace(lig, rep, regex=False)
+    out = out.str.replace("-\n", "", regex=False)
+    out = out.str.replace(r"\n{2,}", PARA_MARKER, regex=True)
+    out = out.str.replace("\n", " ", regex=False)
+    out = out.str.replace(PARA_MARKER, "\n\n", regex=False)
+    out = out.str.replace(r" {2,}", " ", regex=True)
+    return out.str.strip()
+
+
+def is_title_pd(s: pd.Series) -> pd.Series:
+    letters = s.str.replace(r"[^A-Z]", "", regex=True)
+    vowels = letters.str.replace(r"[^AEIOU]", "", regex=True)
+    return (s == s.str.upper()) & (letters.str.len() >= 5) & (vowels.str.len() >= 2)
+
+
+def strip_fences_pd(s: pd.Series) -> pd.Series:
+    out = s.fillna("").str.strip("`")
+    return out.str.replace("tsv", "", n=1, regex=False).str.strip()
+
+
+def merge_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    """L9 merge, L9b second y2 adjustment and L10 renumber over a frame
+    sorted by (doc_id, page_block, column_number, reading_order): one
+    index walk collects the runs, then each multi-box run writes its
+    cells into a copy of the head rows."""
+    n = len(pdf)
+    doc = pd.factorize(pdf["doc_id"])[0]
+    block = pdf["page_block"].to_numpy()
+    col = pdf["column_number"].to_numpy()
+    is_text = (pdf["kind"] == "text").to_numpy()
+    y1 = pdf["y1"].to_numpy()
+    y2 = pdf["y2"].to_numpy()
+    colw = pdf["column_width"].to_numpy()
+
+    heads: list[int] = []
+    members: list[list[int]] = []
+    acc = -1  # index into heads/members of the open run, -1 = none
+    acc_head = -1
+    for i in range(n):
+        mergeable = is_text[i] and col[i] != 0
+        if not mergeable:
+            acc = -1
+            heads.append(i)
+            members.append([i])
+            continue
+        same_group = (
+            acc != -1
+            and doc[i] == doc[acc_head]
+            and block[i] == block[acc_head]
+            and col[i] == col[acc_head]
+        )
+        if same_group and (y2[i] - y1[acc_head]) <= MERGE_WIDTH_MULTIPLIER * colw[i]:
+            members[acc].append(i)
+        else:
+            heads.append(i)
+            members.append([i])
+            acc = len(heads) - 1
+            acc_head = i
+    out = pdf.iloc[heads].copy()
+    multi = [(j, m) for j, m in enumerate(members) if len(m) > 1]
+    if multi:
+        texts = pdf["text"].to_numpy()
+        x1a = pdf["x1"].to_numpy()
+        x2a = pdf["x2"].to_numpy()
+        conf = pdf["confidence"].to_numpy()
+        oc = {c: out.columns.get_loc(c) for c in ("text", "x1", "x2", "y2", "confidence")}
+        for j, m in multi:
+            out.iat[j, oc["text"]] = "\n\n".join(texts[m])
+            out.iat[j, oc["x1"]] = x1a[m].min()
+            out.iat[j, oc["x2"]] = x2a[m].max()
+            out.iat[j, oc["y2"]] = y2[m[-1]]
+            out.iat[j, oc["confidence"]] = conf[m].max()
+    if len(out) > 1:
+        doc_o = pd.factorize(out["doc_id"])[0]
+        blk_o = out["page_block"].to_numpy()
+        col_o = out["column_number"].to_numpy()
+        same = (
+            (doc_o[:-1] == doc_o[1:])
+            & (blk_o[:-1] == blk_o[1:])
+            & (col_o[:-1] == col_o[1:])
+        )
+        y1_o = out["y1"].to_numpy()
+        y2_o = out["y2"].to_numpy().copy()
+        y2_o[:-1] = np.where(same, y1_o[1:], y2_o[:-1])
+        out["y2"] = y2_o
+    out["reading_order"] = out.groupby("doc_id", sort=False).cumcount() + 1
+    return out
+
+
+def post_correct(kind: pd.Series, text: pd.Series) -> pd.Series:
+    """T1 over the batch's columns: fence-strip tables, normalize
+    everything but figures."""
+    out = text.copy()
+    is_table = kind == "table"
+    is_norm = ~is_table & (kind != "figure")
+    if is_table.any():
+        out[is_table] = strip_fences_pd(text[is_table])
+    if is_norm.any():
+        out[is_norm] = normalize_text_pd(text[is_norm])
+    return out
+
+
+def spans_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    """T2–T5 over merged, post-corrected boxes: explode the paragraphs,
+    reclass, then join each title run with a groupby."""
+    df = pdf[["doc_id", "kind", "text", "media_ref", "reading_order"]].reset_index(
+        drop=True
+    )
+    sp = df["kind"].isin(("text", "title"))
+    plist = pd.Series(
+        np.where(sp, df["text"].str.split("\n\n"), df["text"].map(lambda t: [t])),
+        index=df.index,
+    )
+    df = df.assign(_parts=plist, _sp=sp).explode("_parts")
+    df["sub_order"] = df.groupby(level=0).cumcount()
+    stripped = df["_parts"].str.strip()
+    df["text"] = stripped.where(df["_sp"], df["_parts"])
+    df = df[~df["_sp"] | (df["text"].str.len() > 0)]
+    reclass = (df["kind"] == "text") & is_title_pd(df["text"])
+    if reclass.any():
+        df = df.copy()
+        df.loc[reclass, "kind"] = "title"
+    df = df.reset_index(drop=True)
+    new_run = df["doc_id"].ne(df["doc_id"].shift()) | df["kind"].ne(df["kind"].shift())
+    run = new_run.cumsum()
+    is_title_row = (df["kind"] == "title").to_numpy()
+    if is_title_row.any():
+        joined = df.loc[is_title_row].groupby(run[is_title_row])["text"].agg("\n".join)
+        first_of_run = (~run.duplicated()).to_numpy()
+        df = df.copy()
+        head = is_title_row & first_of_run
+        df.loc[head, "text"] = run[head].map(joined).to_numpy()
+        df = df[~is_title_row | first_of_run].reset_index(drop=True)
+    df["order"] = (df.groupby("doc_id", sort=False).cumcount() + 1).astype("int32")
+    return df[["doc_id", "kind", "text", "media_ref", "order"]]

@@ -10,11 +10,9 @@ import pytest
 from operator_specs import articles
 
 from reading_the_unreadable_spark import oracle, synth
-from reading_the_unreadable_spark.operators.articles import (
-    _post_correct_pd,
-    build_articles,
-    spans_frame_pd,
-)
+from reading_the_unreadable_spark.execution import doc_complete_stream
+from reading_the_unreadable_spark.operators.articles import build_articles
+from reading_the_unreadable_spark.operators.layout import ORDERED_BOX_SCHEMA, _fold_spans
 from reading_the_unreadable_spark.plans.pipeline import extract
 from reading_the_unreadable_spark.sources.docs import docs_from_rows
 
@@ -197,8 +195,9 @@ def test_articles_spark_equals_spec(spark, corpus, oracle_spans):
 
 # Hand-built ordered-box frames (doc_id, kind, text, media_ref,
 # reading_order) for the article stage's edge shapes.  Each must give the
-# same spans through the production fold (post-correct + spans_frame_pd)
-# as through the oracle's text stage.
+# same spans through the production fold (the per-batch callable of
+# layout_extract_spans, behind doc_complete_stream) as through the
+# oracle's text stage.
 FOLD_EDGE_FRAMES = {
     "unicode_ws_padding": [
         ("d1", "text", "\u00a0 nbsp padded \u00a0\n\n\u2009thin\u3000", None, 1),
@@ -236,14 +235,30 @@ FOLD_EDGE_FRAMES = {
 }
 
 
-def _fold(case: str) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """(ordered boxes, the production fold's spans) for one edge frame."""
-    ordered = pd.DataFrame(
+def _ordered(case: str) -> pd.DataFrame:
+    """The edge frame as the fold's input stream: every box alone in
+    column 0, so the merge keeps each one and only the text stage acts."""
+    df = pd.DataFrame(
         FOLD_EDGE_FRAMES[case],
         columns=["doc_id", "kind", "text", "media_ref", "reading_order"],
     )
-    text = _post_correct_pd(ordered["kind"], ordered["text"])
-    return ordered, spans_frame_pd(ordered.assign(text=text))
+    ro = df["reading_order"]
+    geometry = {
+        "offset": ro, "x1": 0.0, "y1": 100.0 * ro, "x2": 100.0, "y2": 100.0 * ro + 50.0,
+        "confidence": 1.0, "column_number": 0, "column_width": 100.0, "page_block": 0,
+    }
+    df = df.assign(**geometry)
+    return df[[f.split()[0] for f in ORDERED_BOX_SCHEMA.split(", ")]]
+
+
+def _fold_batches(batches) -> pd.DataFrame:
+    return pd.concat(list(doc_complete_stream(iter(batches), _fold_spans)), ignore_index=True)
+
+
+def _fold(case: str) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """(ordered boxes, the production fold's spans) for one edge frame."""
+    ordered = _ordered(case)
+    return ordered, _fold_batches([ordered])
 
 
 def _span_seq(df: pd.DataFrame) -> list[tuple]:
@@ -259,6 +274,19 @@ def _span_seq(df: pd.DataFrame) -> list[tuple]:
 def test_fold_matches_oracle_text_stage_on_edge_frames(case):
     ordered, fold = _fold(case)
     assert _span_seq(fold) == _span_seq(oracle.text_stage(ordered))
+
+
+@pytest.mark.parametrize("cut", range(1, 6))
+def test_fold_doc_split_across_input_batches(cut):
+    """Arrow batches may cut a doc anywhere: ``doc_complete_stream`` holds
+    the tail doc back, so every cut of a two-doc stream into two batches
+    (inside d1, at the doc boundary, inside d2) gives the spans of the
+    uncut stream, title runs included."""
+    ordered, whole = _fold("title_runs_across_doc_boundary")
+    split = _fold_batches(
+        [ordered.iloc[:cut].reset_index(drop=True), ordered.iloc[cut:].reset_index(drop=True)]
+    )
+    assert _span_seq(split) == _span_seq(whole)
 
 
 def test_fold_edge_frames_expected_spans():

@@ -38,9 +38,11 @@ def test_extract_shuffle_count(spark):
 def test_extract_plan_builds_with_few_py4j_round_trips(spark, monkeypatch):
     """Every Column node a plan is built from costs several Python→JVM
     round trips (``F.col`` 13, a 16-field aliased ``struct`` 455).  The
-    layout layers are SQL expression strings, one ``withColumns`` each:
-    a warm ``extract_nested`` build sent 4 651 non-memory py4j commands
-    before that, about 1 000 after."""
+    layout layers, the geometry and payload projections, the merge-order
+    sort and the re-nest are SQL expression strings: a warm
+    ``extract_nested`` build sent 4 651 non-memory py4j commands with
+    Column objects everywhere, 984 with SQL-string layout layers only,
+    and 553 now."""
     from py4j.clientserver import ClientServerConnection
 
     docs = docs_from_rows(spark, synth.make_corpus(20))
@@ -56,7 +58,7 @@ def test_extract_plan_builds_with_few_py4j_round_trips(spark, monkeypatch):
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
     extract_nested(docs, num_partitions=8)
     monkeypatch.undo()
-    assert 0 < len(sent) <= 1200, len(sent)
+    assert 0 < len(sent) <= 640, len(sent)
 
 
 def test_parquet_filter_pushdown(spark):

@@ -3,16 +3,15 @@ invariants that hold for ALL inputs, not just the curated fixtures."""
 
 from __future__ import annotations
 
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from reading_the_unreadable_spark.functions.text import (
-    is_title_pd,
+    is_title,
     knit_string_list,
     knit_strings,
-    normalize_text_pd,
-    strip_fences_pd,
+    normalize_text,
+    strip_fences,
 )
 
 # text alphabet including the OCR specials the normalizer handles
@@ -27,15 +26,15 @@ TEXT = st.text(
 @settings(max_examples=200, deadline=None)
 @given(TEXT)
 def test_normalize_idempotent(s):
-    once = normalize_text_pd(pd.Series([s])).iloc[0]
-    twice = normalize_text_pd(pd.Series([once])).iloc[0]
+    once = normalize_text(s)
+    twice = normalize_text(once)
     assert once == twice
 
 
 @settings(max_examples=200, deadline=None)
 @given(TEXT)
 def test_normalize_output_clean(s):
-    out = normalize_text_pd(pd.Series([s])).iloc[0]
+    out = normalize_text(s)
     # no ligatures survive, no lone \n, no double spaces, no edge whitespace
     assert not any(lig in out for lig in ("ﬁ", "ﬂ", "ﬀ", "ﬃ", "ﬄ", "ſ"))
     assert "  " not in out
@@ -71,7 +70,7 @@ def test_knit_list_total(texts):
 @settings(max_examples=200, deadline=None)
 @given(TEXT)
 def test_title_requires_uppercase(s):
-    if is_title_pd(pd.Series([s])).iloc[0]:
+    if is_title(s):
         assert s == s.upper()
         assert sum(c.isalpha() and c.isupper() for c in s) >= 5
 
@@ -79,7 +78,7 @@ def test_title_requires_uppercase(s):
 @settings(max_examples=200, deadline=None)
 @given(TEXT)
 def test_strip_fences_removes_fences(s):
-    out = strip_fences_pd(pd.Series([s])).iloc[0]
+    out = strip_fences(s)
     assert not out.startswith("`") and not out.endswith("`")
 
 

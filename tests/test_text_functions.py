@@ -8,11 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from reading_the_unreadable_spark.functions.text import (
-    is_title_pd,
+    is_title,
     knit_string_list,
     knit_strings,
-    normalize_text_pd,
-    strip_fences_pd,
+    normalize_text,
+    strip_fences,
 )
 
 NORMALIZE_CASES = [
@@ -53,17 +53,17 @@ FENCE_CASES = [
 
 @pytest.mark.parametrize("raw,expected", NORMALIZE_CASES)
 def test_normalize_pd(raw, expected):
-    assert normalize_text_pd(pd.Series([raw])).iloc[0] == expected
+    assert normalize_text(raw) == expected
 
 
 @pytest.mark.parametrize("raw,expected", TITLE_CASES)
 def test_is_title_pd(raw, expected):
-    assert bool(is_title_pd(pd.Series([raw])).iloc[0]) is expected
+    assert is_title(raw) is expected
 
 
 @pytest.mark.parametrize("raw,expected", FENCE_CASES)
 def test_strip_fences_pd(raw, expected):
-    assert strip_fences_pd(pd.Series([raw])).iloc[0] == expected
+    assert strip_fences(raw) == expected
 
 
 def test_knit():
