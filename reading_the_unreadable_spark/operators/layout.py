@@ -565,7 +565,8 @@ def _sorted_frame(
     df = df.selectExpr(*(f"`{f.split()[0]}`" for f in ORDERED_BOX_SCHEMA.split(", ")))
     # sort keys match the preceding window's physical order exactly
     # ((doc, block, column, y1, offset) ≡ reading_order order within the
-    # group), so Catalyst elides most of this sort
+    # group), so Catalyst elides most of this sort; SQL-string keys build
+    # with fewer py4j round trips than column names
     return df.sortWithinPartitions(
         *(F.expr(f"`{c}`") for c in ("doc_id", "page_block", "column_number", "y1", "offset"))
     )
