@@ -11,12 +11,15 @@ no JVM, Arrow or scheduler cost in the figure:
 - ``split``: paragraph split, title reclass and merge, final order
   (``articles.spans_frame_pd``).
 
-The stream is cut into Arrow-sized batches and re-chunked at doc
-boundaries by ``execution.doc_complete_stream``, as in the worker.
-Prints one JSON line: the median over ``--repeats`` runs of each phase in
+The stream is cut into batches of the session's
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows and re-chunked at
+doc boundaries by ``execution.doc_complete_stream``, as in the worker.
+The spans of the timed phases are checked against the production
+per-batch callable (``layout._fold_spans``) before anything is printed.
+Prints one JSON line: the median over ``REPEATS`` runs of each phase in
 ms per doc, plus the row counts each phase produced.
 
-Usage: python scripts/fold_probe.py [--seed 1] [--repeats 5]
+Usage: python scripts/fold_probe.py [--seed 1]
 """
 
 from __future__ import annotations
@@ -28,6 +31,8 @@ import sys
 import time
 from pathlib import Path
 
+import pandas as pd
+
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "perfbench"))
@@ -35,11 +40,12 @@ sys.path.insert(0, str(REPO / "perfbench"))
 from inputs import doc_rows, seed_tag  # noqa: E402
 from workloads import BATCH_DOCS, NUM_PARTITIONS  # noqa: E402
 
-ARROW_BATCH_ROWS = 10_000  # spark.sql.execution.arrow.maxRecordsPerBatch
+REPEATS = 5
 
 
 def sorted_frame(seed: int):
-    """The fold's input for the seed's corpus, collected once."""
+    """The fold's input for the seed's corpus, collected once, and the
+    session's Arrow batch size in rows."""
     from reading_the_unreadable_spark.operators.geometry import (
         docs_payload,
         docs_to_geo_boxes,
@@ -57,13 +63,23 @@ def sorted_frame(seed: int):
             payload=docs_payload(docs),
             fill_columns=True,
         ).toPandas()
+        batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     finally:
         spark.stop()
-    return frame
+    return frame, batch_rows
 
 
-def fold_once(frame) -> tuple[dict[str, float], dict[str, int]]:
-    """Seconds spent in each phase and rows out of each, over one pass."""
+def batches(frame, batch_rows: int):
+    """The stream as the worker receives it: fixed-size Arrow batches."""
+    return (
+        frame.iloc[i : i + batch_rows].reset_index(drop=True)
+        for i in range(0, len(frame), batch_rows)
+    )
+
+
+def fold_once(frame, batch_rows: int):
+    """Seconds spent in each phase, rows out of each, and the spans, over
+    one pass."""
     from reading_the_unreadable_spark.execution import doc_complete_stream
     from reading_the_unreadable_spark.operators.articles import (
         _post_correct_pd,
@@ -89,23 +105,30 @@ def fold_once(frame) -> tuple[dict[str, float], dict[str, int]]:
         rows["spans"] += len(spans)
         return spans
 
-    batches = (
-        frame.iloc[i : i + ARROW_BATCH_ROWS].reset_index(drop=True)
-        for i in range(0, len(frame), ARROW_BATCH_ROWS)
+    spans = pd.concat(
+        list(doc_complete_stream(batches(frame, batch_rows), fold)), ignore_index=True
     )
-    for _ in doc_complete_stream(batches, fold):
-        pass
-    return secs, rows
+    return secs, rows, spans
 
 
 def main(argv=None) -> int:
+    from reading_the_unreadable_spark.execution import doc_complete_stream
+    from reading_the_unreadable_spark.operators.layout import _fold_spans
+
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--repeats", type=int, default=5)
     args = ap.parse_args(argv)
 
-    frame = sorted_frame(args.seed)
-    runs = [fold_once(frame) for _ in range(args.repeats)]
+    frame, batch_rows = sorted_frame(args.seed)
+    runs = [fold_once(frame, batch_rows) for _ in range(REPEATS)]
+    # the phases timed here must be the production fold, or the figure
+    # measures something else
+    production = pd.concat(
+        list(doc_complete_stream(batches(frame, batch_rows), _fold_spans)),
+        ignore_index=True,
+    )
+    pd.testing.assert_frame_equal(runs[0][2], production)
+
     out = {"seed": args.seed, "docs": BATCH_DOCS, "boxes_in": len(frame), **runs[0][1]}
     for phase in ("merge", "post_correct", "split"):
         out[f"{phase}_ms_per_doc"] = round(
